@@ -14,18 +14,16 @@ import org.apache.spark.sql.SparkSession
   * dedupe through Memo's per-key build locks and LayoutStore's
   * per-table locks; only wall-clock changes. Parallelism derives from
   * the session's core count (scale-adaptive, not a local[32]
-  * constant); SPARK_GRAFT_WARM_PAR overrides, 1 = sequential.
+  * constant).
   */
 object Par {
   def width(spark: SparkSession, tasks: Int): Int =
-    math.min(tasks, sys.env.get("SPARK_GRAFT_WARM_PAR")
-      .flatMap(_.toIntOption).filter(_ >= 1)
-      .getOrElse(math.min(8,
-        math.max(2, spark.sparkContext.defaultParallelism / 4))))
+    math.min(tasks,
+      math.min(8, math.max(2, spark.sparkContext.defaultParallelism / 4)))
 
   def run[T](spark: SparkSession, tasks: Seq[() => T]): Seq[T] = {
     val par = width(spark, tasks.size)
-    if (par <= 1 || tasks.size <= 1) tasks.map(_())
+    if (par <= 1) tasks.map(_())
     else {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration

@@ -439,8 +439,8 @@ object ScaleBench {
           graft.sources.LayoutStore.ensure(spark, table, Seq("c_cid"), m)(
             operators.AnnOps.ivfPqListsFrameM(spark, dir, m))
         }
-        val sv = operators.AnnOps.servingForScale(spark, dir, m,
-          graft.sources.LayoutStore.read(spark, table))
+        val sv = operators.AnnOps.sessionServing(spark, dir, m = m)
+          .copy(lists = graft.sources.LayoutStore.read(spark, table))
         val queries = Tables.embeddings(spark, dir)
           .filter(col("vec_id") % f === 0 && (col("vec_id") / f) % 50 === 0)
           .select("vec_id", "embedding")
@@ -863,8 +863,8 @@ object ScaleBench {
           .select("vec_id", "embedding")
         def serveOnce = time {
           operators.AnnOps.ivfPqSearchTables(spark, dir,
-            operators.AnnOps.servingForScale(spark, dir, m,
-              graft.sources.LayoutStore.read(spark, table)),
+            operators.AnnOps.sessionServing(spark, dir, m = m)
+              .copy(lists = graft.sources.LayoutStore.read(spark, table)),
             queries, excludeSelf = true)
             .write.format("noop").mode("overwrite").save()
         }

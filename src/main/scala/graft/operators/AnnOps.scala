@@ -798,7 +798,7 @@ object AnnOps {
   /** Test/maintenance hook: run the IVF query path over an explicit
     * lists layout (e.g. one produced by [[ivfAppend]]). Serving
     * semantics by default: no id-equality self-exclusion (see
-    * [[ivfPqSearchOn]] — external query ids may collide with corpus
+    * [[ivfPqSearchTables]] — external query ids may collide with corpus
     * ids); pass `excludeSelf = true` only when queries are corpus
     * members.
     */
@@ -2394,14 +2394,6 @@ object AnnOps {
     subSplit(vecs, nSub, subDim)
   }
 
-  /** PQ code words for an arbitrary (vec_id, v) frame against the
-    * EXISTING codebooks — in-row argmin, no shuffle beyond the wide
-    * partial agg; what incremental maintenance encodes a batch with.
-    */
-  private def pqCodesOf(spark: SparkSession, dir: String,
-      vecs: DataFrame): DataFrame =
-    wideCodes(pqAssign(pqSubOf(spark, dir, vecs), pqModel(spark, dir)), PqS)
-
   /** Per-subspace codebooks — a layout-time model artifact like
     * [[ivfModel]]: seed = PqK HASH-SPREAD vectors' subvectors (k =
     * rank by (mix64(vec_id), vec_id) — the [[seedSpread]] rule, same
@@ -2517,8 +2509,8 @@ object AnnOps {
     */
   /** Per-query ADC distance tables (q_id, dt0..dt{PqS-1}) — PqS maps
     * of PqK entries each, computed once per query against the refined
-    * codebooks and session-memoized (shared by D33b/D33c, ivfpq and
-    * the recall harness). Tiny: |queries| rows.
+    * codebooks and session-memoized (shared by D33b/D33c, the graph
+    * PQ walk and the recall harness). Tiny: |queries| rows.
     */
   private[graft] def pqQueryTables(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.df(spark, s"pqQueryTables:$dir") {
@@ -2641,22 +2633,11 @@ object AnnOps {
     * (nprobe/m)·|corpus|·PqS B — a fraction of IVF-Flat's probed
     * floats at the same nprobe — and the corpus is never shuffled;
     * recall at nprobe=8/R=50 matches IVF-Flat nprobe=8 on the oracled
-    * ann_recall curve.
+    * ann_recall curve. The corpus-split search over the session handle.
     */
   def annIvfPq(spark: SparkSession, dir: String, nprobe: Int = IvfPqNprobe,
-      r: Int = IvfPqR, k: Int = 10): DataFrame = {
-    val probes = assignFor(spark, dir, DefaultM,
-        embDouble(spark, dir).filter(col("vec_id") % 50 === 0), nprobe)
-      .select(col("cid").as("q_cid"), col("vec_id").as("q_id"))
-      .join(pqQueryTables(spark, dir), "q_id")
-    val sims = ivfPqLists(spark, dir).join(broadcast(probes),
-        col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id"))
-      .withColumn("adc", adcCol())
-    val shortlist = TopK.perKey(sims, Seq(col("q_id")),
-        Seq(col("adc").asc, col("c_id").asc), r)
-      .select("q_id", "c_id")
-    exactRerank(spark, dir, shortlist, k).orderBy("q_id", "rnk")
-  }
+      r: Int = IvfPqR, k: Int = 10): DataFrame =
+    ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir), nprobe, r, k)
 
   // ---------------------------------------------------------------
   // D33f: RESIDUAL IVF-PQ — the actual production encoding: each
@@ -2677,17 +2658,20 @@ object AnnOps {
   private def quantCentroids(spark: SparkSession, dir: String,
       rounds: Int = LloydRounds): DataFrame =
     graft.Memo.df(spark, s"ivfCentroidsQ:$dir:$rounds") {
-      val model = ivfModel(spark, dir, DefaultM, rounds)
-      val rows = (0 until model.m).map { i =>
-        (model.cids(i),
-          quantizeCent(model.flat.slice(i * model.dim, (i + 1) * model.dim)))
-      }
-      import spark.implicits._
-      rows.toDF("cid", "cq")
+      centroidsQ(spark, ivfModel(spark, dir, DefaultM, rounds))
     }
 
-  private def quantizeCent(c: Array[Double]): Seq[Double] =
-    c.map(x => math.floor(x * CentroidScale + 0.5) / CentroidScale).toSeq
+  /** (cid, cq): every centroid of `model`, float-quantized — the one
+    * residual-centroid frame the session build, the search and the
+    * delta encoder all subtract.
+    */
+  private def centroidsQ(spark: SparkSession, model: IvfModel): DataFrame = {
+    import spark.implicits._
+    (0 until model.m).map { i =>
+      (model.cids(i), model.flat.slice(i * model.dim, (i + 1) * model.dim)
+        .map(x => math.floor(x * CentroidScale + 0.5) / CentroidScale).toSeq)
+    }.toDF("cid", "cq")
+  }
 
   /** (vec_id, cid, v) with the residual r = v − cq(cid) appended. */
   private def withResidual(vecs: DataFrame, cents: DataFrame): DataFrame =
@@ -2745,36 +2729,22 @@ object AnnOps {
     * lookups, shortlisted, and exactly re-ranked. Same scale shape as
     * [[annIvfPq]] (stage-1 scans 8 B codes, corpus never shuffles);
     * the residual encoding buys ADC fidelity — the spec measures its
-    * shortlist recall against the plain-code variant.
+    * shortlist recall against the plain-code variant. The build knobs
+    * select the session handle's residual index.
     */
   def annIvfPqRes(spark: SparkSession, dir: String, nprobe: Int = IvfPqNprobe,
       r: Int = IvfPqR, k: Int = 10, ivfRounds: Int = LloydRounds,
-      pqRounds: Int = PqLloydRounds, nSub: Int = PqS): DataFrame = {
-    val emb = embDouble(spark, dir)
-    val subDim = emb.select(size(col("v"))).head.getInt(0) / nSub
-    val model = pqModelRes(spark, dir, ivfRounds, pqRounds, nSub)
-    val q0 = assignFor(spark, dir, DefaultM,
-        emb.filter(col("vec_id") % 50 === 0), nprobe, ivfRounds)
-      .select(col("vec_id").as("q_id"), col("cid"), col("v"))
-    val qres = withResidual(q0, quantCentroids(spark, dir, ivfRounds))
-      .select(col("q_id"), col("cid").as("q_cid"), col("r"))
-    val qd = resDistTables(qres, model, subDim, nSub)
-    val sims = ivfPqResLists(spark, dir, ivfRounds, pqRounds, nSub)
-      .join(broadcast(qd),
-        col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id"))
-      .withColumn("adc", adcCol(nSub))
-    val shortlist = TopK.perKey(sims, Seq(col("q_id")),
-        Seq(col("adc").asc, col("c_id").asc), r)
-      .select("q_id", "c_id")
-    exactRerank(spark, dir, shortlist, k).orderBy("q_id", "rnk")
-  }
+      pqRounds: Int = PqLloydRounds, nSub: Int = PqS): DataFrame =
+    ivfPqCorpusSearch(spark, dir,
+      sessionServing(spark, dir, residual = true, ivfRounds = ivfRounds,
+        pqRounds = pqRounds, nSub = nSub),
+      nprobe, r, k)
 
   /** Per-probe residual ADC distance tables: each (q_id, q_cid, r)
     * probe row gets its own dt0..dt{nSub−1} maps against the residual
     * codebooks — the residual varies with the probed list, so tables
     * are per PROBE ROW, not per query (the structural difference from
-    * [[distTablesFor]]). Shared by the session path and the
-    * persisted-layout serving path so the two cannot drift.
+    * [[distTablesFor]]).
     */
   private def resDistTables(qres: DataFrame,
       model: Seq[(Int, Long, Seq[Double])], subDim: Int,
@@ -2788,106 +2758,17 @@ object AnnOps {
     }.drop("r")
   }
 
-  /** Spec hook: the raw ADC shortlist (pre-rerank) of the residual
-    * and plain ivfpq paths, for recall comparison.
-    */
-  private[graft] def ivfPqAdcShortlist(spark: SparkSession, dir: String,
-      residual: Boolean, r: Int): DataFrame =
-    if (residual) {
-      val df = annIvfPqRes(spark, dir, r = r, k = r)
-      df.select("q_id", "c_id")
-    } else annIvfPq(spark, dir, r = r, k = r).select("q_id", "c_id")
-
-  /** D33e: incremental maintenance of the COMPOSED index — the
-    * [[ivfAppend]] story carried to the production layout: a batch of
-    * NEW vectors is assigned to the EXISTING quantizer (in-row) and
-    * PQ-encoded against the EXISTING codebooks (in-row), then appended
-    * to the coded lists repartitioned by its centroids. Neither model
-    * is rebuilt and the standing index never re-scans — maintenance is
-    * O(|batch|) at any index size.
-    */
-  def ivfPqAppend(spark: SparkSession, dir: String,
-      newVecs: DataFrame): DataFrame = {
-    val prepped = newVecs
-      .withColumn("v", VectorFns.toDouble(col("embedding")))
-      .select("vec_id", "v")
-    val assigned = assignFor(spark, dir, DefaultM,
-        prepped.withColumn("nrm", VectorFns.norm(col("v"))), 1)
-      .select(col("cid").as("c_cid"), col("vec_id").as("c_id"))
-    val codes = pqCodesOf(spark, dir, prepped)
-      .select(col("vec_id").as("c_id") +:
-        (0 until PqS).map(s => col(s"c$s")): _*)
-    ivfPqLists(spark, dir)
-      .unionByName(assigned.join(codes, "c_id").repartition(col("c_cid")))
-  }
-
   /** The composed-index search for an ARBITRARY (vec_id, embedding)
-    * query frame against the STANDING coded lists — the serving API
-    * the streaming face ([[graft.streaming.StreamOps.annSearchStream]])
-    * calls per micro-batch. Zero corpus work per call: the lists are
+    * query frame against the session's STANDING coded lists — the
+    * batch twin of [[graft.streaming.StreamOps.annSearchStream]], over
+    * the same session handle. Zero corpus work per call: the lists are
     * the session layout, the quantizer/codebooks ride as
     * literals/broadcasts, only the query frame computes.
     */
   def ivfPqSearch(spark: SparkSession, dir: String, queries: DataFrame,
-      nprobe: Int = IvfPqNprobe, r: Int = IvfPqR, k: Int = 10): DataFrame = {
-    val prepped = queries
-      .withColumn("v", VectorFns.toDouble(col("embedding")))
-      .withColumn("nrm", VectorFns.norm(col("v")))
-      .select("vec_id", "v", "nrm")
-    // candidates are always standing-list members, so the base corpus
-    // floats cover the whole re-rank pool
-    ivfPqSearchOn(spark, dir, ivfPqLists(spark, dir), prepped, nprobe, r, k)
-  }
-
-  /** Query path over an explicit coded-list layout (e.g. one widened
-    * by [[ivfPqAppend]]). `extraRerank` supplies (vec_id, embedding)
-    * float rows for appended ids so the exact re-rank stage can score
-    * them (the base corpus floats come from the standing table).
-    *
-    * `excludeSelf` drops candidates whose id equals the query's id —
-    * ONLY correct when the queries ARE corpus members (the recall
-    * harness asking "my neighbors other than me"). The serving default
-    * is false: an external query's id space (0, 1, 2, …) may collide
-    * with corpus vec_ids, and excluding on id equality would silently
-    * drop a legitimate (possibly top-1) corpus neighbor.
-    */
-  def ivfPqSearchOn(spark: SparkSession, dir: String, codedLists: DataFrame,
-      qVecs: DataFrame, nprobe: Int = IvfPqNprobe, r: Int = IvfPqR,
-      k: Int = 10, extraRerank: Option[DataFrame] = None,
-      excludeSelf: Boolean = false): DataFrame = {
-    val probes = assignFor(spark, dir, DefaultM, qVecs, nprobe)
-      .select(col("cid").as("q_cid"), col("vec_id").as("q_id"))
-      .join(pqDistTablesOf(spark, dir,
-        qVecs.select(col("vec_id"), col("v"))), "q_id")
-    val joinCond =
-      if (excludeSelf) col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id")
-      else col("q_cid") === col("c_cid")
-    val sims = codedLists.join(broadcast(probes), joinCond)
-      .withColumn("adc", adcCol())
-    val shortlist = TopK.perKey(sims, Seq(col("q_id")),
-        Seq(col("adc").asc, col("c_id").asc), r)
-      .select("q_id", "c_id")
-    val emb = embDouble(spark, dir)
-    val qv = qVecs
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val base = emb
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    val cands = extraRerank.fold(base) { ex =>
-      base.unionByName(ex
-        .withColumn("cv", VectorFns.toDouble(col("embedding")))
-        .withColumn("cn", VectorFns.norm(col("cv")))
-        .select(col("vec_id").as("c_id"), col("cv"), col("cn")))
-    }
-    val exact = cands
-      .join(broadcast(shortlist), "c_id")
-      .join(broadcast(qv), "q_id")
-      .withColumn("sim",
-        VectorFns.cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    TopK.perKey(exact, Seq(col("q_id")),
-        Seq(col("sim").desc, col("c_id").asc), k)
-      .select("q_id", "c_id", "sim", "rnk")
-      .orderBy("q_id", "rnk")
-  }
+      nprobe: Int = IvfPqNprobe, r: Int = IvfPqR, k: Int = 10): DataFrame =
+    ivfPqSearchTables(spark, dir, sessionServing(spark, dir), queries,
+      nprobe, r, k)
 
   // ---------------------------------------------------------------
   // Persisted-layout faces (r8): the session-memoized artifacts as
@@ -2913,14 +2794,6 @@ object AnnOps {
         .select(col("vec_id").as("c_id") +:
           (0 until PqS).map(s => col(s"c$s")): _*), "c_id")
 
-  /** Serving handle at an explicit quantizer size over an explicit
-    * lists frame (ScaleBench production regime).
-    */
-  private[graft] def servingForScale(spark: SparkSession, dir: String,
-      m: Int, lists: DataFrame): IvfPqServing =
-    IvfPqServing(ivfModel(spark, dir, m), pqModel(spark, dir), lists,
-      residual = false)
-
   /** Exact cosine top-k for an ARBITRARY query frame against the full
     * corpus (queries broadcast into one corpus scan, bounded-heap
     * top-k, self excluded) — the recall baseline for the ScaleBench
@@ -2929,9 +2802,7 @@ object AnnOps {
     */
   private[graft] def exactTopKFor(spark: SparkSession, dir: String,
       queries: DataFrame, k: Int = 10): DataFrame = {
-    val q = queries
-      .withColumn("v", VectorFns.toDouble(col("embedding")))
-      .withColumn("nrm", VectorFns.norm(col("v")))
+    val q = vecsOf(queries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"))
     val sims = embDouble(spark, dir)
@@ -2942,73 +2813,6 @@ object AnnOps {
     TopK.perKey(sims, Seq(col("q_id")),
         Seq(col("sim").desc, col("c_id").asc), k)
       .select("q_id", "c_id")
-  }
-
-  /** Probe hooks (GraphPqFidelityProbe, not serving paths): brute ADC
-    * scores of an arbitrary query frame against every corpus code, the
-    * per-vector code reconstruction error, and the exact ranking with
-    * sim/rnk retained.
-    */
-  private[graft] def pqAdcFor(spark: SparkSession, dir: String,
-      queries: DataFrame): DataFrame = {
-    val qv = queries
-      .withColumn("v", VectorFns.toDouble(col("embedding")))
-      .select(col("vec_id"), col("v"))
-    val qd = pqDistTablesOf(spark, dir, qv)
-    pqCodesCore(spark, dir)
-      .select(col("vec_id").as("c_id") +: (0 until PqS).map(s => col(s"c$s")): _*)
-      .join(broadcast(qd), col("q_id") =!= col("c_id"))
-      .withColumn("adc", adcCol())
-      .select("q_id", "c_id", "adc")
-  }
-
-  private[graft] def pqCodeErr(spark: SparkSession, dir: String): DataFrame =
-    pqCodesCore(spark, dir).select("vec_id", "err")
-
-  /** Probe hook: brute ADC at an ARBITRARY subspace count — the
-    * what-if measurement for a finer navigation book (same seeding,
-    * same Lloyd rounds, nSub subspaces instead of [[PqS]]).
-    */
-  private[graft] def pqAdcNFor(spark: SparkSession, dir: String,
-      queries: DataFrame, nSub: Int): DataFrame = {
-    val emb = embDouble(spark, dir)
-    val subDim = emb.select(size(col("v"))).head.getInt(0) / nSub
-    val firstK = seedSpread(emb).limit(PqK)
-      .select(col("v")).collect().map(_.getSeq[Double](0))
-    val seed: Seq[(Int, Long, Seq[Double])] = for {
-      s <- 0 until nSub; k <- 0 until math.min(PqK, firstK.length)
-    } yield (s, k.toLong, firstK(k).slice(s * subDim, (s + 1) * subDim))
-    val model = pqRefineRounds(pqSubOf(spark, dir, emb, nSub), seed,
-      PqLloydRounds)
-    val a = pqAssign(pqSubOf(spark, dir, emb, nSub), model)
-    val aggs = (0 until nSub).map(s =>
-      max(when(col("s") === s, col("k"))).as(s"c$s"))
-    val cand = a.groupBy("vec_id").agg(aggs.head, aggs.tail: _*)
-      .select(col("vec_id").as("c_id") +:
-        (0 until nSub).map(s => col(s"c$s")): _*)
-    val qv = queries
-      .withColumn("v", VectorFns.toDouble(col("embedding")))
-      .select(col("vec_id"), col("v"))
-    val qd = distTablesFor(model, subDim, qv)
-    cand.join(broadcast(qd), col("q_id") =!= col("c_id"))
-      .withColumn("adc", adcCol(nSub))
-      .select("q_id", "c_id", "adc")
-  }
-
-  private[graft] def exactTopKSims(spark: SparkSession, dir: String,
-      queries: DataFrame, k: Int): DataFrame = {
-    val q = queries
-      .withColumn("v", VectorFns.toDouble(col("embedding")))
-      .withColumn("nrm", VectorFns.norm(col("v")))
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    val sims = embDouble(spark, dir)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-      .join(broadcast(q), col("q_id") =!= col("c_id"))
-      .withColumn("sim",
-        VectorFns.cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    TopK.perKey(sims, Seq(col("q_id")),
-      Seq(col("sim").desc, col("c_id").asc), k)
   }
 
   /** The coarse quantizer as a (cid, cv, cnrm) frame — tiny (m rows),
@@ -3044,29 +2848,54 @@ object AnnOps {
     pqModelRes(spark, dir).toDF("s", "k", "cv")
   }
 
-  /** IVF-PQ search served ENTIRELY from persisted layout tables: the
-    * quantizer and codebooks are collected from their (tiny) tables,
-    * probe cids are resolved driver-side and pushed as an IN filter —
-    * the scan reads ONLY the probed buckets (bucket pruning; at 100 TB
-    * a query touches nprobe/m of the index files) — then the usual
-    * ADC → shortlist → exact re-rank. The base corpus parquet is read
-    * for the re-rank floats (source data, not a derived layout);
-    * nothing session-memoized is touched, so a FRESH session serves at
-    * full fidelity with zero rebuild.
-    */
-  /** Driver-resident serving handle over the PERSISTED index tables:
-    * the two tiny model artifacts collected once (quantizer m rows,
-    * codebooks nSub·PqK rows — the same O(1) objects every node holds
-    * in any production ANN deployment), the coded lists kept as the
-    * bucketed table frame. Collected ONCE so the streaming face pays
-    * the model reads at stream start, not per micro-batch.
+  /** The one IVF-PQ index representation: the two tiny model
+    * artifacts held driver-side (quantizer m rows, codebooks nSub·PqK
+    * rows — the same O(1) objects every node holds in any production
+    * ANN deployment) plus the coded lists as a frame, either the
+    * session's memoized layout ([[sessionServing]]) or the bucketed
+    * persisted table ([[servingFromTables]]). Every IVF-PQ search and
+    * delta encode runs over a handle; the streaming faces build theirs
+    * once at stream start, not per micro-batch.
     */
   final case class IvfPqServing(model: IvfModel,
       book: Seq[(Int, Long, Seq[Double])], lists: DataFrame,
       residual: Boolean) {
     def nSub: Int = book.iterator.map(_._1).max + 1
     def subDim: Int = model.dim / nSub
+
+    /** The quantizer broadcast for the kernel assignment path (m >
+      * [[LiteralMaxM]]): created on first use, then shared by every
+      * search and encode over this handle.
+      */
+    private[graft] lazy val modelBc: Broadcast[IvfModel] =
+      lists.sparkSession.sparkContext.broadcast(model)
   }
+
+  /** Session serving handle over the memoized layout artifacts: the
+    * quantizer ([[ivfModel]]) plus the plain codebooks and coded lists
+    * ([[pqModel]], [[ivfPqLists]]) or, when `residual`, the residual
+    * ones ([[pqModelRes]], [[ivfPqResLists]]). `m` picks a non-default
+    * plain quantizer size (the ScaleBench production regime, which
+    * swaps in its persisted lists table with `copy(lists = …)`);
+    * ivfRounds/pqRounds/nSub pick a non-default residual index (recall
+    * harness and spec sweeps).
+    */
+  private[graft] def sessionServing(spark: SparkSession, dir: String,
+      residual: Boolean = false, m: Int = DefaultM,
+      ivfRounds: Int = LloydRounds, pqRounds: Int = PqLloydRounds,
+      nSub: Int = PqS): IvfPqServing =
+    if (residual) {
+      require(m == DefaultM, s"residual coded lists exist only at m = $DefaultM")
+      IvfPqServing(ivfModel(spark, dir, DefaultM, ivfRounds),
+        pqModelRes(spark, dir, ivfRounds, pqRounds, nSub),
+        ivfPqResLists(spark, dir, ivfRounds, pqRounds, nSub), residual = true)
+    } else {
+      require(ivfRounds == LloydRounds && pqRounds == PqLloydRounds &&
+        nSub == PqS, "ivfRounds/pqRounds/nSub select a residual index")
+      IvfPqServing(ivfModel(spark, dir, m), pqModel(spark, dir),
+        if (m == DefaultM) ivfPqLists(spark, dir) else ivfPqListsFrameM(spark, dir, m),
+        residual = false)
+    }
 
   /** Build a serving handle from the persisted layout tables (plain or
     * residual encoding — the lists/book must match).
@@ -3080,43 +2909,48 @@ object AnnOps {
         .toSeq,
       lists, residual)
 
-  /** Composed-index search for an ARBITRARY (vec_id, embedding) query
-    * frame against the PERSISTED tables alone — what a restarted
-    * session serves with (batch or per micro-batch via
-    * [[graft.streaming.StreamOps.annSearchStreamFromLayout]]). No
-    * session memo is touched for the index: quantizer/codebooks ride
-    * from the handle, probe cids resolve driver-side into a literal IN
-    * filter so the bucketed lists scan prunes to the probed buckets
-    * (nprobe/m of the index files at any corpus size); the base corpus
-    * parquet supplies only the exact-re-rank floats (source data, not
-    * a derived layout). Residual handles score per-probe-row residual
-    * distance tables ([[resDistTables]]); plain handles per-query
-    * tables ([[distTablesFor]]).
-    */
-  def ivfPqSearchTables(spark: SparkSession, dir: String,
-      sv: IvfPqServing, queries: DataFrame, nprobe: Int = IvfPqNprobe,
-      r: Int = IvfPqR, k: Int = 10,
-      excludeSelf: Boolean = false): DataFrame = {
-    val prepped = queries
+  /** (vec_id, v, nrm) for a (vec_id, embedding) frame. */
+  private def vecsOf(vecs: DataFrame): DataFrame =
+    vecs
       .withColumn("v", VectorFns.toDouble(col("embedding")))
       .withColumn("nrm", VectorFns.norm(col("v")))
       .select("vec_id", "v", "nrm")
-    var bc: Broadcast[IvfModel] = null
-    val assigned = assignWith(prepped, sv.model, nprobe, {
-      bc = spark.sparkContext.broadcast(sv.model); bc
-    })
+
+  /** THE IVF-PQ search: an ARBITRARY (vec_id, embedding) query frame
+    * against a serving handle — session, persisted-layout, streaming
+    * and corpus-split faces all run this body. Quantizer/codebooks
+    * ride from the handle; probe cids resolve driver-side into a
+    * literal IN filter, so a bucketed lists table scan prunes to the
+    * probed buckets (nprobe/m of the index files at any corpus size);
+    * then ADC → shortlist R → exact re-rank, with the base corpus
+    * parquet supplying the re-rank floats (source data, not a derived
+    * layout). Residual handles score per-probe-row residual distance
+    * tables ([[resDistTables]]); plain handles per-query tables
+    * ([[distTablesFor]]).
+    *
+    * `excludeSelf` drops candidates whose id equals the query's id —
+    * ONLY correct when the queries ARE corpus members (the recall
+    * harness asking "my neighbors other than me"). The serving default
+    * is false: an external query's id space (0, 1, 2, …) may collide
+    * with corpus vec_ids, and excluding on id equality would silently
+    * drop a legitimate (possibly top-1) corpus neighbor.
+    *
+    * `extraRerank` supplies (vec_id, embedding) float rows for ids the
+    * handle's lists gained by an append ([[codedRowsFor]]) but the base
+    * corpus lacks, so the exact re-rank can score them.
+    */
+  def ivfPqSearchTables(spark: SparkSession, dir: String,
+      sv: IvfPqServing, queries: DataFrame, nprobe: Int = IvfPqNprobe,
+      r: Int = IvfPqR, k: Int = 10, excludeSelf: Boolean = false,
+      extraRerank: Option[DataFrame] = None): DataFrame = {
+    val prepped = vecsOf(queries)
+    val assigned = assignWith(prepped, sv.model, nprobe, sv.modelBc)
     val probes =
-      if (sv.residual) {
-        import spark.implicits._
-        val cq = (0 until sv.model.m).map(i => (sv.model.cids(i),
-            quantizeCent(sv.model.flat.slice(i * sv.model.dim,
-              (i + 1) * sv.model.dim))))
-          .toDF("cid", "cq")
-        val qres = assigned.join(broadcast(cq), "cid")
-          .withColumn("r", zip_with(col("v"), col("cq"), (a, b) => a - b))
-          .select(col("vec_id").as("q_id"), col("cid").as("q_cid"), col("r"))
-        resDistTables(qres, sv.book, sv.subDim, sv.nSub)
-      } else assigned
+      if (sv.residual)
+        resDistTables(withResidual(assigned, centroidsQ(spark, sv.model))
+            .select(col("vec_id").as("q_id"), col("cid").as("q_cid"), col("r")),
+          sv.book, sv.subDim, sv.nSub)
+      else assigned
         .select(col("cid").as("q_cid"), col("vec_id").as("q_id"))
         .join(distTablesFor(sv.book, sv.subDim,
           prepped.select(col("vec_id"), col("v"))), "q_id")
@@ -3137,11 +2971,12 @@ object AnnOps {
     // exact re-rank: shortlist broadcast into one corpus scan for the
     // candidate floats; query floats come from the batch itself (the
     // serving queries need not be corpus members)
-    val emb = embDouble(spark, dir)
     val qv = prepped
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val exact = emb
+    val base = embDouble(spark, dir).select("vec_id", "v", "nrm")
+    val cands = extraRerank.fold(base)(ex => base.unionByName(vecsOf(ex)))
       .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
+    val exact = cands
       .join(broadcast(shortlist), "c_id")
       .join(broadcast(qv), "q_id")
       .withColumn("sim",
@@ -3152,57 +2987,39 @@ object AnnOps {
       .orderBy("q_id", "rnk")
   }
 
-  /** Delta rows for the PERSISTED coded-lists layout (D36h): a batch
-    * of new (vec_id, embedding) vectors assigned to the handle's
+  /** THE IVF-PQ encode: delta rows for a handle's coded lists — a
+    * batch of new (vec_id, embedding) vectors assigned to the handle's
     * quantizer (in-row, nprobe = 1) and PQ-encoded against the
-    * handle's codebooks (in-row argmin) — no session memo, no corpus
-    * read, O(|batch|) work at any index size. Output schema matches
-    * the coded-lists table (c_id, c_cid, c0..c{nSub−1}), so the rows
-    * append as new bucketed files: [[ivfPqAppend]] carried to the
-    * persisted layout — what a restarted session's daily index
-    * maintenance runs.
+    * handle's codebooks (in-row argmin; residual handles code
+    * v − cq(centroid)). No corpus read, neither model rebuilt,
+    * O(|batch|) work at any index size. Output schema matches the
+    * coded lists (c_id, c_cid, c0..c{nSub−1} by name), so the rows
+    * union onto a session handle's lists or append to the persisted
+    * table as new bucketed files — what a restarted session's daily
+    * index maintenance runs.
     */
   def codedRowsFor(spark: SparkSession, sv: IvfPqServing,
       newVecs: DataFrame): DataFrame = {
-    val prepped = newVecs
-      .withColumn("v", VectorFns.toDouble(col("embedding")))
-      .withColumn("nrm", VectorFns.norm(col("v")))
-      .select("vec_id", "v", "nrm")
-    var bc: Broadcast[IvfModel] = null
-    val a = assignWith(prepped, sv.model, 1, {
-        bc = spark.sparkContext.broadcast(sv.model); bc
-      })
-    val assigned = a.select(col("cid").as("c_cid"), col("vec_id").as("c_id"))
-    // residual handles code v − cq(centroid) — the same float-quantized
-    // centroid arithmetic the session build uses ([[quantCentroids]]),
-    // derived here from the handle's model so no session memo is read
+    val a = assignWith(vecsOf(newVecs), sv.model, 1, sv.modelBc)
     val coding =
-      if (sv.residual) {
-        import spark.implicits._
-        val cq = (0 until sv.model.m).map(i => (sv.model.cids(i),
-            quantizeCent(sv.model.flat.slice(i * sv.model.dim,
-              (i + 1) * sv.model.dim))))
-          .toDF("cid", "cq")
-        a.join(broadcast(cq), "cid")
-          .withColumn("v", zip_with(col("v"), col("cq"), (x, c) => x - c))
-          .select("vec_id", "v")
-      } else a.select("vec_id", "v")
-    val codes = wideCodes(
-        pqAssign(subSplit(coding, sv.nSub, sv.subDim), sv.book), sv.nSub)
+      if (sv.residual)
+        withResidual(a, centroidsQ(spark, sv.model))
+          .select(col("vec_id"), col("r").as("v"))
+      else a.select("vec_id", "v")
+    wideCodes(pqAssign(subSplit(coding, sv.nSub, sv.subDim), sv.book), sv.nSub)
       .withColumnRenamed("vec_id", "c_id")
-    codes.join(assigned, "c_id")
+      .join(a.select(col("cid").as("c_cid"), col("vec_id").as("c_id")), "c_id")
   }
 
-  /** The D36 harness face: table-served search with the CORPUS query
-    * split (vec_id % 50 = 0, self excluded) so the result shares
-    * ann_ivfpq's / ann_ivfpq_res's DuckDB oracle row-for-row.
+  /** The corpus-split harness face: search over any handle with the
+    * CORPUS query split (vec_id % 50 = 0, self excluded), so
+    * ann_ivfpq / ann_ivfpq_res and their persisted-layout twins share
+    * one DuckDB oracle row-for-row.
     */
-  def ivfPqSearchFromTables(spark: SparkSession, dir: String,
-      cents: DataFrame, book: DataFrame, lists: DataFrame,
-      nprobe: Int = IvfPqNprobe, r: Int = IvfPqR, k: Int = 10,
-      residual: Boolean = false): DataFrame =
-    ivfPqSearchTables(spark, dir,
-      servingFromTables(cents, book, lists, residual),
+  private[graft] def ivfPqCorpusSearch(spark: SparkSession, dir: String,
+      sv: IvfPqServing, nprobe: Int = IvfPqNprobe, r: Int = IvfPqR,
+      k: Int = 10): DataFrame =
+    ivfPqSearchTables(spark, dir, sv,
       Tables.embeddings(spark, dir).filter(col("vec_id") % 50 === 0)
         .select("vec_id", "embedding"),
       nprobe, r, k, excludeSelf = true)

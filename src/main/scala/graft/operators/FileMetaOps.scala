@@ -112,16 +112,11 @@ object FileMetaOps {
     * equivalent is date-partitioned parquet with dynamic partition
     * overwrite (re-ingesting a day replaces exactly that day).
     */
-  def writePartitionedByDate(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
-    val conf = df.sparkSession.conf
-    val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy("file_date").parquet(path)
-    finally prev match { // don't leak dynamic semantics into the session
-      case Some(m) => conf.set("spark.sql.sources.partitionOverwriteMode", m)
-      case None => conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  def writePartitionedByDate(df: org.apache.spark.sql.DataFrame, path: String): Unit =
+    // a per-write option, not the session conf: a concurrent overwrite
+    // in the same session keeps its own mode
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("file_date").parquet(path)
 
   /** C6 (rows-only): real gzip via the custom Catalyst expressions —
     * compressed sizes + decompress roundtrip check.

@@ -274,43 +274,23 @@ object LayoutOps {
   /** Write every family for `dir` (deployment's "build the layouts"
     * job; also the bench warm-up so serving queries measure serving).
     *
-    * The families are INDEPENDENT Spark jobs (shared derivations
-    * dedupe through Memo's per-key build locks), so they run on a
-    * small driver thread pool: Spark's scheduler back-fills executor
-    * slots left idle by one build's stragglers/driver phases with the
-    * next build's tasks (guide §2.6). Pool size derives from the
-    * session's core count (scale-adaptive, never a local[32]
-    * constant); SPARK_GRAFT_LAYOUT_BUILD_PAR overrides, 1 = the old
-    * sequential behavior. Work and results are identical to the
-    * sequential build — each family's table is built by exactly one
-    * thread (per-table LayoutStore locks), dependency nesting blocks
-    * on the dependency's lock.
+    * The families and the z-order tables are INDEPENDENT Spark jobs
+    * (shared derivations dedupe through Memo's per-key build locks),
+    * so they run as [[graft.Par.run]] tasks: Spark's scheduler
+    * back-fills executor slots left idle by one build's
+    * stragglers/driver phases with the next build's tasks (guide
+    * §2.6). Work and results are identical to a sequential build —
+    * each family's table is built by exactly one thread (per-table
+    * LayoutStore locks), dependency nesting blocks on the dependency's
+    * lock.
     */
   def ensureAll(spark: SparkSession, dir: String): Map[String, String] = {
-    val cores = spark.sparkContext.defaultParallelism
-    val par = sys.env.get("SPARK_GRAFT_LAYOUT_BUILD_PAR")
-      .flatMap(_.toIntOption).filter(_ >= 1)
-      .getOrElse(math.min(8, math.max(2, cores / 4)))
     val ordered = families.sortBy(f =>
       buildPriority.getOrElse(f.name, buildPriority.size + 1))
-    if (par <= 1) {
-      val r = ordered.map(f => f.name -> ensure(spark, dir, f.name)).toMap
-      ZOrderOps.ensureAllTables(spark, dir)
-      r
-    } else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val zf = Future { ZOrderOps.ensureAllTables(spark, dir) }
-        val fs = ordered.map(f =>
-          Future(f.name -> ensure(spark, dir, f.name)))
-        val r = Await.result(Future.sequence(fs), Duration.Inf).toMap
-        Await.result(zf, Duration.Inf)
-        r
-      } finally pool.shutdown()
-    }
+    graft.Par.run(spark,
+      (() => { ZOrderOps.ensureAllTables(spark, dir); None }) +:
+        ordered.map(f => () => Some(f.name -> ensure(spark, dir, f.name))))
+      .flatten.toMap
   }
 
   /** Drop every family's catalog entry for `dir` (the spec's
@@ -356,10 +336,7 @@ object LayoutOps {
     * Result ≡ ann_ivfpq.
     */
   def annIvfPqServed(spark: SparkSession, dir: String): DataFrame =
-    AnnOps.ivfPqSearchFromTables(spark, dir,
-      table(spark, dir, "ivf_quantizer"),
-      table(spark, dir, "pq_book"),
-      table(spark, dir, "ivfpq_lists"))
+    AnnOps.ivfPqCorpusSearch(spark, dir, ivfPqServing(spark, dir))
 
   /** D36g: the RESIDUAL composed index served from its persisted
     * layout (quantizer + residual codebooks collected from their tiny
@@ -369,11 +346,8 @@ object LayoutOps {
     * FAISS-layout encoding, closing the 8th layout family.
     */
   def annIvfPqResServed(spark: SparkSession, dir: String): DataFrame =
-    AnnOps.ivfPqSearchFromTables(spark, dir,
-      table(spark, dir, "ivf_quantizer"),
-      table(spark, dir, "pq_book_res"),
-      table(spark, dir, "ivfpq_res_lists"),
-      residual = true)
+    AnnOps.ivfPqCorpusSearch(spark, dir, servingOver(spark, dir,
+      "pq_book_res", table(spark, dir, "ivfpq_res_lists"), residual = true))
 
   /** D36m: the tuner's measured choices read back from the persisted
     * config table — result ≡ ann_probe_tuner (one oracle pins the
@@ -391,10 +365,7 @@ object LayoutOps {
     * ann_ivfpq at the tuned nprobe; parity spec-pinned in LayoutSpec.
     */
   def annIvfPqServedTuned(spark: SparkSession, dir: String): DataFrame =
-    AnnOps.ivfPqSearchFromTables(spark, dir,
-      table(spark, dir, "ivf_quantizer"),
-      table(spark, dir, "pq_book"),
-      table(spark, dir, "ivfpq_lists"),
+    AnnOps.ivfPqCorpusSearch(spark, dir, ivfPqServing(spark, dir),
       nprobe = AnnOps.tunedNprobeFrom(
         servingConfigServed(spark, dir), "ivfpq"))
 
@@ -404,10 +375,16 @@ object LayoutOps {
     * (each micro-batch probes it bucket-pruned).
     */
   def ivfPqServing(spark: SparkSession, dir: String): AnnOps.IvfPqServing =
-    AnnOps.servingFromTables(
-      table(spark, dir, "ivf_quantizer"),
-      table(spark, dir, "pq_book"),
-      table(spark, dir, "ivfpq_lists"))
+    servingOver(spark, dir, "pq_book", table(spark, dir, "ivfpq_lists"))
+
+  /** Serving handle over the persisted quantizer, the `bookFam`
+    * codebooks and an explicit coded-lists frame (a family table or a
+    * grown one).
+    */
+  private def servingOver(spark: SparkSession, dir: String, bookFam: String,
+      lists: DataFrame, residual: Boolean = false): AnnOps.IvfPqServing =
+    AnnOps.servingFromTables(table(spark, dir, "ivf_quantizer"),
+      table(spark, dir, bookFam), lists, residual)
 
   /** D36b: the D35 postings top-k face over the reloaded postings
     * table. Result ≡ text_inverted_postings.
@@ -623,10 +600,8 @@ object LayoutOps {
     var fresh: DataFrame = null
     val did = LayoutStore.appendOnce(spark, t, DeltaMarker,
       Seq(fam.bucketKey), fam.buckets) {
-      val sv = AnnOps.servingFromTables(
-        table(spark, dir, "ivf_quantizer"),
-        table(spark, dir, bookFam),
-        LayoutStore.read(spark, t), residual)
+      val sv = servingOver(spark, dir, bookFam, LayoutStore.read(spark, t),
+        residual)
       val coded = AnnOps.codedRowsFor(spark, sv,
         Tables.embeddings(spark, dir).filter(col("vec_id") % 10 === 7)
           .select("vec_id", "embedding"))
@@ -664,10 +639,8 @@ object LayoutOps {
     */
   def annIvfPqAppendedServed(spark: SparkSession, dir: String): DataFrame = {
     appendDelta(spark, dir)
-    AnnOps.ivfPqSearchFromTables(spark, dir,
-      table(spark, dir, "ivf_quantizer"),
-      table(spark, dir, "pq_book"),
-      LayoutStore.read(spark, tableName(familyOf(GrowFamily), dir)))
+    AnnOps.ivfPqCorpusSearch(spark, dir, servingOver(spark, dir, "pq_book",
+      LayoutStore.read(spark, tableName(familyOf(GrowFamily), dir))))
   }
 
   /** D36h residual twin: search over the grown RESIDUAL table ≡
@@ -675,11 +648,10 @@ object LayoutOps {
     */
   def annIvfPqResAppendedServed(spark: SparkSession, dir: String): DataFrame = {
     appendDeltaRes(spark, dir)
-    AnnOps.ivfPqSearchFromTables(spark, dir,
-      table(spark, dir, "ivf_quantizer"),
-      table(spark, dir, "pq_book_res"),
+    AnnOps.ivfPqCorpusSearch(spark, dir, servingOver(spark, dir,
+      "pq_book_res",
       LayoutStore.read(spark, tableName(familyOf(GrowResFamily), dir)),
-      residual = true)
+      residual = true))
   }
 
   /** D36i: compact a family's table back to one file per non-empty

@@ -34,7 +34,7 @@ object IngestPipeline {
       .withColumn("folder", PathFns.folder(col("path")))
       .withColumn("name", PathFns.filename(col("path")))
       .withColumn("ext", PathFns.ext(col("path")))
-      .withColumn("size", length(col("content")).cast(LongType))
+      .withColumn("size", octet_length(col("content")).cast(LongType))
       .withColumn("compress", ContentFns.shouldCompress(col("size"), col("ext")))
       .select(
         col("path"),

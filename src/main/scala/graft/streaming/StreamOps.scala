@@ -1048,10 +1048,9 @@ object StreamOps {
 
   /** E20: online vector search — the SERVING face of the composed
     * ANN index: each micro-batch of arriving query vectors probes the
-    * standing coded lists through the same
-    * [[graft.operators.AnnOps.ivfPqSearch]] path the batch API uses
-    * (foreachBatch, because the bounded-heap TopK exec is a batch
-    * physical operator), so stream results are batch-identical by
+    * session's standing coded lists over the same session handle the
+    * batch API ([[graft.operators.AnnOps.ivfPqSearch]]) searches, built
+    * once at stream start, so stream results are batch-identical by
     * construction (parity-tested). Per-batch cost is O(|batch| ·
     * nprobe · list) — the corpus layout is session-resident and never
     * re-scanned or shuffled; this is the ivfpq twin of
@@ -1062,12 +1061,9 @@ object StreamOps {
       nprobe: Int = graft.operators.AnnOps.IvfPqNprobe,
       r: Int = graft.operators.AnnOps.IvfPqR, k: Int = 10)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.AnnOps.ivfPqSearch(spark, dir, batch,
-          nprobe, r, k), batchId)
-      }
-      .start()
+    annSearchStreamOn(spark, dir,
+      graft.operators.AnnOps.sessionServing(spark, dir), queries, sink,
+      nprobe, r, k)
 
   /** E20b: [[annSearchStream]] served from the PERSISTED layout — the
     * restart story for online vector search: a fresh session makes the
@@ -1082,15 +1078,24 @@ object StreamOps {
       dir: String, queries: DataFrame, sink: (DataFrame, Long) => Unit,
       nprobe: Int = graft.operators.AnnOps.IvfPqNprobe,
       r: Int = graft.operators.AnnOps.IvfPqR, k: Int = 10)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val sv = graft.operators.LayoutOps.ivfPqServing(spark, dir)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    annSearchStreamOn(spark, dir,
+      graft.operators.LayoutOps.ivfPqServing(spark, dir), queries, sink,
+      nprobe, r, k)
+
+  /** The one streaming search body over a serving handle: foreachBatch,
+    * because the bounded-heap TopK exec is a batch physical operator.
+    */
+  private def annSearchStreamOn(spark: org.apache.spark.sql.SparkSession,
+      dir: String, sv: graft.operators.AnnOps.IvfPqServing,
+      queries: DataFrame, sink: (DataFrame, Long) => Unit, nprobe: Int,
+      r: Int, k: Int): org.apache.spark.sql.streaming.StreamingQuery =
     queries.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         sink(graft.operators.AnnOps.ivfPqSearchTables(spark, dir, sv,
           batch, nprobe, r, k), batchId)
       }
       .start()
-  }
 
   /** E47: online graph-ANN serving from the PERSISTED k-NN graph —
     * each micro-batch of arriving query vectors walks the standing

@@ -334,20 +334,19 @@ class DedupAnnSpec extends GraftSpec {
     val clone = Tables.embeddings(spark, Sf)
       .filter(col("vec_id") === 0)
       .select(lit(999999L).as("vec_id"), col("embedding"), col("label"))
-    val widened = AnnOps.ivfPqAppend(spark, Sf, clone)
+    val sv = AnnOps.sessionServing(spark, Sf)
+    val widened = sv.copy(lists =
+      sv.lists.unionByName(AnnOps.codedRowsFor(spark, sv, clone)))
     val q = Tables.embeddings(spark, Sf).filter(col("vec_id") === 0)
-      .select(col("vec_id"),
-        graft.functions.VectorFns.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", graft.functions.VectorFns.norm(col("v")))
-    val hits = AnnOps.ivfPqSearchOn(spark, Sf, widened, q,
+      .select("vec_id", "embedding")
+    val hits = AnnOps.ivfPqSearchTables(spark, Sf, widened, q,
       extraRerank = Some(clone.select("vec_id", "embedding")),
       excludeSelf = true).collect()
     val top = hits.minBy(_.getAs[Long]("rnk"))
     assert(top.getAs[Long]("c_id") == 999999L, s"clone not found: ${hits.toSeq}")
     assert(top.getAs[Double]("sim") > 0.999999)
     // append, not rebuild: exactly one row wider than the base layout
-    assert(widened.count() ==
-      AnnOps.ivfPqAppend(spark, Sf, clone.limit(0)).count() + 1)
+    assert(widened.lists.count() == sv.lists.count() + 1)
   }
 
   test("serving search: an external query id colliding with a corpus id drops nothing") {

@@ -242,6 +242,22 @@ class StreamingSpec extends GraftSpec {
     assert(r.get("folder_time") == 1496851200000L)
   }
 
+  test("E4 enrich: size is the UTF-8 byte count, so multi-byte content crosses the gzip threshold") {
+    import graft.streaming.IngestPipeline
+    // 600 CJK characters = 1800 UTF-8 bytes: over the 1024-byte gzip
+    // threshold by bytes, under it by characters
+    val content = "\u65e5\u5fd7" * 300
+    val bytes = content.getBytes("UTF-8")
+    assert(content.length == 600 && bytes.length == 1800)
+    val files = Seq(("LOUP/1395T2936101/FLOWLOG.TXT", content, "host1",
+      1496851200000L)).toDF(IngestPipeline.InputColumns: _*)
+    val r = IngestPipeline.enrich(files).collect().head
+    assert(r.getAs[Long]("size") == 1800L)
+    assert(r.getAs[Boolean]("compress"))
+    assert(r.getAs[Long]("compress_size") ==
+      graft.functions.GzipCodec.gzip(bytes).length.toLong)
+  }
+
   test("E4 zip-entry records key as folder/pack/name") {
     val rec = Seq(("2017-06-07", 1L, "LOUP", "FLOWLOG.ZIP", "inner/a.txt",
       1L, 1L, "0x", false, 1L, "c", "h", 1L))
