@@ -195,12 +195,14 @@ object ExplainAudit {
           bad += 1
         }
       }
-      // ...with bucket pruning live on the literal-key probes (the
-      // IVF-PQ probed-lists IN filter; the postings term lookup, which
-      // must also prune to FEWER buckets than the table has)...
+      // ...with bucket pruning live on the literal-key probes (the IVF
+      // probed-lists IN filter of the PQ and filtered Flat faces; the
+      // postings term lookup, which must also prune to FEWER buckets
+      // than the table has)...
       if (name == "layout_ann_ivfpq" || name == "layout_ann_ivfpq_res" ||
           name == "layout_ann_ivfpq_appended" ||
           name == "layout_ann_ivfpq_res_appended" ||
+          name == "layout_ann_filtered" ||
           name == "layout_postings_probe") {
         val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
         sel.findFirstMatchIn(plan) match {

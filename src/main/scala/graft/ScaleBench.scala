@@ -510,7 +510,8 @@ object ScaleBench {
           graft.sources.LayoutStore.ensure(spark, table, Seq("c_cid"), m)(
             operators.AnnOps.ivfSqListsFrameM(spark, dir, m))
         }
-        val lists = graft.sources.LayoutStore.read(spark, table)
+        val sv = operators.AnnOps.sessionServing(spark, dir, "sq8", m = m)
+          .copy(lists = graft.sources.LayoutStore.read(spark, table))
         val queries = Tables.embeddings(spark, dir)
           .filter(col("vec_id") % f === 0 && (col("vec_id") / f) % 50 === 0)
           .select("vec_id", "embedding")
@@ -521,8 +522,9 @@ object ScaleBench {
           val nEx = exact.count().toDouble
           val curve = operators.AnnOps.ProdTuneNprobes.filter(_ <= m)
             .map { np =>
-              val got = operators.AnnOps.ivfSqSearchTable(spark, dir, m,
-                  lists, queries, nprobe = np)
+              val got = operators.AnnOps.ivfPqSearchTables(spark, dir, sv,
+                  queries, nprobe = np, r = operators.AnnOps.IvfSqR,
+                  excludeSelf = true)
                 .select("q_id", "c_id")
               val r = got.join(exact, Seq("q_id", "c_id")).count() / nEx
               np -> math.rint(r * 1000) / 1000
@@ -538,8 +540,9 @@ object ScaleBench {
             s" -> chosen nprobe ${sqChosen(f)} (recall@10 ${sqRecall(f)})")
         }
         def searchOnce = time {
-          operators.AnnOps.ivfSqSearchTable(spark, dir, m, lists, queries,
-            nprobe = sqChosen(f))
+          operators.AnnOps.ivfPqSearchTables(spark, dir, sv, queries,
+            nprobe = sqChosen(f), r = operators.AnnOps.IvfSqR,
+            excludeSelf = true)
             .write.format("noop").mode("overwrite").save()
         }
         val searchSec = math.min(searchOnce, searchOnce)

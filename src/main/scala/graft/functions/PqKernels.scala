@@ -18,9 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DataTypes, DoubleType, S
   * child) costs ~2 s of driver CPU PER ACTION in string building —
   * PqServeProbe measured `ann_graph_pq`'s 4.6 s serve as ~0.6 s of
   * task time plus plan-string rendering. The broadcast keeps every
-  * plan O(1) in the book size (the [[IvfModel]] discipline at
-  * [[graft.operators.AnnOps.LiteralMaxM]], applied to the PQ books
-  * which are ALWAYS past any literal threshold).
+  * plan O(1) in the book size (the [[IvfModel]] discipline: the IVF
+  * quantizer also ships as one broadcast, at every m).
   *
   * Layout: codewords grouped by subspace, ascending k within each
   * group (`offs(s) until offs(s+1)` indexes group s); `flat` holds

@@ -170,15 +170,6 @@ object AnnOps {
     */
   val PqLloydRounds = 1
 
-  /** Past this m, probe assignment switches from a plan-literal
-    * quantizer to a broadcast consumed by the [[IvfAssignExpr]] kernel:
-    * a typedLit of thousands of struct rows (each a dim-length array)
-    * bloats the plan tree and codegen, while the broadcast keeps plan
-    * size O(1) in m. Both paths produce identical rows (parity-tested),
-    * so the switch is purely physical.
-    */
-  val LiteralMaxM = 64
-
   /** 2^50 — scaling a float-derived double by it yields an exact
     * integer (see the Lloyd-mean comment in [[ivfModel]]).
     */
@@ -209,10 +200,10 @@ object AnnOps {
 
   /** Literal-quantizer probe assignment with ZERO shuffle: the m
     * centroids ride along as a literal array column and each vector
-    * ranks them in-row (transform → array_sort → slice → explode, all
-    * codegen). Ties break by cid ascending (negated sim sorts first,
-    * then cid). Keeps the vector payload (v, nrm) so callers never
-    * re-join the corpus to recover what they already scanned.
+    * ranks them in-row (transform → array_sort → slice → explode).
+    * Ties break by cid ascending (negated sim sorts first, then cid).
+    * Production assignment is [[assignBc]]; this is its parity
+    * reference, reached only through [[assignForTest]].
     */
   private def assignLit(vecs: DataFrame, model: IvfModel, nprobe: Int): DataFrame = {
     val cents = centsLit(model)
@@ -226,27 +217,18 @@ object AnnOps {
         col("p_rnk"))
   }
 
-  /** Broadcast-quantizer probe assignment — same contract and row
-    * order semantics as [[assignLit]], via one kernel call per vector.
-    * Still zero shuffle; plan size independent of m.
+  /** THE probe assignment: one [[IvfAssignExpr]] kernel call per
+    * vector against the broadcast quantizer, exploded to (p_rnk, cid)
+    * rows in (sim desc, cid asc) order. Zero shuffle, plan size O(1)
+    * in m. Every input column rides along (the vector payload v/nrm,
+    * plus any query-side columns a candidate filter reads), so callers
+    * never re-join the corpus to recover what they already scanned.
     */
   private def assignBc(vecs: DataFrame, bc: Broadcast[IvfModel],
       nprobe: Int): DataFrame =
-    vecs
-      .select(col("vec_id"), col("v"), col("nrm"),
-        posexplode(IvfAssign.probes(col("v"), col("nrm"), bc, nprobe))
-          .as(Seq("p_rnk", "cid")))
-      .select(col("vec_id"), col("cid"), col("v"), col("nrm"), col("p_rnk"))
-
-  /** The one literal-vs-kernel dispatcher: `bcProvider` supplies the
-    * broadcast only when the kernel path is taken, so callers control
-    * its lifetime (session-memoized for queries, ephemeral + destroyed
-    * for the model build).
-    */
-  private def assignWith(vecs: DataFrame, model: IvfModel, nprobe: Int,
-      bcProvider: => Broadcast[IvfModel]): DataFrame =
-    if (model.m <= LiteralMaxM) assignLit(vecs, model, nprobe)
-    else assignBc(vecs, bcProvider, nprobe)
+    vecs.select(col("*"),
+      posexplode(IvfAssign.probes(col("v"), col("nrm"), bc, nprobe))
+        .as(Seq("p_rnk", "cid")))
 
   /** Test hook: probe assignment for the corpus at (m, nprobe), with
     * the physical path forced — used to assert literal/kernel parity
@@ -254,11 +236,9 @@ object AnnOps {
     */
   private[graft] def assignForTest(spark: SparkSession, dir: String, m: Int,
       nprobe: Int, kernel: Boolean): DataFrame = {
-    val model = ivfModel(spark, dir, m)
     val emb = embDouble(spark, dir)
-    val a = if (kernel)
-      assignBc(emb, spark.sparkContext.broadcast(model), nprobe)
-    else assignLit(emb, model, nprobe)
+    val a = if (kernel) assignFor(spark, dir, m, emb, nprobe)
+      else assignLit(emb, ivfModel(spark, dir, m), nprobe)
     a.select("vec_id", "cid")
   }
 
@@ -271,8 +251,8 @@ object AnnOps {
     * driver-side model (the Spark ML KMeansModel.clusterCenters shape —
     * a coarse quantizer lives in memory on every node; m scales with
     * √corpus, so even a 100 TB corpus keeps it in the low thousands of
-    * rows — past [[LiteralMaxM]] it ships as a broadcast, so model size
-    * never touches the plan).
+    * rows — it ships as a broadcast, so model size never touches the
+    * plan).
     *
     * The Lloyd mean is computed over EXACT integers (x·2^50 is integral
     * for any float component with |x| ≥ 2^-27 — embedding floats have
@@ -315,18 +295,15 @@ object AnnOps {
         .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
         .collect()
       // Lloyd refinement, `rounds` times: assign → element-wise exact
-      // mean per centroid. Each round's input broadcast (kernel path
-      // only) lives for that one build and is destroyed after its
-      // collect; a centroid that loses every member drops out of the
-      // refined model (GROUP BY emits no row — same on the oracle
-      // side, so the chains stay hash-parallel at any round count).
+      // mean per centroid. Each round's input broadcast lives for that
+      // one build and is destroyed after its collect; a centroid that
+      // loses every member drops out of the refined model (GROUP BY
+      // emits no row — same on the oracle side, so the chains stay
+      // hash-parallel at any round count).
       var model = toModel(seedRows)
       for (_ <- 0 until rounds) {
-        var roundBc: Broadcast[IvfModel] = null
-        val cur = model
-        val refined = assignWith(emb, cur, 1, {
-            roundBc = spark.sparkContext.broadcast(cur); roundBc
-          })
+        val roundBc = spark.sparkContext.broadcast(model)
+        val refined = try assignBc(emb, roundBc, 1)
           .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
           .groupBy("cid", "pos").agg(
             (sum((col("x") * lit(ScaleP2)).cast(DecimalType(38, 0)))
@@ -337,7 +314,7 @@ object AnnOps {
           .select(col("cid"), expr("transform(pv, p -> p.x)").as("cv"))
           .withColumn("cnrm", VectorFns.norm(col("cv")))
           .collect()
-        if (roundBc != null) {
+        finally {
           try roundBc.destroy() catch { case _: Throwable => () }
         }
         model = toModel(refined)
@@ -345,9 +322,9 @@ object AnnOps {
       model
     }
 
-  /** The quantizer as a session-memoized broadcast (kernel-path
-    * consumers); fetched once per executor, reused by every query in
-    * the session.
+  /** The quantizer as a session-memoized broadcast: fetched once per
+    * executor, shared by every assignment, search and encode over the
+    * session's (dir, m, rounds) quantizer.
     */
   private def ivfModelBc(spark: SparkSession, dir: String,
       m: Int, rounds: Int = LloydRounds): Broadcast[IvfModel] =
@@ -355,13 +332,10 @@ object AnnOps {
       spark.sparkContext.broadcast(ivfModel(spark, dir, m, rounds))
     }
 
-  /** Probe assignment picking the physical path by m (literal
-    * quantizer ≤ [[LiteralMaxM]], broadcast kernel above).
-    */
+  /** Probe assignment against the session quantizer at (m, rounds). */
   private def assignFor(spark: SparkSession, dir: String, m: Int,
       vecs: DataFrame, nprobe: Int, rounds: Int = LloydRounds): DataFrame =
-    assignWith(vecs, ivfModel(spark, dir, m, rounds), nprobe,
-      ivfModelBc(spark, dir, m, rounds))
+    assignBc(vecs, ivfModelBc(spark, dir, m, rounds), nprobe)
 
   /** IVF inverted lists: every corpus vector assigned to its nearest
     * centroid, REPARTITIONED BY cid and persisted — the cluster layout
@@ -376,33 +350,6 @@ object AnnOps {
           col("v").as("cv2"), col("nrm").as("cn"))
         .repartition(col("c_cid"))
     }
-
-  /** Query path over any inverted-list layout: assign probes (an
-    * in-row rank against the quantizer over the QUERY vectors),
-    * broadcast the probes into the co-located list scan, bounded-heap
-    * top-k. Compare volume ≈ nprobe/m of brute force and zero corpus
-    * shuffle per query.
-    */
-  private def searchIvf(spark: SparkSession, dir: String, m: Int,
-      lists: DataFrame, qVecs: DataFrame, nprobe: Int, k: Int,
-      excludeSelf: Boolean, rounds: Int = LloydRounds,
-      decorateProbes: DataFrame => DataFrame = identity,
-      extraCond: Column = lit(true),
-      extraCols: Seq[String] = Nil): DataFrame = {
-    val probes = decorateProbes(
-      assignFor(spark, dir, m, qVecs, nprobe, rounds)
-        .select(col("cid").as("q_cid"), col("vec_id").as("q_id"),
-          col("v").as("qv"), col("nrm").as("qn")))
-    val joinCond =
-      if (excludeSelf) col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id")
-      else col("q_cid") === col("c_cid")
-    val sims = lists.join(broadcast(probes), joinCond && extraCond)
-      .withColumn("sim",
-        VectorFns.cosine(col("qv"), col("cv2"), col("qn"), col("cn")))
-    TopK.perKey(sims, Seq(col("q_id")),
-        Seq(col("sim").desc, col("c_id").asc), k)
-      .select("q_id", (Seq("c_id", "sim", "rnk") ++ extraCols): _*)
-  }
 
   /** The IVF inverted lists with each member's label carried — the
     * layout any label-predicated search (D51 negatives, D53 filtered
@@ -421,24 +368,23 @@ object AnnOps {
     * anchor (the % 50 query set), the top-k most SIMILAR corpus
     * vectors with a DIFFERENT label: the confusable negatives
     * contrastive training wants. Candidates come through the IVF
-    * layout exactly like D10b (broadcast probe assignment into the
-    * co-located lists, nprobe=4) with the label-mismatch filter
-    * applied BEFORE the bounded heap, so positives never occupy heap
-    * slots. The label join is a one-time layout derivation
-    * (memoized), not per-query work.
+    * layout exactly like D10b (the corpus-split search over the
+    * labeled Flat handle, nprobe=4) with the label-mismatch filter
+    * applied inside the list join, BEFORE the bounded heap, so
+    * positives never occupy heap slots. The labels are re-attached to
+    * the |queries|·k result rows.
     */
   def hardNegatives(spark: SparkSession, dir: String, nprobe: Int = 4,
       k: Int = 5): DataFrame = {
-    val labels = embDouble(spark, dir).select(col("vec_id"), col("label"))
-    // the ONE searchIvf chain, decorated: probes carry the anchor's
-    // label, the list join adds the label-mismatch predicate
-    searchIvf(spark, dir, DefaultM, ivfListsLabeled(spark, dir),
-        embDouble(spark, dir).filter(col("vec_id") % 50 === 0), nprobe, k,
-        excludeSelf = true,
-        decorateProbes = p => p.join(labels.select(
-          col("vec_id").as("q_id"), col("label").as("q_label")), "q_id"),
-        extraCond = col("q_label") =!= col("c_label"),
-        extraCols = Seq("q_label", "c_label"))
+    val hits = ivfPqCorpusSearch(spark, dir,
+      sessionServing(spark, dir, "flat_labeled"), nprobe, k = k,
+      candFilter = col("q_label") =!= col("c_label"))
+    // the small hit frame rides broadcast into each label scan
+    def labeled(side: String, df: DataFrame): DataFrame =
+      embDouble(spark, dir)
+        .select(col("vec_id").as(s"${side}_id"), col("label").as(s"${side}_label"))
+        .join(broadcast(df), s"${side}_id")
+    labeled("q", labeled("c", hits))
       .select("q_id", "q_label", "c_id", "c_label", "sim", "rnk")
       .orderBy("q_id", "rnk")
   }
@@ -446,8 +392,9 @@ object AnnOps {
   /** D10b: IVF-Flat ANN — the other classic scale path next to LSH.
     * The coarse quantizer and inverted lists are layout-time artifacts
     * ([[ivfModel]]/[[ivfLists]], built once per session); the query
-    * path is [[searchIvf]] only. The oracle pins the [[DefaultM]]
-    * configuration; [[annIvfM]] exposes the tuning knobs.
+    * path is the corpus-split search over a Flat handle. The oracle
+    * pins the [[DefaultM]] configuration; [[annIvfM]] exposes the
+    * tuning knobs.
     */
   def annIvf(spark: SparkSession, dir: String): DataFrame =
     annIvfM(spark, dir, DefaultM, 4)
@@ -458,10 +405,9 @@ object AnnOps {
     */
   def annIvfM(spark: SparkSession, dir: String, m: Int,
       nprobe: Int, k: Int = 10, rounds: Int = LloydRounds): DataFrame =
-    searchIvf(spark, dir, m, ivfLists(spark, dir, m, rounds),
-        embDouble(spark, dir).filter(col("vec_id") % 50 === 0), nprobe, k,
-        excludeSelf = true, rounds)
-      .orderBy("q_id", "rnk")
+    ivfPqCorpusSearch(spark, dir,
+      sessionServing(spark, dir, "flat", m = m, ivfRounds = rounds),
+      nprobe, k = k)
 
   // ---------------------------------------------------------------
   // D56: MMR diversification — re-rank a relevance shortlist so the
@@ -718,18 +664,17 @@ object AnnOps {
       .orderBy("q_id", "rnk")
   }
 
-  /** The IVF arm: probe assignment against the broadcast quantizer,
-    * predicate applied inside the co-located list join — matching
-    * candidates only ever reach the heap; the corpus never shuffles.
+  /** The IVF arm: the corpus-split search over the labeled Flat
+    * handle, predicate applied inside the co-located list join —
+    * matching candidates only ever reach the heap; the corpus never
+    * shuffles. A restarted session runs the same search over the
+    * persisted handle ([[LayoutOps.annFilteredServed]]).
     */
   private[graft] def filteredIvf(spark: SparkSession, dir: String,
       pred: Column => Column, nprobe: Int = 4, k: Int = 10): DataFrame =
-    searchIvf(spark, dir, DefaultM, ivfListsLabeled(spark, dir),
-        embDouble(spark, dir).filter(col("vec_id") % 50 === 0), nprobe, k,
-        excludeSelf = true, extraCond = pred(col("c_label")))
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk"),
-        lit("ivf").as("path"))
-      .orderBy("q_id", "rnk")
+    ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir, "flat_labeled"),
+        nprobe, k = k, candFilter = pred(col("c_label")))
+      .withColumn("path", lit("ivf"))
 
   /** The labeled IVF lists as a frame — the D53c layout family's
     * write side (bucketed on c_cid by the store).
@@ -738,80 +683,11 @@ object AnnOps {
       dir: String): DataFrame =
     ivfListsLabeled(spark, dir)
 
-  /** D53c: the IVF arm served ENTIRELY from persisted tables — the
-    * quantizer collected from its m-row table (the O(1) model object
-    * every serving node holds), probe cids resolved driver-side into
-    * a literal IN filter so the labeled-lists scan prunes to the
-    * probed buckets, the predicate applied inside the list join
-    * before the heap. Shares ann_filtered_ivf's oracle: a FRESH
-    * session must return the identical filtered result with zero
-    * rebuild.
-    */
-  def filteredIvfFromTables(spark: SparkSession, dir: String,
-      cents: DataFrame, lists: DataFrame, pred: Column => Column,
-      nprobe: Int = 4, k: Int = 10): DataFrame = {
-    val model = toModel(cents.select("cid", "cv", "cnrm").collect())
-    var bc: Broadcast[IvfModel] = null
-    val assigned = assignWith(
-      embDouble(spark, dir).filter(col("vec_id") % 50 === 0), model, nprobe, {
-        bc = spark.sparkContext.broadcast(model); bc
-      })
-    val probes = assigned.select(col("cid").as("q_cid"),
-      col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val probedCids = assigned.select("cid").distinct()
-      .collect().map(_.getLong(0)).sorted
-    val sims = lists.filter(col("c_cid").isin(probedCids: _*))
-      .join(broadcast(probes),
-        col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id") &&
-          pred(col("c_label")))
-      .withColumn("sim",
-        VectorFns.cosine(col("qv"), col("cv2"), col("qn"), col("cn")))
-    TopK.perKey(sims, Seq(col("q_id")),
-        Seq(col("sim").desc, col("c_id").asc), k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk"),
-        lit("ivf").as("path"))
-      .orderBy("q_id", "rnk")
-  }
-
-  /** Incremental index maintenance: assign a batch of NEW vectors to
-    * the EXISTING quantizer and append them to the inverted lists —
-    * the streaming story of the layout artifact. The corpus is never
-    * re-scanned and the quantizer never rebuilt (it is a stable model;
-    * re-layout is a periodic offline decision, like re-bucketing a
-    * table). Only the batch shuffles (repartition by its assigned
-    * centroid), so maintenance cost is O(|batch|) regardless of index
-    * size. Returns the widened lists; [[searchIvf]]-compatible.
-    */
-  def ivfAppend(spark: SparkSession, dir: String, newVecs: DataFrame,
-      m: Int = DefaultM): DataFrame = {
-    val prepped = newVecs
-      .withColumn("v", VectorFns.toDouble(col("embedding")))
-      .withColumn("nrm", VectorFns.norm(col("v")))
-      .select("vec_id", "v", "nrm")
-    val added = assignFor(spark, dir, m, prepped, 1)
-      .select(col("cid").as("c_cid"), col("vec_id").as("c_id"),
-        col("v").as("cv2"), col("nrm").as("cn"))
-      .repartition(col("c_cid"))
-    ivfLists(spark, dir, m).unionByName(added)
-  }
-
-  /** Test/maintenance hook: run the IVF query path over an explicit
-    * lists layout (e.g. one produced by [[ivfAppend]]). Serving
-    * semantics by default: no id-equality self-exclusion (see
-    * [[ivfPqSearchTables]] — external query ids may collide with corpus
-    * ids); pass `excludeSelf = true` only when queries are corpus
-    * members.
-    */
-  def ivfSearchOn(spark: SparkSession, dir: String, lists: DataFrame,
-      qVecs: DataFrame, nprobe: Int = 4, k: Int = 10,
-      m: Int = DefaultM, excludeSelf: Boolean = false): DataFrame =
-    searchIvf(spark, dir, m, lists, qVecs, nprobe, k, excludeSelf)
-
   /** D25: k-means cluster labels for every embedding — the default
     * quantizer's nprobe=1 assignment exposed as a query: the layout
     * step of IVF doubles as embedding clustering (the
     * KMeansModel.transform shape). Zero shuffle: the quantizer is a
-    * plan literal / broadcast and each vector ranks it in-row.
+    * broadcast and each vector ranks it in-row.
     */
   def clusterAssign(spark: SparkSession, dir: String): DataFrame =
     assignFor(spark, dir, DefaultM, embDouble(spark, dir), 1)
@@ -1544,7 +1420,7 @@ object AnnOps {
       else graphPqWalk(pqQueryTables(spark, dir),
         graphAdjCodes(spark, dir), graphAnchorCodes(spark, dir),
         hops, beam, pinKey = s"$dir:pqServe")
-    exactRerank(spark, dir,
+    exactRerank(spark, dir, embDouble(spark, dir).filter(col("vec_id") % 50 === 0),
         bm.filter(col("c_id") =!= col("q_id")).select("q_id", "c_id"), k)
       .orderBy("q_id", "rnk")
   }
@@ -2345,9 +2221,7 @@ object AnnOps {
     // kernel, not a typedLit: the nSub×PqK×subDim literal (≈32k
     // doubles) made every downstream plan description cost seconds of
     // driver string-rendering PER ACTION (PqServeProbe, r15) — the
-    // same [[LiteralMaxM]] discipline the IVF quantizer already
-    // follows, and the PQ books are always past any literal
-    // threshold. Same argmin, same distance arithmetic, ties → k asc
+    // same broadcast discipline the IVF quantizer follows. Same argmin, same distance arithmetic, ties → k asc
     // (kernel iterates k ascending with strict-less update — the
     // array_sort struct order it replaces).
     val spark = sub.sparkSession
@@ -2578,19 +2452,27 @@ object AnnOps {
     */
   def annPqRerank(spark: SparkSession, dir: String, r: Int = PqRerankR,
       k: Int = 10): DataFrame =
-    exactRerank(spark, dir, annPqAdc(spark, dir, r).select("q_id", "c_id"), k)
+    exactRerank(spark, dir, embDouble(spark, dir).filter(col("vec_id") % 50 === 0),
+        annPqAdc(spark, dir, r).select("q_id", "c_id"), k)
       .orderBy("q_id", "rnk")
 
-  /** Exact-cosine re-rank of a (q_id, c_id) shortlist: the shortlist
-    * is broadcast into one corpus scan (the corpus is read once and
-    * never shuffled), then a bounded-heap top-k per query.
+  /** THE exact-cosine re-rank of a (q_id, c_id) shortlist: the
+    * shortlist is broadcast into one scan of the base corpus for the
+    * candidate floats (read once, never shuffled), query floats come
+    * from `queries` (a (vec_id, v, nrm) frame — the corpus split, or a
+    * serving batch that need not be corpus members), then a
+    * bounded-heap top-k per query. `extraRerank` supplies
+    * (vec_id, embedding) rows for candidates the base corpus lacks
+    * (vectors an append added to a handle's lists).
     */
   private[graft] def exactRerank(spark: SparkSession, dir: String,
-      shortlist: DataFrame, k: Int): DataFrame = {
-    val emb = embDouble(spark, dir)
-    val qv = emb.filter(col("vec_id") % 50 === 0)
+      queries: DataFrame, shortlist: DataFrame, k: Int,
+      extraRerank: Option[DataFrame] = None): DataFrame = {
+    val qv = queries
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val exact = emb
+    val base = embDouble(spark, dir).select("vec_id", "v", "nrm")
+    val exact = extraRerank
+      .fold(base)(ex => base.unionByName(vecsOf(ex).select("vec_id", "v", "nrm")))
       .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
       .join(broadcast(shortlist), "c_id")
       .join(broadcast(qv), "q_id")
@@ -2736,7 +2618,7 @@ object AnnOps {
       r: Int = IvfPqR, k: Int = 10, ivfRounds: Int = LloydRounds,
       pqRounds: Int = PqLloydRounds, nSub: Int = PqS): DataFrame =
     ivfPqCorpusSearch(spark, dir,
-      sessionServing(spark, dir, residual = true, ivfRounds = ivfRounds,
+      sessionServing(spark, dir, "pq_res", ivfRounds = ivfRounds,
         pqRounds = pqRounds, nSub = nSub),
       nprobe, r, k)
 
@@ -2763,7 +2645,7 @@ object AnnOps {
     * batch twin of [[graft.streaming.StreamOps.annSearchStream]], over
     * the same session handle. Zero corpus work per call: the lists are
     * the session layout, the quantizer/codebooks ride as
-    * literals/broadcasts, only the query frame computes.
+    * broadcasts, only the query frame computes.
     */
   def ivfPqSearch(spark: SparkSession, dir: String, queries: DataFrame,
       nprobe: Int = IvfPqNprobe, r: Int = IvfPqR, k: Int = 10): DataFrame =
@@ -2848,84 +2730,121 @@ object AnnOps {
     pqModelRes(spark, dir).toDF("s", "k", "cv")
   }
 
-  /** The one IVF-PQ index representation: the two tiny model
-    * artifacts held driver-side (quantizer m rows, codebooks nSub·PqK
-    * rows — the same O(1) objects every node holds in any production
-    * ANN deployment) plus the coded lists as a frame, either the
-    * session's memoized layout ([[sessionServing]]) or the bucketed
-    * persisted table ([[servingFromTables]]). Every IVF-PQ search and
-    * delta encode runs over a handle; the streaming faces build theirs
-    * once at stream start, not per micro-batch.
+  /** How an IVF handle's lists encode their members — the per-list
+    * codec plugged into the one inverted-file search and encode body:
+    *  - [[IvfCodec.Flat]]: lists carry the float vector and its norm
+    *    (cv2, cn); candidates score by exact cosine directly.
+    *  - [[IvfCodec.Sq8]]: lists carry per-dimension byte codes
+    *    (codes) under the affine model (mn, delta); SQ8 ADC (higher is
+    *    closer) shortlists, exact cosine re-ranks.
+    *  - [[IvfCodec.Pq]]: lists carry PQ codes c0..c{nSub−1} against
+    *    `book` (of v, or of the residual v − cq(list) when
+    *    `residual`); ADC distance (lower is closer) shortlists, exact
+    *    cosine re-ranks.
     */
-  final case class IvfPqServing(model: IvfModel,
-      book: Seq[(Int, Long, Seq[Double])], lists: DataFrame,
-      residual: Boolean) {
-    def nSub: Int = book.iterator.map(_._1).max + 1
-    def subDim: Int = model.dim / nSub
-
-    /** The quantizer broadcast for the kernel assignment path (m >
-      * [[LiteralMaxM]]): created on first use, then shared by every
-      * search and encode over this handle.
-      */
-    private[graft] lazy val modelBc: Broadcast[IvfModel] =
-      lists.sparkSession.sparkContext.broadcast(model)
+  sealed trait IvfCodec
+  object IvfCodec {
+    case object Flat extends IvfCodec
+    final case class Sq8(mn: Seq[Double], delta: Seq[Double]) extends IvfCodec
+    final case class Pq(book: Seq[(Int, Long, Seq[Double])],
+        residual: Boolean) extends IvfCodec {
+      def nSub: Int = book.iterator.map(_._1).max + 1
+    }
   }
 
-  /** Session serving handle over the memoized layout artifacts: the
-    * quantizer ([[ivfModel]]) plus the plain codebooks and coded lists
-    * ([[pqModel]], [[ivfPqLists]]) or, when `residual`, the residual
-    * ones ([[pqModelRes]], [[ivfPqResLists]]). `m` picks a non-default
-    * plain quantizer size (the ScaleBench production regime, which
-    * swaps in its persisted lists table with `copy(lists = …)`);
-    * ivfRounds/pqRounds/nSub pick a non-default residual index (recall
-    * harness and spec sweeps).
+  /** The one IVF index representation: the quantizer as a broadcast
+    * (its `.value` is the m-row model every node holds; the
+    * assignment kernel reads the broadcast), the inverted lists as a
+    * frame — the session's memoized layout ([[sessionServing]]) or the
+    * bucketed persisted table ([[servingFromTables]]) — and the codec
+    * the lists are encoded with. Every IVF search and delta encode
+    * runs over a handle; the streaming faces build theirs once at
+    * stream start, not per micro-batch.
+    */
+  final case class IvfPqServing(model: Broadcast[IvfModel],
+      lists: DataFrame, codec: IvfCodec)
+
+  /** Session serving handle over the memoized layout artifacts and the
+    * session-memoized quantizer broadcast ([[ivfModelBc]]), one of:
+    *  - "flat": Flat lists ([[ivfLists]]) at (m, ivfRounds);
+    *  - "flat_labeled": Flat lists carrying c_label
+    *    ([[ivfListsLabeled]]), the label-predicated searches' layout;
+    *  - "sq8": SQ8-coded lists ([[ivfSqLists]] or, off [[DefaultM]],
+    *    [[ivfSqListsFrameM]]);
+    *  - "pq": plain PQ-coded lists ([[ivfPqLists]] or, off
+    *    [[DefaultM]], [[ivfPqListsFrameM]]);
+    *  - "pq_res": residual PQ-coded lists ([[ivfPqResLists]]) at
+    *    (ivfRounds, pqRounds, nSub) — the recall harness's and spec
+    *    sweeps' non-default residual indexes.
+    * The ScaleBench production regimes swap in their persisted lists
+    * table with `copy(lists = …)`.
     */
   private[graft] def sessionServing(spark: SparkSession, dir: String,
-      residual: Boolean = false, m: Int = DefaultM,
+      encoding: String = "pq", m: Int = DefaultM,
       ivfRounds: Int = LloydRounds, pqRounds: Int = PqLloydRounds,
-      nSub: Int = PqS): IvfPqServing =
-    if (residual) {
-      require(m == DefaultM, s"residual coded lists exist only at m = $DefaultM")
-      IvfPqServing(ivfModel(spark, dir, DefaultM, ivfRounds),
-        pqModelRes(spark, dir, ivfRounds, pqRounds, nSub),
-        ivfPqResLists(spark, dir, ivfRounds, pqRounds, nSub), residual = true)
-    } else {
-      require(ivfRounds == LloydRounds && pqRounds == PqLloydRounds &&
-        nSub == PqS, "ivfRounds/pqRounds/nSub select a residual index")
-      IvfPqServing(ivfModel(spark, dir, m), pqModel(spark, dir),
-        if (m == DefaultM) ivfPqLists(spark, dir) else ivfPqListsFrameM(spark, dir, m),
-        residual = false)
+      nSub: Int = PqS): IvfPqServing = {
+    require(encoding == "pq_res" || (pqRounds == PqLloydRounds && nSub == PqS),
+      "pqRounds/nSub select a residual index")
+    require(encoding == "flat" || encoding == "pq_res" || ivfRounds == LloydRounds,
+      "ivfRounds selects a flat or residual index")
+    require(m == DefaultM || Set("flat", "sq8", "pq")(encoding),
+      s"$encoding lists exist only at m = $DefaultM")
+    val (lists, codec) = encoding match {
+      case "flat" => (ivfLists(spark, dir, m, ivfRounds), IvfCodec.Flat)
+      case "flat_labeled" => (ivfListsLabeled(spark, dir), IvfCodec.Flat)
+      case "sq8" =>
+        val (mn, delta) = sq8Model(spark, dir)
+        (if (m == DefaultM) ivfSqLists(spark, dir) else ivfSqListsFrameM(spark, dir, m),
+          IvfCodec.Sq8(mn, delta))
+      case "pq" =>
+        (if (m == DefaultM) ivfPqLists(spark, dir) else ivfPqListsFrameM(spark, dir, m),
+          IvfCodec.Pq(pqModel(spark, dir), residual = false))
+      case "pq_res" =>
+        (ivfPqResLists(spark, dir, ivfRounds, pqRounds, nSub),
+          IvfCodec.Pq(pqModelRes(spark, dir, ivfRounds, pqRounds, nSub),
+            residual = true))
+      case other => throw new IllegalArgumentException(s"unknown IVF encoding: $other")
     }
+    IvfPqServing(ivfModelBc(spark, dir, m, ivfRounds), lists, codec)
+  }
 
-  /** Build a serving handle from the persisted layout tables (plain or
-    * residual encoding — the lists/book must match).
+  /** Build a serving handle from the persisted quantizer table, a
+    * lists frame and the codec the lists carry.
     */
-  def servingFromTables(cents: DataFrame, book: DataFrame,
-      lists: DataFrame, residual: Boolean = false): IvfPqServing =
-    IvfPqServing(
-      toModel(cents.select("cid", "cv", "cnrm").collect()),
-      book.select("s", "k", "cv").collect()
-        .map(row => (row.getInt(0), row.getLong(1), row.getSeq[Double](2)))
-        .toSeq,
-      lists, residual)
+  def servingFromTables(cents: DataFrame, lists: DataFrame,
+      codec: IvfCodec): IvfPqServing =
+    IvfPqServing(lists.sparkSession.sparkContext.broadcast(
+        toModel(cents.select("cid", "cv", "cnrm").collect())),
+      lists, codec)
 
-  /** (vec_id, v, nrm) for a (vec_id, embedding) frame. */
+  /** A persisted (s, k, cv) codebook table as the in-memory book. */
+  private[graft] def bookOf(book: DataFrame): Seq[(Int, Long, Seq[Double])] =
+    book.select("s", "k", "cv").collect()
+      .map(row => (row.getInt(0), row.getLong(1), row.getSeq[Double](2)))
+      .toSeq
+
+  /** (vec_id, v, nrm) for a (vec_id, embedding) frame; any other
+    * columns ride along.
+    */
   private def vecsOf(vecs: DataFrame): DataFrame =
     vecs
       .withColumn("v", VectorFns.toDouble(col("embedding")))
       .withColumn("nrm", VectorFns.norm(col("v")))
-      .select("vec_id", "v", "nrm")
+      .drop("embedding")
 
-  /** THE IVF-PQ search: an ARBITRARY (vec_id, embedding) query frame
-    * against a serving handle — session, persisted-layout, streaming
-    * and corpus-split faces all run this body. Quantizer/codebooks
-    * ride from the handle; probe cids resolve driver-side into a
-    * literal IN filter, so a bucketed lists table scan prunes to the
-    * probed buckets (nprobe/m of the index files at any corpus size);
-    * then ADC → shortlist R → exact re-rank, with the base corpus
-    * parquet supplying the re-rank floats (source data, not a derived
-    * layout). Residual handles score per-probe-row residual distance
-    * tables ([[resDistTables]]); plain handles per-query tables
+  /** THE IVF search: an ARBITRARY (vec_id, embedding) query frame
+    * against a serving handle of any codec — session, persisted-layout,
+    * streaming and corpus-split faces all run this body. Probes are
+    * assigned in-row by the broadcast quantizer kernel; probe cids
+    * are collected into a literal IN filter, so a bucketed lists
+    * table scan prunes to the probed buckets (nprobe/m of the index
+    * files at any corpus size); then one broadcast probe×list join,
+    * scored by the codec. Flat lists take the top-k by exact cosine
+    * directly; SQ8 and PQ lists shortlist `r` by ADC and re-rank the
+    * shortlist exactly ([[exactRerank]]: the base corpus parquet
+    * supplies the candidate floats — source data, not a derived
+    * layout). Residual PQ handles score per-probe-row residual
+    * distance tables ([[resDistTables]]); plain ones per-query tables
     * ([[distTablesFor]]).
     *
     * `excludeSelf` drops candidates whose id equals the query's id —
@@ -2935,6 +2854,11 @@ object AnnOps {
     * with corpus vec_ids, and excluding on id equality would silently
     * drop a legitimate (possibly top-1) corpus neighbor.
     *
+    * `candFilter` is a predicate over the probe×list row, applied
+    * inside the join before any heap: list columns (c_label on the
+    * labeled Flat lists) and the query frame's extra columns (q_label
+    * on the corpus split) are in scope.
+    *
     * `extraRerank` supplies (vec_id, embedding) float rows for ids the
     * handle's lists gained by an append ([[codedRowsFor]]) but the base
     * corpus lacks, so the exact re-rank can score them.
@@ -2942,87 +2866,103 @@ object AnnOps {
   def ivfPqSearchTables(spark: SparkSession, dir: String,
       sv: IvfPqServing, queries: DataFrame, nprobe: Int = IvfPqNprobe,
       r: Int = IvfPqR, k: Int = 10, excludeSelf: Boolean = false,
-      extraRerank: Option[DataFrame] = None): DataFrame = {
+      extraRerank: Option[DataFrame] = None,
+      candFilter: Column = lit(true)): DataFrame = {
     val prepped = vecsOf(queries)
-    val assigned = assignWith(prepped, sv.model, nprobe, sv.modelBc)
-    val probes =
-      if (sv.residual)
-        resDistTables(withResidual(assigned, centroidsQ(spark, sv.model))
-            .select(col("vec_id").as("q_id"), col("cid").as("q_cid"), col("r")),
-          sv.book, sv.subDim, sv.nSub)
-      else assigned
-        .select(col("cid").as("q_cid"), col("vec_id").as("q_id"))
-        .join(distTablesFor(sv.book, sv.subDim,
-          prepped.select(col("vec_id"), col("v"))), "q_id")
+    val qExtra = prepped.columns.filterNot(Set("vec_id", "v", "nrm")).map(col).toSeq
+    val assigned = assignBc(prepped, sv.model, nprobe)
+    val probeKeys = Seq(col("cid").as("q_cid"), col("vec_id").as("q_id")) ++ qExtra
+    val probes = sv.codec match {
+      case IvfCodec.Flat | IvfCodec.Sq8(_, _) =>
+        assigned.select(probeKeys ++ Seq(col("v").as("qv"), col("nrm").as("qn")): _*)
+      case pq @ IvfCodec.Pq(book, false) =>
+        assigned.select(probeKeys: _*)
+          .join(distTablesFor(book, sv.model.value.dim / pq.nSub,
+            prepped.select(col("vec_id"), col("v"))), "q_id")
+      case pq @ IvfCodec.Pq(book, true) =>
+        resDistTables(withResidual(assigned, centroidsQ(spark, sv.model.value))
+            .select(probeKeys :+ col("r"): _*),
+          book, sv.model.value.dim / pq.nSub, pq.nSub)
+    }
     // driver-side probe resolution (|q|·nprobe rows, bounded): the
     // literal IN list is what lets the bucketed table scan prune to
     // the probed lists' buckets
     val probedCids = assigned.select("cid").distinct()
       .collect().map(_.getLong(0)).sorted
     val joinCond =
-      if (excludeSelf) col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id")
-      else col("q_cid") === col("c_cid")
-    val sims = sv.lists.filter(col("c_cid").isin(probedCids: _*))
+      (if (excludeSelf) col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id")
+       else col("q_cid") === col("c_cid")) && candFilter
+    val cand = sv.lists.filter(col("c_cid").isin(probedCids: _*))
       .join(broadcast(probes), joinCond)
-      .withColumn("adc", adcCol(sv.nSub))
-    val shortlist = TopK.perKey(sims, Seq(col("q_id")),
-        Seq(col("adc").asc, col("c_id").asc), r)
-      .select("q_id", "c_id")
-    // exact re-rank: shortlist broadcast into one corpus scan for the
-    // candidate floats; query floats come from the batch itself (the
-    // serving queries need not be corpus members)
-    val qv = prepped
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val base = embDouble(spark, dir).select("vec_id", "v", "nrm")
-    val cands = extraRerank.fold(base)(ex => base.unionByName(vecsOf(ex)))
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-    val exact = cands
-      .join(broadcast(shortlist), "c_id")
-      .join(broadcast(qv), "q_id")
-      .withColumn("sim",
-        VectorFns.cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    TopK.perKey(exact, Seq(col("q_id")),
-        Seq(col("sim").desc, col("c_id").asc), k)
-      .select("q_id", "c_id", "sim", "rnk")
-      .orderBy("q_id", "rnk")
+    // SQ8/PQ: ADC shortlist of r per query, then the exact re-rank
+    def reranked(scored: DataFrame, closer: Column): DataFrame =
+      exactRerank(spark, dir, prepped,
+        TopK.perKey(scored, Seq(col("q_id")), Seq(closer, col("c_id").asc), r)
+          .select("q_id", "c_id"),
+        k, extraRerank)
+    val hits = sv.codec match {
+      case IvfCodec.Flat =>
+        TopK.perKey(cand.withColumn("sim",
+            VectorFns.cosine(col("qv"), col("cv2"), col("qn"), col("cn"))),
+          Seq(col("q_id")), Seq(col("sim").desc, col("c_id").asc), k)
+          .select("q_id", "c_id", "sim", "rnk")
+      case IvfCodec.Sq8(mn, delta) =>
+        reranked(cand.withColumn("adc",
+          VectorFns.dot(col("qv"), sq8Dequant(col("codes"), mn, delta))),
+          col("adc").desc)
+      case pq: IvfCodec.Pq =>
+        reranked(cand.withColumn("adc", adcCol(pq.nSub)), col("adc").asc)
+    }
+    hits.orderBy("q_id", "rnk")
   }
 
-  /** THE IVF-PQ encode: delta rows for a handle's coded lists — a
-    * batch of new (vec_id, embedding) vectors assigned to the handle's
-    * quantizer (in-row, nprobe = 1) and PQ-encoded against the
-    * handle's codebooks (in-row argmin; residual handles code
-    * v − cq(centroid)). No corpus read, neither model rebuilt,
-    * O(|batch|) work at any index size. Output schema matches the
-    * coded lists (c_id, c_cid, c0..c{nSub−1} by name), so the rows
-    * union onto a session handle's lists or append to the persisted
-    * table as new bucketed files — what a restarted session's daily
-    * index maintenance runs.
+  /** THE IVF encode: delta rows for a handle's lists — a batch of new
+    * (vec_id, embedding) vectors assigned to the handle's quantizer
+    * (in-row kernel, nprobe = 1) and encoded by its codec: Flat keeps
+    * the float vector and norm, SQ8 takes [[sq8CodesCol]]'s byte
+    * codes, PQ the in-row argmin against the book (residual handles
+    * code v − cq(centroid)). No corpus read, no model rebuilt,
+    * O(|batch|) work at any index size. Output columns match the
+    * handle's (unlabeled) lists by name, so the rows union onto a
+    * session handle's lists or append to the persisted table as new
+    * bucketed files — what a restarted session's daily index
+    * maintenance runs.
     */
   def codedRowsFor(spark: SparkSession, sv: IvfPqServing,
       newVecs: DataFrame): DataFrame = {
-    val a = assignWith(vecsOf(newVecs), sv.model, 1, sv.modelBc)
-    val coding =
-      if (sv.residual)
-        withResidual(a, centroidsQ(spark, sv.model))
-          .select(col("vec_id"), col("r").as("v"))
-      else a.select("vec_id", "v")
-    wideCodes(pqAssign(subSplit(coding, sv.nSub, sv.subDim), sv.book), sv.nSub)
-      .withColumnRenamed("vec_id", "c_id")
-      .join(a.select(col("cid").as("c_cid"), col("vec_id").as("c_id")), "c_id")
+    val a = assignBc(vecsOf(newVecs), sv.model, 1)
+    val keys = Seq(col("cid").as("c_cid"), col("vec_id").as("c_id"))
+    sv.codec match {
+      case IvfCodec.Flat =>
+        a.select(keys :+ col("v").as("cv2") :+ col("nrm").as("cn"): _*)
+      case IvfCodec.Sq8(mn, delta) =>
+        a.select(keys :+ sq8CodesCol(col("v"), mn, delta).as("codes"): _*)
+      case pq @ IvfCodec.Pq(book, residual) =>
+        val coding =
+          if (residual)
+            withResidual(a, centroidsQ(spark, sv.model.value))
+              .select(col("vec_id"), col("r").as("v"))
+          else a.select("vec_id", "v")
+        wideCodes(pqAssign(subSplit(coding, pq.nSub, sv.model.value.dim / pq.nSub),
+            book), pq.nSub)
+          .withColumnRenamed("vec_id", "c_id")
+          .join(a.select(keys: _*), "c_id")
+    }
   }
 
   /** The corpus-split harness face: search over any handle with the
-    * CORPUS query split (vec_id % 50 = 0, self excluded), so
-    * ann_ivfpq / ann_ivfpq_res and their persisted-layout twins share
-    * one DuckDB oracle row-for-row.
+    * CORPUS query split (vec_id % 50 = 0, self excluded), so each
+    * session face and its persisted-layout twin share one DuckDB
+    * oracle row-for-row. The queries carry their label as q_label for
+    * `candFilter`.
     */
   private[graft] def ivfPqCorpusSearch(spark: SparkSession, dir: String,
       sv: IvfPqServing, nprobe: Int = IvfPqNprobe, r: Int = IvfPqR,
-      k: Int = 10): DataFrame =
+      k: Int = 10, candFilter: Column = lit(true)): DataFrame =
     ivfPqSearchTables(spark, dir, sv,
       Tables.embeddings(spark, dir).filter(col("vec_id") % 50 === 0)
-        .select("vec_id", "embedding"),
-      nprobe, r, k, excludeSelf = true)
+        .select(col("vec_id"), col("embedding"), col("label").as("q_label")),
+      nprobe, r, k, excludeSelf = true, candFilter = candFilter)
 
   // ── D58: scalar quantization (SQ8) ────────────────────────────────
   // The FAISS index family's missing middle rung: between flat floats
@@ -3030,8 +2970,8 @@ object AnnOps {
   // lossy subspace codebooks) sits SQ8 — one byte PER DIMENSION under
   // a per-dim affine map (4× vs float32, no codebook training, far
   // tighter than PQ). The model is 2·D doubles (train = ONE min/max
-  // aggregation, no Lloyd), so it broadcasts as plan literals like the
-  // IVF quantizer; codes are computed in-row; ADC dequantizes in-row
+  // aggregation, no Lloyd), so it rides as plan literals; codes are
+  // computed in-row; ADC dequantizes in-row
   // against the literal model, the corpus never shuffles.
 
   val Sq8RerankR = 50
@@ -3056,15 +2996,24 @@ object AnnOps {
   private[graft] def sq8Codes(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.df(spark, s"sq8Codes:$dir") {
       val (mn, delta) = sq8Model(spark, dir)
-      val mnL = array(mn.map(lit): _*)
-      val dlL = array(delta.map(lit): _*)
       embDouble(spark, dir).select(col("vec_id"),
-        transform(sequence(lit(0), lit(mn.size - 1)), i =>
-          when(element_at(dlL, i + 1) === 0.0, lit(0L)).otherwise(
-            least(lit(255L),
-              floor((element_at(col("v"), i + 1) - element_at(mnL, i + 1))
-                * 256.0 / element_at(dlL, i + 1))))).as("codes"))
+        sq8CodesCol(col("v"), mn, delta).as("codes"))
     }
+
+  /** The SQ8 code expression over a vector column, against the
+    * literal model — shared by the corpus codes and the delta encode
+    * ([[codedRowsFor]]).
+    */
+  private def sq8CodesCol(v: Column, mn: Seq[Double],
+      delta: Seq[Double]): Column = {
+    val mnL = array(mn.map(lit): _*)
+    val dlL = array(delta.map(lit): _*)
+    transform(sequence(lit(0), lit(mn.size - 1)), i =>
+      when(element_at(dlL, i + 1) === 0.0, lit(0L)).otherwise(
+        least(lit(255L),
+          floor((element_at(v, i + 1) - element_at(mnL, i + 1))
+            * 256.0 / element_at(dlL, i + 1)))))
+  }
 
   /** Reconstruction column: deq_d = mn_d + (code_d + 0.5)·delta_d/256
     * (midpoint dequantization), built against the literal model. */
@@ -3138,7 +3087,9 @@ object AnnOps {
     val short = TopK.perKey(sims, Seq(col("q_id")),
         Seq(col("psim").desc, col("c_id").asc), r)
       .select("q_id", "c_id")
-    exactRerank(spark, dir, short, k).orderBy("q_id", "rnk")
+    exactRerank(spark, dir, embDouble(spark, dir).filter(col("vec_id") % 50 === 0),
+        short, k)
+      .orderBy("q_id", "rnk")
   }
 
   /** The model as a persistable frame (d, mn, dl) — D rows, the
@@ -3150,7 +3101,7 @@ object AnnOps {
   }
 
   /** (mn, delta) rebuilt from a persisted model table — D rows
-    * collected, like the quantizer's table→literal path. */
+    * collected, like the quantizer's table→model path. */
   private[graft] def sq8ModelOf(modelTable: DataFrame): (Seq[Double], Seq[Double]) = {
     val rows = modelTable.select("d", "mn", "dl").collect().sortBy(_.getInt(0))
     (rows.map(_.getDouble(1)).toSeq, rows.map(_.getDouble(2)).toSeq)
@@ -3178,8 +3129,8 @@ object AnnOps {
   private[graft] def sq8RerankOn(spark: SparkSession, dir: String,
       mn: Seq[Double], delta: Seq[Double], codes: DataFrame,
       r: Int, k: Int): DataFrame =
-    exactRerank(spark, dir,
-      sq8AdcOn(spark, dir, mn, delta, codes, r).select("q_id", "c_id"), k)
+    exactRerank(spark, dir, embDouble(spark, dir).filter(col("vec_id") % 50 === 0),
+        sq8AdcOn(spark, dir, mn, delta, codes, r).select("q_id", "c_id"), k)
       .orderBy("q_id", "rnk")
 
   /** D58d: the composed production index — IVF-SQ8: byte codes stored
@@ -3204,23 +3155,10 @@ object AnnOps {
           "c_id")
     }
 
+  /** D58d's query: the corpus-split search over the session SQ8 handle. */
   def annIvfSq(spark: SparkSession, dir: String,
-      nprobe: Int = IvfSqNprobe, r: Int = IvfSqR, k: Int = 10): DataFrame = {
-    val (mn, delta) = sq8Model(spark, dir)
-    val probes = assignFor(spark, dir, DefaultM,
-        embDouble(spark, dir).filter(col("vec_id") % 50 === 0), nprobe)
-      .select(col("cid").as("q_cid"), col("vec_id").as("q_id"),
-        col("v").as("qv"))
-    val cand = ivfSqLists(spark, dir)
-      .join(broadcast(probes),
-        col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id"))
-      .withColumn("adc",
-        VectorFns.dot(col("qv"), sq8Dequant(col("codes"), mn, delta)))
-    val short = TopK.perKey(cand, Seq(col("q_id")),
-        Seq(col("adc").desc, col("c_id").asc), r)
-      .select("q_id", "c_id")
-    exactRerank(spark, dir, short, k).orderBy("q_id", "rnk")
-  }
+      nprobe: Int = IvfSqNprobe, r: Int = IvfSqR, k: Int = 10): DataFrame =
+    ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir, "sq8"), nprobe, r, k)
 
   /** The m-independent SQ8 corpus artifacts (affine model + byte
     * codes), warmed untimed by the scale harness: both the fixed-m and
@@ -3244,56 +3182,6 @@ object AnnOps {
       m: Int): DataFrame =
     ivfLists(spark, dir, m).select("c_cid", "c_id")
       .join(sq8Codes(spark, dir).withColumnRenamed("vec_id", "c_id"), "c_id")
-
-  /** IVF-SQ8 search over a PERSISTED coded-lists table for an
-    * arbitrary (vec_id, embedding) query frame: probe cids resolve
-    * driver-side into a literal IN filter so the bucketed scan prunes
-    * to the probed lists' buckets (nprobe/m of the index files at any
-    * corpus size), ADC over the probed byte codes against the literal
-    * affine model, bounded-heap shortlist, exact re-rank from the base
-    * corpus parquet — the [[ivfPqSearchTables]] serving shape with the
-    * SQ8 encoding.
-    */
-  private[graft] def ivfSqSearchTable(spark: SparkSession, dir: String,
-      m: Int, lists: DataFrame, queries: DataFrame,
-      nprobe: Int = IvfSqNprobe, r: Int = IvfSqR, k: Int = 10,
-      excludeSelf: Boolean = true): DataFrame = {
-    val (mn, delta) = sq8Model(spark, dir)
-    val prepped = queries
-      .withColumn("v", VectorFns.toDouble(col("embedding")))
-      .withColumn("nrm", VectorFns.norm(col("v")))
-      .select("vec_id", "v", "nrm")
-    val assigned = assignFor(spark, dir, m, prepped, nprobe)
-    val probes = assigned
-      .select(col("cid").as("q_cid"), col("vec_id").as("q_id"),
-        col("v").as("qv"))
-    val probedCids = assigned.select("cid").distinct()
-      .collect().map(_.getLong(0)).sorted
-    val joinCond =
-      if (excludeSelf) col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id")
-      else col("q_cid") === col("c_cid")
-    val sims = lists.filter(col("c_cid").isin(probedCids: _*))
-      .join(broadcast(probes), joinCond)
-      .withColumn("adc",
-        VectorFns.dot(col("qv"), sq8Dequant(col("codes"), mn, delta)))
-    val short = TopK.perKey(sims, Seq(col("q_id")),
-        Seq(col("adc").desc, col("c_id").asc), r)
-      .select("q_id", "c_id")
-    // exact re-rank: shortlist broadcast into one corpus scan for the
-    // candidate floats; query floats from the batch itself
-    val qv = prepped
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val exact = embDouble(spark, dir)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-      .join(broadcast(short), "c_id")
-      .join(broadcast(qv), "q_id")
-      .withColumn("sim",
-        VectorFns.cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    TopK.perKey(exact, Seq(col("q_id")),
-        Seq(col("sim").desc, col("c_id").asc), k)
-      .select("q_id", "c_id", "sim", "rnk")
-      .orderBy("q_id", "rnk")
-  }
 
   /** D58: SQ8 ADC search — exact query vs dequantized corpus codes,
     * top-10 per query by approximate dot product. The scan touches one

@@ -347,7 +347,7 @@ object LayoutOps {
     */
   def annIvfPqResServed(spark: SparkSession, dir: String): DataFrame =
     AnnOps.ivfPqCorpusSearch(spark, dir, servingOver(spark, dir,
-      "pq_book_res", table(spark, dir, "ivfpq_res_lists"), residual = true))
+      table(spark, dir, "ivfpq_res_lists"), pqCodec(spark, dir, residual = true)))
 
   /** D36m: the tuner's measured choices read back from the persisted
     * config table — result ≡ ann_probe_tuner (one oracle pins the
@@ -375,16 +375,21 @@ object LayoutOps {
     * (each micro-batch probes it bucket-pruned).
     */
   def ivfPqServing(spark: SparkSession, dir: String): AnnOps.IvfPqServing =
-    servingOver(spark, dir, "pq_book", table(spark, dir, "ivfpq_lists"))
+    servingOver(spark, dir, table(spark, dir, "ivfpq_lists"),
+      pqCodec(spark, dir, residual = false))
 
-  /** Serving handle over the persisted quantizer, the `bookFam`
-    * codebooks and an explicit coded-lists frame (a family table or a
-    * grown one).
+  /** Serving handle over the persisted quantizer and an explicit lists
+    * frame (a family table or a grown one) encoded with `codec`.
     */
-  private def servingOver(spark: SparkSession, dir: String, bookFam: String,
-      lists: DataFrame, residual: Boolean = false): AnnOps.IvfPqServing =
-    AnnOps.servingFromTables(table(spark, dir, "ivf_quantizer"),
-      table(spark, dir, bookFam), lists, residual)
+  private[graft] def servingOver(spark: SparkSession, dir: String,
+      lists: DataFrame, codec: AnnOps.IvfCodec): AnnOps.IvfPqServing =
+    AnnOps.servingFromTables(table(spark, dir, "ivf_quantizer"), lists, codec)
+
+  /** The PQ codec from the persisted plain or residual codebooks. */
+  private def pqCodec(spark: SparkSession, dir: String,
+      residual: Boolean): AnnOps.IvfCodec =
+    AnnOps.IvfCodec.Pq(AnnOps.bookOf(
+      table(spark, dir, if (residual) "pq_book_res" else "pq_book")), residual)
 
   /** D36b: the D35 postings top-k face over the reloaded postings
     * table. Result ≡ text_inverted_postings.
@@ -459,13 +464,18 @@ object LayoutOps {
   }
 
   /** D53c: filtered ANN served from the persisted labeled lists +
-    * quantizer — a restarted serving tier answers predicated searches
-    * with zero rebuild. Shares ann_filtered_ivf's oracle.
+    * quantizer — the corpus-split search over a persisted Flat handle
+    * with the label predicate inside the list join: a restarted
+    * serving tier answers predicated searches with zero rebuild, the
+    * probed cids' IN filter pruning the bucketed scan. Shares
+    * ann_filtered_ivf's oracle.
     */
   def annFilteredServed(spark: SparkSession, dir: String): DataFrame =
-    AnnOps.filteredIvfFromTables(spark, dir,
-      table(spark, dir, "ivf_quantizer"),
-      table(spark, dir, "ivf_labeled_lists"), _ =!= 0)
+    AnnOps.ivfPqCorpusSearch(spark, dir,
+        servingOver(spark, dir, table(spark, dir, "ivf_labeled_lists"),
+          AnnOps.IvfCodec.Flat),
+        nprobe = 4, candFilter = col("c_label") =!= 0)
+      .withColumn("path", lit("ivf"))
 
   /** D58c: SQ8 two-stage search served ENTIRELY from the persisted
     * index — the affine model collected from its D-row table, the
@@ -593,15 +603,15 @@ object LayoutOps {
     * append.
     */
   private def appendDeltaInto(spark: SparkSession, dir: String,
-      growFam: String, bookFam: String, residual: Boolean): Boolean = {
+      growFam: String, residual: Boolean): Boolean = {
     val fam = familyOf(growFam)
     val t = tableName(fam, dir)
     ensure(spark, dir, growFam)
     var fresh: DataFrame = null
     val did = LayoutStore.appendOnce(spark, t, DeltaMarker,
       Seq(fam.bucketKey), fam.buckets) {
-      val sv = servingOver(spark, dir, bookFam, LayoutStore.read(spark, t),
-        residual)
+      val sv = servingOver(spark, dir, LayoutStore.read(spark, t),
+        pqCodec(spark, dir, residual))
       val coded = AnnOps.codedRowsFor(spark, sv,
         Tables.embeddings(spark, dir).filter(col("vec_id") % 10 === 7)
           .select("vec_id", "embedding"))
@@ -621,14 +631,13 @@ object LayoutOps {
   }
 
   def appendDelta(spark: SparkSession, dir: String): Boolean =
-    appendDeltaInto(spark, dir, GrowFamily, "pq_book", residual = false)
+    appendDeltaInto(spark, dir, GrowFamily, residual = false)
 
   /** The residual twin: delta residual-encoded in-row (v − cq from the
     * persisted quantizer, codes from the persisted residual book).
     */
   def appendDeltaRes(spark: SparkSession, dir: String): Boolean =
-    appendDeltaInto(spark, dir, GrowResFamily, "pq_book_res",
-      residual = true)
+    appendDeltaInto(spark, dir, GrowResFamily, residual = true)
 
   /** D36h query: IVF-PQ search over the GROWN table — base split built
     * once, delta folded in by [[appendDelta]]. The delta is encoded
@@ -639,8 +648,9 @@ object LayoutOps {
     */
   def annIvfPqAppendedServed(spark: SparkSession, dir: String): DataFrame = {
     appendDelta(spark, dir)
-    AnnOps.ivfPqCorpusSearch(spark, dir, servingOver(spark, dir, "pq_book",
-      LayoutStore.read(spark, tableName(familyOf(GrowFamily), dir))))
+    AnnOps.ivfPqCorpusSearch(spark, dir, servingOver(spark, dir,
+      LayoutStore.read(spark, tableName(familyOf(GrowFamily), dir)),
+      pqCodec(spark, dir, residual = false)))
   }
 
   /** D36h residual twin: search over the grown RESIDUAL table ≡
@@ -649,9 +659,8 @@ object LayoutOps {
   def annIvfPqResAppendedServed(spark: SparkSession, dir: String): DataFrame = {
     appendDeltaRes(spark, dir)
     AnnOps.ivfPqCorpusSearch(spark, dir, servingOver(spark, dir,
-      "pq_book_res",
       LayoutStore.read(spark, tableName(familyOf(GrowResFamily), dir)),
-      residual = true))
+      pqCodec(spark, dir, residual = true)))
   }
 
   /** D36i: compact a family's table back to one file per non-empty

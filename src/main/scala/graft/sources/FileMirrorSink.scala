@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.streaming.IngestPipeline.Sink
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 
 /** File-mirror sink — the reference's FileAdapter (handler/file.go:
@@ -22,8 +22,8 @@ object FileMirrorSink {
     * session's Hadoop configuration ships to the executors as a plain
     * Map (Configuration itself is not serializable), so credentialed
     * destinations (hdfs://, s3a://) resolve the same as driver-side
-    * reads; each partition opens its own non-cached FileSystem so the
-    * checksum toggle never leaks into the JVM-shared cached instance.
+    * reads; each partition opens (and closes) its own non-cached
+    * FileSystem, never the JVM-shared cached instance.
     */
   def write(batch: DataFrame, destRoot: String): Unit = {
     val confMap: Seq[(String, String)] = {
@@ -40,14 +40,26 @@ object FileMirrorSink {
         val root = new Path(destRoot)
         val fs = FileSystem.newInstance(root.toUri, conf) // not the shared cache
         try {
-          fs.setWriteChecksum(false) // mirror bytes only, no .crc sidecars
+          // mirror bytes only, no .crc sidecars: write below a checksum
+          // layer (the local filesystem's), which would also derive a
+          // ".name.crc" path through the URI-parsing String constructor
+          val out = fs match {
+            case c: ChecksumFileSystem => c.getRawFileSystem
+            case f => f
+          }
           it.foreach { r =>
-            val dest = new Path(new Path(root, r.getAs[String]("folder")),
-              r.getAs[String]("name"))
-            val out = fs.create(dest, true) // overwrite = idempotent replay
-            try out.write(r.getAs[String]("content").getBytes("UTF-8"))
-            finally out.close()
-            fs.setTimes(dest, r.getAs[Long]("modify_time"), -1)
+            // the relative part goes through the (scheme, authority,
+            // path) constructor: the String one parses it as a URI, so
+            // a ':' in a folder or name (run_12:30:00.log) reads as a
+            // scheme and throws; an empty folder writes under the root
+            val folder = r.getAs[String]("folder")
+            val name = r.getAs[String]("name")
+            val dest = new Path(root,
+              new Path(null, null, if (folder.isEmpty) name else s"$folder/$name"))
+            val os = out.create(dest, true) // overwrite = idempotent replay
+            try os.write(r.getAs[String]("content").getBytes("UTF-8"))
+            finally os.close()
+            out.setTimes(dest, r.getAs[Long]("modify_time"), -1)
           }
         } finally fs.close()
       }

@@ -240,14 +240,22 @@ class DedupAnnSpec extends GraftSpec {
         AnnOps.ivfSqListsFrameM(spark, Sf, m))
       val queries = Tables.embeddings(spark, Sf)
         .filter(col("vec_id") % 50 === 0).select("vec_id", "embedding")
-      val served = AnnOps.ivfSqSearchTable(spark, Sf, m,
-          sources.LayoutStore.read(spark, table), queries)
+      // persisted quantizer + SQ8 model tables, persisted coded lists
+      val sv = operators.LayoutOps.servingOver(spark, Sf,
+        sources.LayoutStore.read(spark, table),
+        AnnOps.IvfCodec.Sq8.tupled(AnnOps.sq8ModelOf(
+          operators.LayoutOps.table(spark, Sf, "sq8_model"))))
+      val served = AnnOps.ivfPqSearchTables(spark, Sf, sv, queries,
+          nprobe = AnnOps.IvfSqNprobe, r = AnnOps.IvfSqR, excludeSelf = true)
         .collect().map(_.toString).toSeq
       val session = AnnOps.annIvfSq(spark, Sf).collect().map(_.toString).toSeq
       assert(served == session,
         "table-served IVF-SQ diverges from the session path")
       assert(served.nonEmpty, "degenerate fixture: no search results")
-    } finally sources.LayoutStore.purge(spark, table)
+    } finally {
+      sources.LayoutStore.purge(spark, table)
+      operators.LayoutOps.purgeAll(spark, Sf)
+    }
   }
 
   test("rp prefilter: exact rerank sims, JL recall floor, deterministic signs") {
@@ -277,6 +285,14 @@ class DedupAnnSpec extends GraftSpec {
     }
   }
 
+  test("ivf search at the default m=16 assigns probes with the broadcast kernel") {
+    // one assignment path at every m: no literal-quantizer ranking
+    // (array_sort over the centroids) is planned below a kernel cutoff
+    val plan = AnnOps.annIvf(spark, Sf).queryExecution.executedPlan.toString
+    assert(plan.contains("ivfassignexpr"), s"kernel not planned:\n$plan")
+    assert(!plan.contains("array_sort"), s"literal ranking planned:\n$plan")
+  }
+
   test("ivf at m=256: broadcast-kernel probe plan is shuffle-free, recall holds") {
     val probes = AnnOps.assignForTest(spark, Sf, 256, 4, kernel = true)
     val plan = probes.queryExecution.executedPlan.toString
@@ -302,51 +318,40 @@ class DedupAnnSpec extends GraftSpec {
     assert(recall >= 0.3, s"IVF m=256 recall@10 too low: $recall")
   }
 
-  test("ivf append: new vectors are searchable without a rebuild") {
-    import spark.implicits._
-    // clone the embedding of corpus vector 0 under a fresh id: its
-    // assignment follows the existing quantizer, so a search FOR
-    // vector 0 must now surface the clone at sim == 1.0
+  // clone the embedding of corpus vector 0 under a fresh id: its
+  // assignment follows the existing quantizer and its codes equal
+  // vector 0's, so a search FOR vector 0 must surface the clone at
+  // sim == 1.0 — directly (Flat) or through the ADC shortlist and
+  // the exact re-rank (SQ8, PQ, residual PQ)
+  private def assertAppendSearchable(encodings: Seq[String]): Unit = {
     val clone = Tables.embeddings(spark, Sf)
       .filter(col("vec_id") === 0)
       .select(lit(999999L).as("vec_id"), col("embedding"), col("label"))
-    val widened = AnnOps.ivfAppend(spark, Sf, clone)
     val q = Tables.embeddings(spark, Sf).filter(col("vec_id") === 0)
-      .select(col("vec_id"),
-        graft.functions.VectorFns.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", graft.functions.VectorFns.norm(col("v")))
-    // q IS corpus vector 0, so exclude its own row (harness semantics)
-    val hits = AnnOps.ivfSearchOn(spark, Sf, widened, q,
-      excludeSelf = true).collect()
-    val top = hits.minBy(_.getAs[Long]("rnk"))
-    assert(top.getAs[Long]("c_id") == 999999L, s"clone not found: ${hits.toSeq}")
-    assert(top.getAs[Double]("sim") > 0.999999)
-    // and the base index itself is untouched (append, not rebuild)
-    assert(widened.count() == AnnOps.ivfAppend(spark, Sf,
-      clone.limit(0)).count() + 1)
+      .select("vec_id", "embedding")
+    for (encoding <- encodings) {
+      val sv = AnnOps.sessionServing(spark, Sf, encoding)
+      val widened = sv.copy(lists =
+        sv.lists.unionByName(AnnOps.codedRowsFor(spark, sv, clone)))
+      // q IS corpus vector 0, so exclude its own row (harness semantics)
+      val hits = AnnOps.ivfPqSearchTables(spark, Sf, widened, q,
+        extraRerank = Some(clone.select("vec_id", "embedding")),
+        excludeSelf = true).collect()
+      val top = hits.minBy(_.getAs[Long]("rnk"))
+      assert(top.getAs[Long]("c_id") == 999999L,
+        s"$encoding: clone not found: ${hits.toSeq}")
+      assert(top.getAs[Double]("sim") > 0.999999, s"$encoding: $top")
+      // append, not rebuild: exactly one row wider than the base layout
+      assert(widened.lists.count() == sv.lists.count() + 1, encoding)
+    }
+  }
+
+  test("ivf append: new vectors are searchable without a rebuild") {
+    assertAppendSearchable(Seq("flat", "sq8"))
   }
 
   test("ivfpq append: new vectors are searchable in the composed index without a rebuild") {
-    import spark.implicits._
-    // clone corpus vector 0 under a fresh id: same quantizer cell,
-    // same PQ codes, so an ADC search FOR vector 0 must shortlist the
-    // clone and the exact re-rank must surface it at sim == 1.0
-    val clone = Tables.embeddings(spark, Sf)
-      .filter(col("vec_id") === 0)
-      .select(lit(999999L).as("vec_id"), col("embedding"), col("label"))
-    val sv = AnnOps.sessionServing(spark, Sf)
-    val widened = sv.copy(lists =
-      sv.lists.unionByName(AnnOps.codedRowsFor(spark, sv, clone)))
-    val q = Tables.embeddings(spark, Sf).filter(col("vec_id") === 0)
-      .select("vec_id", "embedding")
-    val hits = AnnOps.ivfPqSearchTables(spark, Sf, widened, q,
-      extraRerank = Some(clone.select("vec_id", "embedding")),
-      excludeSelf = true).collect()
-    val top = hits.minBy(_.getAs[Long]("rnk"))
-    assert(top.getAs[Long]("c_id") == 999999L, s"clone not found: ${hits.toSeq}")
-    assert(top.getAs[Double]("sim") > 0.999999)
-    // append, not rebuild: exactly one row wider than the base layout
-    assert(widened.lists.count() == sv.lists.count() + 1)
+    assertAppendSearchable(Seq("pq", "pq_res"))
   }
 
   test("serving search: an external query id colliding with a corpus id drops nothing") {
@@ -361,12 +366,9 @@ class DedupAnnSpec extends GraftSpec {
     assert(top.getAs[Long]("c_id") == 3L,
       s"corpus vector with colliding id was dropped: ${hits.toSeq}")
     assert(top.getAs[Double]("sim") > 0.999999)
-    // same contract on the IVF-Flat serving hook
-    val qf = q.select(col("vec_id"),
-        graft.functions.VectorFns.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", graft.functions.VectorFns.norm(col("v")))
-    val fhits = AnnOps.ivfSearchOn(spark, Sf,
-      AnnOps.ivfAppend(spark, Sf, q.limit(0)), qf).collect()
+    // same contract over an IVF-Flat handle
+    val fhits = AnnOps.ivfPqSearchTables(spark, Sf,
+      AnnOps.sessionServing(spark, Sf, "flat"), q, nprobe = 4).collect()
     val ftop = fhits.minBy(_.getAs[Long]("rnk"))
     assert(ftop.getAs[Long]("c_id") == 3L, s"ivf-flat dropped it: ${fhits.toSeq}")
   }

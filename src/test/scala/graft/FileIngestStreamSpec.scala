@@ -161,6 +161,12 @@ class FileIngestStreamSpec extends GraftSpec {
     val in = Files.createTempDirectory("graft_mirror_in").toFile
     val dest = Files.createTempDirectory("graft_mirror_out").toFile.getAbsolutePath
     writeBatch(in)
+    // ':' in a folder and a name must not be parsed as a URI scheme;
+    // a root-level path has an empty folder
+    Seq(("BSI/x:y/run_12:30:00.log", "colon", "m3", 1496851202000L),
+      ("/top_12:00.log", "top", "m4", 1496851203000L))
+      .toDF("path", "content", "host", "mtime_ms")
+      .write.mode("append").parquet(in.getAbsolutePath)
 
     def runOnce(): Unit = {
       val q = IngestPipeline.prioritySinks(
@@ -177,6 +183,13 @@ class FileIngestStreamSpec extends GraftSpec {
     assert(flow.lastModified == 1496851200000L) // file.go:60-63 Chtimes
     val wide = new java.io.File(dest, "SPI/Rockaway/a/b/wide.dat")
     assert(wide.isFile && wide.length == 2000)
+    val colon = new java.io.File(dest, "BSI/x:y/run_12:30:00.log")
+    assert(colon.isFile, s"mirror missing: $colon")
+    assert(new String(Files.readAllBytes(colon.toPath), "UTF-8") == "colon")
+    assert(colon.lastModified == 1496851202000L)
+    val top = new java.io.File(dest, "top_12:00.log")
+    assert(new String(Files.readAllBytes(top.toPath), "UTF-8") == "top")
+    assert(top.lastModified == 1496851203000L)
 
     // replay the same input (new checkpoint-less query = full re-send):
     // byte-identical overwrite, no duplicates, mtime still pinned
@@ -185,6 +198,6 @@ class FileIngestStreamSpec extends GraftSpec {
     assert(flow.lastModified == 1496851200000L)
     def countFiles(f: java.io.File): Int =
       if (f.isFile) 1 else Option(f.listFiles).map(_.map(countFiles).sum).getOrElse(0)
-    assert(countFiles(new java.io.File(dest)) == 2)
+    assert(countFiles(new java.io.File(dest)) == 4)
   }
 }
