@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan auditor: dumps formatted physical plans for every query and
@@ -12,7 +11,7 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     // audit the bench-shape plans: extensions on, like GraftSession
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")

@@ -12,10 +12,17 @@ import org.apache.spark.sql.SparkSession
   *  - files.maxPartitionBytes 128m: scan parallelism vs task overhead.
   *  - UTC session TZ: oracle/engine parity for all timestamp math.
   *  - GraftExtensions: TopKPerKey strategy + row_number-topk rewrite.
+  *  - `file:` bound to [[sources.LocalFs]] (every builder in the repo
+  *    starts from [[builder]]): without native Hadoop, stock local
+  *    `chmod` forks a process for each file and directory it writes.
   */
 object GraftSession {
+  /** `SparkSession.builder()` with the engine's `file:` filesystem. */
+  def builder(): SparkSession.Builder = SparkSession.builder()
+    .config("spark.hadoop.fs.file.impl", classOf[sources.LocalFs].getName)
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val s = SparkSession.builder()
+    val s = builder()
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)

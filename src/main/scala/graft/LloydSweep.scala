@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot measurement harness for the Lloyd-rounds knee (the round-8
   * quantizer-quality question): recall@10 vs the exact baseline for
   * the IVF-Flat and residual IVF-PQ paths at refinement rounds 1/3/5.
@@ -15,7 +13,7 @@ import org.apache.spark.sql.SparkSession
 object LloydSweep {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")

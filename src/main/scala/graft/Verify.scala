@@ -27,7 +27,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -82,14 +82,17 @@ object Verify {
     // a parseable per-query artifact in BOTH locations.
     val summaryPath = Paths.get(s"$outDir/verify_summary.json")
     val mirrorPath = Paths.get("verify_summary.json").toAbsolutePath
+    // tmp file beside the target, so the move stays on one filesystem
+    def writeAtomic(path: java.nio.file.Path, s: String): Unit = {
+      val tmp = path.resolveSibling(".verify_summary.json.tmp")
+      Files.writeString(tmp, s)
+      Files.move(tmp, path, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE)
+    }
     def writeSummary(): Unit = synchronized {
       val s = summaryJson(snapshot())
-      val tmp = Paths.get(s"$outDir/.verify_summary.json.tmp")
-      Files.writeString(tmp, s)
-      Files.move(tmp, summaryPath, StandardCopyOption.REPLACE_EXISTING,
-        StandardCopyOption.ATOMIC_MOVE)
-      if (mirrorPath != summaryPath.toAbsolutePath)
-        Files.writeString(mirrorPath, s)
+      writeAtomic(summaryPath, s)
+      if (mirrorPath != summaryPath.toAbsolutePath) writeAtomic(mirrorPath, s)
     }
     def run1(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Unit = {

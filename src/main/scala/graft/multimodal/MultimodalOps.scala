@@ -319,18 +319,14 @@ object MultimodalOps {
     ((id * 31 + i * 7) % 65536).toInt - 32768
   @inline def nSamples(id: Long): Int = 800 + (id % 5).toInt * 100
 
-  /** Synthesize the WAV payload for one media id through the REAL
-    * javax.sound.sampled encoder (16 kHz mono signed 16-bit PCM,
-    * little-endian; PCM is lossless, so decode must return the exact
-    * samples).
-    */
   /** The JDK's WAVE AudioFileWriter/AudioFileReader providers, loaded
     * once per JVM through the public ServiceLoader SPI — the same
     * instances AudioSystem selects, minus AudioSystem's PER-CALL
     * provider iteration (which tries AIFF/AU first and uses their
     * UnsupportedAudioFileException throws as control flow — two
     * stack-trace fills per decoded row). Encoder/decoder classes and
-    * produced bytes are identical; None → fall back to AudioSystem.
+    * produced bytes are identical; None (or a writer that rejects the
+    * stream) → fall back to AudioSystem.
     */
   private lazy val wavWriter: Option[javax.sound.sampled.spi.AudioFileWriter] = {
     import scala.jdk.CollectionConverters._
@@ -344,7 +340,15 @@ object MultimodalOps {
       .asScala.find(_.getClass.getSimpleName.startsWith("Wave"))
   }
 
-  def synthWav(id: Long): Array[Byte] = {
+  /** Synthesize the WAV payload for one media id through the REAL
+    * javax.sound.sampled encoder (16 kHz mono signed 16-bit PCM,
+    * little-endian; PCM is lossless, so decode must return the exact
+    * samples).
+    */
+  def synthWav(id: Long): Array[Byte] = synthWav(id, wavWriter)
+
+  private[graft] def synthWav(id: Long,
+      writer: Option[javax.sound.sampled.spi.AudioFileWriter]): Array[Byte] = {
     val n = nSamples(id)
     val pcm = new Array[Byte](n * 2)
     var i = 0
@@ -357,13 +361,15 @@ object MultimodalOps {
     val fmt = new javax.sound.sampled.AudioFormat(16000f, 16, 1, true, false)
     val ais = new javax.sound.sampled.AudioInputStream(
       new java.io.ByteArrayInputStream(pcm), fmt, n.toLong)
+    val wave = javax.sound.sampled.AudioFileFormat.Type.WAVE
     val bos = new java.io.ByteArrayOutputStream()
-    wavWriter match {
-      case Some(w) =>
-        w.write(ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      case None => javax.sound.sampled.AudioSystem.write(ais,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+    // a writer that rejects the format throws before reading the
+    // stream; AudioSystem then tries every provider
+    val written = writer.exists { w =>
+      try { w.write(ais, wave, bos); true }
+      catch { case _: IllegalArgumentException => bos.reset(); false }
     }
+    if (!written) javax.sound.sampled.AudioSystem.write(ais, wave, bos)
     bos.toByteArray
   }
 

@@ -258,11 +258,12 @@ object LayoutOps {
     LayoutStore.read(spark, tableName(familyOf(familyName), dir))
   }
 
-  /** Measured cold-build cost ranking (WarmupProbe, sf0.1 — r15 opt):
-    * longest-first submission order for the parallel build, so the
-    * 70 s serving_config/tuner chain starts immediately and the tail
-    * of small families back-fills around it (guide §2.6). Families
-    * not listed sort last in declaration order.
+  /** Cold-build cost ranking, a historical r15 measurement at sf0.1
+    * (by a probe main since removed): longest-first submission order
+    * for the parallel build, so the 70 s serving_config/tuner chain
+    * starts immediately and the tail of small families back-fills
+    * around it (guide §2.6). Families not listed sort last in
+    * declaration order.
     */
   private val buildPriority: Map[String, Int] = Seq(
     "serving_config", "ivfpq_lists", "cc_labels", "postings",

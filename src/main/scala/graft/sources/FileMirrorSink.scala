@@ -10,7 +10,10 @@ import org.apache.spark.sql.DataFrame
   * preserving the source modify time (file.go:60-63 Chtimes). The
   * Spark-native dual writes from executors through the Hadoop
   * FileSystem API, so destRoot can be local, HDFS, or an object store
-  * — each partition writes its own rows, no driver funnel.
+  * — each partition writes its own rows, no driver funnel. Local
+  * destinations go through [[LocalFs]] (the session's `file:`
+  * binding): without native Hadoop, stock local `chmod` forks a
+  * process for each mirrored file.
   *
   * Replay-idempotent by construction: the destination path is a pure
   * function of the record key and a re-copy overwrites bit-identically

@@ -12,7 +12,7 @@ trait GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = {
     sessionStarted = true
-    SparkSession.builder()
+    GraftSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

@@ -83,6 +83,18 @@ class MultimodalSpec extends GraftSpec {
     assert(MultimodalOps.decodeAudio("not audio".getBytes("UTF-8")).isEmpty)
   }
 
+  test("WAV encode falls back to AudioSystem when the chosen writer rejects 16-bit PCM") {
+    import scala.jdk.CollectionConverters._
+    // the JDK's float WAVE writer also reports WAVE support, but only
+    // takes PCM_FLOAT streams
+    val float = java.util.ServiceLoader
+      .load(classOf[javax.sound.sampled.spi.AudioFileWriter]).asScala
+      .find(_.getClass.getSimpleName == "WaveFloatFileWriter")
+    assert(float.isDefined)
+    for (id <- Seq(1L, 43L))
+      assert(MultimodalOps.synthWav(id, float).sameElements(MultimodalOps.synthWav(id)))
+  }
+
   test("real animated-GIF roundtrip: every frame of every id survives the codec") {
     for (id <- Seq(2L, 5L, 11L)) {
       val frames = MultimodalOps.decodeGifFrames(MultimodalOps.synthGif(id))

@@ -13,7 +13,7 @@ class TopKRewriteSpec extends AnyFunSuite {
   val Sf = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.GraftSession.builder()
       .master("local[4]")
       .appName("graft-rewrite-test")
       .config("spark.sql.shuffle.partitions", "4")
