@@ -32,26 +32,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // graft planner strategy + row_number-topk rewrite (Verify runs
-      // WITHOUT these so the oracle gate checks the vanilla operators;
-      // rewrite/vanilla equivalence is covered by TopKRewriteSpec)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // serving-session shape (see GraftSession): layout probes keep
-      // their bucketed scans (pruning), layout self-joins may reuse
-      // subset-key co-partitioning
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // cap per-action plan-description rendering (see GraftSession)
-      .config("spark.sql.maxPlanStringLength",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PLAN_STR", (64 << 10).toString))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    // the engine's session, graft planner strategy + row_number-topk
+    // rewrite included (Verify runs WITHOUT these so the oracle gate
+    // checks the vanilla operators; rewrite/vanilla equivalence is
+    // covered by TopKRewriteSpec)
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // optional comma-separated filter for local profiling runs
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -130,9 +117,9 @@ object Bench {
     // ann_graph/ann_recall rows since r12); unwarmed, each build
     // landed in its first serial measurement and the adjudication
     // flagged it as suite/isolated divergence every round. These
-    // warms are BENCH-LOCAL on purpose: ScaleAudit/ScaleBench reuse
+    // warms are BENCH-LOCAL on purpose: ScaleAudit reuses
     // the operator warm hooks and must keep measuring the real
-    // fold/walk bytes in their gated rows.
+    // fold/walk bytes in its gated rows.
     def warmQuery(n: String): Unit =
       if (selected.exists(_._1 == n))
         addWarm(n) { SparkEntry.queries(n)(spark, sfDir)

@@ -17,6 +17,12 @@ import org.apache.spark.sql.SparkSession
   *    `chmod` forks a process for each file and directory it writes.
   */
 object GraftSession {
+  /** `spark.sql.maxPlanStringLength` for every session that caps it:
+    * SPARK_GRAFT_MAX_PLAN_STR, default 64 KB (see [[local]]).
+    */
+  val MaxPlanStringLength: String =
+    sys.env.getOrElse("SPARK_GRAFT_MAX_PLAN_STR", (64 << 10).toString)
+
   /** `SparkSession.builder()` with the engine's `file:` filesystem. */
   def builder(): SparkSession.Builder = SparkSession.builder()
     .config("spark.hadoop.fs.file.impl", classOf[sources.LocalFs].getName)
@@ -52,8 +58,7 @@ object GraftSession {
       // recursively) an uncapped render costs ~1 s of driver CPU per
       // action (stack-sampled, r15). 64 KB keeps debuggability;
       // ExplainAudit raises it per-session for full-plan audits.
-      .config("spark.sql.maxPlanStringLength",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PLAN_STR", (64 << 10).toString))
+      .config("spark.sql.maxPlanStringLength", MaxPlanStringLength)
       .getOrCreate()
     // getOrCreate may return a pre-existing session where the
     // extensions config never applied — register idempotently.

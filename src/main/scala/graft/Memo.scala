@@ -65,42 +65,24 @@ object Memo {
   /** REPLACE the value under `key`: release the old entry (if any)
     * and register the new one — the lifecycle for STANDING state an
     * owner refreshes between consumers (a walk's final beam pin per
-    * micro-batch, a merged serving layout after a fold). Unlike
-    * [[value]], this always builds. Releasing a pin mid-consumption
-    * is SAFE (Spark recomputes the frame from lineage) but defeats
-    * the pin, so owners call this only at refresh points — i.e. when
-    * the previous value's consumers have materialized.
+    * call or micro-batch). Unlike [[value]], this always builds.
+    * Releasing a pin mid-consumption is SAFE (Spark recomputes the
+    * frame from lineage) but defeats the pin, so owners call this
+    * only at refresh points — i.e. when the previous value's
+    * consumers have materialized.
     */
   def replaceValue[T <: AnyRef](spark: SparkSession, key: String)(
       build: => T): T = {
     // build OUTSIDE buildLock: replace-callers route expensive work
-    // through it (standing-pin warm counts are full Spark jobs), and
-    // evaluating that under the global lock would serialize every
-    // other Memo build for the job's duration (ADVICE r14). Replace
-    // always builds, so there is no duplicate-build race to guard —
-    // only the swap needs the lock.
+    // through it (a hop's re-rooted pin is materialized by a full
+    // Spark job), and evaluating that under the global lock would
+    // serialize every other Memo build for the job's duration (ADVICE
+    // r14). Replace always builds, so there is no duplicate-build race
+    // to guard — only the swap needs the lock.
     val b = build
     buildLock.synchronized {
       val old = values.put((spark, key), b)
       if (old != null) dropValue(old)
-    }
-    b
-  }
-
-  /** [[replaceValue]] for persisted frames: unpersists the previous
-    * frame under `key` (if any), persists and registers the new one.
-    * Like [[replaceValue]], the build runs outside the lock (plan
-    * construction is cheap, but callers may compose over frames whose
-    * builders take locks of their own); only the swap synchronizes.
-    */
-  def replaceDf(spark: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    val b = build.persist()
-    buildLock.synchronized {
-      val old = cache.put((spark, key), b)
-      if (old != null) {
-        try old.unpersist(false) catch { case _: Throwable => () }
-      }
     }
     b
   }

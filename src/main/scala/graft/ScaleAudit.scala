@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Automated SCALE gate (r11): execute the scale-critical query set at
@@ -7,20 +8,23 @@ import org.apache.spark.sql.functions._
   * per-query SHUFFLE BYTES. Run: sbt "runMain graft.ScaleAudit"
   * (SPARK_GRAFT_SF_DIR picks the base, default sf0.1;
   * SPARK_GRAFT_SCALE_AUDIT_OUT the artifact, default
-  * SCALE_AUDIT.json). Final line: "SCALE AUDIT CLEAN" or
-  * "SCALE AUDIT n findings".
+  * SCALE_AUDIT.json; SPARK_GRAFT_CPUS the local cores, default all).
+  * Final line: "SCALE AUDIT CLEAN" or "SCALE AUDIT n findings". The
+  * amplified corpora ([[amplify]]) are written once under
+  * /tmp/graft_scale/<sf>_x<F> and reused.
   *
   * Why shuffle bytes, not wall-clock: wall time at toy scale is
-  * constant-dominated and host-noise-bound (this box's I/O swings ~3×
-  * between runs — the reason ScaleBench needs min-of-repeats), but the
-  * quantity that decides whether a plan survives a 100× scale-up is
-  * how many bytes cross the exchange — and THAT is a property of the
-  * plan + data, deterministic run-to-run, so ONE pass per factor
-  * gates reliably. ExplainAudit pins plan SHAPES (broadcasts, joins,
-  * pruning); this gate pins plan VOLUME growth — the two r10 anomalies
+  * constant-dominated and host-noise-bound (I/O swung ~3× between
+  * runs on the 32-core host, so wall-clock exponents needed
+  * min-of-repeats), but the quantity that decides whether a plan
+  * survives a 100× scale-up is how many bytes cross the exchange —
+  * and THAT is a property of the plan + data, deterministic
+  * run-to-run, so ONE pass per factor gates reliably. ExplainAudit
+  * pins plan SHAPES (broadcasts, joins, pruning); this gate pins plan
+  * VOLUME growth — the two r10 anomalies
   * (dedup_prefix_filter's pre-fix 1.43 exponent from a re-shuffled
   * corpus; the un-adjudicated ann_ivfsq jump) were invisible to shape
-  * checks and only surfaced in hand-run ScaleBench numbers.
+  * checks and only surfaced in hand-run wall-clock numbers.
   *
   * Gate: exponent = log(bytes₁₀/bytes₁)/log(10) must stay ≤ maxExp
   * (default 1.1 — at-most-linear with slack for partial-aggregation
@@ -35,6 +39,280 @@ import org.apache.spark.sql.functions._
   * engine-isolating twin in the audited set.
   */
 object ScaleAudit {
+
+  /** Amplify the base corpus F× deterministically into `out` (skipped
+    * when `out/_done` exists), so the audit's factors compare like
+    * with like.
+    *
+    * Amplifier design — SELF-SIMILAR, not density-inflating:
+    *  - documents: each doc gets F copies with EVERY token tagged by
+    *    the copy id (`tok~k`), so copy shard k is an exact isomorphic
+    *    image of the base corpus (within-shard shingle/winnow/checksum
+    *    relations identical to the original; ZERO cross-shard shingle
+    *    or fingerprint collisions). Duplicate DENSITY therefore stays
+    *    constant while volume grows F× — the regime a real corpus
+    *    scales in, and the one under which a fitted exponent measures
+    *    the ENGINE, not the quadratic growth of true duplicate
+    *    structure. (The first amplifier draft appended one salt token
+    *    per copy, which makes every copy group a real near-dup cluster
+    *    of size F: measured winnow time then tracked the true pair
+    *    count — exponent ≈ 2.1 at ×10, 2.4 s → 282 s — a correct
+    *    answer to the wrong question.)
+    *  - ids keep the last decimal digit as the corpus/delta
+    *    discriminator the D15/D28b operators key on (`doc_id % 10`):
+    *    copy 0 keeps its digit, extra copies remap delta (7 → 3), so
+    *    the DELTA IS LITERALLY THE BASE DELTA — same docs, same
+    *    neighborhood sizes — while the standing corpus grows F×: the
+    *    daily-crawl shape whose crossover corpus_build_incremental
+    *    exists for.
+    *  - events: per-copy user remap (user_id·F+k) — user count scales,
+    *    per-user history stays constant (the production shape for
+    *    sessionization/funnel state).
+    *  - embeddings: per-copy deterministic perturbation (+k·1e-5 per
+    *    component) — corpus F×, copies are near-neighbors, so ANN list
+    *    sizes scale while geometry stays non-degenerate.
+    */
+  private[graft] def amplify(spark: SparkSession, base: String, f: Int,
+      out: String): Unit = {
+    val fs = java.nio.file.Paths.get(out)
+    if (java.nio.file.Files.exists(fs.resolve("_done"))) return
+    java.nio.file.Files.createDirectories(fs)
+    val copies = explode(sequence(lit(0), lit(f - 1))).as("k")
+
+    val docs = Tables.documents(spark, base)
+      .select(col("doc_id"), col("text"), col("lang"), col("source"), copies)
+      .withColumn("digit",
+        when(col("k") === 0, col("doc_id") % 10)
+          .otherwise(when(col("doc_id") % 10 === 7, lit(3))
+            .otherwise(col("doc_id") % 10)))
+      .withColumn("new_id",
+        ((col("doc_id") * f + col("k")) * 10 + col("digit")).cast("long"))
+      .withColumn("new_text",
+        when(col("k") === 0, col("text"))
+          .otherwise(array_join(transform(split(col("text"), " "),
+            t => concat(t, lit("~"), col("k"))), " ")))
+      .select(col("new_id").as("doc_id"), col("new_text").as("text"),
+        col("lang"), col("source"),
+        length(col("new_text")).cast("long").as("n_chars"))
+    docs.repartition(spark.sparkContext.defaultParallelism)
+      .write.mode("overwrite").parquet(s"$out/documents.parquet")
+
+    val ev = Tables.events(spark, base)
+      .select(col("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("value"), col("props"), copies)
+      .select((col("event_id") * f + col("k")).cast("long").as("event_id"),
+        col("ts"), (col("user_id") * f + col("k")).cast("long").as("user_id"),
+        col("event_type"), col("value"), col("props"))
+    ev.repartition(spark.sparkContext.defaultParallelism)
+      .write.mode("overwrite").parquet(s"$out/events.parquet")
+
+    val emb = Tables.embeddings(spark, base)
+      .select(col("vec_id"), col("embedding"), col("label"), copies)
+      .select((col("vec_id") * f + col("k")).cast("long").as("vec_id"),
+        transform(col("embedding"),
+          x => x + col("k").cast("float") * lit(1e-5f)).as("embedding"),
+        col("label"))
+    emb.repartition(spark.sparkContext.defaultParallelism)
+      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+
+    // small relational tables ride along untouched so any query that
+    // touches them still resolves
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem").foreach { t =>
+      Tables.t(spark, base, t).write.mode("overwrite")
+        .parquet(s"$out/$t.parquet")
+    }
+    java.nio.file.Files.createFile(fs.resolve("_done"))
+    ()
+  }
+
+  /** The E48/D76d production-regime arrival batch: a FIXED-size set
+    * of perturbed twins of base vectors (ids offset out of the corpus
+    * range) — the daily-delta shape, held constant across
+    * amplification factors so fold/serve rows measure pure corpus
+    * scaling.
+    */
+  private def graphUpkeepBatch(spark: SparkSession,
+      dir: String, f: Int): DataFrame =
+    Tables.embeddings(spark, dir)
+      .filter(col("vec_id") % f === 0 && (col("vec_id") / f) % 20 === 0)
+      .select((col("vec_id") +
+          operators.AnnOps.GraphAppendIdOffset).as("vec_id"),
+        transform(col("embedding"), x => x + lit(1e-4f)).as("embedding"))
+
+  /** The upkeep fold at the session (DefaultM) geometry — the audit's
+    * special-cased row: one fixed batch walked against the standing
+    * graph, edges + reverses emitted. Memoized so the serve row reads
+    * the same delta instead of re-folding.
+    */
+  private def graphUpkeepFoldDf(spark: SparkSession,
+      dir: String, f: Int): DataFrame =
+    Memo.df(spark, s"scaleUpkeepFold:$dir:f$f") {
+      operators.AnnOps.graphUpkeepEdges(spark, dir,
+        operators.AnnOps.graphAdjV(spark, dir),
+        operators.AnnOps.graphDownLinks(spark, dir),
+        operators.AnnOps.graphAnchors(spark, dir),
+        graphUpkeepBatch(spark, dir, f))
+    }
+
+  /** The merged-graph serve over the fold's delta (fixed base
+    * queries) — the audit's second special-cased row.
+    */
+  private def graphUpkeepServeDf(spark: SparkSession,
+      dir: String, f: Int): DataFrame =
+    mergedServe(spark, dir, f, graphUpkeepFoldDf(spark, dir, f))
+
+  /** The fixed base queries (the k=0 shard's %50 ids) served over the
+    * standing graph merged with `delta`.
+    */
+  private def mergedServe(spark: SparkSession, dir: String, f: Int,
+      delta: DataFrame): DataFrame = {
+    val queries = Tables.embeddings(spark, dir)
+      .filter(col("vec_id") % f === 0 && (col("vec_id") / f) % 50 === 0)
+      .select("vec_id", "embedding")
+    operators.AnnOps.graphSearchOn(spark, dir,
+      operators.AnnOps.walkEdges(
+        operators.AnnOps.graphMergedAdjV(
+          operators.AnnOps.graphAdjV(spark, dir), delta),
+        operators.AnnOps.graphDownLinks(spark, dir)),
+      operators.AnnOps.graphAnchors(spark, dir), queries,
+      excludeSelf = true)
+  }
+
+  /** The audit delta TABLE for [[graphMaintServeDf]] — the fold's
+    * edges persisted bucketed-on-src (the between-compactions steady
+    * state of a streamed graph). Built untimed/unmetered by the
+    * audit's prep step, AFTER the fold row is metered (the fold memo
+    * must be the fold row's own marginal work).
+    *
+    * Geometry-tagged name (the layout-family discipline): a fold
+    * whose constants or row format changed can never re-register a
+    * stale audit delta — it misses and rebuilds under the new name.
+    * vfm1 = fwd-tagged rows + completion markers (r14).
+    */
+  private[graft] def auditDeltaTable(spark: SparkSession,
+      dir: String): String =
+    graft.sources.LayoutStore.tableName(
+      s"audit_graph_delta_${operators.AnnOps.graphTag}vfm1", dir)
+
+  private def ensureMaintDelta(spark: SparkSession,
+      dir: String, f: Int): String = {
+    val table = auditDeltaTable(spark, dir)
+    graft.sources.LayoutStore.ensure(spark, table, Seq("src"),
+      operators.AnnOps.DefaultM)(graphUpkeepFoldDf(spark, dir, f))
+    table
+  }
+
+  /** The audit's graph MAINT serve row (r13 judge #5): the merged
+    * serve with the delta read FROM ITS LAYOUT TABLE — the exact I/O
+    * shape of the ×30 wall finding (the upkeep row reads the
+    * in-session fold frame; this row pays the table scan), so a plan
+    * or I/O flip at ×30 fails the byte gate, not just the eyeball.
+    */
+  private def graphMaintServeDf(spark: SparkSession,
+      dir: String, f: Int): DataFrame =
+    mergedServe(spark, dir, f,
+      graft.sources.LayoutStore.read(spark, auditDeltaTable(spark, dir)))
+
+  /** The scale-critical paths from the r7 verdict, in an order that
+    * makes each figure mean one thing (shared shingle table warmed
+    * untimed; dedup_clusters carries the CC loop; corpus_build then
+    * measures manifest assembly over the memoized labels — the same
+    * split at every factor, so exponents compare like with like).
+    */
+  private val Paths: Seq[String] = Seq(
+    "dedup_winnow", "dedup_substring", "dedup_clusters", "corpus_build",
+    "corpus_build_incremental", "ann_ivfpq", "evt_funnel",
+    // r8 additions: LM scoring (vocab-bounded count joins — expect
+    // ~linear in the scored corpus) and BPE train+apply (one corpus
+    // histogram pass + vocab-sized merge work; the amplifier's ~k
+    // token tagging grows the vocab F×, still under VocabCap),
+    // plus DSIR weighting (model fit = one corpus feature-hash pass
+    // into 256 buckets; scoring is delta-keyed — expect ~linear,
+    // dominated by the fit)
+    "doc_lm_score", "text_tokenize_bpe", "doc_importance_weights",
+    // r9 additions: the graph iteration (5 contribution shuffles over
+    // 3F·N edges — expect ~linear), the vocab-pair overlap (token-key
+    // shuffle with C(|sources|,2)-bounded in-row pair emission; the
+    // amplifier's ~k tagging grows the vocab F× at constant source
+    // count — expect ~linear), the one-pass profiler (scan-bound),
+    // and the interval join (user count scales F×, per-user history
+    // constant ⇒ band output ~linear)
+    "graph_pagerank", "source_overlap", "data_profile", "evt_attribution",
+    // r9 session-3 additions: global line dedup (one digest-keyed
+    // shuffle of all lines, min() map-side combinable — expect
+    // ~linear; the amplifier's ~k tagging makes shard digests
+    // disjoint so duplicate density stays constant) and the sparse
+    // neighbor join (df-capped postings self-join; the cap is
+    // absolute, per-shard df constant under amplification — expect
+    // ~linear, the D2b capped-join contract measured)
+    "dedup_lines", "doc_similar",
+    // r10 additions: the drift monitor (vocab-keyed full-outer join +
+    // |langs|-row broadcast — the ~k tagging grows the vocab F× at
+    // constant per-shard counts, expect ~linear in the token scans)
+    // and the RRF fusion (the D50 capped pair join paid once, two
+    // bounded heaps, shortlist-sized fusion join — expect ~linear,
+    // tracking doc_similar)
+    "corpus_drift", "doc_similar_rrf",
+    // r10 session-2 additions: the keyless range join — under
+    // amplification GLOBAL windows grow F× and in-window events F×,
+    // so TRUE matches grow F² by construction; the measurement pins
+    // that the bucket join's cost tracks O(inputs + matches), where
+    // the nested loop it replaces grows with n·m ≈ 1400× matches at
+    // ×30 — expect exponent ≈ 2 in the F² matches, not in n·m. Star
+    // CC (two groupBys per round over the near-dup subgraph, rounds
+    // ~log² — expect to track dedup_clusters), the NB classifier
+    // (vocab-bounded model join + per-doc agg — expect ~linear in
+    // scored tokens), and IVF-SQ8 (probed-list ADC at fixed m —
+    // per-list bytes grow F×, the same fixed-m regime as ann_ivfpq)
+    "evt_incident_join", "dedup_clusters_star", "doc_classify_lang",
+    "ann_ivfsq",
+    // D61: at constant out-degree the random graph's edge/wedge/
+    // triangle populations all grow ~F×, so the orientation chain
+    // should measure ~linear — a superlinear exponent here means the
+    // wedge join stopped tracking the O(m^1.5) bound's constant
+    "graph_triangles",
+    // r10 session-3 additions. graph_link_predict: constant
+    // out-degree ⇒ per-pivot wedge fanout constant under the cap, so
+    // the scored-pair population grows ~F× — expect ~linear.
+    // dedup_prefix_filter: the ~k tagging keeps shard shingle sets
+    // disjoint, so prefix blocking groups stay constant-sized while
+    // doc count grows F× — expect ~linear. postings_incremental: the
+    // delta is LITERALLY the base delta (copies remap 7→3) while the
+    // standing index grows F× — the fold's shuffles are delta-keyed,
+    // so expect ~flat-to-sublinear (the F×-sized untouched side is a
+    // scan into a bounded heap, never an exchange). doc_pareto_front:
+    // one per-length aggregation over the corpus — expect ~linear
+    "graph_link_predict", "dedup_prefix_filter", "postings_incremental",
+    "doc_pareto_front",
+    // r11: the recall/tuner contract — ONE finest-banding self-join
+    // (coarser geometries derived in-row from matched band ids) + the
+    // prefix-filter truth + two scalar aggregations; under the
+    // self-similar amplifier band buckets stay constant-sized while
+    // docs grow F× — expect ~linear
+    "dedup_recall",
+    // r12: the explain path now rides the D71 lossless truth (memo
+    // shared with dedup_recall) + the shared-shingle semi-join off the
+    // clustered exploded table — flagged pairs grow ~F× under the
+    // amplifier, per-pair shingle work is doc-bounded ⇒ expect ~linear
+    "dedup_explain",
+    // r12: the CEP compiler — ONE user-keyed window sort + an in-row
+    // greedy fold; the amplifier grows users F× at constant per-user
+    // history, so the sort's exchange is the only volume ⇒ expect
+    // ~linear, and any join appearing would also trip ExplainAudit
+    "evt_pattern_spec",
+    // r13: the walk-filtered graph face (label predicate inside the
+    // expansion scoring — beam-sized marginal like ann_graph) and the
+    // append path (fold warmed untimed via warmShared, so the row
+    // meters the SERVE over the grown graph; the fold's own scaling
+    // is the special-cased graph_upkeep_fold row)
+    "ann_graph_filtered", "ann_graph_appended",
+    // r12: graph-ANN serve off the warmed adjacency — the toy regime
+    // (fixed m=16 graph, corpus AND queries grow F×): beam frames are
+    // queries-shaped, each hop probes the F×-sized vector-carrying
+    // adjacency ⇒ expect ~linear in queries
+    "ann_graph")
+
 
   /** Max allowed shuffle-byte growth exponent per query; entries here
     * override the default for paths with a documented, adjudicated
@@ -87,35 +365,49 @@ object ScaleAudit {
     */
   private val MinBaseBytes = 512L * 1024
 
-  /** One audited row: SparkEntry queries by name, plus the
-    * special-cased production twins that need the base dir / factor
-    * (fixed-interval join, fixed-batch graph upkeep fold + merged
-    * serve).
+  /** The special-cased production twins audited after [[Paths]]:
+    * the engine-isolating interval join (intervals held at the base
+    * cardinality) and the graph upkeep rows (a fixed arrival batch
+    * folded against the standing graph; fixed queries over the merged
+    * base ∪ delta, in-session and from the delta's layout table — the
+    * E48/D76d regime, all expected ~flat).
     */
-  private def runAudited(spark: org.apache.spark.sql.SparkSession,
-      q: String, dir: String, base: String, f: Int): Unit = {
-    val df = q match {
-      case "evt_incident_join_fixedinc" =>
-        operators.EventOps.incidentJoinOn(spark, dir, base)
-      case "graph_upkeep_fold" => ScaleBench.graphUpkeepFoldDf(spark, dir, f)
-      case "graph_upkeep_serve" => ScaleBench.graphUpkeepServeDf(spark, dir, f)
-      case "graph_maint_serve" => ScaleBench.graphMaintServeDf(spark, dir, f)
-      case _ => SparkEntry.queries(q)(spark, dir)
-    }
-    df.write.format("noop").mode("overwrite").save()
+  private[graft] val SpecialRows: Seq[String] = Seq(
+    "evt_incident_join_fixedinc", "graph_upkeep_fold",
+    "graph_upkeep_serve", "graph_maint_serve")
+
+  /** Every audited row, in metering order. */
+  private[graft] val Audited: Seq[String] = Paths ++ SpecialRows
+
+  /** One audited row's frame: a [[SpecialRows]] twin, which needs the
+    * base dir / factor, or a SparkEntry query by name.
+    */
+  private[graft] def auditedFrame(spark: SparkSession,
+      q: String, dir: String, base: String, f: Int): DataFrame = q match {
+    case "evt_incident_join_fixedinc" =>
+      operators.EventOps.incidentJoinOn(spark, dir, base)
+    case "graph_upkeep_fold" => graphUpkeepFoldDf(spark, dir, f)
+    case "graph_upkeep_serve" => graphUpkeepServeDf(spark, dir, f)
+    case "graph_maint_serve" => graphMaintServeDf(spark, dir, f)
+    case _ => SparkEntry.queries(q)(spark, dir)
   }
+
+  private def runAudited(spark: SparkSession,
+      q: String, dir: String, base: String, f: Int): Unit =
+    auditedFrame(spark, q, dir, base, f)
+      .write.format("noop").mode("overwrite").save()
 
   /** Unmetered per-row setup: graph_maint_serve reads the fold's
     * edges from a LAYOUT TABLE (the I/O shape under audit) — the
     * table write itself is maintenance, not serve, so it happens
     * outside the meter, and AFTER the fold row was metered (the fold
     * memo must be the fold row's own marginal work, see
-    * [[ScaleBench.ensureMaintDelta]]).
+    * [[ensureMaintDelta]]).
     */
-  private def prepAudited(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def prepAudited(spark: SparkSession,
       q: String, dir: String, f: Int): Unit = q match {
     case "graph_maint_serve" =>
-      ScaleBench.ensureMaintDelta(spark, dir, f); ()
+      ensureMaintDelta(spark, dir, f); ()
     case _ => ()
   }
 
@@ -137,11 +429,12 @@ object ScaleAudit {
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_AUDIT_OUT",
       "SCALE_AUDIT.json")
     val factors = Seq(1, 10)
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val sfName = base.replaceAll(".*/", "")
     val meter = new ShuffleMeter(spark)
@@ -155,26 +448,19 @@ object ScaleAudit {
     val onlySet = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).toSet)
 
-    // the ScaleBench query set + the engine-isolating interval join +
-    // the graph upkeep production twins (fixed arrival batch folded
-    // against the standing graph; fixed queries over the merged
-    // base ∪ delta — the E48/D76d regime, both expected ~flat)
-    val audited = (ScaleBench.Paths ++ Seq("evt_incident_join_fixedinc",
-        "graph_upkeep_fold", "graph_upkeep_serve", "graph_maint_serve"))
-      .filter(q => onlySet.forall(_.contains(q)))
+    val audited = Audited.filter(q => onlySet.forall(_.contains(q)))
 
     val bytes = scala.collection.mutable.Map[String,
       scala.collection.mutable.Map[Int, Long]]()
     factors.foreach { f =>
       val dir = s"/tmp/graft_scale/${sfName}_x$f"
-      ScaleBench.amplify(spark, base, f, dir)
-      // per-factor memo isolation + untimed shared warm-up, the
-      // ScaleBench methodology: the session-shared bases (shingle
-      // table, ANN layouts, standing manifest artifacts, the standing
-      // postings index) are warmed OUTSIDE the meter so each query's
-      // metered bytes are its own marginal exchanges at that factor —
-      // the same split at both factors, so exponents compare like
-      // with like
+      amplify(spark, base, f, dir)
+      // per-factor memo isolation + untimed shared warm-up: the
+      // session-shared bases (shingle table, ANN layouts, standing
+      // manifest artifacts, the standing postings index) are warmed
+      // OUTSIDE the meter so each query's metered bytes are its own
+      // marginal exchanges at that factor — the same split at both
+      // factors, so exponents compare like with like
       Memo.clear(spark)
       operators.DedupOps.withShingles(spark, dir)
         .write.format("noop").mode("overwrite").save()
@@ -212,7 +498,7 @@ object ScaleAudit {
     if (transitioned.nonEmpty) {
       val f = 30
       val dir = s"/tmp/graft_scale/${sfName}_x$f"
-      ScaleBench.amplify(spark, base, f, dir)
+      amplify(spark, base, f, dir)
       def runOne(q: String): Unit = runAudited(spark, q, dir, base, f)
       transitioned.foreach { q =>
         Memo.clear(spark)
@@ -242,7 +528,7 @@ object ScaleAudit {
     if (forced.nonEmpty) {
       val f = 30
       val dir = s"/tmp/graft_scale/${sfName}_x$f"
-      ScaleBench.amplify(spark, base, f, dir)
+      amplify(spark, base, f, dir)
       Memo.clear(spark)
       operators.AnnOps.warmShared(spark, dir)
       val preds = forced.flatMap(ForceX30(_)).distinct
@@ -314,7 +600,7 @@ object ScaleAudit {
     val json = s"""{"base":"$base","factors":[1,10],""" +
       s""""noise_floor_mb":${NoiseFloorBytes / 1024 / 1024},""" +
       s""""flagged":$badCount,"queries":{${rows.mkString(",")}},""" +
-      """"notes":["gate: per-query shuffle WRITE bytes at x1 vs x10 amplification (ScaleBench's self-similar amplifier - duplicate density constant, volume 10x); exponent log(b10/b1)/log(10) must stay <= max_exp","shuffle bytes are a property of plan + data (deterministic run-to-run, unlike wall time on this noisy host), so one pass per factor gates reliably","queries below the 8 MB noise floor at x10 pass trivially - a fully-broadcast plan's kilobyte residue has no meaningful exponent","transition=true marks a sub-512KB x1 base under an above-floor x10: the toy factor satisfied everything with broadcasts, so the x1->x10 exponent has no base; a transition is a PROVISIONAL failure, auto-extended with a x30 measurement - exp_x10_x30 = log(b30/b10)/log(3) is gated against the same max_exp so the broadcast->shuffle flip class cannot escape by first appearing past the x1 point","every max_exp override is adjudicated in the source: evt_incident_join (F^2 true-pair output by construction; engine-isolating twin evt_incident_join_fixedinc sits under the default), dedup_clusters (CC round count log factor), text_tokenize_bpe (the ~k amplifier grows VOCAB Fx on top of volume), doc_similar (pair-agg combiner regime, bounded by the linear raw pair stream)","this gate caught and drove FIVE r11 fixes: ann_ivfsq's unwarmed coded-lists build (broadcast->shuffle flip between factors, also the r10 x17 wall anomaly), doc_similar's weight-table join flipping to a corpus re-shuffle past the broadcast threshold (fixed: clustered-cache derivation, exchange-free at any scale), doc_similar_rrf's per-doc size joins re-shuffling the pair stream (fixed: n_sh rides the postings rows in-row), and - written and caught within the same session - dedup_recall's first cut twice: an unpersisted truth frame re-executing the D71 verify per consuming action (exp 1.38), then its banded self-join flipping to a both-sides shuffle at x10 (exp 1.73); fixed with the memoized clustered-band device, final exp 0.99","forced x30 rows (graph_upkeep_fold/serve, graph_maint_serve): the graph upkeep/maint serving regime is ALWAYS measured at x30 and gated on exp_x10_x30 (r14 - the r13 wall finding for these paths appeared only at x30 while the x1/x10 byte rows were flat; graph_maint_serve reads the fold delta from its bucketed layout table, the exact I/O shape of that finding)"]}"""
+      """"notes":["gate: per-query shuffle WRITE bytes at x1 vs x10 amplification (the self-similar amplifier - duplicate density constant, volume 10x); exponent log(b10/b1)/log(10) must stay <= max_exp","shuffle bytes are a property of plan + data (deterministic run-to-run, unlike wall time on this noisy host), so one pass per factor gates reliably","queries below the 8 MB noise floor at x10 pass trivially - a fully-broadcast plan's kilobyte residue has no meaningful exponent","transition=true marks a sub-512KB x1 base under an above-floor x10: the toy factor satisfied everything with broadcasts, so the x1->x10 exponent has no base; a transition is a PROVISIONAL failure, auto-extended with a x30 measurement - exp_x10_x30 = log(b30/b10)/log(3) is gated against the same max_exp so the broadcast->shuffle flip class cannot escape by first appearing past the x1 point","every max_exp override is adjudicated in the source: evt_incident_join (F^2 true-pair output by construction; engine-isolating twin evt_incident_join_fixedinc sits under the default), dedup_clusters (CC round count log factor), text_tokenize_bpe (the ~k amplifier grows VOCAB Fx on top of volume), doc_similar (pair-agg combiner regime, bounded by the linear raw pair stream)","this gate caught and drove FIVE r11 fixes: ann_ivfsq's unwarmed coded-lists build (broadcast->shuffle flip between factors, also the r10 x17 wall anomaly), doc_similar's weight-table join flipping to a corpus re-shuffle past the broadcast threshold (fixed: clustered-cache derivation, exchange-free at any scale), doc_similar_rrf's per-doc size joins re-shuffling the pair stream (fixed: n_sh rides the postings rows in-row), and - written and caught within the same session - dedup_recall's first cut twice: an unpersisted truth frame re-executing the D71 verify per consuming action (exp 1.38), then its banded self-join flipping to a both-sides shuffle at x10 (exp 1.73); fixed with the memoized clustered-band device, final exp 0.99","forced x30 rows (graph_upkeep_fold/serve, graph_maint_serve): the graph upkeep/maint serving regime is ALWAYS measured at x30 and gated on exp_x10_x30 (r14 - the r13 wall finding for these paths appeared only at x30 while the x1/x10 byte rows were flat; graph_maint_serve reads the fold delta from its bucketed layout table, the exact I/O shape of that finding)"]}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (json + "\n").getBytes("UTF-8"))
     println(json)

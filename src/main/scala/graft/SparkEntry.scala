@@ -634,7 +634,6 @@ object SparkEntry {
   // PQ geometry, shared with AnnOps so the oracle cannot drift.
   private val PqS = operators.AnnOps.PqS
   private val PqK = operators.AnnOps.PqK
-  private val PqSubDim = 64 / PqS // embeddings are 64-dim (TESTDATA.md)
 
   /** CTE chain for the PQ codebook build + final per-(vec, subspace)
     * assignment, replicating AnnOps.pqModel/pqAssign: `nSub` subspace

@@ -32,8 +32,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       // cap per-action plan-description rendering (see GraftSession)
-      .config("spark.sql.maxPlanStringLength",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PLAN_STR", (64 << 10).toString))
+      .config("spark.sql.maxPlanStringLength", GraftSession.MaxPlanStringLength)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

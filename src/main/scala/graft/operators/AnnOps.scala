@@ -69,8 +69,7 @@ object AnnOps {
     * `variant` persists and WARMS the frame (count, memoized);
     * every serve after probes the cache. Keyed `…:<dir>:<variant>`
     * so `Memo.invalidate(dir)` releases the pin when the data under
-    * `dir` changes; [[standingRefresh]] is the owner's explicit
-    * refresh at a fold/compaction point.
+    * `dir` changes.
     */
   def standingPinned(spark: SparkSession, dir: String, variant: String)(
       build: => DataFrame): DataFrame = {
@@ -79,21 +78,6 @@ object AnnOps {
     // valueEager: the warm count is a full Spark job and must not run
     // under Memo's global build lock (ADVICE r14)
     graft.Memo.valueEager[java.lang.Long](spark, s"$key:warm")(
-      java.lang.Long.valueOf(df.count()))
-    df
-  }
-
-  /** REPLACE the standing pin under `variant` — the refresh an owner
-    * calls when the standing state changed (a fold appended, a
-    * compaction rewrote files): releases the previous pin, persists
-    * and warms the new frame. See [[Memo.replaceDf]] for the
-    * between-consumers safety contract.
-    */
-  def standingRefresh(spark: SparkSession, dir: String, variant: String)(
-      build: => DataFrame): DataFrame = {
-    val key = s"standingServe:$dir:$variant"
-    val df = graft.Memo.replaceDf(spark, key)(build)
-    graft.Memo.replaceValue[java.lang.Long](spark, s"$key:warm")(
       java.lang.Long.valueOf(df.count()))
     df
   }
@@ -863,10 +847,10 @@ object AnnOps {
     * every stride-th member of the locality ordering (stride =
     * ⌈size/Cap⌉), vectors carried in-row like the adjacency.
     */
-  private[graft] def graphDownLinks(spark: SparkSession, dir: String,
-      m: Int = DefaultM): DataFrame =
-    graft.Memo.df(spark, s"graphDown:$dir:m$m:c$GraphDownCap") {
-      val lists = ivfLists(spark, dir, m)
+  private[graft] def graphDownLinks(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.Memo.df(spark, s"graphDown:$dir:m$DefaultM:c$GraphDownCap") {
+      val lists = ivfLists(spark, dir, DefaultM)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("c_cid")).orderBy(col("pj"), col("c_id"))
       val wAll = org.apache.spark.sql.expressions.Window
@@ -881,7 +865,7 @@ object AnnOps {
           / lit(GraphDownCap)).cast(org.apache.spark.sql.types.LongType)
           === 0)
       strided
-        .join(graphAnchorIds(spark, dir, m), "c_cid")
+        .join(graphAnchorIds(spark, dir), "c_cid")
         .filter(col("c_id") =!= col("a_id"))
         .select(col("a_id").as("src"), col("c_id").as("dst"),
           col("cv2").as("dv"), col("cn").as("dn"))
@@ -937,11 +921,11 @@ object AnnOps {
     * of queries and walk recall saturated at 0.7). m rows, broadcast
     * everywhere.
     */
-  private[graft] def graphAnchorIds(spark: SparkSession, dir: String,
-      m: Int = DefaultM): DataFrame =
-    graft.Memo.df(spark, s"graphAnchorIds:$dir:m$m") {
-      val lists = ivfLists(spark, dir, m)
-      val model = ivfModel(spark, dir, m)
+  private[graft] def graphAnchorIds(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.Memo.df(spark, s"graphAnchorIds:$dir:m$DefaultM") {
+      val lists = ivfLists(spark, dir, DefaultM)
+      val model = ivfModel(spark, dir, DefaultM)
       import spark.implicits._
       val cents = (0 until model.m).map(i => (model.cids(i),
           model.flat.slice(i * model.dim, (i + 1) * model.dim).toSeq,
@@ -956,11 +940,11 @@ object AnnOps {
         .select(col("c_cid"), col("c_id").as("a_id"))
     }
 
-  private[graft] def graphAnchors(spark: SparkSession, dir: String,
-      m: Int = DefaultM): DataFrame =
-    graft.Memo.df(spark, s"graphAnchors:$dir:m$m") {
-      val lists = ivfLists(spark, dir, m)
-      lists.join(graphAnchorIds(spark, dir, m)
+  private[graft] def graphAnchors(spark: SparkSession,
+      dir: String): DataFrame =
+    graft.Memo.df(spark, s"graphAnchors:$dir:m$DefaultM") {
+      val lists = ivfLists(spark, dir, DefaultM)
+      lists.join(graphAnchorIds(spark, dir)
           .select(col("a_id")), lists("c_id") === col("a_id"))
         .select(col("a_id"), col("cv2").as("av"), col("cn").as("an"))
     }
@@ -1004,10 +988,10 @@ object AnnOps {
   /** The k-NN graph: deterministic NN-descent.
     *
     * Init: within-IVF-cell brute force (the blocked quadratic — cell
-    * size bounds it, and at 100 TB m grows with the corpus exactly as
-    * the IVF prod regime already scales it) UNION an edge from every
-    * node to every anchor (so isolated cells stay reachable and the
-    * anchors become navigable hubs).
+    * size bounds it, and at 100 TB m would grow with the corpus to
+    * keep cells bounded) UNION an edge from every node to every
+    * anchor (so isolated cells stay reachable and the anchors become
+    * navigable hubs).
     *
     * Each round: undirected neighborhood U = out-edges ∪ top-K
     * in-edges (the paper's reverse-neighbor sampling made
@@ -1024,10 +1008,10 @@ object AnnOps {
     graphAdjWith(spark, dir, GraphK, GraphRounds)
 
   private[graft] def graphAdjWith(spark: SparkSession, dir: String,
-      k: Int, nRounds: Int, m: Int = DefaultM): DataFrame =
-    graft.Memo.df(spark, s"graphAdj:$dir:k$k:r$nRounds:m$m") {
+      k: Int, nRounds: Int): DataFrame =
+    graft.Memo.df(spark, s"graphAdj:$dir:k$k:r$nRounds:m$DefaultM") {
       val emb = embDouble(spark, dir)
-      val lists = ivfLists(spark, dir, m)
+      val lists = ivfLists(spark, dir, DefaultM)
       // pin-and-re-root each round (the MMR/incremental-fold device):
       // a round references the previous adjacency ~5× (reverse cap,
       // neighborhood union, proposal self-join, merge), so leaving the
@@ -1085,7 +1069,7 @@ object AnnOps {
         VectorFns.hyperplaneBucket(col("v"), 4).as("bkt"),
         element_at(col("v"), 1).as("pj")), "bkt")
       val ae = emb.select(col("vec_id").as("src"))
-        .join(broadcast(graphAnchors(spark, dir, m)
+        .join(broadcast(graphAnchors(spark, dir)
           .select(col("a_id").as("dst"))), col("src") =!= col("dst"))
         .select("src", "dst")
       val parts = scoreParts(emb.count(), k)
@@ -1111,7 +1095,7 @@ object AnnOps {
         val pc = pp.union(adj.select("src", "dst")).distinct()
         adj = pinRound(topKAdj(scorePairs(emb, pc, parts), k))
       }
-      graft.Memo.value(spark, s"graphAdjPin:$dir:k$k:r$nRounds:m$m")(
+      graft.Memo.value(spark, s"graphAdjPin:$dir:k$k:r$nRounds:m$DefaultM")(
         graft.PinnedDf(adj, prevPin))
       adj
     }
@@ -1150,17 +1134,8 @@ object AnnOps {
     * shuffles stay beam-sized at any corpus size.
     */
   private[graft] def graphAdjV(spark: SparkSession, dir: String): DataFrame =
-    graphAdjVM(spark, dir, DefaultM)
-
-  /** [[graphAdjV]] at an explicit cell count `m` — the production
-    * regime scales m with the corpus (m = 16F) exactly like the IVF
-    * serving families, which bounds the within-cell init quadratic.
-    */
-  private[graft] def graphAdjVM(spark: SparkSession, dir: String,
-      m: Int): DataFrame =
-    graft.Memo.df(spark, s"graphAdjV:$dir:k$GraphK:r$GraphRounds:m$m") {
-      withAdjVectors(spark, dir,
-        graphAdjWith(spark, dir, GraphK, GraphRounds, m))
+    graft.Memo.df(spark, s"graphAdjV:$dir:k$GraphK:r$GraphRounds:m$DefaultM") {
+      withAdjVectors(spark, dir, graphAdjWith(spark, dir, GraphK, GraphRounds))
     }
 
   /** Materialize + RE-ROOT a frame on its persisted RDD (LogicalRDD
@@ -1313,7 +1288,7 @@ object AnnOps {
     // (frontier expansion + beam union), so an unmaterialized walk
     // recomputes sub-hops ~3× per level — measured 6.2/18.5/54 s for
     // hops 1/2/3 at sf0.1 (the r12 appended-serve 52.7 s pathology,
-    // shared by every graphWalk caller: prod serve, upkeep serve).
+    // shared by every graphWalk caller: session serve, upkeep serve).
     // Pin each hop on a persisted RDD (shallow LogicalRDD re-root,
     // the NN-descent pinRound device), release hop h−1 once hop h is
     // materialized, and register the final pin so Memo.clear/
@@ -1376,17 +1351,10 @@ object AnnOps {
     */
   private[graft] def graphAdjCodes(spark: SparkSession,
       dir: String): DataFrame =
-    graphAdjCodesM(spark, dir, DefaultM)
-
-  /** [[graphAdjCodes]] at an explicit cell count `m` — the prod
-    * geometry (m = 16F) for the PQ-navigated serving twin.
-    */
-  private[graft] def graphAdjCodesM(spark: SparkSession,
-      dir: String, m: Int): DataFrame =
     graft.Memo.df(spark,
-        s"graphAdjCodes:$dir:$graphTag:s$PqS:m$m:$PqSeedRule") {
-      graphAdjWith(spark, dir, GraphK, GraphRounds, m).select("src", "dst")
-        .unionByName(graphDownLinks(spark, dir, m).select("src", "dst"))
+        s"graphAdjCodes:$dir:$graphTag:s$PqS:m$DefaultM:$PqSeedRule") {
+      graphAdjWith(spark, dir, GraphK, GraphRounds).select("src", "dst")
+        .unionByName(graphDownLinks(spark, dir).select("src", "dst"))
         .join(pqCodesCore(spark, dir)
           .select(col("vec_id").as("dst") +:
             (0 until PqS).map(s => col(s"c$s")): _*), "dst")
@@ -1394,8 +1362,8 @@ object AnnOps {
 
   /** The anchor rows carrying PQ codes (the PQ walk's entry points). */
   private[graft] def graphAnchorCodes(spark: SparkSession,
-      dir: String, m: Int = DefaultM): DataFrame =
-    graphAnchors(spark, dir, m).select("a_id")
+      dir: String): DataFrame =
+    graphAnchors(spark, dir).select("a_id")
       .join(pqCodesCore(spark, dir)
         .select(col("vec_id").as("a_id") +:
           (0 until PqS).map(s => col(s"c$s")): _*), "a_id")
@@ -1503,38 +1471,6 @@ object AnnOps {
     graft.Memo.replaceValue(spark, s"graphWalkPin:$pinKey")(
       graft.PinnedDf(bm, prevPin))
     bm
-  }
-
-  /** External-query PQ-navigated graph search over EXPLICIT tables —
-    * the prod serving twin's entry point (8 B/edge navigation state;
-    * the float corpus is touched only by the final exact re-rank of
-    * beam·|queries| rows).
-    */
-  def graphPqSearchOn(spark: SparkSession, dir: String,
-      adjC: DataFrame, anchorsC: DataFrame, queries: DataFrame,
-      hops: Int = GraphHops, beam: Int = GraphPqBeam, k: Int = 10,
-      excludeSelf: Boolean = false): DataFrame = {
-    val qv = queries
-      .withColumn("qv", VectorFns.toDouble(col("embedding")))
-      .withColumn("qn", VectorFns.norm(col("qv")))
-      .select(col("vec_id"), col("qv"), col("qn"))
-    val qd = pqDistTablesOf(spark, dir,
-      qv.select(col("vec_id"), col("qv").as("v")))
-    val bm = graphPqWalk(qd, adjC, anchorsC, hops, beam,
-      pinKey = s"$dir:pqSearchOn")
-    // exact re-rank of the final beam against the explicit queries
-    val exact = embDouble(spark, dir)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"),
-        col("nrm").as("cn"))
-      .join(broadcast(bm.select("q_id", "c_id")), "c_id")
-      .join(broadcast(qv.select(col("vec_id").as("q_id"), col("qv"),
-        col("qn"))), "q_id")
-      .filter(if (excludeSelf) col("q_id") =!= col("c_id") else lit(true))
-      .withColumn("sim",
-        VectorFns.cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    TopK.perKey(exact, Seq(col("q_id")),
-        Seq(col("sim").desc, col("c_id").asc), k)
-      .select("q_id", "c_id", "sim", "rnk")
   }
 
   // ---- D76d: rebuild-free graph growth (the D10c/D33e lifecycle
@@ -2093,12 +2029,6 @@ object AnnOps {
   val ProbeTuneTarget = 0.9
   val ProbeTuneMethods: Seq[String] =
     Seq("graph", "graph_pq", "ivf", "ivfpq", "ivfsq")
-
-  /** The per-deployment nprobe candidates ScaleBench's prod regimes
-    * sweep when re-tuning against their own corpus (m = 16F, fixed
-    * queries) — the production analog of [[annProbeTuner]].
-    */
-  val ProdTuneNprobes: Seq[Int] = Seq(1, 2, 4, 8, 16)
 
   /** D10f: recall-aware probe tuning — the D74 band-geometry tuner
     * device applied to ANN serving. Serving recall at a FIXED nprobe
@@ -2664,39 +2594,6 @@ object AnnOps {
   private[graft] def ivfPqListsFrame(spark: SparkSession, dir: String): DataFrame =
     ivfPqLists(spark, dir)
 
-  /** The coded-lists layout at an EXPLICIT quantizer size — the
-    * ScaleBench production-regime build (m scales with the corpus so
-    * per-list bytes, and hence probed bytes per query, stay constant).
-    * PQ codes are m-independent; only the list assignment re-derives.
-    */
-  private[graft] def ivfPqListsFrameM(spark: SparkSession, dir: String,
-      m: Int): DataFrame =
-    ivfLists(spark, dir, m).select("c_cid", "c_id")
-      .join(pqCodesCore(spark, dir)
-        .select(col("vec_id").as("c_id") +:
-          (0 until PqS).map(s => col(s"c$s")): _*), "c_id")
-
-  /** Exact cosine top-k for an ARBITRARY query frame against the full
-    * corpus (queries broadcast into one corpus scan, bounded-heap
-    * top-k, self excluded) — the recall baseline for the ScaleBench
-    * production regime, where the query set is fixed while the corpus
-    * grows.
-    */
-  private[graft] def exactTopKFor(spark: SparkSession, dir: String,
-      queries: DataFrame, k: Int = 10): DataFrame = {
-    val q = vecsOf(queries)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"),
-        col("nrm").as("qn"))
-    val sims = embDouble(spark, dir)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
-      .join(broadcast(q), col("q_id") =!= col("c_id"))
-      .withColumn("sim",
-        VectorFns.cosine(col("qv"), col("cv"), col("qn"), col("cn")))
-    TopK.perKey(sims, Seq(col("q_id")),
-        Seq(col("sim").desc, col("c_id").asc), k)
-      .select("q_id", "c_id")
-  }
-
   /** The coarse quantizer as a (cid, cv, cnrm) frame — tiny (m rows),
     * the model artifact a restart reloads instead of re-running Lloyd.
     */
@@ -2769,15 +2666,12 @@ object AnnOps {
     *  - "flat": Flat lists ([[ivfLists]]) at (m, ivfRounds);
     *  - "flat_labeled": Flat lists carrying c_label
     *    ([[ivfListsLabeled]]), the label-predicated searches' layout;
-    *  - "sq8": SQ8-coded lists ([[ivfSqLists]] or, off [[DefaultM]],
-    *    [[ivfSqListsFrameM]]);
-    *  - "pq": plain PQ-coded lists ([[ivfPqLists]] or, off
-    *    [[DefaultM]], [[ivfPqListsFrameM]]);
+    *  - "sq8": SQ8-coded lists ([[ivfSqLists]]);
+    *  - "pq": plain PQ-coded lists ([[ivfPqLists]]);
     *  - "pq_res": residual PQ-coded lists ([[ivfPqResLists]]) at
     *    (ivfRounds, pqRounds, nSub) — the recall harness's and spec
     *    sweeps' non-default residual indexes.
-    * The ScaleBench production regimes swap in their persisted lists
-    * table with `copy(lists = …)`.
+    * Only "flat" takes an `m` other than [[DefaultM]] ([[annIvfM]]).
     */
   private[graft] def sessionServing(spark: SparkSession, dir: String,
       encoding: String = "pq", m: Int = DefaultM,
@@ -2787,18 +2681,16 @@ object AnnOps {
       "pqRounds/nSub select a residual index")
     require(encoding == "flat" || encoding == "pq_res" || ivfRounds == LloydRounds,
       "ivfRounds selects a flat or residual index")
-    require(m == DefaultM || Set("flat", "sq8", "pq")(encoding),
+    require(m == DefaultM || encoding == "flat",
       s"$encoding lists exist only at m = $DefaultM")
     val (lists, codec) = encoding match {
       case "flat" => (ivfLists(spark, dir, m, ivfRounds), IvfCodec.Flat)
       case "flat_labeled" => (ivfListsLabeled(spark, dir), IvfCodec.Flat)
       case "sq8" =>
         val (mn, delta) = sq8Model(spark, dir)
-        (if (m == DefaultM) ivfSqLists(spark, dir) else ivfSqListsFrameM(spark, dir, m),
-          IvfCodec.Sq8(mn, delta))
+        (ivfSqLists(spark, dir), IvfCodec.Sq8(mn, delta))
       case "pq" =>
-        (if (m == DefaultM) ivfPqLists(spark, dir) else ivfPqListsFrameM(spark, dir, m),
-          IvfCodec.Pq(pqModel(spark, dir), residual = false))
+        (ivfPqLists(spark, dir), IvfCodec.Pq(pqModel(spark, dir), residual = false))
       case "pq_res" =>
         (ivfPqResLists(spark, dir, ivfRounds, pqRounds, nSub),
           IvfCodec.Pq(pqModelRes(spark, dir, ivfRounds, pqRounds, nSub),
@@ -3161,9 +3053,8 @@ object AnnOps {
     ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir, "sq8"), nprobe, r, k)
 
   /** The m-independent SQ8 corpus artifacts (affine model + byte
-    * codes), warmed untimed by the scale harness: both the fixed-m and
-    * production regimes consume them, so neither measurement should
-    * carry their one-off derivation.
+    * codes), warmed untimed by the scale gate so that no audited row
+    * carries their one-off derivation.
     */
   private[graft] def warmSq8(spark: SparkSession, dir: String): Unit = {
     embDouble(spark, dir).write.format("noop").mode("overwrite").save()
@@ -3172,11 +3063,9 @@ object AnnOps {
     ()
   }
 
-  /** The SQ8-coded inverted lists at an EXPLICIT quantizer size — the
-    * ScaleBench production-regime build for IVF-SQ8 (m scales with the
-    * corpus so per-list bytes stay constant; the byte codes are
-    * m-independent, only the list assignment re-derives — the
-    * [[ivfPqListsFrameM]] twin for the SQ8 encoding).
+  /** The SQ8-coded inverted lists at an EXPLICIT quantizer size, as a
+    * frame to persist (the byte codes are m-independent; only the list
+    * assignment re-derives).
     */
   private[graft] def ivfSqListsFrameM(spark: SparkSession, dir: String,
       m: Int): DataFrame =

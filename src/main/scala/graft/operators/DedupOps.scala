@@ -497,7 +497,7 @@ object DedupOps {
   /** Bench warm hook: materialize the D71 lossless-truth memo (shared
     * by D57/D74/D75) untimed, so per-query bench numbers reflect each
     * query's marginal work — the house warmup methodology. NOT used by
-    * ScaleAudit/ScaleBench warms: those deliberately meter the truth
+    * ScaleAudit's warms: those deliberately meter the truth
     * build inside whichever query first pays it.
     */
   def warmTruth(spark: SparkSession, dir: String): Unit = {
@@ -1151,7 +1151,7 @@ object DedupOps {
     * the corpus, so scaling up ADMITS boilerplate fingerprints a
     * smaller corpus rejected, and Σ C(df,2) pair generation turns
     * superlinear even at constant duplicate density — measured by the
-    * r9 ScaleBench amplifier (the ×30 corpus lifted the cap 250 →
+    * r9 scale amplifier (the ×30 corpus lifted the cap 250 →
     * 7500 and pair spill filled the disk). [[WinnowDfCap]] closes it:
     * df ≤ min(nDocs/20, cap) bounds per-fingerprint cost at
     * C(cap, 2) at ANY corpus size, making total pair cost linear in

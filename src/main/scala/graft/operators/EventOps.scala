@@ -1215,7 +1215,7 @@ object EventOps {
 
   /** B26's scale-regime twin: the interval side derived from
     * `incidentDir` while the probe stream reads `dir`. With both set
-    * to the same dir this IS B26; ScaleBench holds `incidentDir` at
+    * to the same dir this IS B26; ScaleAudit holds `incidentDir` at
     * the BASE corpus while events amplify — the production shape
     * (global severe-error windows don't grow with event volume), which
     * isolates the ENGINE's growth from the F²-by-construction match

@@ -664,22 +664,12 @@ object LayoutOps {
       pqCodec(spark, dir, residual = true)))
   }
 
-  /** D36i: compact a family's table back to one file per non-empty
-    * bucket (appends accumulate a file per batch; probes pay per-file
-    * open costs). Rows, search results and bucket pruning are
-    * unchanged — spec-pinned.
-    */
-  def compactFamily(spark: SparkSession, dir: String,
-      familyName: String): Unit = {
-    val fam = familyOf(familyName)
-    LayoutStore.compact(spark, tableName(fam, dir), Seq(fam.bucketKey),
-      fam.buckets)
-  }
-
-  /** The compaction POLICY a maintenance scheduler runs after deltas:
-    * compact when the table's data-file count exceeds `maxFiles`
-    * (per-probe open cost is file-count-bound), no-op otherwise.
-    * Returns true iff a compaction ran.
+  /** D36i: the compaction POLICY a maintenance scheduler runs after
+    * deltas: when the family's table holds more than `maxFiles` data
+    * files (appends accumulate a file per batch; per-probe open cost
+    * is file-count-bound), compact it back to one file per non-empty
+    * bucket, else no-op. Rows, search results and bucket pruning are
+    * unchanged — spec-pinned. Returns true iff a compaction ran.
     */
   def compactIfNeeded(spark: SparkSession, dir: String, familyName: String,
       maxFiles: Int = 64): Boolean = {

@@ -183,14 +183,6 @@ object LayoutStore {
       }
     }
 
-  def markerExists(spark: SparkSession, table: String,
-      marker: String): Boolean =
-    Files.exists(Paths.get(location(spark, table), s"_marker_$marker"))
-
-  /** Number of data files in the table location (markers, _SUCCESS and
-    * hidden files excluded) — the quantity compaction policy triggers
-    * on.
-    */
   /** True iff at least one data FILE lives under `d` (recursing into
     * subdirectories, markers/_SUCCESS/hidden names excluded at every
     * level) — the re-registration guard. Top-level-entry existence is
@@ -208,6 +200,10 @@ object LayoutStore {
     }
   }
 
+  /** Number of data files in the table location (markers, _SUCCESS and
+    * hidden files excluded) — the quantity compaction policy triggers
+    * on.
+    */
   def dataFileCount(spark: SparkSession, table: String): Int = {
     val fs = new java.io.File(location(spark, table)).listFiles()
     if (fs == null) 0

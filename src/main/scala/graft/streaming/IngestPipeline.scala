@@ -42,9 +42,9 @@ object IngestPipeline {
         col("mtime_ms").as("file_time"), col("folder"), lit("").as("pack"),
         col("name"), col("size"), col("mtime_ms").as("modify_time"),
         col("content"), col("compress"),
-        when(col("compress"), length(ContentFns.gzipCompress(
-          encode(col("content"), "UTF-8"))).cast(LongType))
-          .otherwise(col("size")).as("compress_size"),
+        ContentFns.compressSize(col("compress"), col("size"),
+          length(ContentFns.gzipCompress(encode(col("content"), "UTF-8"))))
+          .as("compress_size"),
         ContentFns.checksum(col("content")).as("checksum"),
         col("host"), col("mtime_ms").as("folder_time"),
         col("mtime_ms").as("create_time"))

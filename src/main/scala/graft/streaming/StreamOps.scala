@@ -837,14 +837,6 @@ object StreamOps {
     vocabNoveltyStream(incoming,
       graft.operators.ProfileOps.driftBaseFrame(spark, dir))
 
-  /** E37 from the PERSISTED drift_base layout — a restarted monitor
-    * never recounts the standing corpus.
-    */
-  def vocabNoveltyStreamFromLayout(spark: org.apache.spark.sql.SparkSession,
-      dir: String, incoming: DataFrame): DataFrame =
-    vocabNoveltyStream(incoming,
-      graft.operators.LayoutOps.table(spark, dir, "drift_base"))
-
   /** E34: the D49 Gopher battery at ingest time — a stateless
     * map-only plan (the E16 shape): per-document rule verdicts emit
     * with the arriving micro-batch, no stream state beyond source
@@ -1477,16 +1469,6 @@ object StreamOps {
       .select("doc_id", "ts", "lang", "n_trans", "bits_per_trans", "tier")
   }
 
-  /** E22 from the PERSISTED layout: a restarted scoring tier makes the
-    * LM tables servable (catalog / re-register — no recount of the
-    * standing corpus) and streams against them.
-    */
-  def lmScoreStreamFromLayout(spark: org.apache.spark.sql.SparkSession,
-      dir: String, incoming: DataFrame): DataFrame =
-    lmScoreStream(spark,
-      graft.operators.LayoutOps.table(spark, dir, "lm_unigrams"),
-      graft.operators.LayoutOps.table(spark, dir, "lm_bigrams"), incoming)
-
   /** E40: the NB gate's ingest face — arriving documents classified
     * in-row against the FROZEN standing model (pass the memoized
     * frames for a live session or the persisted nb_counts/nb_classes
@@ -1576,13 +1558,6 @@ object StreamOps {
       .withColumn("logw_bits",
         col("logw_q10").cast(DoubleType) / lit(1024.0))
   }
-
-  /** E23 from the PERSISTED layout (a restarted selection tier). */
-  def importanceScoreStreamFromLayout(spark: org.apache.spark.sql.SparkSession,
-      dir: String, incoming: DataFrame): DataFrame =
-    importanceScoreStream(spark,
-      graft.operators.LayoutOps.table(spark, dir, "dsir_target"),
-      graft.operators.LayoutOps.table(spark, dir, "dsir_raw"), incoming)
 
   /** E30: streaming volume-anomaly monitor — B22's trailing-baseline
     * z-test as per-type stream state: open days accumulate counts

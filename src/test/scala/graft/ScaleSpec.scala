@@ -3,7 +3,7 @@ package graft
 import graft.operators.DedupOps
 import org.apache.spark.sql.functions._
 
-/** The ScaleBench amplifier's SELF-SIMILARITY contract — what makes
+/** The ScaleAudit amplifier's SELF-SIMILARITY contract — what makes
   * its fitted exponents measure the engine rather than the growth of
   * true duplicate structure: amplified shard k must be an isomorphic
   * image of the base corpus with zero cross-shard dedup collisions,
@@ -13,7 +13,7 @@ class ScaleSpec extends GraftSpec {
 
   private lazy val ampDir = {
     val out = "/tmp/graft_scale_spec/x3"
-    ScaleBench.amplify(spark, Sf, 3, out)
+    ScaleAudit.amplify(spark, Sf, 3, out)
     out
   }
 
@@ -56,5 +56,25 @@ class ScaleSpec extends GraftSpec {
     val ampCk = ampDocs.select(md5(col("text"))).distinct().count()
     assert(ampCk == 3 * baseCk,
       s"cross-shard checksum collisions: $baseCk base vs $ampCk amplified")
+  }
+
+  test("every audited row resolves, and the graph upkeep twins return rows on the amplified corpus") {
+    val audited = ScaleAudit.Audited
+    val unresolved = audited.filterNot(q =>
+      SparkEntry.queries.contains(q) || ScaleAudit.SpecialRows.contains(q))
+    assert(unresolved.isEmpty, s"audited rows with no query: $unresolved")
+    assert(audited.distinct.size == audited.size, "an audited row repeats")
+    // the special rows run only in the hour-scale gate otherwise; at
+    // f=3 the fixed arrival batch and the fixed queries are the k=0
+    // shard's ids, exactly as at the gate's factors
+    try {
+      Seq("graph_upkeep_fold", "graph_upkeep_serve", "graph_maint_serve")
+        .foreach { q =>
+          ScaleAudit.prepAudited(spark, q, ampDir, 3)
+          val n = ScaleAudit.auditedFrame(spark, q, ampDir, Sf, 3).count()
+          assert(n > 0, s"$q returned no rows at f=3")
+        }
+    } finally
+      sources.LayoutStore.purge(spark, ScaleAudit.auditDeltaTable(spark, ampDir))
   }
 }
