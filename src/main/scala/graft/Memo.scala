@@ -125,15 +125,6 @@ object Memo {
     }
   }
 
-  /** Drop (and unpersist) this session's entries derived from data
-    * under `dir`. The repo's own writers (UpsertSink, CompactionOps)
-    * call this after mutating files there, so memoized derivations
-    * cannot serve stale data within a session; for inputs mutated by
-    * anything else, the contract is immutable-input-per-session.
-    * Keys are `name:dir[:variant]` (names and paths contain no ':'),
-    * so the dir segment is matched EXACTLY — `/data/sf1` must not
-    * invalidate `/data/sf10`'s derivations.
-    */
   /** Evict one key from both maps under its build lock (r16, ADVICE:
     * eviction used to remove entries lock-free, so a [[df]]/[[value]]
     * build in flight during a purge could register a frame derived
@@ -156,6 +147,17 @@ object Memo {
       if (v != null) dropValue(v)
     }
 
+  /** Drop (and unpersist) this session's entries derived from data
+    * under `dir`. The repo's one directory writer,
+    * [[graft.sources.DirSwap]] (behind UpsertSink,
+    * writePartitionedByDate, CompactionOps and the layout compaction),
+    * calls this after swapping files there, so
+    * memoized derivations cannot serve stale data within a session;
+    * for inputs mutated by anything else, the contract is
+    * immutable-input-per-session. Keys are `name:dir[:variant]` (names
+    * and paths contain no ':'), so the dir segment is matched EXACTLY —
+    * `/data/sf1` must not invalidate `/data/sf10`'s derivations.
+    */
   def invalidate(spark: SparkSession, dir: String): Unit = {
     def dirMatches(key: String): Boolean = {
       val i = key.indexOf(':')

@@ -615,7 +615,6 @@ object CurationOps {
     // invalidate/clear hooks release the storage (PinnedDf carries the
     // persisted handle for exactly that)
     graft.Memo.value(spark, s"incPin:$dir:$tag") {
-      val t0 = System.nanoTime()
       val d = df
       // re-root on the materialized RDD: the delta chains compose ~10
       // deep, and leaving each pinned frame's full logical tree in
@@ -626,9 +625,6 @@ object CurationOps {
       // loss degrades to recomputation, not failure.
       val rdd = d.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       rdd.count()
-      if (sys.env.contains("GRAFT_PIN_DEBUG"))
-        System.err.println(
-          f"[pin] $tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
       graft.PinnedDf(d.sparkSession.createDataFrame(rdd, d.schema), rdd)
     }.df
 

@@ -791,10 +791,7 @@ object DedupOps {
         .mapValues { case (c, m) => m.fold(c)(math.min(c, _)) }
         .persist()
       rounds += 1
-      val rt0 = System.nanoTime()
       val s = probe(next)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $rounds ${(System.nanoTime()-rt0)/1e9}%.2f s sum=$s")
       converged = s == prevSum
       prevSum = s
       labels.unpersist(false)

@@ -109,14 +109,14 @@ object FileMetaOps {
 
   /** Cassandra-table analog sink: the reference's primary layout is
     * partitioned by file_date (cassandra.go:300-330); the Spark-native
-    * equivalent is date-partitioned parquet with dynamic partition
-    * overwrite (re-ingesting a day replaces exactly that day).
+    * equivalent is date-partitioned parquet whose written days are
+    * swapped in through [[graft.sources.DirSwap]] (re-ingesting a day
+    * replaces exactly that day; a crash never loses one).
     */
-  def writePartitionedByDate(df: org.apache.spark.sql.DataFrame, path: String): Unit =
-    // a per-write option, not the session conf: a concurrent overwrite
-    // in the same session keeps its own mode
-    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("file_date").parquet(path)
+  def writePartitionedByDate(df: DataFrame, path: String): Unit =
+    graft.sources.DirSwap.replace(df.sparkSession, path) { stage =>
+      df.write.partitionBy("file_date").parquet(stage.toString)
+    }
 
   /** C6 (rows-only): real gzip via the custom Catalyst expressions —
     * compressed sizes + decompress roundtrip check.

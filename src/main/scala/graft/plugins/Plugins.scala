@@ -21,7 +21,8 @@ case class WatchRule(
   * semantics: a rule that scopes the file feed plus a Transform over
   * the enriched records. CheckFile's "skip foreign biz rows" becomes
   * the biz filter; AutoInit's handler wiring is the sink layer
-  * (StreamOps.kafkaEnvelope / FileMetaOps.writePartitionedByDate).
+  * (StreamOps.kafkaEnvelope / FileMetaOps.writePartitionedByDate,
+  * whose written days are swapped in through sources.DirSwap).
   */
 trait GraftPlugin {
   def name: String

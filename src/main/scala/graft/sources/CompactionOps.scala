@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Small-files compaction for date-partitioned parquet tables — the
@@ -10,9 +9,8 @@ import org.apache.spark.sql.SparkSession
   * parallelism then pays a task per file. Compaction decisions come
   * from the FILE LISTING only (no data scan); only flagged partitions
   * are read and rewritten, each to ceil(bytes/targetFileBytes) files,
-  * swapped in atomically per partition (staging dir + rename — a copy
-  * on object stores, documented). Work is proportional to the
-  * fragmented days, never the table.
+  * and swapped in per partition through [[DirSwap]]. Work is
+  * proportional to the fragmented days, never the table.
   */
 object CompactionOps {
 
@@ -21,8 +19,7 @@ object CompactionOps {
   /** File-listing stats per partition directory (`file_date=*`). */
   def stats(spark: SparkSession, path: String): Seq[PartitionStat] = {
     val root = new Path(path)
-    val fs = FileSystem.get(root.toUri,
-      spark.sparkContext.hadoopConfiguration)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
     fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.contains("=")
@@ -39,55 +36,26 @@ object CompactionOps {
     * `targetFileBytes / 2` and which hold more than `minFiles` files.
     * Returns the partition names rewritten.
     *
-    * Swap protocol per partition (rename is not atomic across the
-    * pair, so every step is recoverable): write staging → rename live
-    * to `.X_old` → rename staging to live → drop `.X_old`. A crash
-    * leaves dot-prefixed dirs that stats() ignores and the next
-    * compact() run heals first: an orphaned `.X_old` whose live dir
-    * is missing is renamed back; leftover staging dirs are discarded
-    * (their source is still intact). On object stores rename is a
-    * copy — slower, same safety.
+    * The flagged partitions are rewritten into one [[DirSwap]] stage
+    * and swapped in per partition; an interrupted earlier run is
+    * healed first (its live partitions roll forward or back, its
+    * leftovers go), so a crash at any step loses no row.
     */
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
-      minFiles: Int = 4): Seq[String] = {
-    val root = new Path(path)
-    val fs = FileSystem.get(root.toUri, spark.sparkContext.hadoopConfiguration)
-    def renameOrThrow(from: Path, to: Path): Unit =
-      if (!fs.rename(from, to))
-        throw new java.io.IOException(s"compaction rename failed: $from -> $to")
-
-    // heal leftovers of an interrupted previous run
-    if (fs.exists(root)) fs.listStatus(root).toSeq.map(_.getPath).foreach { d =>
-      val name = d.getName
-      if (name.startsWith(".") && name.endsWith("_old")) {
-        val live = new Path(root, name.stripPrefix(".").stripSuffix("_old"))
-        if (!fs.exists(live)) renameOrThrow(d, live) // crashed mid-swap
-        else fs.delete(d, true) // swap completed, old copy not yet dropped
-      } else if (name.startsWith(".") && name.endsWith("_compacting")) {
-        fs.delete(d, true) // incomplete staging; source partition intact
-      }
+      minFiles: Int = 4): Seq[String] =
+    DirSwap.replace(spark, path) { stage =>
+      val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      stats(spark, path).filter(s =>
+        s.files > minFiles && s.bytes / math.max(1, s.files) < targetFileBytes / 2)
+        .foreach { p =>
+          val n = math.max(1L, (p.bytes + targetFileBytes - 1) / targetFileBytes).toInt
+          val out = new Path(stage, p.dir)
+          spark.read.parquet(new Path(path, p.dir).toString)
+            .coalesce(n)
+            .write.parquet(out.toString)
+          // drop parquet's _SUCCESS marker so the dir holds data files only
+          fs.delete(new Path(out, "_SUCCESS"), false)
+        }
     }
-
-    val flagged = stats(spark, path).filter(s =>
-      s.files > minFiles && s.bytes / math.max(1, s.files) < targetFileBytes / 2)
-    flagged.foreach { p =>
-      val dir = new Path(root, p.dir)
-      val staging = new Path(root, s".${p.dir}_compacting")
-      val old = new Path(root, s".${p.dir}_old")
-      val n = math.max(1L, (p.bytes + targetFileBytes - 1) / targetFileBytes).toInt
-      spark.read.parquet(dir.toString)
-        .coalesce(n)
-        .write.mode("overwrite").parquet(staging.toString)
-      // drop parquet's _SUCCESS marker so the dir holds data files only
-      fs.delete(new Path(staging, "_SUCCESS"), false)
-      renameOrThrow(dir, old)
-      renameOrThrow(staging, dir)
-      fs.delete(old, true)
-    }
-    spark.catalog.refreshByPath(path)
-    // memoized derivations over this path are now stale
-    if (flagged.nonEmpty) graft.Memo.invalidate(spark, path)
-    flagged.map(_.dir)
-  }
 }

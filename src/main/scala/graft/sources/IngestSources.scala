@@ -21,17 +21,8 @@ import org.apache.spark.sql.functions._
   */
 object IngestSources {
 
-  private def docSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("text",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("lang",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("source",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("n_chars",
-      org.apache.spark.sql.types.LongType)))
+  private def docSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT")
 
   /** Mirror path key: an md5 of the RAW dir string (no sanitizer
     * collisions) plus a content fingerprint (row count + summed text

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Persistent storage for the engine's layout artifacts (SURVEY §2
@@ -56,8 +57,11 @@ object LayoutStore {
     spark.conf.get("spark.sql.warehouse.dir")
       .replaceFirst("^file:", "")
 
+  private def layoutsRoot(spark: SparkSession): String =
+    s"${warehouse(spark)}/graft_layouts"
+
   private[graft] def location(spark: SparkSession, table: String): String =
-    s"${warehouse(spark)}/graft_layouts/$table"
+    s"${layoutsRoot(spark)}/$table"
 
   /** Serve a layout table (the read side — a plain catalog read; the
     * bucket spec rides from the catalog entry).
@@ -68,11 +72,13 @@ object LayoutStore {
     spark.catalog.tableExists(table)
 
   /** Make `table` servable, choosing the cheapest sufficient path:
-    *  1. already in the catalog → nothing to do;
-    *  2. files survive at the layout location (prior JVM wrote them,
+    *  1. already in the catalog → nothing to do (no listing);
+    *  2. a [[compact]] died mid-swap → [[DirSwap.heal]] finishes or
+    *     undoes it, then re-register (`swap_recovered`);
+    *  3. files survive at the layout location (prior JVM wrote them,
     *     catalog died with it) → re-register the table over the files
     *     with the same bucket spec — the RESTART path, O(metadata);
-    *  3. nothing on disk → build the frame and write it bucketed —
+    *  4. nothing on disk → build the frame and write it bucketed —
     *     the layout shuffle, paid exactly once per (family, dir,
     *     version).
     * Returns the path taken, for specs/bench to assert on.
@@ -82,32 +88,18 @@ object LayoutStore {
     if (exists(spark, table)) "catalog"
     else {
       val loc = location(spark, table)
-      val tmp = Paths.get(loc + CompactSuffix)
-      // a surviving location must hold at least one data file to
-      // re-register from (schema recovery reads parquet footers) — a
-      // dataless directory (a table seeded EMPTY, e.g. the stream-
-      // owned postings_delta, or a crash before the first file) holds
-      // no information: fall through and rebuild it
-      if (hasDataFile(new java.io.File(loc))) {
-        register(spark, table, loc, bucketKeys, buckets)
-        "reregistered"
-      } else if (Files.exists(tmp.resolve(CompleteMarker))) {
-        // a compaction wrote its full replacement (data + markers +
-        // completeness marker) but died mid-swap: finish the swap —
-        // nothing is lost, the tmp directory IS the table. A dataless
-        // husk at the target (this branch's precondition) only blocks
-        // the move — clear it.
-        if (Files.exists(Paths.get(loc))) {
-          def rec(p: java.io.File): Unit = {
-            val cs = p.listFiles(); if (cs != null) cs.foreach(rec)
-            p.delete(); ()
-          }
-          rec(new java.io.File(loc))
-        }
-        Files.move(tmp, Paths.get(loc))
-        Files.deleteIfExists(Paths.get(loc, CompleteMarker))
+      // a sealed stage rolled forward IS the table: nothing is lost
+      if (DirSwap.heal(spark, layoutsRoot(spark), Some(table)).nonEmpty) {
         register(spark, table, loc, bucketKeys, buckets)
         "swap_recovered"
+      } else if (hasDataFile(new java.io.File(loc))) {
+        // a surviving location must hold at least one data file to
+        // re-register from (schema recovery reads parquet footers) — a
+        // dataless directory (a table seeded EMPTY, e.g. the stream-
+        // owned postings_delta, or a crash before the first file)
+        // holds no information: fall through and rebuild it
+        register(spark, table, loc, bucketKeys, buckets)
+        "reregistered"
       } else {
         write(spark, table, build, bucketKeys, buckets)
         "written"
@@ -210,71 +202,55 @@ object LayoutStore {
     else fs.count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
   }
 
-  private val CompactSuffix = "_compact"
-  private val CompleteMarker = "_compact_complete"
-
   /** Compact an appended layout table back to ONE file per non-empty
     * bucket: pre-partition by the bucketing hash into exactly
     * `buckets` partitions (repartition(n, key) and bucketBy(n, key)
     * share Spark's Murmur3-pmod hash, so each write task holds exactly
-    * one bucket's rows), rewrite bucketed+sorted to a fresh location,
-    * then swap directories and re-register the catalog entry. Marker
-    * files carry over, so append-once history survives compaction.
-    * This is the maintenance job that keeps per-probe file counts
-    * bounded no matter how many deltas have been appended.
+    * one bucket's rows), rewrite bucketed+sorted into a [[DirSwap]]
+    * stage, swap the table directory and re-register the catalog
+    * entry. Marker files carry over, so append-once history survives
+    * compaction. This is the maintenance job that keeps per-probe file
+    * counts bounded no matter how many deltas have been appended.
     *
-    * Crash safety: the replacement directory is complete (data +
-    * markers + a completeness marker) BEFORE the original is touched,
-    * and the swap is two renames. Death before the swap leaves the
-    * original serving (the orphan tmp is cleaned by the next compact);
-    * death mid-swap leaves the completeness-marked tmp, which
-    * [[ensure]] finishes moving into place (`swap_recovered`). No
-    * window loses appended rows — the guarantee stream-maintained
-    * layouts (whose rows exist nowhere else) need.
+    * Crash safety is the swap's: the replacement (data + markers) is
+    * sealed before the original is touched. Death before the swap
+    * leaves the original serving; death mid-swap leaves the sealed
+    * stage or the original's `.X_old`, which the next compact or
+    * [[ensure]] (`swap_recovered`) finishes or undoes. No window loses
+    * appended rows — the guarantee stream-maintained layouts (whose
+    * rows exist nowhere else) need.
     */
   def compact(spark: SparkSession, table: String, bucketKeys: Seq[String],
       buckets: Int): Unit = lockFor(table).synchronized {
     val loc = location(spark, table)
-    val tmpTable = table + CompactSuffix
-    val tmpLoc = loc + CompactSuffix
-    val oldLoc = loc + "_old"
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-    deleteRec(new java.io.File(tmpLoc))
-    deleteRec(new java.io.File(oldLoc))
-    // read the FILES, not the catalog table: the table's bucket
-    // metadata makes the planner treat the repartition as redundant
-    // (HashPartitioning(key, n) already "provided") and elide it —
-    // then decline the bucketed scan anyway, leaving arbitrary
-    // file-coalesced partitions and a file per (task, bucket). The
-    // plain-parquet read carries no partitioning claim, so the
-    // repartition survives and each write task holds exactly one
-    // bucket.
-    spark.read.parquet(loc)
-      .repartition(buckets, bucketKeys.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode("overwrite").format("parquet")
-      .option("path", tmpLoc)
-      .bucketBy(buckets, bucketKeys.head, bucketKeys.tail: _*)
-      .sortBy(bucketKeys.head, bucketKeys.tail: _*)
-      .saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    // markers ride over, then the completeness marker seals the
-    // replacement as self-sufficient
-    new java.io.File(loc).listFiles()
-      .filter(_.getName.startsWith("_marker_")).foreach { f =>
-        Files.copy(f.toPath, Paths.get(tmpLoc, f.getName))
-      }
-    Files.createFile(Paths.get(tmpLoc, CompleteMarker))
-    // the swap: two renames, then cleanup
-    Files.move(Paths.get(loc), Paths.get(oldLoc))
-    Files.move(Paths.get(tmpLoc), Paths.get(loc))
-    Files.deleteIfExists(Paths.get(loc, CompleteMarker))
-    deleteRec(new java.io.File(oldLoc))
+    val tmpTable = table + "_compact"
+    DirSwap.replace(spark, layoutsRoot(spark), Some(table)) { stage =>
+      val out = new Path(stage, table)
+      spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
+      // read the FILES, not the catalog table: the table's bucket
+      // metadata makes the planner treat the repartition as redundant
+      // (HashPartitioning(key, n) already "provided") and elide it —
+      // then decline the bucketed scan anyway, leaving arbitrary
+      // file-coalesced partitions and a file per (task, bucket). The
+      // plain-parquet read carries no partitioning claim, so the
+      // repartition survives and each write task holds exactly one
+      // bucket.
+      spark.read.parquet(loc)
+        .repartition(buckets, bucketKeys.map(org.apache.spark.sql.functions.col): _*)
+        .write.mode("overwrite").format("parquet")
+        .option("path", out.toString)
+        .bucketBy(buckets, bucketKeys.head, bucketKeys.tail: _*)
+        .sortBy(bucketKeys.head, bucketKeys.tail: _*)
+        .saveAsTable(tmpTable)
+      spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
+      // markers (empty files) ride over
+      val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(new Path(loc)).map(_.getPath.getName)
+        .filter(_.startsWith("_marker_"))
+        .foreach(m => fs.create(new Path(out, m), false).close())
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+    }
     register(spark, table, loc, bucketKeys, buckets)
-  }
-
-  private def deleteRec(p: java.io.File): Unit = {
-    val cs = p.listFiles(); if (cs != null) cs.foreach(deleteRec); p.delete(); ()
   }
 
   /** Drop ONLY the catalog entry (external table ⇒ files survive) —
@@ -290,18 +266,10 @@ object LayoutStore {
     */
   def purge(spark: SparkSession, table: String): Unit = lockFor(table).synchronized {
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    def rec(p: java.io.File): Unit = {
-      val cs = p.listFiles(); if (cs != null) cs.foreach(rec); p.delete(); ()
-    }
-    rec(new java.io.File(location(spark, table)))
+    val loc = new Path(location(spark, table))
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
   }
 
-  /** Re-attach a catalog entry to surviving layout files: CREATE
-    * TABLE over the location with the original bucket spec. The
-    * schema is recovered from the parquet footers; bucket ids are
-    * recovered per file from the bucketed file names, so the
-    * re-registered table serves identically to the original.
-    */
   /** Partitioned-table variants — for layouts whose probe key is a
     * coarse data-skipping cell (the Z-order prefix): one DIRECTORY
     * per key value, so a literal-key probe prunes at the file-listing
@@ -376,6 +344,12 @@ object LayoutStore {
     }}
   }
 
+  /** Re-attach a catalog entry to surviving layout files: CREATE
+    * TABLE over the location with the original bucket spec. The
+    * schema is recovered from the parquet footers; bucket ids are
+    * recovered per file from the bucketed file names, so the
+    * re-registered table serves identically to the original.
+    */
   private def register(spark: SparkSession, table: String, loc: String,
       bucketKeys: Seq[String], buckets: Int): Unit = {
     val schema = spark.read.parquet(loc).schema.toDDL

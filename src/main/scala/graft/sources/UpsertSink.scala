@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Keyed idempotent upsert writer — the Spark-native dual of the
   * reference's Cassandra insert-or-replace on the primary key
@@ -12,14 +15,15 @@ import org.apache.spark.sql.functions._
   * agent's replay-on-failure behavior — must leave the table with
   * exactly one, latest, record per key.
   *
-  * MERGE shape at scale: the existing table is scoped to ONLY the
-  * file_date partitions present in the batch (partition-pruned scan —
-  * the unscoped table is never read), merged with last-write-wins per
-  * PK on `versionCol` (Cassandra timestamp semantics), staged, and
-  * swapped in via dynamic partition overwrite. Work is proportional
-  * to the touched days, not the table; a day's partition rewrite is
-  * what LeveledCompaction does for the same workload on the reference
-  * side.
+  * MERGE shape at scale: only the batch's `file_date=` directories
+  * that exist are read (the rest of the table is never listed),
+  * merged with the batch last-write-wins per PK on `versionCol`
+  * (Cassandra timestamp semantics), written once into a [[DirSwap]]
+  * stage and swapped in day by day. Work is proportional to the
+  * touched days, not the table; a day's rewrite is what
+  * LeveledCompaction does for the same workload on the reference side.
+  * A crash at any step leaves every day old or new, and the replay
+  * converges to the same table.
   */
 object UpsertSink {
 
@@ -44,25 +48,17 @@ object UpsertSink {
     */
   def ensureTable(batch: DataFrame, path: String): Unit = {
     val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sidecar = new org.apache.hadoop.fs.Path(root, SchemaFile)
+    val sidecar = new Path(root, SchemaFile)
     if (!fs.exists(sidecar)) {
       fs.mkdirs(root)
       val out = fs.create(sidecar, true)
       try out.write(batch.schema.json.getBytes("UTF-8")) finally out.close()
     } else {
       val in = fs.open(sidecar)
-      val declaredJson =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val arr = new Array[Byte](8192)
-          var n = in.read(arr)
-          while (n > 0) { buf.write(arr, 0, n); n = in.read(arr) }
-          buf.toString("UTF-8")
-        } finally in.close()
-      val declared = org.apache.spark.sql.types.DataType.fromJson(declaredJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val declaredJson = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      val declared = DataType.fromJson(declaredJson).asInstanceOf[StructType]
       val d = declared.fields.map(f => f.name -> f.dataType).toMap
       val b = batch.schema.fields.map(f => f.name -> f.dataType).toMap
       if (d != b)
@@ -80,49 +76,26 @@ object UpsertSink {
   def upsert(batch: DataFrame, path: String,
       pk: Seq[String] = PrimaryKey, versionCol: String = "upload_time"): Unit = {
     val spark = batch.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     ensureTable(batch, path) // init or validate schema, CheckCassandraTable-style
-
-    // .get(0).toString, not getString: file_date may be STRING or DATE
-    // typed; isin with strings casts correctly against either
-    val touchedDays = batch.select("file_date").distinct().collect()
-      .map(_.get(0).toString)
-    // "has data" = any non-hidden child; a freshly initialized table
-    // root holds only the schema sidecar, which parquet cannot read
-    val hasData = fs.exists(root) && fs.listStatus(root).exists { st =>
-      val n = st.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    val existing =
-      if (hasData)
-        Some(spark.read.parquet(path)
-          .filter(col("file_date").isin(touchedDays.toSeq: _*)) // partition-pruned
+    DirSwap.replace(spark, path) { stage =>
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // .get(0).toString, not getString: file_date may be STRING or DATE
+      // typed; the day directory names the value's string form
+      val touched = batch.select("file_date").distinct().collect()
+        .map(r => new Path(root,
+          ExternalCatalogUtils.getPartitionPathString("file_date", r.get(0).toString)))
+        .filter(fs.exists)
+      val existing =
+        if (touched.isEmpty) None
+        else Some(spark.read.option("basePath", path)
+          .parquet(touched.map(_.toString).toSeq: _*)
           .select(batch.columns.map(col): _*))
-      else None
-
-    val all = existing.fold(batch)(batch.unionByName(_))
-    val w = Window.partitionBy(pk.map(col): _*).orderBy(desc(versionCol))
-    val merged = all
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-
-    // Stage then swap: the merged plan reads `path`, which parquet
-    // cannot overwrite in place. Only the touched-day rows are staged,
-    // and the dynamic overwrite replaces exactly those partitions.
-    // partitionOverwriteMode rides as a PER-WRITE option, so a
-    // concurrent overwrite elsewhere in the session never silently
-    // inherits dynamic semantics.
-    val staging = new org.apache.hadoop.fs.Path(path + "_upsert_staging")
-    try {
-      merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      spark.read.parquet(staging.toString)
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("file_date").parquet(path)
-      spark.catalog.refreshByPath(path)
-      // memoized derivations over this path are now stale
-      graft.Memo.invalidate(spark, path)
-    } finally fs.delete(staging, true)
+      val all = existing.fold(batch)(batch.unionByName(_))
+      val w = Window.partitionBy(pk.map(col): _*).orderBy(desc(versionCol))
+      all.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+        .write.partitionBy("file_date").parquet(stage.toString)
+    }
   }
 }

@@ -146,15 +146,16 @@ class LayoutMaintSpec extends GraftSpec {
       val expected = rows(LayoutStore.read(spark, t).orderBy("ck"))
 
       // simulate a compaction that died between its two renames: the
-      // original location is gone, the full replacement (data +
-      // completeness marker) sits in the _compact directory
+      // original location is gone, the full replacement sits in the
+      // swap's stage directory, sealed by its completeness marker
       val warehouse = spark.conf.get("spark.sql.warehouse.dir")
         .replaceFirst("^file:", "")
       val loc = Paths.get(s"$warehouse/graft_layouts/$t")
+      val stage = Paths.get(s"$warehouse/graft_layouts/.$t.stage-crashed")
       spark.sql(s"DROP TABLE IF EXISTS $t")
-      Files.move(loc, Paths.get(loc.toString + "_compact"))
-      Files.createFile(
-        Paths.get(loc.toString + "_compact", "_compact_complete"))
+      Files.createDirectories(stage)
+      Files.move(loc, stage.resolve(t))
+      Files.createFile(stage.resolve("_SUCCESS"))
 
       assert(LayoutOps.ensure(spark, Sf, "corpus_ck") == "swap_recovered")
       assert(rows(LayoutStore.read(spark, t).orderBy("ck")) == expected,
