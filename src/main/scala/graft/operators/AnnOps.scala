@@ -6,7 +6,9 @@ import graft.functions.{IvfAssign, IvfModel, VectorFns}
 import graft.plans.TopK
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType,
+  StructField, StructType}
 
 /** D9–D11: similarity search over the embeddings table.
   *
@@ -2323,8 +2325,9 @@ object AnnOps {
     }
 
   /** ADC distance tables for an arbitrary (vec_id, v) query frame
-    * against an EXPLICIT codebook (the session-memoized path and the
-    * persisted-layout path share this).
+    * against an EXPLICIT codebook, in-row (the corpus-split tables of
+    * [[pqQueryTables]]; the IVF search computes the same kernel's
+    * tables on the driver).
     */
   private def distTablesFor(model: Seq[(Int, Long, Seq[Double])],
       subDim: Int, vecs: DataFrame): DataFrame = {
@@ -2389,11 +2392,12 @@ object AnnOps {
   /** THE exact-cosine re-rank of a (q_id, c_id) shortlist: the
     * shortlist is broadcast into one scan of the base corpus for the
     * candidate floats (read once, never shuffled), query floats come
-    * from `queries` (a (vec_id, v, nrm) frame — the corpus split, or a
-    * serving batch that need not be corpus members), then a
-    * bounded-heap top-k per query. `extraRerank` supplies
-    * (vec_id, embedding) rows for candidates the base corpus lacks
-    * (vectors an append added to a handle's lists).
+    * from `queries` (a (vec_id, v, nrm) frame — the corpus split, or
+    * the IVF search's driver-built local frame of a request's vectors,
+    * which need not be corpus members), then a bounded-heap top-k per
+    * query, rows unordered. `extraRerank` supplies (vec_id, embedding)
+    * rows for candidates the base corpus lacks (vectors an append
+    * added to a handle's lists).
     */
   private[graft] def exactRerank(spark: SparkSession, dir: String,
       queries: DataFrame, shortlist: DataFrame, k: Int,
@@ -2473,17 +2477,21 @@ object AnnOps {
       centroidsQ(spark, ivfModel(spark, dir, DefaultM, rounds))
     }
 
-  /** (cid, cq): every centroid of `model`, float-quantized — the one
-    * residual-centroid frame the session build, the search and the
-    * delta encoder all subtract.
+  /** (cid, cq): every centroid of `model`, float-quantized — the
+    * residual-centroid frame the session build and the delta encoder
+    * subtract (the search subtracts the same [[quantizedCentroid]] on
+    * the driver).
     */
   private def centroidsQ(spark: SparkSession, model: IvfModel): DataFrame = {
     import spark.implicits._
-    (0 until model.m).map { i =>
-      (model.cids(i), model.flat.slice(i * model.dim, (i + 1) * model.dim)
-        .map(x => math.floor(x * CentroidScale + 0.5) / CentroidScale).toSeq)
-    }.toDF("cid", "cq")
+    (0 until model.m).map(i => (model.cids(i), quantizedCentroid(model, i).toSeq))
+      .toDF("cid", "cq")
   }
+
+  /** Centroid `i` of `model`, float-quantized (cq). */
+  private def quantizedCentroid(model: IvfModel, i: Int): Array[Double] =
+    model.flat.slice(i * model.dim, (i + 1) * model.dim)
+      .map(x => math.floor(x * CentroidScale + 0.5) / CentroidScale)
 
   /** (vec_id, cid, v) with the residual r = v − cq(cid) appended. */
   private def withResidual(vecs: DataFrame, cents: DataFrame): DataFrame =
@@ -2551,24 +2559,6 @@ object AnnOps {
       sessionServing(spark, dir, "pq_res", ivfRounds = ivfRounds,
         pqRounds = pqRounds, nSub = nSub),
       nprobe, r, k)
-
-  /** Per-probe residual ADC distance tables: each (q_id, q_cid, r)
-    * probe row gets its own dt0..dt{nSub−1} maps against the residual
-    * codebooks — the residual varies with the probed list, so tables
-    * are per PROBE ROW, not per query (the structural difference from
-    * [[distTablesFor]]).
-    */
-  private def resDistTables(qres: DataFrame,
-      model: Seq[(Int, Long, Seq[Double])], subDim: Int,
-      nSub: Int): DataFrame = {
-    // same broadcast-book kernel as [[distTablesFor]], over the
-    // residual vector — tables per PROBE ROW, not per query
-    val bc = qres.sparkSession.sparkContext.broadcast(
-      graft.functions.PqBookModel.of(model, subDim))
-    (0 until nSub).foldLeft(qres) { (df, s) =>
-      df.withColumn(s"dt$s", graft.functions.PqKernels.distTables(col("r"), bc, s))
-    }.drop("r")
-  }
 
   /** The composed-index search for an ARBITRARY (vec_id, embedding)
     * query frame against the session's STANDING coded lists — the
@@ -2646,17 +2636,24 @@ object AnnOps {
     final case class Pq(book: Seq[(Int, Long, Seq[Double])],
         residual: Boolean) extends IvfCodec {
       def nSub: Int = book.iterator.map(_._1).max + 1
+      /** `book` flattened for the distance-table kernel, built once per
+        * codec (a handle's lifetime), not once per request.
+        */
+      lazy val bookModel: graft.functions.PqBookModel =
+        graft.functions.PqBookModel.of(book, book.head._3.length)
     }
   }
 
   /** The one IVF index representation: the quantizer as a broadcast
-    * (its `.value` is the m-row model every node holds; the
-    * assignment kernel reads the broadcast), the inverted lists as a
-    * frame — the session's memoized layout ([[sessionServing]]) or the
-    * bucketed persisted table ([[servingFromTables]]) — and the codec
-    * the lists are encoded with. Every IVF search and delta encode
-    * runs over a handle; the streaming faces build theirs once at
-    * stream start, not per micro-batch.
+    * (its `.value` is the m-row model: the search assigns a request's
+    * probes from it on the driver, the encode's in-row kernel reads
+    * the broadcast), the inverted lists as a frame — the session's
+    * memoized layout ([[sessionServing]]) or the bucketed persisted
+    * table ([[servingFromTables]]) — and the codec the lists are
+    * encoded with (a PQ codec holds its flattened book). Every IVF
+    * search and delta encode runs over a handle; the streaming faces
+    * build theirs once at stream start, not per micro-batch, so no
+    * per-request broadcast is made.
     */
   final case class IvfPqServing(model: Broadcast[IvfModel],
       lists: DataFrame, codec: IvfCodec)
@@ -2726,18 +2723,25 @@ object AnnOps {
 
   /** THE IVF search: an ARBITRARY (vec_id, embedding) query frame
     * against a serving handle of any codec — session, persisted-layout,
-    * streaming and corpus-split faces all run this body. Probes are
-    * assigned in-row by the broadcast quantizer kernel; probe cids
-    * are collected into a literal IN filter, so a bucketed lists
-    * table scan prunes to the probed buckets (nprobe/m of the index
-    * files at any corpus size); then one broadcast probe×list join,
-    * scored by the codec. Flat lists take the top-k by exact cosine
-    * directly; SQ8 and PQ lists shortlist `r` by ADC and re-rank the
-    * shortlist exactly ([[exactRerank]]: the base corpus parquet
-    * supplies the candidate floats — source data, not a derived
-    * layout). Residual PQ handles score per-probe-row residual
-    * distance tables ([[resDistTables]]); plain ones per-query tables
-    * ([[distTablesFor]]).
+    * streaming and corpus-split faces all run this body. The query
+    * side is request-sized, so it is computed on the driver
+    * ([[querySide]]: one collect of the query frame, then the same
+    * kernels the in-row expressions call) and enters the plan as two
+    * local frames. The probe rows' cids form a literal IN filter, so a
+    * bucketed lists table scan prunes to the probed buckets (nprobe/m
+    * of the index files at any corpus size); then one broadcast
+    * probe×list join, scored by the codec. Flat lists take the top-k by
+    * exact cosine directly; SQ8 and PQ lists shortlist `r` by ADC and
+    * re-rank the shortlist exactly ([[exactRerank]]: the base corpus
+    * parquet supplies the candidate floats — source data, not a
+    * derived layout). Plain PQ probe rows carry their query's distance
+    * tables, residual PQ probe rows the tables of their own residual.
+    * A query row with a null embedding gets no probes and no hits.
+    *
+    * The output is (q_id, c_id, sim, rnk) in no particular row order:
+    * a request's caller reads rows, not positions, and a global sort
+    * would cost a sampling job and a range shuffle per request. The
+    * corpus-split face ([[ivfPqCorpusSearch]]) orders its rows.
     *
     * `excludeSelf` drops candidates whose id equals the query's id —
     * ONLY correct when the queries ARE corpus members (the recall
@@ -2760,39 +2764,19 @@ object AnnOps {
       r: Int = IvfPqR, k: Int = 10, excludeSelf: Boolean = false,
       extraRerank: Option[DataFrame] = None,
       candFilter: Column = lit(true)): DataFrame = {
-    val prepped = vecsOf(queries)
-    val qExtra = prepped.columns.filterNot(Set("vec_id", "v", "nrm")).map(col).toSeq
-    val assigned = assignBc(prepped, sv.model, nprobe)
-    val probeKeys = Seq(col("cid").as("q_cid"), col("vec_id").as("q_id")) ++ qExtra
-    val probes = sv.codec match {
-      case IvfCodec.Flat | IvfCodec.Sq8(_, _) =>
-        assigned.select(probeKeys ++ Seq(col("v").as("qv"), col("nrm").as("qn")): _*)
-      case pq @ IvfCodec.Pq(book, false) =>
-        assigned.select(probeKeys: _*)
-          .join(distTablesFor(book, sv.model.value.dim / pq.nSub,
-            prepped.select(col("vec_id"), col("v"))), "q_id")
-      case pq @ IvfCodec.Pq(book, true) =>
-        resDistTables(withResidual(assigned, centroidsQ(spark, sv.model.value))
-            .select(probeKeys :+ col("r"): _*),
-          book, sv.model.value.dim / pq.nSub, pq.nSub)
-    }
-    // driver-side probe resolution (|q|·nprobe rows, bounded): the
-    // literal IN list is what lets the bucketed table scan prune to
-    // the probed lists' buckets
-    val probedCids = assigned.select("cid").distinct()
-      .collect().map(_.getLong(0)).sorted
+    val qs = querySide(spark, sv, queries, nprobe)
     val joinCond =
       (if (excludeSelf) col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id")
        else col("q_cid") === col("c_cid")) && candFilter
-    val cand = sv.lists.filter(col("c_cid").isin(probedCids: _*))
-      .join(broadcast(probes), joinCond)
+    val cand = sv.lists.filter(col("c_cid").isin(qs.probedCids: _*))
+      .join(broadcast(qs.probes), joinCond)
     // SQ8/PQ: ADC shortlist of r per query, then the exact re-rank
     def reranked(scored: DataFrame, closer: Column): DataFrame =
-      exactRerank(spark, dir, prepped,
+      exactRerank(spark, dir, qs.vecs,
         TopK.perKey(scored, Seq(col("q_id")), Seq(closer, col("c_id").asc), r)
           .select("q_id", "c_id"),
         k, extraRerank)
-    val hits = sv.codec match {
+    sv.codec match {
       case IvfCodec.Flat =>
         TopK.perKey(cand.withColumn("sim",
             VectorFns.cosine(col("qv"), col("cv2"), col("qn"), col("cn"))),
@@ -2805,7 +2789,81 @@ object AnnOps {
       case pq: IvfCodec.Pq =>
         reranked(cand.withColumn("adc", adcCol(pq.nSub)), col("adc").asc)
     }
-    hits.orderBy("q_id", "rnk")
+  }
+
+  /** A request's query side as local frames: `probes` holds one
+    * (q_cid, q_id, extra query columns…, payload) row per probe,
+    * `vecs` the (vec_id, v, nrm) rows the exact re-rank reads, and
+    * `probedCids` the distinct probed lists, ascending.
+    */
+  private final case class QuerySide(probes: DataFrame, vecs: DataFrame,
+      probedCids: Seq[Long])
+
+  /** The query side of one request, computed on the driver from ONE
+    * collect of the query frame (job-free for a local frame, and the
+    * same rows the broadcasts of a planned query side would ship). Each
+    * step calls the kernel its in-row expression calls, so every value
+    * is bit-identical to the in-plan path: v is the embedding widened
+    * to double, nrm = sqrt of the sequential dot(v, v), probes come
+    * from [[IvfAssign.topProbes]] against the handle's quantizer. The
+    * probe payload follows the codec: (qv, qn) for Flat and SQ8; the
+    * query's [[graft.functions.PqKernels.distTable]] tables for plain
+    * PQ; for residual PQ, per probe row, the tables of v − cq(cid) with
+    * cq quantized as [[centroidsQ]] does. Rows with a null embedding
+    * are dropped.
+    */
+  private def querySide(spark: SparkSession, sv: IvfPqServing,
+      queries: DataFrame, nprobe: Int): QuerySide = {
+    val extra = queries.schema.fields.toSeq
+      .filterNot(f => f.name == "vec_id" || f.name == "embedding")
+    val rows = queries.select(
+      (Seq("vec_id", "embedding") ++ extra.map(_.name)).map(col): _*).collect()
+    val model = sv.model.value
+    val arr = ArrayType(DoubleType)
+    val (payloadFields, payloadOf): (Seq[StructField],
+        (Array[Double], Double) => Long => Seq[Any]) = sv.codec match {
+      case IvfCodec.Flat | IvfCodec.Sq8(_, _) =>
+        (Seq(StructField("qv", arr), StructField("qn", DoubleType)),
+          (v, n) => { val p = Seq(v.toSeq, n); _ => p })
+      case pq: IvfCodec.Pq =>
+        def tables(x: Array[Double]): Seq[Any] = {
+          val xd = new GenericArrayData(x)
+          (0 until pq.nSub).map(s =>
+            graft.functions.PqKernels.distTable(xd, pq.bookModel, s).array.toSeq)
+        }
+        val fields = (0 until pq.nSub).map(s => StructField(s"dt$s", arr))
+        if (pq.residual) {
+          val row = model.cids.zipWithIndex.toMap
+          (fields, (v, _) => cid => {
+            val cq = quantizedCentroid(model, row(cid))
+            tables(Array.tabulate(v.length)(d => v(d) - cq(d)))
+          })
+        } else (fields, (v, _) => { val p = tables(v); _ => p })
+    }
+    val probeRows = Seq.newBuilder[Row]
+    val vecRows = Seq.newBuilder[Row]
+    val cids = scala.collection.mutable.SortedSet.empty[Long]
+    rows.iterator.filterNot(_.isNullAt(1)).foreach { row =>
+      val v = row.getSeq[Number](1).map(x => if (x == null) 0.0 else x.doubleValue).toArray
+      val vd = new GenericArrayData(v)
+      val n = math.sqrt(graft.functions.VecKernels.dot(vd, vd))
+      val payload = payloadOf(v, n)
+      val extras = (2 until row.length).map(row.get)
+      IvfAssign.topProbes(vd, n, model, nprobe).toLongArray().foreach { cid =>
+        cids += cid
+        probeRows += Row.fromSeq((cid +: row.get(0) +: extras) ++ payload(cid))
+      }
+      vecRows += Row(row.get(0), v.toSeq, n)
+    }
+    val idType = queries.schema("vec_id").dataType
+    def local(rs: Seq[Row], fields: Seq[StructField]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rs: _*), StructType(fields))
+    QuerySide(
+      local(probeRows.result(), Seq(StructField("q_cid", LongType),
+        StructField("q_id", idType)) ++ extra ++ payloadFields),
+      local(vecRows.result(), Seq(StructField("vec_id", idType),
+        StructField("v", arr), StructField("nrm", DoubleType))),
+      cids.toSeq)
   }
 
   /** THE IVF encode: delta rows for a handle's lists — a batch of new
@@ -2855,6 +2913,7 @@ object AnnOps {
       Tables.embeddings(spark, dir).filter(col("vec_id") % 50 === 0)
         .select(col("vec_id"), col("embedding"), col("label").as("q_label")),
       nprobe, r, k, excludeSelf = true, candFilter = candFilter)
+      .orderBy("q_id", "rnk")
 
   // ── D58: scalar quantization (SQ8) ────────────────────────────────
   // The FAISS index family's missing middle rung: between flat floats

@@ -331,10 +331,11 @@ object LayoutOps {
   // DuckDB oracle as its session twin.
 
   /** D36a: IVF-PQ search served from the persisted index (quantizer +
-    * codebooks collected from their tiny tables, probed lists read
+    * codebooks collected from their tiny tables, the queries' probes
+    * and distance tables computed on the driver, probed lists read
     * bucket-pruned from the coded-lists table, exact re-rank floats
     * from the base corpus parquet — source data, not a layout).
-    * Result ≡ ann_ivfpq.
+    * Result ≡ ann_ivfpq, rows ordered by (q_id, rnk).
     */
   def annIvfPqServed(spark: SparkSession, dir: String): DataFrame =
     AnnOps.ivfPqCorpusSearch(spark, dir, ivfPqServing(spark, dir))
@@ -372,8 +373,11 @@ object LayoutOps {
 
   /** The serving handle a restarted session's streaming face builds
     * ONCE at stream start: model artifacts collected from the
-    * persisted tables, coded lists kept as the bucketed table frame
-    * (each micro-batch probes it bucket-pruned).
+    * persisted tables (the PQ book flattened once, with the codec),
+    * coded lists kept as the bucketed table frame. Each request or
+    * micro-batch computes its query side on the driver from the
+    * handle and probes the table bucket-pruned; nothing is broadcast
+    * per request but the probe rows and the re-rank's query rows.
     */
   def ivfPqServing(spark: SparkSession, dir: String): AnnOps.IvfPqServing =
     servingOver(spark, dir, table(spark, dir, "ivfpq_lists"),

@@ -247,8 +247,9 @@ class DedupAnnSpec extends GraftSpec {
           operators.LayoutOps.table(spark, Sf, "sq8_model"))))
       val served = AnnOps.ivfPqSearchTables(spark, Sf, sv, queries,
           nprobe = AnnOps.IvfSqNprobe, r = AnnOps.IvfSqR, excludeSelf = true)
-        .collect().map(_.toString).toSeq
-      val session = AnnOps.annIvfSq(spark, Sf).collect().map(_.toString).toSeq
+        .collect().map(_.toString).toSeq.sorted
+      // the search promises rows, not a row order: compare sorted
+      val session = AnnOps.annIvfSq(spark, Sf).collect().map(_.toString).toSeq.sorted
       assert(served == session,
         "table-served IVF-SQ diverges from the session path")
       assert(served.nonEmpty, "degenerate fixture: no search results")

@@ -1,0 +1,54 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.operators.{AnnOps, LayoutOps}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+
+/** The per-request job budget of IVF serving: a request computes its
+  * query side on the driver and runs no global sort, so the jobs it
+  * starts are the probed-list scan and the re-rank, not fixed
+  * per-query machinery.
+  */
+class IvfRequestJobsSpec extends GraftSpec {
+
+  private val MaxJobs = 6
+
+  test(s"a 4-vector request over the persisted IVF-PQ layout runs at most $MaxJobs Spark jobs") {
+    try {
+      LayoutOps.purgeAll(spark, Sf)
+      Seq("ivf_quantizer", "pq_book", "ivfpq_lists")
+        .foreach(f => LayoutOps.ensure(spark, Sf, f))
+      val sv = LayoutOps.ivfPqServing(spark, Sf)
+      val schema = StructType(Seq(StructField("vec_id", LongType),
+        StructField("embedding", ArrayType(FloatType))))
+      val rows = Tables.embeddings(spark, Sf)
+        .filter(col("vec_id").isin(1L, 42L, 137L, 301L))
+        .select("vec_id", "embedding").collect()
+        .map(r => Row(r.getLong(0) + 1000000L, r.getSeq[Float](1)))
+      assert(rows.length == 4, "fixture vectors missing")
+      def request(): Array[Row] = AnnOps.ivfPqSearchTables(spark, Sf, sv,
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)).collect()
+      // the first request pays the one-time corpus cache build
+      request()
+      val jobs = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val out = try {
+        val out = request()
+        ListenerBusDrain(spark.sparkContext)
+        out
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(out.length == 4 * 10, s"expected 10 hits per vector: ${out.length}")
+      info(s"one request ran ${jobs.get} jobs")
+      assert(jobs.get <= MaxJobs, s"one request ran ${jobs.get} jobs")
+    } finally LayoutOps.purgeAll(spark, Sf)
+  }
+}

@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Test access to the private[spark] listener bus: blocks until every
+  * event posted so far has reached every listener.
+  */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
