@@ -8,6 +8,8 @@ import pandas as pd
 import numpy as np
 
 def main():
+    # one line per oracle as it finishes, also when stdout is a file
+    sys.stdout.reconfigure(line_buffering=True)
     sfdir, outdir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     con = duckdb.connect()

@@ -1,9 +1,9 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.function.{Function => JFunction}
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** A memoized pinned frame (re-rooted on a persisted RDD) together
   * with the persisted handle backing it, so [[Memo]] eviction can
@@ -12,218 +12,182 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class PinnedDf(df: DataFrame, handle: org.apache.spark.rdd.RDD[_])
 
-/** Session-scoped memoization for shared derived tables (shingle
-  * explosions, embedding norms, IVF index artifacts).
+object PinnedDf {
+
+  /** Materialize `d` on an RDD persisted `MEMORY_AND_DISK` and re-root
+    * it there: the returned frame's plan is one LogicalRDD leaf, so a
+    * chain of pins (NN-descent rounds, beam hops, MMR steps, delta
+    * stages) keeps every downstream plan one level deep instead of
+    * re-carrying the whole recursive lineage through Catalyst. The RDD
+    * keeps its lineage, so executor loss degrades to recomputation.
+    * The caller owns the release (`handle.unpersist`, or registering
+    * the pin in [[Memo]]). A pinned frame carries no size statistics:
+    * joins against it hint their broadcast side explicitly.
+    */
+  def of(d: DataFrame): PinnedDf = {
+    val rdd = d.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    rdd.count()
+    PinnedDf(d.sparkSession.createDataFrame(rdd, d.schema), rdd)
+  }
+}
+
+/** Session-scoped registry of shared derived state: persisted frames
+  * (shingle explosions, embedding norms, IVF lists), collected model
+  * artifacts, quantizer broadcasts, re-rooted pins.
   *
   * Why: these derivations are used by several queries in one session
-  * (and twice within one query's self-join). Re-calling `.persist()`
-  * on a structurally identical plan per invocation floods the log with
-  * `CacheManager: Asked to cache already cached data` and, under the
-  * concurrent bench, races conc streams into duplicate derivations.
-  * Memoizing the DataFrame instance per (session, key) persists each
-  * artifact exactly once; `computeIfAbsent` makes the registration
-  * atomic (Spark's own block-level cache locks serialize the actual
-  * materialization).
+  * (and twice within one query's self-join); re-deriving or
+  * re-persisting them per call repeats the work and, under concurrent
+  * callers, races duplicate builds.
+  *
+  * One map from (session, key) to a future of the value. Guarantees:
+  *  - a hit is a lock-free map `get` of a completed future;
+  *  - build-once per entry: the caller whose `putIfAbsent` inserts the
+  *    future runs the build, outside any shared lock, and every
+  *    concurrent caller of the key joins that future — distinct keys
+  *    build concurrently, and a build may register other keys (the
+  *    derivation graph is acyclic; a build that asked for its own key
+  *    would wait on itself);
+  *  - a build that throws removes its entry (the next call retries)
+  *    and its joiners rethrow its exception;
+  *  - eviction ([[invalidate]], [[invalidatePrefix]], [[clear]],
+  *    [[replaceValue]]) removes the entry and releases its value
+  *    exactly once — an entry still building is released when its
+  *    build completes, so a build in flight across an eviction never
+  *    registers. Its own caller still receives the value: a released
+  *    frame recomputes from lineage, a destroyed broadcast fails the
+  *    query that reads it.
   *
   * Entries are keyed by the session instance so a stopped test session
-  * can never leak its cached plan into a fresh one.
+  * can never leak its cached plan into a fresh one. Keys of state
+  * derived from a directory are `name:dir[:variant]` (names and paths
+  * contain no ':').
   */
 object Memo {
-  private val cache = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private val buildLock = new Object
-  // Per-KEY build locks (r15 opt): the single global buildLock made
-  // every memo build serialize behind every other — fatal for the
-  // parallel warm-up/layout build (guide §2.6, overlap independent
-  // jobs), where N worker threads each derive DIFFERENT artifacts.
-  // A per-key monitor keeps the build-once guarantee per artifact
-  // while letting distinct artifacts build concurrently; nested
-  // registration (an artifact building on another) takes the other
-  // key's lock — safe because the derivation graph is acyclic.
-  private val keyLocks = new ConcurrentHashMap[(SparkSession, String), Object]()
-  private def lockFor(k: (SparkSession, String)): Object =
-    keyLocks.computeIfAbsent(k, (_: (SparkSession, String)) => new Object)
+  private type Key = (SparkSession, String)
+  private val entries = new ConcurrentHashMap[Key, CompletableFuture[AnyRef]]()
 
-  /** Build-once persisted DataFrame for `key` within this session.
-    * A per-key reentrant monitor (not computeIfAbsent, which forbids
-    * the nested registration a layout artifact building on another one
-    * needs) guards the build; plan construction + persist registration
-    * are lazy and cheap, and DISTINCT keys build concurrently (the
-    * parallel warm-up requirement — Spark's block-level cache locks
-    * serialize any racing materialization of one persisted frame).
+  /** Build-once persisted DataFrame for `key` within this session:
+    * [[value]] of the persisted frame. Persisting is lazy; Spark's
+    * block-level locks serialize concurrent materializations of it.
     */
-  def df(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val k = (spark, key)
-    val hit = cache.get(k)
-    if (hit != null) hit
-    else lockFor(k).synchronized {
-      val again = cache.get(k)
-      if (again != null) again
-      else { val b = build.persist(); cache.put(k, b); b }
-    }
-  }
+  def df(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    value(spark, key)(build.persist())
 
-  /** REPLACE the value under `key`: release the old entry (if any)
-    * and register the new one — the lifecycle for STANDING state an
-    * owner refreshes between consumers (a walk's final beam pin per
-    * call or micro-batch). Unlike [[value]], this always builds.
-    * Releasing a pin mid-consumption is SAFE (Spark recomputes the
-    * frame from lineage) but defeats the pin, so owners call this
-    * only at refresh points — i.e. when the previous value's
-    * consumers have materialized.
-    */
-  def replaceValue[T <: AnyRef](spark: SparkSession, key: String)(
-      build: => T): T = {
-    // build OUTSIDE buildLock: replace-callers route expensive work
-    // through it (a hop's re-rooted pin is materialized by a full
-    // Spark job), and evaluating that under the global lock would
-    // serialize every other Memo build for the job's duration (ADVICE
-    // r14). Replace always builds, so there is no duplicate-build race
-    // to guard — only the swap needs the lock.
-    val b = build
-    buildLock.synchronized {
-      val old = values.put((spark, key), b)
-      if (old != null) dropValue(old)
-    }
-    b
-  }
-
-  private val values = new ConcurrentHashMap[(SparkSession, String), AnyRef]()
-
-  /** Build-once arbitrary value (e.g. a collected model artifact like
-    * IVF centroids) for `key` within this session. Guarded by the
-    * per-key monitor: model collects are full Spark jobs, and under
-    * the parallel warm-up two DIFFERENT models must be able to build
-    * at once (the old global lock serialized them — r15 opt).
+  /** Build-once value (a collected model artifact, a broadcast, a
+    * [[PinnedDf]], a warm count) for `key` within this session.
     */
   def value[T <: AnyRef](spark: SparkSession, key: String)(build: => T): T = {
     val k = (spark, key)
-    val hit = values.get(k)
-    if (hit != null) hit.asInstanceOf[T]
-    else lockFor(k).synchronized {
-      val again = values.get(k)
-      if (again != null) again.asInstanceOf[T]
-      else { val b = build; values.put(k, b); b }
+    val hit = entries.get(k)
+    if (hit != null) await(hit)
+    else {
+      val mine = new CompletableFuture[AnyRef]()
+      val prev = entries.putIfAbsent(k, mine)
+      if (prev != null) await(prev) else fill(k, mine, build)
     }
   }
 
-  /** [[value]] whose build is an expensive Spark JOB (a standing
-    * pin's warm count), not cheap plan construction: the absent-key
-    * build runs OUTSIDE buildLock and registers via putIfAbsent. A
-    * racing duplicate run re-counts an already-persisted frame —
-    * cheaper than serializing every other Memo build behind a full
-    * Spark job for its duration (ADVICE r14).
+  /** REPLACE the value under `key`: build a new one, register it, and
+    * release the old entry once the new one is built — the lifecycle
+    * for STANDING state an owner refreshes between consumers (a walk's
+    * final beam pin per call or micro-batch). Unlike [[value]], this
+    * always builds; callers of the key during the build join the new
+    * one. Releasing a pin mid-consumption is SAFE (Spark recomputes the
+    * frame from lineage) but defeats the pin, so owners call this only
+    * at refresh points — when the previous value's consumers have
+    * materialized.
     */
-  def valueEager[T <: AnyRef](spark: SparkSession, key: String)(
+  def replaceValue[T <: AnyRef](spark: SparkSession, key: String)(
       build: => T): T = {
     val k = (spark, key)
-    val hit = values.get(k)
-    if (hit != null) hit.asInstanceOf[T]
-    else {
-      val b = build
-      val prev = values.putIfAbsent(k, b)
-      if (prev != null) { dropValue(b); prev.asInstanceOf[T] } else b
-    }
+    val mine = new CompletableFuture[AnyRef]()
+    val old = entries.put(k, mine)
+    try fill(k, mine, build) finally if (old != null) releaseWhenBuilt(old)
   }
 
-  /** Evict one key from both maps under its build lock (r16, ADVICE:
-    * eviction used to remove entries lock-free, so a [[df]]/[[value]]
-    * build in flight during a purge could register a frame derived
-    * from just-purged state AFTER the eviction pass ran — a stale,
-    * storage-dead entry). Taking the per-key monitor serializes the
-    * evict against any in-flight build: the build registers first,
-    * then the evict removes (and releases) it. [[replaceValue]]/
-    * [[valueEager]] register outside the per-key lock by design
-    * (expensive-job builders, single-owner refresh points) — their
-    * contract remains "owners must not refresh concurrently with a
-    * purge of the same keys", as before.
+  /** Run `build` for the entry `mine` the caller just registered under
+    * `k`; completing it hands the value to its joiners — and to the
+    * release of an eviction that removed it meanwhile.
     */
-  private def evictKey(k: (SparkSession, String)): Unit =
-    lockFor(k).synchronized {
-      val c = cache.remove(k)
-      if (c != null) {
-        try c.unpersist(false) catch { case _: Throwable => () }
-      }
-      val v = values.remove(k)
-      if (v != null) dropValue(v)
+  private def fill[T <: AnyRef](k: Key, mine: CompletableFuture[AnyRef],
+      build: => T): T = {
+    val b = try build catch {
+      case t: Throwable =>
+        entries.remove(k, mine)
+        mine.completeExceptionally(t)
+        throw t
     }
+    mine.complete(b)
+    b
+  }
 
-  /** Drop (and unpersist) this session's entries derived from data
+  private def await[T](f: CompletableFuture[AnyRef]): T =
+    try f.join().asInstanceOf[T]
+    catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+
+  /** Drop (and release) this session's entries derived from data
     * under `dir`. The repo's one directory writer,
     * [[graft.sources.DirSwap]] (behind UpsertSink,
     * writePartitionedByDate, CompactionOps and the layout compaction),
     * calls this after swapping files there, so
     * memoized derivations cannot serve stale data within a session;
     * for inputs mutated by anything else, the contract is
-    * immutable-input-per-session. Keys are `name:dir[:variant]` (names
-    * and paths contain no ':'), so the dir segment is matched EXACTLY —
-    * `/data/sf1` must not invalidate `/data/sf10`'s derivations.
+    * immutable-input-per-session. The dir segment of a
+    * `name:dir[:variant]` key is matched EXACTLY — `/data/sf1` must not
+    * invalidate `/data/sf10`'s derivations.
     */
-  def invalidate(spark: SparkSession, dir: String): Unit = {
-    def dirMatches(key: String): Boolean = {
+  def invalidate(spark: SparkSession, dir: String): Unit =
+    evictWhere(spark) { key =>
       val i = key.indexOf(':')
       i >= 0 && {
         val rest = key.substring(i + 1)
         rest == dir || rest.startsWith(dir + ":")
       }
     }
-    import scala.jdk.CollectionConverters._
-    (cache.keySet().asScala ++ values.keySet().asScala).toSet
-      .filter(k => (k._1 eq spark) && dirMatches(k._2))
-      .foreach(evictKey)
-  }
 
-  /** Drop (and unpersist) this session's entries whose FULL key
+  /** Drop (and release) this session's entries whose FULL key
     * starts with `prefix` — the narrow invalidation for memos built
     * over LAYOUT TABLES (`standingServe:…`, `layoutGraphBeam:…`),
     * which die with their table (DROP TABLE uncaches dependent plans,
     * so a surviving memo entry would recompute against deleted
-    * files). Narrower than [[invalidate]] so a layout purge does not
-    * evict the session's source-parquet derivations.
+    * files), and for one filtered-beam predicate's hop pins. Narrower
+    * than [[invalidate]] so a layout purge does not evict the
+    * session's source-parquet derivations.
     */
-  def invalidatePrefix(spark: SparkSession, prefix: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    (cache.keySet().asScala ++ values.keySet().asScala).toSet
-      .filter(k => (k._1 eq spark) && k._2.startsWith(prefix))
-      .foreach(evictKey)
-  }
+  def invalidatePrefix(spark: SparkSession, prefix: String): Unit =
+    evictWhere(spark)(_.startsWith(prefix))
 
-  /** Test/inspection hook: is anything memoized under `key`? */
-  private[graft] def hasKey(spark: SparkSession, key: String): Boolean =
-    cache.containsKey((spark, key)) || values.containsKey((spark, key))
-
-  /** Memoized values may hold cluster-side resources (the IVF model
-    * broadcast); release them when evicting.
+  /** Drop (and release) everything registered for this session — the
+    * test teardown and benchmark set-up hook; harmless if empty.
     */
-  private def dropValue(v: AnyRef): Unit = v match {
-    case b: org.apache.spark.broadcast.Broadcast[_] =>
-      try b.destroy() catch { case _: Throwable => () }
-    case PinnedDf(_, handle) =>
-      try handle.unpersist(false) catch { case _: Throwable => () }
-    case _ => ()
-  }
+  def clear(spark: SparkSession): Unit = evictWhere(spark)(_ => true)
 
-  /** Drop (and unpersist) everything cached for this session — test
-    * teardown hook (wired into GraftSpec.afterAll); harmless if
-    * nothing is cached.
-    */
-  def clear(spark: SparkSession): Unit = {
-    import scala.jdk.CollectionConverters._
-    val keys = (cache.keySet().asScala ++ values.keySet().asScala ++
-      keyLocks.keySet().asScala).toSet.filter(_._1 eq spark)
-    keys.foreach { k =>
-      // evict under the key's lock, and only then retire the lock
-      // object itself — a builder racing clear() finishes its build
-      // first (its entry is evicted here), instead of a fresh lock
-      // object breaking build-once mid-build (r16, ADVICE)
-      lockFor(k).synchronized {
-        val c = cache.remove(k)
-        if (c != null) {
-          try c.unpersist(false) catch { case _: Throwable => () }
-        }
-        val v = values.remove(k)
-        if (v != null) dropValue(v)
-        keyLocks.remove(k)
-      }
+  private def evictWhere(spark: SparkSession)(matches: String => Boolean): Unit =
+    entries.forEach { (k, f) =>
+      if ((k._1 eq spark) && matches(k._2) && entries.remove(k, f))
+        releaseWhenBuilt(f)
     }
+
+  /** Test/inspection hook: is anything registered under `key`? */
+  private[graft] def hasKey(spark: SparkSession, key: String): Boolean =
+    entries.containsKey((spark, key))
+
+  /** Release a removed entry's value once its build completes (at
+    * once if it already has; never if the build threw). Values may
+    * hold cluster-side resources: persisted frames, pinned RDDs, the
+    * IVF model broadcast.
+    */
+  private def releaseWhenBuilt(f: CompletableFuture[AnyRef]): Unit = {
+    f.thenAccept { (v: AnyRef) =>
+      try v match {
+        case d: org.apache.spark.sql.Dataset[_] => d.unpersist(false)
+        case b: org.apache.spark.broadcast.Broadcast[_] => b.destroy()
+        case PinnedDf(_, handle) => handle.unpersist(false)
+        case _ => ()
+      } catch { case _: Throwable => () }
+      ()
+    }
+    ()
   }
 }

@@ -11,10 +11,9 @@ import org.apache.spark.sql.SparkSession
   * job's driver phases (planning, codegen, collects) and stage tails.
   *
   * Results are identical to sequential execution — shared derivations
-  * dedupe through Memo's per-key build locks and LayoutStore's
-  * per-table locks; only wall-clock changes. Parallelism derives from
-  * the session's core count (scale-adaptive, not a local[32]
-  * constant).
+  * build once in Memo and under LayoutStore's per-table locks; only
+  * wall-clock changes. Parallelism derives from the session's core
+  * count (scale-adaptive, not a local[32] constant).
   */
 object Par {
   def width(spark: SparkSession, tasks: Int): Int =

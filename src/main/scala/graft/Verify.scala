@@ -108,8 +108,8 @@ object Verify {
     }
     // Concurrent dump (default 8 streams, SPARK_GRAFT_VERIFY_CONC
     // overrides; 1 = the old serial behavior). Queries only read the
-    // session-shared memo/layout state, whose per-key build locks make
-    // concurrent first-builds safe — the bench's concurrent pass has
+    // session-shared memo/layout state, which builds each entry once
+    // however many streams ask for it first — the bench's concurrent pass has
     // exercised exactly this since r12.
     val conc = sys.env.get("SPARK_GRAFT_VERIFY_CONC")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(8)

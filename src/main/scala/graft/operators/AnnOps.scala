@@ -44,7 +44,7 @@ object AnnOps {
     noop(embDouble(spark, dir))
     // the remaining standing artifacts are INDEPENDENT derivations —
     // build them concurrently (guide §2.6, r15 opt; identical results,
-    // Memo's per-key locks dedupe shared sub-derivations):
+    // Memo builds each shared sub-derivation once):
     //  - SQ8-coded lists: left unwarmed, their one-time build join
     //    lands inside the first ann_ivfsq measurement and changes
     //    SHAPE across scale factors (the r10 ×17 wall jump and the
@@ -77,9 +77,9 @@ object AnnOps {
       build: => DataFrame): DataFrame = {
     val key = s"standingServe:$dir:$variant"
     val df = graft.Memo.df(spark, key)(build)
-    // valueEager: the warm count is a full Spark job and must not run
-    // under Memo's global build lock (ADVICE r14)
-    graft.Memo.valueEager[java.lang.Long](spark, s"$key:warm")(
+    // the warm count is a build-once value: one caller runs the job,
+    // concurrent callers wait for it, nothing else is blocked
+    graft.Memo.value[java.lang.Long](spark, s"$key:warm")(
       java.lang.Long.valueOf(df.count()))
     df
   }
@@ -461,12 +461,7 @@ object AnnOps {
     // step: persist the ≤ |queries|·k-row frame and re-root on the
     // materialized RDD (LogicalRDD leaf keeps downstream trees shallow;
     // lineage survives, so executor loss degrades to recomputation).
-    def pinStep(d: DataFrame): DataFrame = {
-      val rdd = d.rdd.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      spark.createDataFrame(rdd, d.schema)
-    }
+    def pinStep(d: DataFrame): DataFrame = graft.PinnedDf.of(d).df
     var picked = pinStep(TopK.perKey(sl, Seq(col("q_id")),
         Seq(col("rel").desc, col("c_id").asc), 1)
       .select(col("q_id"), col("c_id"), col("rel"),
@@ -572,17 +567,15 @@ object AnnOps {
     * frames; the bound caps standing storage at a known constant).
     */
   val FilteredBeamMaxPreds = 8
-  private val filteredBeamLru =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      java.util.LinkedHashMap[String, String]]()
 
   /** Mark `tag` most-recently-used; evict the coldest predicate's hop
-    * pins once more than [[FilteredBeamMaxPreds]] are standing.
+    * pins once more than [[FilteredBeamMaxPreds]] are standing. The
+    * access-ordered predicate set is itself a session value in
+    * [[graft.Memo]], so `Memo.clear` drops it with the pins.
     */
   private def touchFilteredBeam(spark: SparkSession, tag: String): Unit = {
-    val lru = filteredBeamLru.computeIfAbsent(spark,
-      (_: SparkSession) =>
-        new java.util.LinkedHashMap[String, String](16, 0.75f, true))
+    val lru = graft.Memo.value(spark, "filteredBeamPreds")(
+      new java.util.LinkedHashMap[String, String](16, 0.75f, true))
     lru.synchronized {
       lru.put(tag, tag)
       while (lru.size > FilteredBeamMaxPreds) {
@@ -617,11 +610,15 @@ object AnnOps {
     // would otherwise accumulate without limit in a long session. An
     // LRU over the predicate tags evicts the coldest predicate's hop
     // pins (Memo.invalidatePrefix releases the persisted RDDs); an
-    // evicted predicate that returns simply rebuilds its beams.
+    // evicted predicate that returns simply rebuilds its beams. The
+    // tag is touched again once its hops are registered: another
+    // caller may have evicted it mid-build, and the re-touch puts the
+    // pins registered after that eviction back under the bound.
     val tag = s"filteredBeam:$dir:b$beam:${pred(col("label"))}"
     touchFilteredBeam(spark, tag)
     val last = graphBeamsOn(spark, dir, edges, anchors, tag,
       hops = hops, beam = beam).last
+    touchFilteredBeam(spark, tag)
     TopK.perKey(last.filter(col("c_id") =!= col("q_id")), Seq(col("q_id")),
         Seq(col("sim").desc, col("c_id").asc), k)
       .select(col("q_id"), col("c_id"), col("sim"), col("rnk"),
@@ -1027,14 +1024,12 @@ object AnnOps {
       // the final round's handle registers as a PinnedDf so
       // Memo.clear/invalidate reaches it — without both, a sweep
       // (27 configs × rounds) accumulates dead blocks for the session.
-      var prevPin: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
+      var prevPin: graft.PinnedDf = null
       def pinRound(d: DataFrame): DataFrame = {
-        val rdd = d.rdd.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
-        if (prevPin != null) { prevPin.unpersist(false); () }
-        prevPin = rdd
-        spark.createDataFrame(rdd, d.schema)
+        val pin = graft.PinnedDf.of(d)
+        if (prevPin != null) { prevPin.handle.unpersist(false); () }
+        prevPin = pin
+        pin.df
       }
       // a blocking view capped into ≤GraphInitCap-member sub-blocks:
       // all pairs within (block key, rank/<cap> group). The in-block
@@ -1098,7 +1093,7 @@ object AnnOps {
         adj = pinRound(topKAdj(scorePairs(emb, pc, parts), k))
       }
       graft.Memo.value(spark, s"graphAdjPin:$dir:k$k:r$nRounds:m$DefaultM")(
-        graft.PinnedDf(adj, prevPin))
+        prevPin)
       adj
     }
 
@@ -1140,21 +1135,6 @@ object AnnOps {
       withAdjVectors(spark, dir, graphAdjWith(spark, dir, GraphK, GraphRounds))
     }
 
-  /** Materialize + RE-ROOT a frame on its persisted RDD (LogicalRDD
-    * leaf): the memoized-hop device shared by the float and PQ beam
-    * walks (r15 opt) — keeps every hop's plan one level deep, so the
-    * first serve's Catalyst/codegen cost is linear in hops instead of
-    * quadratic in the recursive lineage. Registered values are
-    * [[graft.PinnedDf]]s so Memo releases the RDD on
-    * invalidate/replace/clear.
-    */
-  private def rootedPin(spark: SparkSession, d: DataFrame): graft.PinnedDf = {
-    val rdd = d.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    rdd.count()
-    graft.PinnedDf(spark.createDataFrame(rdd, d.schema), rdd)
-  }
-
   /** Attach (dv, dn) per adjacency edge from the embedding cache. */
   private[graft] def withAdjVectors(spark: SparkSession, dir: String,
       adj: DataFrame): DataFrame =
@@ -1194,8 +1174,8 @@ object AnnOps {
     // lore), and Memo's PinnedDf handle releases the RDD on
     // invalidate/replace.
     def hopMemo(key: String)(build: => DataFrame): DataFrame =
-      (if (replace) graft.Memo.replaceValue(spark, key)(rootedPin(spark, build))
-       else graft.Memo.value(spark, key)(rootedPin(spark, build))).df
+      (if (replace) graft.Memo.replaceValue(spark, key)(graft.PinnedDf.of(build))
+       else graft.Memo.value(spark, key)(graft.PinnedDf.of(build))).df
     val q = embDouble(spark, dir).filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"))
@@ -1296,14 +1276,12 @@ object AnnOps {
     // materialized, and register the final pin so Memo.clear/
     // invalidate frees it. Beam frames are beam·|queries| rows —
     // kilobytes; the win is pure recompute elimination.
-    var prevPin: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
+    var prevPin: graft.PinnedDf = null
     def pinHop(d: DataFrame): DataFrame = {
-      val rdd = d.rdd.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      if (prevPin != null) { prevPin.unpersist(false); () }
-      prevPin = rdd
-      spark.createDataFrame(rdd, d.schema)
+      val pin = graft.PinnedDf.of(d)
+      if (prevPin != null) { prevPin.handle.unpersist(false); () }
+      prevPin = pin
+      pin.df
     }
     var bm: DataFrame = pinHop(topB(q.join(broadcast(anchors), lit(true))
       .select(col("q_id"), col("a_id").as("c_id"),
@@ -1331,8 +1309,7 @@ object AnnOps {
         .groupBy(col("q_id"), col("c_id")).agg(max(col("sim")).as("sim")),
         beam).select("q_id", "c_id", "sim"))
     }
-    graft.Memo.replaceValue(spark, s"graphWalkPin:$pinKey")(
-      graft.PinnedDf(bm, prevPin))
+    graft.Memo.replaceValue(spark, s"graphWalkPin:$pinKey")(prevPin)
     topB(bm.filter(
         if (excludeSelf) col("c_id") =!= col("q_id") else lit(true)), k)
       .select("q_id", "c_id", "sim", "rnk")
@@ -1410,14 +1387,14 @@ object AnnOps {
         Seq(col("adc").asc, col("c_id").asc), GraphPqBeam)
         .select("q_id", "c_id", "adc")
     val tag = s"graphPqBeam:$dir:$graphTag:b$GraphPqBeam:$PqSeedRule"
-    // hops memoize RE-ROOTED (see rootedPin): same first-serve
+    // hops memoize RE-ROOTED (PinnedDf.of): same first-serve
     // linear-cost rationale as the float walk's hopMemo
-    val bm0 = graft.Memo.value(spark, s"$tag:0")(rootedPin(spark, {
+    val bm0 = graft.Memo.value(spark, s"$tag:0")(graft.PinnedDf.of({
       topB(qd.join(broadcast(anchorsC), lit(true))
         .select(col("q_id"), col("a_id").as("c_id"), adcCol().as("adc")))
     })).df
     (1 to GraphHops).scanLeft(bm0) { (bm, h) =>
-      graft.Memo.value(spark, s"$tag:$h")(rootedPin(spark, {
+      graft.Memo.value(spark, s"$tag:$h")(graft.PinnedDf.of({
         // beam side broadcast — see graphWalk
         val expand = broadcast(bm.select("q_id", "c_id"))
           .join(adjC, col("c_id") === col("src"))
@@ -1448,14 +1425,12 @@ object AnnOps {
         .select("q_id", "c_id", "adc")
     // same hop pinning as [[graphWalk]] — the ADC walk shares the
     // double-reference-per-hop shape
-    var prevPin: org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = null
+    var prevPin: graft.PinnedDf = null
     def pinHop(d: DataFrame): DataFrame = {
-      val rdd = d.rdd.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      if (prevPin != null) { prevPin.unpersist(false); () }
-      prevPin = rdd
-      spark.createDataFrame(rdd, d.schema)
+      val pin = graft.PinnedDf.of(d)
+      if (prevPin != null) { prevPin.handle.unpersist(false); () }
+      prevPin = pin
+      pin.df
     }
     var bm = pinHop(topB(qd.join(broadcast(anchorsC), lit(true))
       .select(col("q_id"), col("a_id").as("c_id"), adcCol().as("adc")),
@@ -1470,8 +1445,7 @@ object AnnOps {
         .groupBy(col("q_id"), col("c_id")).agg(min(col("adc")).as("adc")),
         beam))
     }
-    graft.Memo.replaceValue(spark, s"graphWalkPin:$pinKey")(
-      graft.PinnedDf(bm, prevPin))
+    graft.Memo.replaceValue(spark, s"graphWalkPin:$pinKey")(prevPin)
     bm
   }
 
@@ -1988,8 +1962,7 @@ object AnnOps {
     // collapses to a literal frame with its own schema, so the final
     // union/crossJoin/divide below is expression-identical to the
     // pre-r15 form over the same values — the oracle-checked result
-    // is unchanged; shared sub-derivations dedupe through Memo's
-    // per-key locks.
+    // is unchanged; shared sub-derivations build once in Memo.
     def branchLit(mk: () => DataFrame): () => DataFrame = () => {
       val df = mk()
       spark.createDataFrame(
@@ -2141,14 +2114,15 @@ object AnnOps {
   val PqRerankR = 100
 
 
-  /** In-row code assignment against a literal per-subspace codebook:
+  /** In-row code assignment against a broadcast per-subspace codebook:
     * argmin_k of the L2 distance, computed as dot(x,x) − 2·dot(x,c) +
     * dot(c,c) — dot products and one subtraction chain only, no
     * division (a zero subvector would NaN a cosine), every op exactly
     * rounded so the argmin (ties → k asc) is engine-independent.
-    * Zero shuffle: the codebook rides the plan as a literal.
+    * Zero shuffle. The caller owns the broadcast's lifetime
+    * ([[withBook]], [[sessionBook]], [[IvfCodec.Pq.bookBc]]).
     */
-  private def pqAssign(sub: DataFrame, model: Seq[(Int, Long, Seq[Double])]): DataFrame = {
+  private def pqAssign(sub: DataFrame, book: Broadcast[graft.functions.PqBookModel]): DataFrame =
     // the book rides as ONE broadcast consumed by the PqAssignExpr
     // kernel, not a typedLit: the nSub×PqK×subDim literal (≈32k
     // doubles) made every downstream plan description cost seconds of
@@ -2156,15 +2130,32 @@ object AnnOps {
     // same broadcast discipline the IVF quantizer follows. Same argmin, same distance arithmetic, ties → k asc
     // (kernel iterates k ascending with strict-less update — the
     // array_sort struct order it replaces).
-    val spark = sub.sparkSession
-    val subDim = model.head._3.length
-    val bc = spark.sparkContext.broadcast(
-      graft.functions.PqBookModel.of(model, subDim))
     sub.withColumn("best",
-        graft.functions.PqKernels.assign(col("x"), col("s"), bc))
+        graft.functions.PqKernels.assign(col("x"), col("s"), book))
       .select(col("vec_id"), col("s"), col("x"),
         col("best.k").as("k"), col("best.d").as("d"))
+
+  /** `model` broadcast for [[pqAssign]] while `use` runs — `use` must
+    * materialize what it needs, the broadcast is destroyed after it.
+    */
+  private def withBook[T](spark: SparkSession,
+      model: Seq[(Int, Long, Seq[Double])])(
+      use: Broadcast[graft.functions.PqBookModel] => T): T = {
+    val bc = spark.sparkContext.broadcast(
+      graft.functions.PqBookModel.of(model, model.head._3.length))
+    try use(bc) finally bc.destroy()
   }
+
+  /** `model` broadcast for [[pqAssign]] once per session under `key`
+    * (`<dir>:<variant>`) — for the memoized coded frames, which read
+    * it whenever they recompute; evicting the entry destroys it.
+    */
+  private def sessionBook(spark: SparkSession, key: String)(
+      model: => Seq[(Int, Long, Seq[Double])]): Broadcast[graft.functions.PqBookModel] =
+    graft.Memo.value(spark, s"pqBookBc:$key") {
+      val m = model
+      spark.sparkContext.broadcast(graft.functions.PqBookModel.of(m, m.head._3.length))
+    }
 
   /** (vec_id, s, x): each vector split into PqS contiguous subvectors. */
   private def pqSub(spark: SparkSession, dir: String): DataFrame =
@@ -2247,7 +2238,7 @@ object AnnOps {
     */
   private def pqRefine(sub: DataFrame,
       seed: Seq[(Int, Long, Seq[Double])]): Seq[(Int, Long, Seq[Double])] =
-    pqAssign(sub, seed)
+    withBook(sub.sparkSession, seed)(book => pqAssign(sub, book)
       .select(col("s"), col("k"), posexplode(col("x")).as(Seq("pos", "xv")))
       .groupBy("s", "k", "pos").agg(
         (sum((col("xv") * lit(ScaleP2)).cast(DecimalType(38, 0)))
@@ -2256,7 +2247,7 @@ object AnnOps {
       .groupBy("s", "k").agg(
         array_sort(collect_list(struct(col("pos"), col("xv")))).as("pv"))
       .select(col("s"), col("k"), expr("transform(pv, p -> p.xv)").as("cv"))
-      .collect()
+      .collect())
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
       .toSeq
 
@@ -2274,8 +2265,8 @@ object AnnOps {
       s <- 0 until PqS; k <- 0 until math.min(PqK, firstK.length)
     } yield (s, k.toLong, firstK(k).slice(s * subDim, (s + 1) * subDim))
     val model = if (refined) pqModel(spark, dir) else seed
-    pqAssign(pqSub(spark, dir), model)
-      .agg(avg(col("d"))).head.getDouble(0)
+    withBook(spark, model)(book => pqAssign(pqSub(spark, dir), book)
+      .agg(avg(col("d"))).head.getDouble(0))
   }
 
   /** D33: every vector's PQ code word (one code per subspace) plus the
@@ -2292,7 +2283,8 @@ object AnnOps {
     */
   private def pqCodesCore(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.df(spark, s"pqCodes:$dir") {
-      val a = pqAssign(pqSub(spark, dir), pqModel(spark, dir))
+      val a = pqAssign(pqSub(spark, dir),
+        sessionBook(spark, s"$dir:$PqLloydRounds:$PqSeedRule")(pqModel(spark, dir)))
       def codeAt(s: Int) = max(when(col("s") === s, col("k"))).as(s"c$s")
       def distAt(s: Int) = max(when(col("s") === s, col("d"))).as(s"d$s")
       val aggs = (0 until PqS).flatMap(s => Seq(codeAt(s), distAt(s)))
@@ -2534,9 +2526,11 @@ object AnnOps {
       val assigned = assignFor(spark, dir, DefaultM, emb, 1, ivfRounds)
         .select(col("vec_id"), col("cid"), col("v"))
       val res = withResidual(assigned, quantCentroids(spark, dir, ivfRounds))
+      val book = sessionBook(spark,
+          s"$dir:res:$ivfRounds:$pqRounds:$nSub:$PqSeedRule")(
+        pqModelRes(spark, dir, ivfRounds, pqRounds, nSub))
       val codes = wideCodes(pqAssign(pqSubOf(spark, dir,
-        res.select(col("vec_id"), col("r").as("v")), nSub),
-        pqModelRes(spark, dir, ivfRounds, pqRounds, nSub)), nSub)
+        res.select(col("vec_id"), col("r").as("v")), nSub), book), nSub)
       res.select(col("cid").as("c_cid"), col("vec_id").as("c_id"))
         .join(codes.withColumnRenamed("vec_id", "c_id"), "c_id")
         .repartition(col("c_cid"))
@@ -2641,6 +2635,11 @@ object AnnOps {
         */
       lazy val bookModel: graft.functions.PqBookModel =
         graft.functions.PqBookModel.of(book, book.head._3.length)
+      /** [[bookModel]] broadcast for the encode's assign kernel, once
+        * per codec like the handle's quantizer broadcast.
+        */
+      lazy val bookBc: Broadcast[graft.functions.PqBookModel] =
+        SparkSession.active.sparkContext.broadcast(bookModel)
     }
   }
 
@@ -2887,14 +2886,14 @@ object AnnOps {
         a.select(keys :+ col("v").as("cv2") :+ col("nrm").as("cn"): _*)
       case IvfCodec.Sq8(mn, delta) =>
         a.select(keys :+ sq8CodesCol(col("v"), mn, delta).as("codes"): _*)
-      case pq @ IvfCodec.Pq(book, residual) =>
+      case pq @ IvfCodec.Pq(_, residual) =>
         val coding =
           if (residual)
             withResidual(a, centroidsQ(spark, sv.model.value))
               .select(col("vec_id"), col("r").as("v"))
           else a.select("vec_id", "v")
         wideCodes(pqAssign(subSplit(coding, pq.nSub, sv.model.value.dim / pq.nSub),
-            book), pq.nSub)
+            pq.bookBc), pq.nSub)
           .withColumnRenamed("vec_id", "c_id")
           .join(a.select(keys: _*), "c_id")
     }

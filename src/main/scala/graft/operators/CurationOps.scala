@@ -614,19 +614,11 @@ object CurationOps {
     // instead of accumulating a new persisted RDD per call; Memo's
     // invalidate/clear hooks release the storage (PinnedDf carries the
     // persisted handle for exactly that)
-    graft.Memo.value(spark, s"incPin:$dir:$tag") {
-      val d = df
-      // re-root on the materialized RDD: the delta chains compose ~10
-      // deep, and leaving each pinned frame's full logical tree in
-      // every downstream plan made CATALYST the bottleneck (measured at
-      // sf0.1: ~60 s of driver analysis/optimization against 17 s of
-      // stage work). A LogicalRDD leaf keeps downstream trees shallow;
-      // the RDD itself still carries recompute lineage, so executor
-      // loss degrades to recomputation, not failure.
-      val rdd = d.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count()
-      graft.PinnedDf(d.sparkSession.createDataFrame(rdd, d.schema), rdd)
-    }.df
+    // re-rooted: the delta chains compose ~10 deep, and leaving each
+    // pinned frame's full logical tree in every downstream plan made
+    // CATALYST the bottleneck (measured at sf0.1: ~60 s of driver
+    // analysis/optimization against 17 s of stage work)
+    graft.Memo.value(spark, s"incPin:$dir:$tag")(graft.PinnedDf.of(df)).df
 
   /** Stages A–C of [[corpusBuildIncremental]]: the union survivor set
     * plus the touched-component label/size remaps (exposed for the

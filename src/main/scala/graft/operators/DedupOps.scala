@@ -54,7 +54,7 @@ object DedupOps {
       df.write.format("noop").mode("overwrite").save()
     // the shingle table first and alone (everything else derives from
     // it), then the independent artifacts concurrently (guide §2.6,
-    // r15 opt — identical results, Memo's per-key locks dedupe):
+    // r15 opt — identical results, Memo builds shared state once):
     //  - winnow layout artifacts (inverted lists + denominators)
     //  - the CC-label artifact shared by D13/D23/corpus_build (its
     //    iterative loop materializes eagerly inside Memo, so touching

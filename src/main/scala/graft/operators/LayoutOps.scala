@@ -276,7 +276,7 @@ object LayoutOps {
     * job; also the bench warm-up so serving queries measure serving).
     *
     * The families and the z-order tables are INDEPENDENT Spark jobs
-    * (shared derivations dedupe through Memo's per-key build locks),
+    * (a shared derivation builds once in Memo),
     * so they run as [[graft.Par.run]] tasks: Spark's scheduler
     * back-fills executor slots left idle by one build's
     * stragglers/driver phases with the next build's tasks (guide
@@ -316,9 +316,9 @@ object LayoutOps {
     families.foreach(f => LayoutStore.purge(spark, tableName(f, dir)))
     ZOrderOps.tableNames(dir).foreach(LayoutStore.purge(spark, _))
     // trailing ':' — both key families always carry a :variant /
-    // :sourceTag suffix, and without it purging /data/sf1 would also
-    // evict /data/sf10's pins (the sibling-dir collision
-    // Memo.invalidate's scaladoc forbids)
+    // :sourceTag suffix, and invalidatePrefix matches raw key
+    // prefixes: without it purging /data/sf1 would also evict
+    // /data/sf10's pins
     Seq("standingServe", "layoutGraphBeam").foreach(p =>
       graft.Memo.invalidatePrefix(spark, s"$p:$dir:"))
   }

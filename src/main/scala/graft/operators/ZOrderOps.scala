@@ -208,15 +208,12 @@ object ZOrderOps {
           .filter(col("zp") === c &&
             !(unix_millis(col("ts")) >= p1 && unix_millis(col("ts")) < p2))
           .select("event_id", "ts", "user_id", "event_type", "value", "z")
-        val rdd = survivors.rdd.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rdd.count()
-        spark.createDataFrame(rdd, survivors.schema)
-          .createOrReplaceTempView("zorder_purge_stage")
+        val stage = graft.PinnedDf.of(survivors)
+        stage.df.createOrReplaceTempView("zorder_purge_stage")
         spark.sql(
           s"""INSERT OVERWRITE TABLE $target PARTITION (zp = $c)
              |SELECT * FROM zorder_purge_stage""".stripMargin)
-        rdd.unpersist(blocking = false)
+        stage.handle.unpersist(blocking = false)
       }
     }
     target

@@ -46,7 +46,7 @@ object IngestSources {
 
   /** Write the fixture once per (dir-content, format); `_SUCCESS`
     * gates, and a JVM-level lock serializes concurrent first builds
-    * (the conc-bench shape — cf. Memo's build lock).
+    * (the conc-bench shape).
     */
   private def ensureMirror(spark: SparkSession, dir: String,
       fmt: String): String = mirrorLock.synchronized {

@@ -325,4 +325,25 @@ class AnnGraphSpec extends GraftSpec {
       midHits.exists(id => id >= 80),
       "mid query never reached the B side")
   }
+
+  test("filtered-beam memo stays LRU-bounded under concurrent predicates") {
+    // more distinct predicates than the bound, from several threads: a
+    // predicate evicted while its hops build must not leave those pins
+    // standing outside the bound
+    def tagOf(lbl: Long) =
+      s"filteredBeam:$Sf:b${AnnOps.GraphBeam}:${(col("label") =!= lbl).toString}"
+    val labels = 0L until (AnnOps.FilteredBeamMaxPreds + 4L)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val runs = labels.map(l => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = { AnnOps.filteredGraph(spark, Sf, _ =!= l).collect(); () }
+      }))
+      runs.foreach(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+    val standing = labels.filter(l => graft.Memo.hasKey(spark, s"${tagOf(l)}:0"))
+    assert(standing.size <= AnnOps.FilteredBeamMaxPreds,
+      s"${standing.size} predicates' beam pins standing: $standing")
+    graft.Memo.clear(spark)
+    assert(labels.forall(l => !graft.Memo.hasKey(spark, s"${tagOf(l)}:0")))
+  }
 }

@@ -25,12 +25,14 @@ trait GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
     * test JVM never accumulates cached plans across suites (another
     * suite sharing the session just re-derives on first use).
     *
-    * SEQUENTIAL-SUITE ASSUMPTION: Memo.clear destroys broadcasts on the
-    * getOrCreate-shared session, which is safe only because the forked
-    * test JVM runs suites sequentially (sbt's testForkedParallel stays
-    * at its false default — keep it that way in build.sbt). Parallel
-    * suites would let one suite's teardown destroy a broadcast another
-    * suite's in-flight query still references.
+    * SEQUENTIAL-SUITE ASSUMPTION: Memo.clear releases every entry of
+    * the getOrCreate-shared session, destroying its broadcasts (an
+    * entry still building is released when its build completes). That
+    * is safe only because the forked test JVM runs suites sequentially
+    * (sbt's testForkedParallel stays at its false default — keep it
+    * that way in build.sbt): parallel suites would let one suite's
+    * teardown destroy a broadcast another suite's in-flight query still
+    * references.
     */
   override protected def afterAll(): Unit = {
     if (sessionStarted) Memo.clear(spark)

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.operators.{AnnOps, LayoutOps}
-import org.apache.spark.ListenerBusDrain
+import org.apache.spark.{DriverBroadcastBlocks, ListenerBusDrain}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
@@ -50,5 +50,19 @@ class IvfRequestJobsSpec extends GraftSpec {
       info(s"one request ran ${jobs.get} jobs")
       assert(jobs.get <= MaxJobs, s"one request ran ${jobs.get} jobs")
     } finally LayoutOps.purgeAll(spark, Sf)
+  }
+
+  test("a second encode over the same PQ handle adds no broadcast block") {
+    val vecs = Tables.embeddings(spark, Sf).filter(col("vec_id") % 10 === 7)
+      .select("vec_id", "embedding")
+    for (encoding <- Seq("pq", "pq_res")) {
+      val sv = AnnOps.sessionServing(spark, Sf, encoding)
+      AnnOps.codedRowsFor(spark, sv, vecs)
+      val before = DriverBroadcastBlocks(spark.sparkContext)
+      val coded = AnnOps.codedRowsFor(spark, sv, vecs)
+      val added = DriverBroadcastBlocks(spark.sparkContext) -- before
+      assert(added.isEmpty, s"$encoding: the second encode broadcast $added")
+      assert(coded.count() > 0)
+    }
   }
 }
