@@ -2381,24 +2381,19 @@ object AnnOps {
         annPqAdc(spark, dir, r).select("q_id", "c_id"), k)
       .orderBy("q_id", "rnk")
 
-  /** THE exact-cosine re-rank of a (q_id, c_id) shortlist: the
-    * shortlist is broadcast into one scan of the base corpus for the
-    * candidate floats (read once, never shuffled), query floats come
-    * from `queries` (a (vec_id, v, nrm) frame — the corpus split, or
-    * the IVF search's driver-built local frame of a request's vectors,
-    * which need not be corpus members), then a bounded-heap top-k per
-    * query, rows unordered. `extraRerank` supplies (vec_id, embedding)
-    * rows for candidates the base corpus lacks (vectors an append
-    * added to a handle's lists).
+  /** THE exact-cosine re-rank of a (q_id, c_id) shortlist over the
+    * whole corpus — the non-IVF two-stage faces (PQ, RP, SQ8 and
+    * graph-PQ over the corpus split; the IVF search re-ranks from its
+    * lists' in-row floats instead): the shortlist is broadcast into one
+    * scan of the base corpus for the candidate floats (read once, never
+    * shuffled), query floats come from `queries` (a (vec_id, v, nrm)
+    * frame), then a bounded-heap top-k per query, rows unordered.
     */
   private[graft] def exactRerank(spark: SparkSession, dir: String,
-      queries: DataFrame, shortlist: DataFrame, k: Int,
-      extraRerank: Option[DataFrame] = None): DataFrame = {
+      queries: DataFrame, shortlist: DataFrame, k: Int): DataFrame = {
     val qv = queries
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val base = embDouble(spark, dir).select("vec_id", "v", "nrm")
-    val exact = extraRerank
-      .fold(base)(ex => base.unionByName(vecsOf(ex).select("vec_id", "v", "nrm")))
+    val exact = embDouble(spark, dir)
       .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
       .join(broadcast(shortlist), "c_id")
       .join(broadcast(qv), "q_id")
@@ -2411,22 +2406,23 @@ object AnnOps {
 
   /** Default ivfpq probe count and ADC shortlist depth. R=100 (10× k)
     * is what makes the two-stage recall match single-stage IVF-Flat at
-    * the same nprobe (R=50 measured one lost hit at sf0.01); stage-2
-    * cost is still only R floats per query.
+    * the same nprobe (R=50 measured one lost hit at sf0.01); the ADC
+    * order picks the R survivors, the exact cosine orders them.
     */
   val IvfPqNprobe = 8
   val IvfPqR = 100
 
   /** The PQ-coded inverted lists — IVF's co-located layout carrying
-    * CODES instead of float vectors (the production index layout: at
-    * 100 TB the probed lists are scanned as 8 B/vector codes, 64×
-    * smaller than the raw corpus). Built once per session by joining
-    * the two existing layout artifacts; re-partitioned by list so a
-    * probe stays a local scan.
+    * CODES next to each member's re-rank floats (the IVFADC "refine"
+    * layout, Jégou et al. 2011): (c_cid, c_id, cv2, cn, c0..c_{PqS-1}).
+    * The ADC shortlist reads the codes, the exact re-rank the in-row
+    * (cv2, cn) of the same probed rows, so a request never reads the
+    * corpus. Built once per session by joining the two existing layout
+    * artifacts; re-partitioned by list so a probe stays a local scan.
     */
   private def ivfPqLists(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.df(spark, s"ivfPqLists:$dir") {
-      ivfLists(spark, dir, DefaultM).select("c_cid", "c_id")
+      ivfLists(spark, dir, DefaultM)
         .join(pqCodesCore(spark, dir)
           .select(col("vec_id").as("c_id") +:
             (0 until PqS).map(s => col(s"c$s")): _*), "c_id")
@@ -2434,12 +2430,12 @@ object AnnOps {
     }
 
   /** D33d: the composed production ANN stack — IVF-PQ: probe nprobe
-    * inverted lists (in-row quantizer rank, broadcast probes), ADC-scan
-    * ONLY the probed lists' codes (never a float vector), shortlist R
-    * per query by approximate distance, then exact-cosine re-rank of
-    * the shortlist alone. Scale shape: stage-1 bytes ≈
-    * (nprobe/m)·|corpus|·PqS B — a fraction of IVF-Flat's probed
-    * floats at the same nprobe — and the corpus is never shuffled;
+    * inverted lists (driver-side quantizer rank, broadcast probes),
+    * score ONLY the probed lists' rows — ADC over the codes, exact
+    * cosine over the in-row floats — shortlist R per query by
+    * approximate distance, then order the shortlist by exact cosine.
+    * Scale shape: bytes read ≈ (nprobe/m)·|corpus|·(PqS + 8·D) B and
+    * the corpus is never shuffled;
     * recall at nprobe=8/R=50 matches IVF-Flat nprobe=8 on the oracled
     * ann_recall curve. The corpus-split search over the session handle.
     */
@@ -2515,8 +2511,8 @@ object AnnOps {
       pqRefineRounds(pqSubOf(spark, dir, res, nSub), seed, pqRounds)
     }
 
-  /** The coded lists with RESIDUAL codes: (c_cid, c_id, c0..c_{PqS-1}),
-    * repartitioned by list.
+  /** The coded lists with RESIDUAL codes and the re-rank floats:
+    * (c_cid, c_id, cv2, cn, c0..c_{PqS-1}), repartitioned by list.
     */
   private def ivfPqResLists(spark: SparkSession, dir: String,
       ivfRounds: Int = LloydRounds, pqRounds: Int = PqLloydRounds,
@@ -2524,14 +2520,15 @@ object AnnOps {
     graft.Memo.df(spark, s"ivfPqResLists:$dir:$ivfRounds:$pqRounds:$nSub") {
       val emb = embDouble(spark, dir)
       val assigned = assignFor(spark, dir, DefaultM, emb, 1, ivfRounds)
-        .select(col("vec_id"), col("cid"), col("v"))
+        .select(col("vec_id"), col("cid"), col("v"), col("nrm"))
       val res = withResidual(assigned, quantCentroids(spark, dir, ivfRounds))
       val book = sessionBook(spark,
           s"$dir:res:$ivfRounds:$pqRounds:$nSub:$PqSeedRule")(
         pqModelRes(spark, dir, ivfRounds, pqRounds, nSub))
       val codes = wideCodes(pqAssign(pqSubOf(spark, dir,
         res.select(col("vec_id"), col("r").as("v")), nSub), book), nSub)
-      res.select(col("cid").as("c_cid"), col("vec_id").as("c_id"))
+      res.select(col("cid").as("c_cid"), col("vec_id").as("c_id"),
+          col("v").as("cv2"), col("nrm").as("cn"))
         .join(codes.withColumnRenamed("vec_id", "c_id"), "c_id")
         .repartition(col("c_cid"))
     }
@@ -2612,16 +2609,17 @@ object AnnOps {
   }
 
   /** How an IVF handle's lists encode their members — the per-list
-    * codec plugged into the one inverted-file search and encode body:
-    *  - [[IvfCodec.Flat]]: lists carry the float vector and its norm
-    *    (cv2, cn); candidates score by exact cosine directly.
-    *  - [[IvfCodec.Sq8]]: lists carry per-dimension byte codes
-    *    (codes) under the affine model (mn, delta); SQ8 ADC (higher is
-    *    closer) shortlists, exact cosine re-ranks.
-    *  - [[IvfCodec.Pq]]: lists carry PQ codes c0..c{nSub−1} against
-    *    `book` (of v, or of the residual v − cq(list) when
-    *    `residual`); ADC distance (lower is closer) shortlists, exact
-    *    cosine re-ranks.
+    * codec plugged into the one inverted-file search and encode body.
+    * Every codec's lists carry the float vector and its norm (cv2, cn)
+    * the exact cosine reads:
+    *  - [[IvfCodec.Flat]]: nothing more; candidates score by exact
+    *    cosine directly.
+    *  - [[IvfCodec.Sq8]]: plus per-dimension byte codes (codes) under
+    *    the affine model (mn, delta); SQ8 ADC (higher is closer)
+    *    shortlists, exact cosine re-ranks.
+    *  - [[IvfCodec.Pq]]: plus PQ codes c0..c{nSub−1} against `book`
+    *    (of v, or of the residual v − cq(list) when `residual`); ADC
+    *    distance (lower is closer) shortlists, exact cosine re-ranks.
     */
   sealed trait IvfCodec
   object IvfCodec {
@@ -2650,9 +2648,10 @@ object AnnOps {
     * memoized layout ([[sessionServing]]) or the bucketed persisted
     * table ([[servingFromTables]]) — and the codec the lists are
     * encoded with (a PQ codec holds its flattened book). Every IVF
-    * search and delta encode runs over a handle; the streaming faces
-    * build theirs once at stream start, not per micro-batch, so no
-    * per-request broadcast is made.
+    * search and delta encode runs over a handle, and a search reads
+    * nothing but the handle (its lists hold the re-rank floats); the
+    * streaming faces build theirs once at stream start, not per
+    * micro-batch, so no per-request broadcast is made.
     */
   final case class IvfPqServing(model: Broadcast[IvfModel],
       lists: DataFrame, codec: IvfCodec)
@@ -2725,17 +2724,22 @@ object AnnOps {
     * streaming and corpus-split faces all run this body. The query
     * side is request-sized, so it is computed on the driver
     * ([[querySide]]: one collect of the query frame, then the same
-    * kernels the in-row expressions call) and enters the plan as two
-    * local frames. The probe rows' cids form a literal IN filter, so a
-    * bucketed lists table scan prunes to the probed buckets (nprobe/m
-    * of the index files at any corpus size); then one broadcast
-    * probe×list join, scored by the codec. Flat lists take the top-k by
-    * exact cosine directly; SQ8 and PQ lists shortlist `r` by ADC and
-    * re-rank the shortlist exactly ([[exactRerank]]: the base corpus
-    * parquet supplies the candidate floats — source data, not a
-    * derived layout). Plain PQ probe rows carry their query's distance
-    * tables, residual PQ probe rows the tables of their own residual.
-    * A query row with a null embedding gets no probes and no hits.
+    * kernels the in-row expressions call) and enters the plan as one
+    * local frame of probe rows. The probe rows' cids form a literal IN
+    * filter, so a bucketed lists table scan prunes to the probed
+    * buckets (nprobe/m of the index files at any corpus size); then one
+    * broadcast probe×list join, scored in-row. Every codec's lists
+    * carry each member's re-rank floats (cv2, cn) and every probe row
+    * its query's (qv, qn), so the exact cosine `sim` is computed in the
+    * list-scan stage. Flat lists take the top-k by `sim` directly; SQ8
+    * and PQ lists take the top-`r` by ADC, then the top-k of those by
+    * `sim` — two chained bounded heaps on q_id that share one exchange,
+    * so a request shuffles once and reads nothing but its probed lists
+    * (no corpus scan, no session state). Plain PQ probe rows carry
+    * their query's distance tables, residual PQ probe rows the tables
+    * of their own residual. A query row with a null embedding gets no
+    * probes and no hits. `dir` names the handle's corpus; the search
+    * reads nothing under it.
     *
     * The output is (q_id, c_id, sim, rnk) in no particular row order:
     * a request's caller reads rows, not positions, and a global sort
@@ -2753,15 +2757,10 @@ object AnnOps {
     * inside the join before any heap: list columns (c_label on the
     * labeled Flat lists) and the query frame's extra columns (q_label
     * on the corpus split) are in scope.
-    *
-    * `extraRerank` supplies (vec_id, embedding) float rows for ids the
-    * handle's lists gained by an append ([[codedRowsFor]]) but the base
-    * corpus lacks, so the exact re-rank can score them.
     */
   def ivfPqSearchTables(spark: SparkSession, dir: String,
       sv: IvfPqServing, queries: DataFrame, nprobe: Int = IvfPqNprobe,
       r: Int = IvfPqR, k: Int = 10, excludeSelf: Boolean = false,
-      extraRerank: Option[DataFrame] = None,
       candFilter: Column = lit(true)): DataFrame = {
     val qs = querySide(spark, sv, queries, nprobe)
     val joinCond =
@@ -2769,47 +2768,43 @@ object AnnOps {
        else col("q_cid") === col("c_cid")) && candFilter
     val cand = sv.lists.filter(col("c_cid").isin(qs.probedCids: _*))
       .join(broadcast(qs.probes), joinCond)
-    // SQ8/PQ: ADC shortlist of r per query, then the exact re-rank
-    def reranked(scored: DataFrame, closer: Column): DataFrame =
-      exactRerank(spark, dir, qs.vecs,
-        TopK.perKey(scored, Seq(col("q_id")), Seq(closer, col("c_id").asc), r)
-          .select("q_id", "c_id"),
-        k, extraRerank)
-    sv.codec match {
-      case IvfCodec.Flat =>
-        TopK.perKey(cand.withColumn("sim",
-            VectorFns.cosine(col("qv"), col("cv2"), col("qn"), col("cn"))),
-          Seq(col("q_id")), Seq(col("sim").desc, col("c_id").asc), k)
-          .select("q_id", "c_id", "sim", "rnk")
+      .withColumn("sim",
+        VectorFns.cosine(col("qv"), col("cv2"), col("qn"), col("cn")))
+    def topBy(df: DataFrame, closer: Column, n: Int): DataFrame =
+      TopK.perKey(df, Seq(col("q_id")), Seq(closer, col("c_id").asc), n)
+    // SQ8/PQ: the ADC shortlist of r per query, ordered by exact sim
+    def reranked(adc: Column, closer: Column): DataFrame =
+      topBy(topBy(cand.withColumn("adc", adc), closer, r)
+        .select("q_id", "c_id", "sim"), col("sim").desc, k)
+    val hits = sv.codec match {
+      case IvfCodec.Flat => topBy(cand, col("sim").desc, k)
       case IvfCodec.Sq8(mn, delta) =>
-        reranked(cand.withColumn("adc",
-          VectorFns.dot(col("qv"), sq8Dequant(col("codes"), mn, delta))),
+        reranked(VectorFns.dot(col("qv"), sq8Dequant(col("codes"), mn, delta)),
           col("adc").desc)
-      case pq: IvfCodec.Pq =>
-        reranked(cand.withColumn("adc", adcCol(pq.nSub)), col("adc").asc)
+      case pq: IvfCodec.Pq => reranked(adcCol(pq.nSub), col("adc").asc)
     }
+    hits.select("q_id", "c_id", "sim", "rnk")
   }
 
-  /** A request's query side as local frames: `probes` holds one
-    * (q_cid, q_id, extra query columns…, payload) row per probe,
-    * `vecs` the (vec_id, v, nrm) rows the exact re-rank reads, and
+  /** A request's query side: `probes` holds one (q_cid, q_id, extra
+    * query columns…, qv, qn, codec payload…) row per probe and
     * `probedCids` the distinct probed lists, ascending.
     */
-  private final case class QuerySide(probes: DataFrame, vecs: DataFrame,
-      probedCids: Seq[Long])
+  private final case class QuerySide(probes: DataFrame, probedCids: Seq[Long])
 
   /** The query side of one request, computed on the driver from ONE
     * collect of the query frame (job-free for a local frame, and the
     * same rows the broadcasts of a planned query side would ship). Each
     * step calls the kernel its in-row expression calls, so every value
-    * is bit-identical to the in-plan path: v is the embedding widened
-    * to double, nrm = sqrt of the sequential dot(v, v), probes come
-    * from [[IvfAssign.topProbes]] against the handle's quantizer. The
-    * probe payload follows the codec: (qv, qn) for Flat and SQ8; the
+    * is bit-identical to the in-plan path: qv is the embedding widened
+    * to double, qn = sqrt of the sequential dot(qv, qv), probes come
+    * from [[IvfAssign.topProbes]] against the handle's quantizer. Every
+    * probe row carries (qv, qn) for the in-row exact cosine; the codec
+    * payload adds nothing for Flat and SQ8 (SQ8's ADC reads qv), the
     * query's [[graft.functions.PqKernels.distTable]] tables for plain
-    * PQ; for residual PQ, per probe row, the tables of v − cq(cid) with
-    * cq quantized as [[centroidsQ]] does. Rows with a null embedding
-    * are dropped.
+    * PQ and, for residual PQ, per probe row, the tables of v − cq(cid)
+    * with cq quantized as [[centroidsQ]] does. Rows with a null
+    * embedding are dropped.
     */
   private def querySide(spark: SparkSession, sv: IvfPqServing,
       queries: DataFrame, nprobe: Int): QuerySide = {
@@ -2820,10 +2815,8 @@ object AnnOps {
     val model = sv.model.value
     val arr = ArrayType(DoubleType)
     val (payloadFields, payloadOf): (Seq[StructField],
-        (Array[Double], Double) => Long => Seq[Any]) = sv.codec match {
-      case IvfCodec.Flat | IvfCodec.Sq8(_, _) =>
-        (Seq(StructField("qv", arr), StructField("qn", DoubleType)),
-          (v, n) => { val p = Seq(v.toSeq, n); _ => p })
+        Array[Double] => Long => Seq[Any]) = sv.codec match {
+      case IvfCodec.Flat | IvfCodec.Sq8(_, _) => (Nil, _ => _ => Nil)
       case pq: IvfCodec.Pq =>
         def tables(x: Array[Double]): Seq[Any] = {
           val xd = new GenericArrayData(x)
@@ -2833,57 +2826,51 @@ object AnnOps {
         val fields = (0 until pq.nSub).map(s => StructField(s"dt$s", arr))
         if (pq.residual) {
           val row = model.cids.zipWithIndex.toMap
-          (fields, (v, _) => cid => {
+          (fields, v => cid => {
             val cq = quantizedCentroid(model, row(cid))
             tables(Array.tabulate(v.length)(d => v(d) - cq(d)))
           })
-        } else (fields, (v, _) => { val p = tables(v); _ => p })
+        } else (fields, v => { val p = tables(v); _ => p })
     }
     val probeRows = Seq.newBuilder[Row]
-    val vecRows = Seq.newBuilder[Row]
     val cids = scala.collection.mutable.SortedSet.empty[Long]
     rows.iterator.filterNot(_.isNullAt(1)).foreach { row =>
       val v = row.getSeq[Number](1).map(x => if (x == null) 0.0 else x.doubleValue).toArray
       val vd = new GenericArrayData(v)
       val n = math.sqrt(graft.functions.VecKernels.dot(vd, vd))
-      val payload = payloadOf(v, n)
-      val extras = (2 until row.length).map(row.get)
+      val head = (row.get(0) +: (2 until row.length).map(row.get)) ++ Seq(v.toSeq, n)
+      val payload = payloadOf(v)
       IvfAssign.topProbes(vd, n, model, nprobe).toLongArray().foreach { cid =>
         cids += cid
-        probeRows += Row.fromSeq((cid +: row.get(0) +: extras) ++ payload(cid))
+        probeRows += Row.fromSeq((cid +: head) ++ payload(cid))
       }
-      vecRows += Row(row.get(0), v.toSeq, n)
     }
-    val idType = queries.schema("vec_id").dataType
-    def local(rs: Seq[Row], fields: Seq[StructField]): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rs: _*), StructType(fields))
-    QuerySide(
-      local(probeRows.result(), Seq(StructField("q_cid", LongType),
-        StructField("q_id", idType)) ++ extra ++ payloadFields),
-      local(vecRows.result(), Seq(StructField("vec_id", idType),
-        StructField("v", arr), StructField("nrm", DoubleType))),
-      cids.toSeq)
+    val fields = Seq(StructField("q_cid", LongType),
+      StructField("q_id", queries.schema("vec_id").dataType)) ++ extra ++
+      Seq(StructField("qv", arr), StructField("qn", DoubleType)) ++ payloadFields
+    QuerySide(spark.createDataFrame(java.util.Arrays.asList(probeRows.result(): _*),
+      StructType(fields)), cids.toSeq)
   }
 
   /** THE IVF encode: delta rows for a handle's lists — a batch of new
     * (vec_id, embedding) vectors assigned to the handle's quantizer
-    * (in-row kernel, nprobe = 1) and encoded by its codec: Flat keeps
-    * the float vector and norm, SQ8 takes [[sq8CodesCol]]'s byte
-    * codes, PQ the in-row argmin against the book (residual handles
-    * code v − cq(centroid)). No corpus read, no model rebuilt,
-    * O(|batch|) work at any index size. Output columns match the
-    * handle's (unlabeled) lists by name, so the rows union onto a
-    * session handle's lists or append to the persisted table as new
-    * bucketed files — what a restarted session's daily index
-    * maintenance runs.
+    * (in-row kernel, nprobe = 1) and encoded by its codec: every row
+    * keeps the float vector and norm (cv2, cn) the search re-ranks by,
+    * SQ8 adds [[sq8CodesCol]]'s byte codes, PQ the in-row argmin
+    * against the book (residual handles code v − cq(centroid)). No
+    * corpus read, no model rebuilt, O(|batch|) work at any index size.
+    * Output columns match the handle's (unlabeled) lists by name, so
+    * the rows union onto a session handle's lists or append to the
+    * persisted table as new bucketed files — what a restarted
+    * session's daily index maintenance runs.
     */
   def codedRowsFor(spark: SparkSession, sv: IvfPqServing,
       newVecs: DataFrame): DataFrame = {
     val a = assignBc(vecsOf(newVecs), sv.model, 1)
-    val keys = Seq(col("cid").as("c_cid"), col("vec_id").as("c_id"))
+    val keys = Seq(col("cid").as("c_cid"), col("vec_id").as("c_id"),
+      col("v").as("cv2"), col("nrm").as("cn"))
     sv.codec match {
-      case IvfCodec.Flat =>
-        a.select(keys :+ col("v").as("cv2") :+ col("nrm").as("cn"): _*)
+      case IvfCodec.Flat => a.select(keys: _*)
       case IvfCodec.Sq8(mn, delta) =>
         a.select(keys :+ sq8CodesCol(col("v"), mn, delta).as("codes"): _*)
       case pq @ IvfCodec.Pq(_, residual) =>
@@ -3087,20 +3074,20 @@ object AnnOps {
     * inside the co-located inverted lists (FAISS's IVF-SQ8, the most
     * widely deployed practical index: 4× compression with near-lossless
     * code fidelity, vs IVF-PQ's 32× at real ADC loss — both points now
-    * measured in the oracled recall curve). Probe assignment in-row
-    * against the broadcast quantizer, ADC over the probed lists' byte
-    * codes (the corpus never shuffles at query time; stage-1 bytes =
-    * (nprobe/m)·corpus·D B), bounded-heap shortlist, exact re-rank of
-    * R floats per query.
+    * measured in the oracled recall curve). Probes assigned against the
+    * quantizer on the driver, ADC over the probed lists' byte codes and
+    * exact cosine over their in-row floats (the corpus never shuffles at
+    * query time; bytes read = (nprobe/m)·corpus·9·D B), bounded-heap
+    * shortlist of R by ADC, ordered by the exact cosine.
     */
   val IvfSqNprobe = 8
   val IvfSqR = 50
 
-  /** The coded inverted lists: (c_cid, c_id, codes) — the IVF layout
-    * carrying SQ8 codes instead of floats. */
+  /** The coded inverted lists: (c_cid, c_id, cv2, cn, codes) — the IVF
+    * layout carrying SQ8 codes next to the re-rank floats. */
   private def ivfSqLists(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.df(spark, s"ivfSqLists:$dir") {
-      ivfLists(spark, dir, DefaultM).select("c_cid", "c_id")
+      ivfLists(spark, dir, DefaultM)
         .join(sq8Codes(spark, dir).withColumnRenamed("vec_id", "c_id"),
           "c_id")
     }
@@ -3127,7 +3114,7 @@ object AnnOps {
     */
   private[graft] def ivfSqListsFrameM(spark: SparkSession, dir: String,
       m: Int): DataFrame =
-    ivfLists(spark, dir, m).select("c_cid", "c_id")
+    ivfLists(spark, dir, m)
       .join(sq8Codes(spark, dir).withColumnRenamed("vec_id", "c_id"), "c_id")
 
   /** D58: SQ8 ADC search — exact query vs dequantized corpus codes,

@@ -55,19 +55,26 @@ object LayoutOps {
     */
   private def annTagRes = s"${annTag}p${AnnOps.PqLloydRounds}"
 
+  /** The coded-lists families' schema suffix: the rows carry each
+    * member's re-rank floats (cv2, cn) beside its codes — a schema
+    * change is a geometry change, so a table written without them
+    * misses and rebuilds instead of failing at serve time.
+    */
+  private val ListsSchema = "f1"
+
   /** The layout families. Bucket counts are sized for the test SFs;
     * at 100 TB each family would scale its count with data volume
     * (buckets ≈ total-bytes / target-file-size) — the CODE path is
     * identical, only the constant grows.
     */
   val families: Seq[Family] = Seq(
-    Family("ivfpq_lists", annTag, "c_cid", 16,
+    Family("ivfpq_lists", annTag + ListsSchema, "c_cid", 16,
       (s, d) => AnnOps.ivfPqListsFrame(s, d)),
     Family("ivf_quantizer", annTag, "cid", 4,
       (s, d) => AnnOps.quantizerFrame(s, d)),
     Family("pq_book", annTag, "s", 4,
       (s, d) => AnnOps.pqBookFrame(s, d)),
-    Family("ivfpq_res_lists", annTagRes, "c_cid", 16,
+    Family("ivfpq_res_lists", annTagRes + ListsSchema, "c_cid", 16,
       (s, d) => AnnOps.ivfPqResListsFrame(s, d)),
     Family("pq_book_res", annTagRes, "s", 4,
       (s, d) => AnnOps.pqBookResFrame(s, d)),
@@ -153,9 +160,9 @@ object LayoutOps {
     // shared with D15/D28b); appendDelta/appendDeltaRes fold the delta
     // split in by encoding it in-row against the persisted models and
     // appending new bucketed files.
-    Family(GrowFamily, annTag, "c_cid", 16,
+    Family(GrowFamily, annTag + ListsSchema, "c_cid", 16,
       (s, d) => AnnOps.ivfPqListsFrame(s, d).filter(col("c_id") % 10 =!= 7)),
-    Family(GrowResFamily, annTagRes, "c_cid", 16,
+    Family(GrowResFamily, annTagRes + ListsSchema, "c_cid", 16,
       (s, d) => AnnOps.ivfPqResListsFrame(s, d).filter(col("c_id") % 10 =!= 7)),
     // D38b: the standing reference LM (unigram + bigram counts) — a
     // crawl delta is scored from the tables alone; bigrams bucket on
@@ -333,8 +340,8 @@ object LayoutOps {
   /** D36a: IVF-PQ search served from the persisted index (quantizer +
     * codebooks collected from their tiny tables, the queries' probes
     * and distance tables computed on the driver, probed lists read
-    * bucket-pruned from the coded-lists table, exact re-rank floats
-    * from the base corpus parquet — source data, not a layout).
+    * bucket-pruned from the coded-lists table, whose rows carry the
+    * exact re-rank floats beside the codes — no corpus read).
     * Result ≡ ann_ivfpq, rows ordered by (q_id, rnk).
     */
   def annIvfPqServed(spark: SparkSession, dir: String): DataFrame =
@@ -376,8 +383,9 @@ object LayoutOps {
     * persisted tables (the PQ book flattened once, with the codec),
     * coded lists kept as the bucketed table frame. Each request or
     * micro-batch computes its query side on the driver from the
-    * handle and probes the table bucket-pruned; nothing is broadcast
-    * per request but the probe rows and the re-rank's query rows.
+    * handle and probes the table bucket-pruned, re-ranking from the
+    * probed rows' in-row floats; nothing is broadcast per request but
+    * the probe rows, and nothing else is read but the probed buckets.
     */
   def ivfPqServing(spark: SparkSession, dir: String): AnnOps.IvfPqServing =
     servingOver(spark, dir, table(spark, dir, "ivfpq_lists"),

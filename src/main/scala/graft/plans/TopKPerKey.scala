@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, JoinedRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.graftbridge.{catalystExpr, datasetOfRows}
@@ -200,11 +200,15 @@ object TopKHeaps {
 
 /** Map-side pre-pruning: emits the per-partition survivors of the mode
   * predicate — a safe over-approximation, since a row's partition-local
-  * rank never exceeds its global rank.
+  * rank never exceeds its global rank. Rows stay in their partition
+  * (as in [[TopKPerKeyExec]]), so the child's partitioning holds for
+  * the output: a second top-k on the same key over the first one's
+  * output needs no exchange of its own.
   */
 case class PartialTopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder],
     k: Int, mode: TopKMode, child: SparkPlan) extends UnaryExecNode {
   override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
   override def requiredChildDistribution: Seq[Distribution] =
     UnspecifiedDistribution :: Nil
 
@@ -242,6 +246,7 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
     org.apache.spark.sql.catalyst.expressions.AttributeSet(rankAttr :: Nil)
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(keys) :: Nil
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] =
     child.execute().mapPartitions({ it =>

@@ -1063,8 +1063,10 @@ object StreamOps {
     * files — [[graft.sources.LayoutStore.ensure]]), collects the two
     * tiny model artifacts ONCE at stream start, and then every
     * micro-batch of query vectors probes the bucketed coded-lists
-    * table. No session memo, no rebuild, no corpus work per batch —
-    * exactly what an ANN serving tier does after a deploy or failover.
+    * table, whose rows carry the re-rank floats beside the codes. No
+    * session memo, no rebuild, no corpus work per batch: a batch reads
+    * its probed buckets and nothing else — exactly what an ANN serving
+    * tier does after a deploy or failover.
     */
   def annSearchStreamFromLayout(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, sink: (DataFrame, Long) => Unit,

@@ -334,9 +334,9 @@ class DedupAnnSpec extends GraftSpec {
       val sv = AnnOps.sessionServing(spark, Sf, encoding)
       val widened = sv.copy(lists =
         sv.lists.unionByName(AnnOps.codedRowsFor(spark, sv, clone)))
-      // q IS corpus vector 0, so exclude its own row (harness semantics)
+      // q IS corpus vector 0, so exclude its own row (harness semantics);
+      // the clone is no corpus member: it re-ranks from its in-row floats
       val hits = AnnOps.ivfPqSearchTables(spark, Sf, widened, q,
-        extraRerank = Some(clone.select("vec_id", "embedding")),
         excludeSelf = true).collect()
       val top = hits.minBy(_.getAs[Long]("rnk"))
       assert(top.getAs[Long]("c_id") == 999999L,

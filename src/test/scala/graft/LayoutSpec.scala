@@ -728,5 +728,17 @@ class LayoutSpec extends GraftSpec {
     val name = LayoutOps.tableName(fam, Sf)
     assert(name.contains(s"m${AnnOps.DefaultM}") &&
       name.contains(s"s${AnnOps.PqS}k${AnnOps.PqK}"))
+    // the coded lists carry their re-rank floats: every coded-lists
+    // family's tag ends in the schema suffix, and only theirs
+    val coded = Set("ivfpq_lists", "ivfpq_res_lists",
+      LayoutOps.GrowFamily, LayoutOps.GrowResFamily)
+    LayoutOps.families.foreach { f =>
+      assert(f.tag.endsWith("f1") == coded(f.name), s"${f.name}: ${f.tag}")
+    }
+    val columns = LayoutOps.families.filter(f => coded(f.name))
+      .map(f => f.name -> f.build(spark, Sf).columns.toSet)
+    columns.foreach { case (n, cs) =>
+      assert(Set("c_cid", "c_id", "cv2", "cn").subsetOf(cs), s"$n: $cs")
+    }
   }
 }
