@@ -465,7 +465,6 @@ object ScaleAudit {
       operators.DedupOps.withShingles(spark, dir)
         .write.format("noop").mode("overwrite").save()
       operators.AnnOps.warmShared(spark, dir)
-      operators.AnnOps.warmSq8(spark, dir)
       operators.CurationOps.warmStanding(spark, dir)
       operators.LayoutOps.ensure(spark, dir, "postings_base")
       audited.foreach { q =>
@@ -505,7 +504,6 @@ object ScaleAudit {
         operators.DedupOps.withShingles(spark, dir)
           .write.format("noop").mode("overwrite").save()
         operators.AnnOps.warmShared(spark, dir)
-        operators.AnnOps.warmSq8(spark, dir)
         operators.CurationOps.warmStanding(spark, dir)
         operators.LayoutOps.ensure(spark, dir, "postings_base")
         audited.takeWhile(_ != q).foreach(runOne)

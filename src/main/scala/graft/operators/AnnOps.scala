@@ -45,19 +45,23 @@ object AnnOps {
     // the remaining standing artifacts are INDEPENDENT derivations —
     // build them concurrently (guide §2.6, r15 opt; identical results,
     // Memo builds each shared sub-derivation once):
-    //  - SQ8-coded lists: left unwarmed, their one-time build join
-    //    lands inside the first ann_ivfsq measurement and changes
-    //    SHAPE across scale factors (the r10 ×17 wall jump and the
-    //    r11 ScaleAudit exp-1.54 finding were BOTH this missing warm)
+    //  - the coded IVF lists the session searches read (SQ8, PQ,
+    //    residual PQ): left unwarmed, a list build lands inside the
+    //    first search's measurement and changes SHAPE across scale
+    //    factors (the r10 ×17 ann_ivfsq wall jump and the r11
+    //    ScaleAudit exp-1.54 finding were BOTH an unwarmed SQ8 list
+    //    build)
+    //  - the PQ code table of the non-IVF PQ faces
     //  - k-NN graph (and vector-carrying serving twin): same lesson
     //  - APPENDED graph: the growth query's own layout — unwarmed it
     //    was the r12 bench's most expensive row by 5× (52.7 s), all
     //    one-time build + planning, none of it serve
+    def lists(index: SessionIndex): () => Unit =
+      () => noop(sessionServing(spark, dir, index).lists)
     graft.Par.run(spark, Seq(
-      () => noop(ivfLists(spark, dir, DefaultM)),
+      lists(SessionIndex.Flat()), lists(SessionIndex.Sq8),
+      lists(SessionIndex.Pq), lists(SessionIndex.PqRes()),
       () => noop(pqCodesCore(spark, dir)),
-      () => noop(ivfPqResLists(spark, dir)),
-      () => noop(ivfSqLists(spark, dir)),
       () => noop(graphAdjV(spark, dir)),
       () => { graphAppendedAdjV(spark, dir); () }))
     ()
@@ -331,11 +335,17 @@ object AnnOps {
   private def ivfLists(spark: SparkSession, dir: String, m: Int,
       rounds: Int = LloydRounds): DataFrame =
     graft.Memo.df(spark, s"ivfLists:$dir:$m:$rounds") {
-      assignFor(spark, dir, m, embDouble(spark, dir), 1, rounds)
-        .select(col("cid").as("c_cid"), col("vec_id").as("c_id"),
-          col("v").as("cv2"), col("nrm").as("cn"))
+      listRows(assignFor(spark, dir, m, embDouble(spark, dir), 1, rounds))
         .repartition(col("c_cid"))
     }
+
+  /** Flat list rows (c_cid, c_id, cv2, cn) of an nprobe = 1 assignment:
+    * each member under its list with the re-rank floats every codec's
+    * lists carry.
+    */
+  private def listRows(assigned: DataFrame): DataFrame =
+    assigned.select(col("cid").as("c_cid"), col("vec_id").as("c_id"),
+      col("v").as("cv2"), col("nrm").as("cn"))
 
   /** The IVF inverted lists with each member's label carried — the
     * layout any label-predicated search (D51 negatives, D53 filtered
@@ -363,7 +373,7 @@ object AnnOps {
   def hardNegatives(spark: SparkSession, dir: String, nprobe: Int = 4,
       k: Int = 5): DataFrame = {
     val hits = ivfPqCorpusSearch(spark, dir,
-      sessionServing(spark, dir, "flat_labeled"), nprobe, k = k,
+      sessionServing(spark, dir, SessionIndex.FlatLabeled), nprobe, k = k,
       candFilter = col("q_label") =!= col("c_label"))
     // the small hit frame rides broadcast into each label scan
     def labeled(side: String, df: DataFrame): DataFrame =
@@ -392,7 +402,7 @@ object AnnOps {
   def annIvfM(spark: SparkSession, dir: String, m: Int,
       nprobe: Int, k: Int = 10, rounds: Int = LloydRounds): DataFrame =
     ivfPqCorpusSearch(spark, dir,
-      sessionServing(spark, dir, "flat", m = m, ivfRounds = rounds),
+      sessionServing(spark, dir, SessionIndex.Flat(m, rounds)),
       nprobe, k = k)
 
   // ---------------------------------------------------------------
@@ -655,7 +665,7 @@ object AnnOps {
     */
   private[graft] def filteredIvf(spark: SparkSession, dir: String,
       pred: Column => Column, nprobe: Int = 4, k: Int = 10): DataFrame =
-    ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir, "flat_labeled"),
+    ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir, SessionIndex.FlatLabeled),
         nprobe, k = k, candFilter = pred(col("c_label")))
       .withColumn("path", lit("ivf"))
 
@@ -2141,54 +2151,67 @@ object AnnOps {
   private def withBook[T](spark: SparkSession,
       model: Seq[(Int, Long, Seq[Double])])(
       use: Broadcast[graft.functions.PqBookModel] => T): T = {
-    val bc = spark.sparkContext.broadcast(
-      graft.functions.PqBookModel.of(model, model.head._3.length))
+    val bc = bookBroadcast(spark, model)
     try use(bc) finally bc.destroy()
   }
 
-  /** `model` broadcast for [[pqAssign]] once per session under `key`
-    * (`<dir>:<variant>`) — for the memoized coded frames, which read
-    * it whenever they recompute; evicting the entry destroys it.
+  /** `model` flattened and broadcast: the form in which every kernel
+    * (assignment, encode, distance tables) reads a book.
+    */
+  private def bookBroadcast(spark: SparkSession,
+      model: Seq[(Int, Long, Seq[Double])]): Broadcast[graft.functions.PqBookModel] =
+    spark.sparkContext.broadcast(
+      graft.functions.PqBookModel.of(model, model.head._3.length))
+
+  /** `model` broadcast once per session under `key`
+    * (`<dir>:<variant>`) — for the memoized coded frames and the
+    * session codecs, which read it whenever they recompute; evicting
+    * the entry destroys it.
     */
   private def sessionBook(spark: SparkSession, key: String)(
       model: => Seq[(Int, Long, Seq[Double])]): Broadcast[graft.functions.PqBookModel] =
-    graft.Memo.value(spark, s"pqBookBc:$key") {
-      val m = model
-      spark.sparkContext.broadcast(graft.functions.PqBookModel.of(m, m.head._3.length))
-    }
+    graft.Memo.value(spark, s"pqBookBc:$key")(bookBroadcast(spark, model))
+
+  /** The session's plain PQ book ([[pqModel]]) as its one broadcast,
+    * shared by the code table, the query tables and the PQ lists.
+    */
+  private def pqBookBc(spark: SparkSession,
+      dir: String): Broadcast[graft.functions.PqBookModel] =
+    sessionBook(spark, s"$dir:$PqLloydRounds:$PqSeedRule")(pqModel(spark, dir))
 
   /** (vec_id, s, x): each vector split into PqS contiguous subvectors. */
   private def pqSub(spark: SparkSession, dir: String): DataFrame =
     pqSubOf(spark, dir, embDouble(spark, dir))
 
-  /** (vec_id, s, x): split v into nSub contiguous subvectors of subDim
-    * components — the ONE splitter every encode path (session-memoized
-    * and serving-handle) shares, so appended-table parity cannot drift
-    * from a one-sided tweak.
-    */
-  private def subSplit(vecs: DataFrame, nSub: Int, subDim: Int): DataFrame =
-    vecs.select(col("vec_id"), col("v"),
-        explode(sequence(lit(0), lit(nSub - 1))).as("s"))
-      .select(col("vec_id"), col("s"),
-        slice(col("v"), col("s") * subDim + 1, lit(subDim)).as("x"))
-
-  /** One wide (vec_id, c0..c{nSub−1}) code row per vector from
-    * [[pqAssign]] output — the shared agg of every code-encoding path.
-    */
-  private def wideCodes(assigned: DataFrame, nSub: Int): DataFrame = {
-    val aggs = (0 until nSub).map(s =>
-      max(when(col("s") === s, col("k"))).as(s"c$s"))
-    assigned.groupBy("vec_id").agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** (vec_id, s, x) subvector rows for an arbitrary (vec_id, v) frame
-    * (subspace geometry comes from the corpus dimensionality).
+  /** (vec_id, s, x) subvector rows for an arbitrary (vec_id, v) frame:
+    * v split into nSub contiguous subvectors of the corpus
+    * dimensionality's subDim — the rows the Lloyd rounds and the code
+    * table aggregate per subspace.
     */
   private def pqSubOf(spark: SparkSession, dir: String,
       vecs: DataFrame, nSub: Int = PqS): DataFrame = {
     val subDim = embDouble(spark, dir)
       .select(size(col("v"))).head.getInt(0) / nSub
-    subSplit(vecs, nSub, subDim)
+    vecs.select(col("vec_id"), col("v"),
+        explode(sequence(lit(0), lit(nSub - 1))).as("s"))
+      .select(col("vec_id"), col("s"),
+        slice(col("v"), col("s") * subDim + 1, lit(subDim)).as("x"))
+  }
+
+  /** The seed book of every PQ codebook build: the nSub subvectors of
+    * the first PqK (vec_id, v) rows in [[seedSpread]] order, k = seed
+    * rank. A corpus with fewer than PqK vectors degrades to fewer
+    * codewords (matching the oracle's ROW_NUMBER seeding) instead of
+    * failing.
+    */
+  private def seedBook(vecs: DataFrame,
+      nSub: Int): Seq[(Int, Long, Seq[Double])] = {
+    val firstK = seedSpread(vecs).limit(PqK)
+      .select(col("v")).collect().map(_.getSeq[Double](0)).toSeq
+    for { s <- 0 until nSub; (x, k) <- firstK.zipWithIndex } yield {
+      val subDim = x.length / nSub
+      (s, k.toLong, x.slice(s * subDim, (s + 1) * subDim))
+    }
   }
 
   /** Per-subspace codebooks — a layout-time model artifact like
@@ -2209,17 +2232,8 @@ object AnnOps {
   private def pqModel(spark: SparkSession, dir: String,
       rounds: Int = PqLloydRounds): Seq[(Int, Long, Seq[Double])] =
     graft.Memo.value(spark, s"pqModel:$dir:$rounds:$PqSeedRule") {
-      val emb = embDouble(spark, dir)
-      val subDim = emb.select(size(col("v"))).head.getInt(0) / PqS
-      // clamp to the corpus size: a corpus with fewer than PqK vectors
-      // degrades to fewer codewords (matching the oracle's ROW_NUMBER
-      // seeding) instead of crashing on firstK(k)
-      val firstK = seedSpread(emb).limit(PqK)
-        .select(col("v")).collect().map(_.getSeq[Double](0))
-      val seed: Seq[(Int, Long, Seq[Double])] = for {
-        s <- 0 until PqS; k <- 0 until math.min(PqK, firstK.length)
-      } yield (s, k.toLong, firstK(k).slice(s * subDim, (s + 1) * subDim))
-      pqRefineRounds(pqSub(spark, dir), seed, rounds)
+      pqRefineRounds(pqSub(spark, dir), seedBook(embDouble(spark, dir), PqS),
+        rounds)
     }
 
   /** `rounds` exact-integer Lloyd refinement rounds (each re-assigns
@@ -2257,14 +2271,8 @@ object AnnOps {
     */
   private[graft] def pqMeanErr(spark: SparkSession, dir: String,
       refined: Boolean): Double = {
-    val emb = embDouble(spark, dir)
-    val subDim = emb.select(size(col("v"))).head.getInt(0) / PqS
-    val firstK = seedSpread(emb).limit(PqK)
-      .select(col("v")).collect().map(_.getSeq[Double](0))
-    val seed: Seq[(Int, Long, Seq[Double])] = for {
-      s <- 0 until PqS; k <- 0 until math.min(PqK, firstK.length)
-    } yield (s, k.toLong, firstK(k).slice(s * subDim, (s + 1) * subDim))
-    val model = if (refined) pqModel(spark, dir) else seed
+    val model =
+      if (refined) pqModel(spark, dir) else seedBook(embDouble(spark, dir), PqS)
     withBook(spark, model)(book => pqAssign(pqSub(spark, dir), book)
       .agg(avg(col("d"))).head.getDouble(0))
   }
@@ -2283,8 +2291,7 @@ object AnnOps {
     */
   private def pqCodesCore(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.df(spark, s"pqCodes:$dir") {
-      val a = pqAssign(pqSub(spark, dir),
-        sessionBook(spark, s"$dir:$PqLloydRounds:$PqSeedRule")(pqModel(spark, dir)))
+      val a = pqAssign(pqSub(spark, dir), pqBookBc(spark, dir))
       def codeAt(s: Int) = max(when(col("s") === s, col("k"))).as(s"c$s")
       def distAt(s: Int) = max(when(col("s") === s, col("d"))).as(s"d$s")
       val aggs = (0 until PqS).flatMap(s => Seq(codeAt(s), distAt(s)))
@@ -2312,40 +2319,20 @@ object AnnOps {
     */
   private[graft] def pqQueryTables(spark: SparkSession, dir: String): DataFrame =
     graft.Memo.df(spark, s"pqQueryTables:$dir") {
-      pqDistTablesOf(spark, dir, embDouble(spark, dir)
-        .filter(col("vec_id") % 50 === 0))
+      // dt tables are DENSE position-indexed arrays built by the
+      // PqDistTablesExpr kernel over the session's one book broadcast
+      // (the code table's) — see [[pqAssign]] for why not a typedLit
+      // (plan-rendering cost per action) and [[adcCol]] for the O(1)
+      // positional lookup that replaces the 256-entry map's linear key
+      // scan. The IVF search computes the same kernel's tables on the
+      // driver.
+      val book = pqBookBc(spark, dir)
+      val q0 = embDouble(spark, dir).filter(col("vec_id") % 50 === 0)
+        .select(col("vec_id").as("q_id"), col("v"))
+      (0 until PqS).foldLeft(q0) { (df, s) =>
+        df.withColumn(s"dt$s", graft.functions.PqKernels.distTables(col("v"), book, s))
+      }.drop("v")
     }
-
-  /** ADC distance tables for an arbitrary (vec_id, v) query frame
-    * against an EXPLICIT codebook, in-row (the corpus-split tables of
-    * [[pqQueryTables]]; the IVF search computes the same kernel's
-    * tables on the driver).
-    */
-  private def distTablesFor(model: Seq[(Int, Long, Seq[Double])],
-      subDim: Int, vecs: DataFrame): DataFrame = {
-    // dt tables are DENSE position-indexed arrays built by the
-    // PqDistTablesExpr kernel over ONE broadcast book — see
-    // [[pqAssign]] for why not a typedLit (plan-rendering cost per
-    // action) and [[adcCol]] for the O(1) positional lookup that
-    // replaces the 256-entry map's linear key scan. Distance values
-    // are bit-identical to the literal path (same sequential-dot
-    // arithmetic in the kernel).
-    val nSub = model.iterator.map(_._1).max + 1
-    val bc = vecs.sparkSession.sparkContext.broadcast(
-      graft.functions.PqBookModel.of(model, subDim))
-    val q0 = vecs.select(col("vec_id").as("q_id"), col("v"))
-    (0 until nSub).foldLeft(q0) { (df, s) =>
-      df.withColumn(s"dt$s", graft.functions.PqKernels.distTables(col("v"), bc, s))
-    }.drop("v")
-  }
-
-  /** ADC distance tables for an arbitrary (vec_id, v) query frame. */
-  private[graft] def pqDistTablesOf(spark: SparkSession, dir: String,
-      vecs: DataFrame): DataFrame = {
-    val subDim = embDouble(spark, dir)
-      .select(size(col("v"))).head.getInt(0) / PqS
-    distTablesFor(pqModel(spark, dir), subDim, vecs)
-  }
 
   /** ADC distance column: PqS positional array lookups (code k lives
     * at slot k+1 of the dense dt array) summed in fixed s order (so
@@ -2412,23 +2399,6 @@ object AnnOps {
   val IvfPqNprobe = 8
   val IvfPqR = 100
 
-  /** The PQ-coded inverted lists — IVF's co-located layout carrying
-    * CODES next to each member's re-rank floats (the IVFADC "refine"
-    * layout, Jégou et al. 2011): (c_cid, c_id, cv2, cn, c0..c_{PqS-1}).
-    * The ADC shortlist reads the codes, the exact re-rank the in-row
-    * (cv2, cn) of the same probed rows, so a request never reads the
-    * corpus. Built once per session by joining the two existing layout
-    * artifacts; re-partitioned by list so a probe stays a local scan.
-    */
-  private def ivfPqLists(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.df(spark, s"ivfPqLists:$dir") {
-      ivfLists(spark, dir, DefaultM)
-        .join(pqCodesCore(spark, dir)
-          .select(col("vec_id").as("c_id") +:
-            (0 until PqS).map(s => col(s"c$s")): _*), "c_id")
-        .repartition(col("c_cid"))
-    }
-
   /** D33d: the composed production ANN stack — IVF-PQ: probe nprobe
     * inverted lists (driver-side quantizer rank, broadcast probes),
     * score ONLY the probed lists' rows — ADC over the codes, exact
@@ -2441,7 +2411,8 @@ object AnnOps {
     */
   def annIvfPq(spark: SparkSession, dir: String, nprobe: Int = IvfPqNprobe,
       r: Int = IvfPqR, k: Int = 10): DataFrame =
-    ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir), nprobe, r, k)
+    ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir, SessionIndex.Pq),
+      nprobe, r, k)
 
   // ---------------------------------------------------------------
   // D33f: RESIDUAL IVF-PQ — the actual production encoding: each
@@ -2459,21 +2430,14 @@ object AnnOps {
     */
   private val CentroidScale = 16777216d // 2^24
 
-  private def quantCentroids(spark: SparkSession, dir: String,
-      rounds: Int = LloydRounds): DataFrame =
-    graft.Memo.df(spark, s"ivfCentroidsQ:$dir:$rounds") {
-      centroidsQ(spark, ivfModel(spark, dir, DefaultM, rounds))
-    }
-
-  /** (cid, cq): every centroid of `model`, float-quantized — the
-    * residual-centroid frame the session build and the delta encoder
-    * subtract (the search subtracts the same [[quantizedCentroid]] on
-    * the driver).
+  /** (c_cid, cq): every centroid of `model`, float-quantized — the
+    * residual-centroid frame [[withResidual]] joins (the search
+    * subtracts the same [[quantizedCentroid]] on the driver).
     */
   private def centroidsQ(spark: SparkSession, model: IvfModel): DataFrame = {
     import spark.implicits._
     (0 until model.m).map(i => (model.cids(i), quantizedCentroid(model, i).toSeq))
-      .toDF("cid", "cq")
+      .toDF("c_cid", "cq")
   }
 
   /** Centroid `i` of `model`, float-quantized (cq). */
@@ -2481,56 +2445,30 @@ object AnnOps {
     model.flat.slice(i * model.dim, (i + 1) * model.dim)
       .map(x => math.floor(x * CentroidScale + 0.5) / CentroidScale)
 
-  /** (vec_id, cid, v) with the residual r = v − cq(cid) appended. */
-  private def withResidual(vecs: DataFrame, cents: DataFrame): DataFrame =
-    vecs.join(broadcast(cents), "cid")
-      .withColumn("r", zip_with(col("v"), col("cq"), (a, b) => a - b))
+  /** List rows (c_cid, c_id, cv2, …) with the residual r = cv2 −
+    * cq(c_cid) appended: the m-row centroid frame joins broadcast, so
+    * the list rows keep their partitioning.
+    */
+  private def withResidual(lists: DataFrame, model: IvfModel): DataFrame =
+    lists.join(broadcast(centroidsQ(lists.sparkSession, model)), "c_cid")
+      .withColumn("r", zip_with(col("cv2"), col("cq"), (a, b) => a - b))
 
-  /** Residual-space codebooks: the pqModel build run over residual
-    * vectors (PqK hash-spread seeds — the [[seedSpread]] rule, same
-    * as [[pqModel]]; exact-integer Lloyd rounds) — memoized layout
-    * artifact, [[PqSeedRule]]-tagged when persisted.
+  /** Residual-space codebooks: the pqModel build run over the
+    * residuals of the session's Flat list rows at `ivfRounds` — the
+    * rows the residual lists encode — with PqK hash-spread seeds (the
+    * [[seedSpread]] rule, same as [[pqModel]]) and exact-integer Lloyd
+    * rounds; a memoized layout artifact, [[PqSeedRule]]-tagged when
+    * persisted.
     */
   private def pqModelRes(spark: SparkSession, dir: String,
       ivfRounds: Int = LloydRounds, pqRounds: Int = PqLloydRounds,
       nSub: Int = PqS): Seq[(Int, Long, Seq[Double])] =
     graft.Memo.value(spark,
         s"pqModelRes:$dir:$ivfRounds:$pqRounds:$nSub:$PqSeedRule") {
-      val emb = embDouble(spark, dir)
-      val subDim = emb.select(size(col("v"))).head.getInt(0) / nSub
-      val assigned = assignFor(spark, dir, DefaultM, emb, 1, ivfRounds)
-        .select(col("vec_id"), col("cid"), col("v"))
-      val res = withResidual(assigned, quantCentroids(spark, dir, ivfRounds))
-        .select(col("vec_id"), col("r").as("v"))
-      // same small-corpus clamp as [[pqModel]]
-      val firstK = seedSpread(res).limit(PqK)
-        .select(col("v")).collect().map(_.getSeq[Double](0))
-      val seed: Seq[(Int, Long, Seq[Double])] = for {
-        s <- 0 until nSub; k <- 0 until math.min(PqK, firstK.length)
-      } yield (s, k.toLong, firstK(k).slice(s * subDim, (s + 1) * subDim))
-      pqRefineRounds(pqSubOf(spark, dir, res, nSub), seed, pqRounds)
-    }
-
-  /** The coded lists with RESIDUAL codes and the re-rank floats:
-    * (c_cid, c_id, cv2, cn, c0..c_{PqS-1}), repartitioned by list.
-    */
-  private def ivfPqResLists(spark: SparkSession, dir: String,
-      ivfRounds: Int = LloydRounds, pqRounds: Int = PqLloydRounds,
-      nSub: Int = PqS): DataFrame =
-    graft.Memo.df(spark, s"ivfPqResLists:$dir:$ivfRounds:$pqRounds:$nSub") {
-      val emb = embDouble(spark, dir)
-      val assigned = assignFor(spark, dir, DefaultM, emb, 1, ivfRounds)
-        .select(col("vec_id"), col("cid"), col("v"), col("nrm"))
-      val res = withResidual(assigned, quantCentroids(spark, dir, ivfRounds))
-      val book = sessionBook(spark,
-          s"$dir:res:$ivfRounds:$pqRounds:$nSub:$PqSeedRule")(
-        pqModelRes(spark, dir, ivfRounds, pqRounds, nSub))
-      val codes = wideCodes(pqAssign(pqSubOf(spark, dir,
-        res.select(col("vec_id"), col("r").as("v")), nSub), book), nSub)
-      res.select(col("cid").as("c_cid"), col("vec_id").as("c_id"),
-          col("v").as("cv2"), col("nrm").as("cn"))
-        .join(codes.withColumnRenamed("vec_id", "c_id"), "c_id")
-        .repartition(col("c_cid"))
+      val res = withResidual(ivfLists(spark, dir, DefaultM, ivfRounds),
+          ivfModel(spark, dir, DefaultM, ivfRounds))
+        .select(col("c_id").as("vec_id"), col("r").as("v"))
+      pqRefineRounds(pqSubOf(spark, dir, res, nSub), seedBook(res, nSub), pqRounds)
     }
 
   /** D33f: ann_ivfpq_res — residual IVF-PQ search: probes carry a
@@ -2546,9 +2484,8 @@ object AnnOps {
   def annIvfPqRes(spark: SparkSession, dir: String, nprobe: Int = IvfPqNprobe,
       r: Int = IvfPqR, k: Int = 10, ivfRounds: Int = LloydRounds,
       pqRounds: Int = PqLloydRounds, nSub: Int = PqS): DataFrame =
-    ivfPqCorpusSearch(spark, dir,
-      sessionServing(spark, dir, "pq_res", ivfRounds = ivfRounds,
-        pqRounds = pqRounds, nSub = nSub),
+    ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir,
+        SessionIndex.PqRes(ivfRounds, pqRounds, nSub)),
       nprobe, r, k)
 
   /** The composed-index search for an ARBITRARY (vec_id, embedding)
@@ -2560,20 +2497,14 @@ object AnnOps {
     */
   def ivfPqSearch(spark: SparkSession, dir: String, queries: DataFrame,
       nprobe: Int = IvfPqNprobe, r: Int = IvfPqR, k: Int = 10): DataFrame =
-    ivfPqSearchTables(spark, dir, sessionServing(spark, dir), queries,
-      nprobe, r, k)
+    ivfPqSearchTables(spark, dir, sessionServing(spark, dir, SessionIndex.Pq),
+      queries, nprobe, r, k)
 
   // ---------------------------------------------------------------
   // Persisted-layout faces (r8): the session-memoized artifacts as
   // writable/reloadable frames, plus a serving path that needs ONLY
   // the persisted tables (no Memo state) — what a restarted session
   // runs. See graft.operators.LayoutOps for the storage wiring.
-
-  /** The coded-lists layout as a frame (write side of the persisted
-    * ANN index).
-    */
-  private[graft] def ivfPqListsFrame(spark: SparkSession, dir: String): DataFrame =
-    ivfPqLists(spark, dir)
 
   /** The coarse quantizer as a (cid, cv, cnrm) frame — tiny (m rows),
     * the model artifact a restart reloads instead of re-running Lloyd.
@@ -2593,14 +2524,6 @@ object AnnOps {
     pqModel(spark, dir).toDF("s", "k", "cv")
   }
 
-  /** The residual-coded lists layout as a frame (write side of the
-    * persisted residual ANN index — the FAISS-layout twin of
-    * [[ivfPqListsFrame]]).
-    */
-  private[graft] def ivfPqResListsFrame(spark: SparkSession,
-      dir: String): DataFrame =
-    ivfPqResLists(spark, dir)
-
   /** The residual-space PQ codebooks as an (s, k, cv) frame. */
   private[graft] def pqBookResFrame(spark: SparkSession,
       dir: String): DataFrame = {
@@ -2617,98 +2540,116 @@ object AnnOps {
     *  - [[IvfCodec.Sq8]]: plus per-dimension byte codes (codes) under
     *    the affine model (mn, delta); SQ8 ADC (higher is closer)
     *    shortlists, exact cosine re-ranks.
-    *  - [[IvfCodec.Pq]]: plus PQ codes c0..c{nSub−1} against `book`
-    *    (of v, or of the residual v − cq(list) when `residual`); ADC
-    *    distance (lower is closer) shortlists, exact cosine re-ranks.
+    *  - [[IvfCodec.Pq]]: plus PQ codes c0..c{nSub−1} against the book
+    *    in `bookBc` (of v, or of the residual v − cq(list) when
+    *    `residual`); ADC distance (lower is closer) shortlists, exact
+    *    cosine re-ranks.
     */
   sealed trait IvfCodec
   object IvfCodec {
     case object Flat extends IvfCodec
     final case class Sq8(mn: Seq[Double], delta: Seq[Double]) extends IvfCodec
-    final case class Pq(book: Seq[(Int, Long, Seq[Double])],
+    /** The book rides as one broadcast, made once per codec (a
+      * handle's lifetime): the encode's assign kernel reads it on the
+      * executors, the search's distance tables its driver-side value.
+      */
+    final case class Pq(bookBc: Broadcast[graft.functions.PqBookModel],
         residual: Boolean) extends IvfCodec {
-      def nSub: Int = book.iterator.map(_._1).max + 1
-      /** `book` flattened for the distance-table kernel, built once per
-        * codec (a handle's lifetime), not once per request.
-        */
-      lazy val bookModel: graft.functions.PqBookModel =
-        graft.functions.PqBookModel.of(book, book.head._3.length)
-      /** [[bookModel]] broadcast for the encode's assign kernel, once
-        * per codec like the handle's quantizer broadcast.
-        */
-      lazy val bookBc: Broadcast[graft.functions.PqBookModel] =
-        SparkSession.active.sparkContext.broadcast(bookModel)
+      def bookModel: graft.functions.PqBookModel = bookBc.value
+      def nSub: Int = bookModel.nSub
     }
   }
 
   /** The one IVF index representation: the quantizer as a broadcast
     * (its `.value` is the m-row model: the search assigns a request's
     * probes from it on the driver, the encode's in-row kernel reads
-    * the broadcast), the inverted lists as a frame — the session's
-    * memoized layout ([[sessionServing]]) or the bucketed persisted
-    * table ([[servingFromTables]]) — and the codec the lists are
-    * encoded with (a PQ codec holds its flattened book). Every IVF
-    * search and delta encode runs over a handle, and a search reads
-    * nothing but the handle (its lists hold the re-rank floats); the
-    * streaming faces build theirs once at stream start, not per
-    * micro-batch, so no per-request broadcast is made.
+    * the broadcast), the inverted lists — the session's memoized
+    * layout ([[sessionServing]]) or the bucketed persisted table
+    * ([[servingFromTables]]) — and the codec the lists are encoded
+    * with. `lists` is resolved on every use: a persisted handle reads
+    * its table through the catalog each request, so a compaction or an
+    * append under a held handle is served, not a superseded file
+    * listing. Every IVF search and delta encode runs over a handle, and
+    * a search reads nothing but the handle (its lists hold the re-rank
+    * floats); the streaming faces build theirs once at stream start,
+    * not per micro-batch, so no per-request broadcast is made.
     */
   final case class IvfPqServing(model: Broadcast[IvfModel],
-      lists: DataFrame, codec: IvfCodec)
+      listsOf: () => DataFrame, codec: IvfCodec) {
+    def lists: DataFrame = listsOf()
+  }
+
+  /** Which of the session's memoized IVF indexes a handle serves:
+    *  - [[SessionIndex.Flat]]: Flat lists ([[ivfLists]]) at (m,
+    *    rounds), the one index with a non-default quantizer size
+    *    ([[annIvfM]]);
+    *  - [[SessionIndex.FlatLabeled]]: Flat lists carrying c_label
+    *    ([[ivfListsLabeled]]), the label-predicated searches' layout;
+    *  - [[SessionIndex.Sq8]], [[SessionIndex.Pq]]: the default Flat
+    *    lists SQ8- or PQ-coded;
+    *  - [[SessionIndex.PqRes]]: the Flat lists at `ivfRounds`,
+    *    residual-PQ-coded with the (pqRounds, nSub) residual book —
+    *    the recall harness's and spec sweeps' non-default residual
+    *    indexes.
+    */
+  sealed trait SessionIndex
+  object SessionIndex {
+    final case class Flat(m: Int = DefaultM, rounds: Int = LloydRounds)
+      extends SessionIndex
+    case object FlatLabeled extends SessionIndex
+    case object Sq8 extends SessionIndex
+    case object Pq extends SessionIndex
+    final case class PqRes(ivfRounds: Int = LloydRounds,
+        pqRounds: Int = PqLloydRounds, nSub: Int = PqS) extends SessionIndex
+  }
 
   /** Session serving handle over the memoized layout artifacts and the
-    * session-memoized quantizer broadcast ([[ivfModelBc]]), one of:
-    *  - "flat": Flat lists ([[ivfLists]]) at (m, ivfRounds);
-    *  - "flat_labeled": Flat lists carrying c_label
-    *    ([[ivfListsLabeled]]), the label-predicated searches' layout;
-    *  - "sq8": SQ8-coded lists ([[ivfSqLists]]);
-    *  - "pq": plain PQ-coded lists ([[ivfPqLists]]);
-    *  - "pq_res": residual PQ-coded lists ([[ivfPqResLists]]) at
-    *    (ivfRounds, pqRounds, nSub) — the recall harness's and spec
-    *    sweeps' non-default residual indexes.
-    * Only "flat" takes an `m` other than [[DefaultM]] ([[annIvfM]]).
+    * session-memoized quantizer broadcast ([[ivfModelBc]]). A coded
+    * index's lists are [[encode]] of the Flat lists, memoized: one
+    * assignment pass for every codec, and the projection keeps the
+    * Flat lists' partitioning by list.
     */
   private[graft] def sessionServing(spark: SparkSession, dir: String,
-      encoding: String = "pq", m: Int = DefaultM,
-      ivfRounds: Int = LloydRounds, pqRounds: Int = PqLloydRounds,
-      nSub: Int = PqS): IvfPqServing = {
-    require(encoding == "pq_res" || (pqRounds == PqLloydRounds && nSub == PqS),
-      "pqRounds/nSub select a residual index")
-    require(encoding == "flat" || encoding == "pq_res" || ivfRounds == LloydRounds,
-      "ivfRounds selects a flat or residual index")
-    require(m == DefaultM || encoding == "flat",
-      s"$encoding lists exist only at m = $DefaultM")
-    val (lists, codec) = encoding match {
-      case "flat" => (ivfLists(spark, dir, m, ivfRounds), IvfCodec.Flat)
-      case "flat_labeled" => (ivfListsLabeled(spark, dir), IvfCodec.Flat)
-      case "sq8" =>
-        val (mn, delta) = sq8Model(spark, dir)
-        (ivfSqLists(spark, dir), IvfCodec.Sq8(mn, delta))
-      case "pq" =>
-        (ivfPqLists(spark, dir), IvfCodec.Pq(pqModel(spark, dir), residual = false))
-      case "pq_res" =>
-        (ivfPqResLists(spark, dir, ivfRounds, pqRounds, nSub),
-          IvfCodec.Pq(pqModelRes(spark, dir, ivfRounds, pqRounds, nSub),
-            residual = true))
-      case other => throw new IllegalArgumentException(s"unknown IVF encoding: $other")
+      index: SessionIndex): IvfPqServing = {
+    def coded(rounds: Int, codec: IvfCodec): IvfPqServing = {
+      val model = ivfModelBc(spark, dir, DefaultM, rounds)
+      val lists = graft.Memo.df(spark, s"ivfCodedLists:$dir:$index")(
+        encode(ivfLists(spark, dir, DefaultM, rounds), model, codec))
+      IvfPqServing(model, () => lists, codec)
     }
-    IvfPqServing(ivfModelBc(spark, dir, m, ivfRounds), lists, codec)
+    index match {
+      case SessionIndex.Flat(m, rounds) =>
+        val lists = ivfLists(spark, dir, m, rounds)
+        IvfPqServing(ivfModelBc(spark, dir, m, rounds), () => lists, IvfCodec.Flat)
+      case SessionIndex.FlatLabeled =>
+        val lists = ivfListsLabeled(spark, dir)
+        IvfPqServing(ivfModelBc(spark, dir, DefaultM), () => lists, IvfCodec.Flat)
+      case SessionIndex.Sq8 =>
+        val (mn, delta) = sq8Model(spark, dir)
+        coded(LloydRounds, IvfCodec.Sq8(mn, delta))
+      case SessionIndex.Pq =>
+        coded(LloydRounds, IvfCodec.Pq(pqBookBc(spark, dir), residual = false))
+      case SessionIndex.PqRes(ivfRounds, pqRounds, nSub) =>
+        coded(ivfRounds, IvfCodec.Pq(sessionBook(spark,
+            s"$dir:res:$ivfRounds:$pqRounds:$nSub:$PqSeedRule")(
+          pqModelRes(spark, dir, ivfRounds, pqRounds, nSub)), residual = true))
+    }
   }
 
   /** Build a serving handle from the persisted quantizer table, a
-    * lists frame and the codec the lists carry.
+    * lists resolver and the codec the lists carry.
     */
-  def servingFromTables(cents: DataFrame, lists: DataFrame,
+  def servingFromTables(cents: DataFrame, lists: () => DataFrame,
       codec: IvfCodec): IvfPqServing =
-    IvfPqServing(lists.sparkSession.sparkContext.broadcast(
+    IvfPqServing(cents.sparkSession.sparkContext.broadcast(
         toModel(cents.select("cid", "cv", "cnrm").collect())),
       lists, codec)
 
-  /** A persisted (s, k, cv) codebook table as the in-memory book. */
-  private[graft] def bookOf(book: DataFrame): Seq[(Int, Long, Seq[Double])] =
-    book.select("s", "k", "cv").collect()
-      .map(row => (row.getInt(0), row.getLong(1), row.getSeq[Double](2)))
-      .toSeq
+  /** The PQ codec of a persisted (s, k, cv) codebook table. */
+  private[graft] def pqCodecOf(book: DataFrame, residual: Boolean): IvfCodec.Pq =
+    IvfCodec.Pq(bookBroadcast(book.sparkSession, book.select("s", "k", "cv")
+      .collect().map(row => (row.getInt(0), row.getLong(1), row.getSeq[Double](2)))
+      .toSeq), residual)
 
   /** (vec_id, v, nrm) for a (vec_id, embedding) frame; any other
     * columns ride along.
@@ -2852,39 +2793,43 @@ object AnnOps {
       StructType(fields)), cids.toSeq)
   }
 
-  /** THE IVF encode: delta rows for a handle's lists — a batch of new
-    * (vec_id, embedding) vectors assigned to the handle's quantizer
-    * (in-row kernel, nprobe = 1) and encoded by its codec: every row
-    * keeps the float vector and norm (cv2, cn) the search re-ranks by,
-    * SQ8 adds [[sq8CodesCol]]'s byte codes, PQ the in-row argmin
-    * against the book (residual handles code v − cq(centroid)). No
-    * corpus read, no model rebuilt, O(|batch|) work at any index size.
-    * Output columns match the handle's (unlabeled) lists by name, so
-    * the rows union onto a session handle's lists or append to the
-    * persisted table as new bucketed files — what a restarted
-    * session's daily index maintenance runs.
+  /** THE IVF encode: a codec's list rows from Flat list rows (c_cid,
+    * c_id, cv2, cn) — every coded list, session, persisted, grown or
+    * appended, is this projection of its Flat rows. Flat adds nothing,
+    * SQ8 adds [[sq8CodesCol]]'s byte codes of cv2, PQ adds one code
+    * column c$s per subspace: the in-row argmin of the subvector of
+    * cv2 (or of its residual cv2 − cq(c_cid) against `model`'s
+    * centroids, joined broadcast) against the codec's book — IVFADC's
+    * per-vector code, so the encode needs no shuffle, no aggregate and
+    * no join back to the list rows, and keeps their partitioning.
     */
-  def codedRowsFor(spark: SparkSession, sv: IvfPqServing,
-      newVecs: DataFrame): DataFrame = {
-    val a = assignBc(vecsOf(newVecs), sv.model, 1)
-    val keys = Seq(col("cid").as("c_cid"), col("vec_id").as("c_id"),
-      col("v").as("cv2"), col("nrm").as("cn"))
-    sv.codec match {
-      case IvfCodec.Flat => a.select(keys: _*)
-      case IvfCodec.Sq8(mn, delta) =>
-        a.select(keys :+ sq8CodesCol(col("v"), mn, delta).as("codes"): _*)
-      case pq @ IvfCodec.Pq(_, residual) =>
-        val coding =
-          if (residual)
-            withResidual(a, centroidsQ(spark, sv.model.value))
-              .select(col("vec_id"), col("r").as("v"))
-          else a.select("vec_id", "v")
-        wideCodes(pqAssign(subSplit(coding, pq.nSub, sv.model.value.dim / pq.nSub),
-            pq.bookBc), pq.nSub)
-          .withColumnRenamed("vec_id", "c_id")
-          .join(a.select(keys: _*), "c_id")
-    }
+  private def encode(lists: DataFrame, model: Broadcast[IvfModel],
+      codec: IvfCodec): DataFrame = codec match {
+    case IvfCodec.Flat => lists
+    case IvfCodec.Sq8(mn, delta) =>
+      lists.withColumn("codes", sq8CodesCol(col("cv2"), mn, delta))
+    case pq: IvfCodec.Pq =>
+      val (rows, x) =
+        if (pq.residual) (withResidual(lists, model.value), col("r"))
+        else (lists, col("cv2"))
+      val subDim = pq.bookModel.subDim
+      rows.select(lists.columns.map(col) ++ (0 until pq.nSub).map(s =>
+        graft.functions.PqKernels.assign(slice(x, s * subDim + 1, subDim),
+          lit(s), pq.bookBc).getField("k").as(s"c$s")): _*)
   }
+
+  /** Delta rows for a handle's lists: a batch of new (vec_id,
+    * embedding) vectors assigned to the handle's quantizer (in-row
+    * kernel, nprobe = 1) and [[encode]]d by its codec — the session
+    * and persisted list builds run the same encode over the Flat
+    * lists. No corpus read, no model rebuilt, O(|batch|) work at any
+    * index size. Output columns match the handle's (unlabeled) lists
+    * by name, so the rows union onto a session handle's lists or
+    * append to the persisted table as new bucketed files — what a
+    * restarted session's daily index maintenance runs.
+    */
+  def codedRowsFor(sv: IvfPqServing, newVecs: DataFrame): DataFrame =
+    encode(listRows(assignBc(vecsOf(newVecs), sv.model, 1)), sv.model, sv.codec)
 
   /** The corpus-split harness face: search over any handle with the
     * CORPUS query split (vec_id % 50 = 0, self excluded), so each
@@ -2938,8 +2883,8 @@ object AnnOps {
     }
 
   /** The SQ8 code expression over a vector column, against the
-    * literal model — shared by the corpus codes and the delta encode
-    * ([[codedRowsFor]]).
+    * literal model — shared by the corpus codes and the SQ8 lists
+    * ([[encode]]).
     */
   private def sq8CodesCol(v: Column, mn: Seq[Double],
       delta: Seq[Double]): Column = {
@@ -3083,39 +3028,14 @@ object AnnOps {
   val IvfSqNprobe = 8
   val IvfSqR = 50
 
-  /** The coded inverted lists: (c_cid, c_id, cv2, cn, codes) — the IVF
-    * layout carrying SQ8 codes next to the re-rank floats. */
-  private def ivfSqLists(spark: SparkSession, dir: String): DataFrame =
-    graft.Memo.df(spark, s"ivfSqLists:$dir") {
-      ivfLists(spark, dir, DefaultM)
-        .join(sq8Codes(spark, dir).withColumnRenamed("vec_id", "c_id"),
-          "c_id")
-    }
-
-  /** D58d's query: the corpus-split search over the session SQ8 handle. */
+  /** D58d's query: the corpus-split search over the session SQ8 handle,
+    * whose lists are the Flat lists plus in-row byte codes
+    * (c_cid, c_id, cv2, cn, codes).
+    */
   def annIvfSq(spark: SparkSession, dir: String,
       nprobe: Int = IvfSqNprobe, r: Int = IvfSqR, k: Int = 10): DataFrame =
-    ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir, "sq8"), nprobe, r, k)
-
-  /** The m-independent SQ8 corpus artifacts (affine model + byte
-    * codes), warmed untimed by the scale gate so that no audited row
-    * carries their one-off derivation.
-    */
-  private[graft] def warmSq8(spark: SparkSession, dir: String): Unit = {
-    embDouble(spark, dir).write.format("noop").mode("overwrite").save()
-    sq8Model(spark, dir)
-    sq8Codes(spark, dir).write.format("noop").mode("overwrite").save()
-    ()
-  }
-
-  /** The SQ8-coded inverted lists at an EXPLICIT quantizer size, as a
-    * frame to persist (the byte codes are m-independent; only the list
-    * assignment re-derives).
-    */
-  private[graft] def ivfSqListsFrameM(spark: SparkSession, dir: String,
-      m: Int): DataFrame =
-    ivfLists(spark, dir, m)
-      .join(sq8Codes(spark, dir).withColumnRenamed("vec_id", "c_id"), "c_id")
+    ivfPqCorpusSearch(spark, dir, sessionServing(spark, dir, SessionIndex.Sq8),
+      nprobe, r, k)
 
   /** D58: SQ8 ADC search — exact query vs dequantized corpus codes,
     * top-10 per query by approximate dot product. The scan touches one

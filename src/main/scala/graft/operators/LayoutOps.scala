@@ -62,6 +62,15 @@ object LayoutOps {
     */
   private val ListsSchema = "f1"
 
+  /** The session's plain and residual PQ-coded lists: the write side
+    * of the persisted ANN index (both encodings).
+    */
+  private def pqLists(spark: SparkSession, dir: String): DataFrame =
+    AnnOps.sessionServing(spark, dir, AnnOps.SessionIndex.Pq).lists
+
+  private def pqResLists(spark: SparkSession, dir: String): DataFrame =
+    AnnOps.sessionServing(spark, dir, AnnOps.SessionIndex.PqRes()).lists
+
   /** The layout families. Bucket counts are sized for the test SFs;
     * at 100 TB each family would scale its count with data volume
     * (buckets ≈ total-bytes / target-file-size) — the CODE path is
@@ -69,13 +78,13 @@ object LayoutOps {
     */
   val families: Seq[Family] = Seq(
     Family("ivfpq_lists", annTag + ListsSchema, "c_cid", 16,
-      (s, d) => AnnOps.ivfPqListsFrame(s, d)),
+      (s, d) => pqLists(s, d)),
     Family("ivf_quantizer", annTag, "cid", 4,
       (s, d) => AnnOps.quantizerFrame(s, d)),
     Family("pq_book", annTag, "s", 4,
       (s, d) => AnnOps.pqBookFrame(s, d)),
     Family("ivfpq_res_lists", annTagRes + ListsSchema, "c_cid", 16,
-      (s, d) => AnnOps.ivfPqResListsFrame(s, d)),
+      (s, d) => pqResLists(s, d)),
     Family("pq_book_res", annTagRes, "s", 4,
       (s, d) => AnnOps.pqBookResFrame(s, d)),
     // D36m (r15 judge #6): the D10f tuner's measured choices as a
@@ -161,9 +170,9 @@ object LayoutOps {
     // split in by encoding it in-row against the persisted models and
     // appending new bucketed files.
     Family(GrowFamily, annTag + ListsSchema, "c_cid", 16,
-      (s, d) => AnnOps.ivfPqListsFrame(s, d).filter(col("c_id") % 10 =!= 7)),
+      (s, d) => pqLists(s, d).filter(col("c_id") % 10 =!= 7)),
     Family(GrowResFamily, annTagRes + ListsSchema, "c_cid", 16,
-      (s, d) => AnnOps.ivfPqResListsFrame(s, d).filter(col("c_id") % 10 =!= 7)),
+      (s, d) => pqResLists(s, d).filter(col("c_id") % 10 =!= 7)),
     // D38b: the standing reference LM (unigram + bigram counts) — a
     // crawl delta is scored from the tables alone; bigrams bucket on
     // tok1 so the transition join reuses the persisted clustering via
@@ -355,8 +364,8 @@ object LayoutOps {
     * FAISS-layout encoding, closing the 8th layout family.
     */
   def annIvfPqResServed(spark: SparkSession, dir: String): DataFrame =
-    AnnOps.ivfPqCorpusSearch(spark, dir, servingOver(spark, dir,
-      table(spark, dir, "ivfpq_res_lists"), pqCodec(spark, dir, residual = true)))
+    AnnOps.ivfPqCorpusSearch(spark, dir, familyServing(spark, dir,
+      "ivfpq_res_lists", pqCodec(spark, dir, residual = true)))
 
   /** D36m: the tuner's measured choices read back from the persisted
     * config table — result ≡ ann_probe_tuner (one oracle pins the
@@ -380,29 +389,48 @@ object LayoutOps {
 
   /** The serving handle a restarted session's streaming face builds
     * ONCE at stream start: model artifacts collected from the
-    * persisted tables (the PQ book flattened once, with the codec),
-    * coded lists kept as the bucketed table frame. Each request or
-    * micro-batch computes its query side on the driver from the
-    * handle and probes the table bucket-pruned, re-ranking from the
-    * probed rows' in-row floats; nothing is broadcast per request but
-    * the probe rows, and nothing else is read but the probed buckets.
+    * persisted tables (the PQ book flattened and broadcast once, with
+    * the codec), coded lists named by their table. Each request or
+    * micro-batch resolves the table through the catalog, computes its
+    * query side on the driver from the handle and probes the table
+    * bucket-pruned, re-ranking from the probed rows' in-row floats;
+    * nothing is broadcast per request but the probe rows, and nothing
+    * else is read but the probed buckets.
     */
   def ivfPqServing(spark: SparkSession, dir: String): AnnOps.IvfPqServing =
-    servingOver(spark, dir, table(spark, dir, "ivfpq_lists"),
-      pqCodec(spark, dir, residual = false))
+    familyServing(spark, dir, "ivfpq_lists", pqCodec(spark, dir, residual = false))
 
-  /** Serving handle over the persisted quantizer and an explicit lists
-    * frame (a family table or a grown one) encoded with `codec`.
+  /** Serving handle over the persisted quantizer and the lists table
+    * `listsTable` encoded with `codec`. The handle resolves the table
+    * again on every request (a catalog lookup on the driver, no job),
+    * so a compaction, which re-registers the table over new files, or
+    * an append leaves a held handle serving the table as it is now.
+    * The quantizer and codec are collected once: they change only when
+    * the index is rebuilt.
     */
   private[graft] def servingOver(spark: SparkSession, dir: String,
-      lists: DataFrame, codec: AnnOps.IvfCodec): AnnOps.IvfPqServing =
-    AnnOps.servingFromTables(table(spark, dir, "ivf_quantizer"), lists, codec)
+      listsTable: String, codec: AnnOps.IvfCodec): AnnOps.IvfPqServing =
+    AnnOps.servingFromTables(table(spark, dir, "ivf_quantizer"),
+      () => LayoutStore.read(spark, listsTable), codec)
+
+  /** [[servingOver]] a family's lists table, made servable first. */
+  private def familyServing(spark: SparkSession, dir: String,
+      familyName: String, codec: AnnOps.IvfCodec): AnnOps.IvfPqServing = {
+    ensure(spark, dir, familyName)
+    servingOver(spark, dir, tableName(familyOf(familyName), dir), codec)
+  }
+
+  /** The handle over a grown coded-lists table (plain or residual). */
+  private[graft] def grownServing(spark: SparkSession, dir: String,
+      residual: Boolean): AnnOps.IvfPqServing =
+    familyServing(spark, dir, if (residual) GrowResFamily else GrowFamily,
+      pqCodec(spark, dir, residual))
 
   /** The PQ codec from the persisted plain or residual codebooks. */
   private def pqCodec(spark: SparkSession, dir: String,
       residual: Boolean): AnnOps.IvfCodec =
-    AnnOps.IvfCodec.Pq(AnnOps.bookOf(
-      table(spark, dir, if (residual) "pq_book_res" else "pq_book")), residual)
+    AnnOps.pqCodecOf(
+      table(spark, dir, if (residual) "pq_book_res" else "pq_book"), residual)
 
   /** D36b: the D35 postings top-k face over the reloaded postings
     * table. Result ≡ text_inverted_postings.
@@ -485,8 +513,7 @@ object LayoutOps {
     */
   def annFilteredServed(spark: SparkSession, dir: String): DataFrame =
     AnnOps.ivfPqCorpusSearch(spark, dir,
-        servingOver(spark, dir, table(spark, dir, "ivf_labeled_lists"),
-          AnnOps.IvfCodec.Flat),
+        familyServing(spark, dir, "ivf_labeled_lists", AnnOps.IvfCodec.Flat),
         nprobe = 4, candFilter = col("c_label") =!= 0)
       .withColumn("path", lit("ivf"))
 
@@ -616,16 +643,14 @@ object LayoutOps {
     * append.
     */
   private def appendDeltaInto(spark: SparkSession, dir: String,
-      growFam: String, residual: Boolean): Boolean = {
-    val fam = familyOf(growFam)
+      residual: Boolean): Boolean = {
+    val fam = familyOf(if (residual) GrowResFamily else GrowFamily)
     val t = tableName(fam, dir)
-    ensure(spark, dir, growFam)
+    ensure(spark, dir, fam.name)
     var fresh: DataFrame = null
     val did = LayoutStore.appendOnce(spark, t, DeltaMarker,
       Seq(fam.bucketKey), fam.buckets) {
-      val sv = servingOver(spark, dir, LayoutStore.read(spark, t),
-        pqCodec(spark, dir, residual))
-      val coded = AnnOps.codedRowsFor(spark, sv,
+      val coded = AnnOps.codedRowsFor(grownServing(spark, dir, residual),
         Tables.embeddings(spark, dir).filter(col("vec_id") % 10 === 7)
           .select("vec_id", "embedding"))
       // crash hardening: if a prior append committed its files but
@@ -644,13 +669,13 @@ object LayoutOps {
   }
 
   def appendDelta(spark: SparkSession, dir: String): Boolean =
-    appendDeltaInto(spark, dir, GrowFamily, residual = false)
+    appendDeltaInto(spark, dir, residual = false)
 
   /** The residual twin: delta residual-encoded in-row (v − cq from the
     * persisted quantizer, codes from the persisted residual book).
     */
   def appendDeltaRes(spark: SparkSession, dir: String): Boolean =
-    appendDeltaInto(spark, dir, GrowResFamily, residual = true)
+    appendDeltaInto(spark, dir, residual = true)
 
   /** D36h query: IVF-PQ search over the GROWN table — base split built
     * once, delta folded in by [[appendDelta]]. The delta is encoded
@@ -661,9 +686,7 @@ object LayoutOps {
     */
   def annIvfPqAppendedServed(spark: SparkSession, dir: String): DataFrame = {
     appendDelta(spark, dir)
-    AnnOps.ivfPqCorpusSearch(spark, dir, servingOver(spark, dir,
-      LayoutStore.read(spark, tableName(familyOf(GrowFamily), dir)),
-      pqCodec(spark, dir, residual = false)))
+    AnnOps.ivfPqCorpusSearch(spark, dir, grownServing(spark, dir, residual = false))
   }
 
   /** D36h residual twin: search over the grown RESIDUAL table ≡
@@ -671,9 +694,7 @@ object LayoutOps {
     */
   def annIvfPqResAppendedServed(spark: SparkSession, dir: String): DataFrame = {
     appendDeltaRes(spark, dir)
-    AnnOps.ivfPqCorpusSearch(spark, dir, servingOver(spark, dir,
-      LayoutStore.read(spark, tableName(familyOf(GrowResFamily), dir)),
-      pqCodec(spark, dir, residual = true)))
+    AnnOps.ivfPqCorpusSearch(spark, dir, grownServing(spark, dir, residual = true))
   }
 
   /** D36i: the compaction POLICY a maintenance scheduler runs after

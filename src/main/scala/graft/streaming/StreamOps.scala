@@ -1054,7 +1054,8 @@ object StreamOps {
       r: Int = graft.operators.AnnOps.IvfPqR, k: Int = 10)
       : org.apache.spark.sql.streaming.StreamingQuery =
     annSearchStreamOn(spark, dir,
-      graft.operators.AnnOps.sessionServing(spark, dir), queries, sink,
+      graft.operators.AnnOps.sessionServing(spark, dir,
+        graft.operators.AnnOps.SessionIndex.Pq), queries, sink,
       nprobe, r, k)
 
   /** E20b: [[annSearchStream]] served from the PERSISTED layout — the
@@ -1062,11 +1063,13 @@ object StreamOps {
     * index tables servable (catalog hit / re-register over surviving
     * files — [[graft.sources.LayoutStore.ensure]]), collects the two
     * tiny model artifacts ONCE at stream start, and then every
-    * micro-batch of query vectors probes the bucketed coded-lists
-    * table, whose rows carry the re-rank floats beside the codes. No
-    * session memo, no rebuild, no corpus work per batch: a batch reads
-    * its probed buckets and nothing else — exactly what an ANN serving
-    * tier does after a deploy or failover.
+    * micro-batch of query vectors resolves the bucketed coded-lists
+    * table through the catalog and probes it, its rows carrying the
+    * re-rank floats beside the codes — so a compaction while the stream
+    * runs is served by the next batch. No session memo, no rebuild, no
+    * corpus work per batch: a batch reads its probed buckets and
+    * nothing else — exactly what an ANN serving tier does after a
+    * deploy or failover.
     */
   def annSearchStreamFromLayout(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, sink: (DataFrame, Long) => Unit,

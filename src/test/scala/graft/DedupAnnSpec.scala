@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{AnnOps, DedupOps, TextOps}
+import graft.operators.AnnOps.SessionIndex
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupAnnSpec extends GraftSpec {
@@ -237,12 +239,11 @@ class DedupAnnSpec extends GraftSpec {
     sources.LayoutStore.purge(spark, table)
     try {
       sources.LayoutStore.ensure(spark, table, Seq("c_cid"), m)(
-        AnnOps.ivfSqListsFrameM(spark, Sf, m))
+        AnnOps.sessionServing(spark, Sf, SessionIndex.Sq8).lists)
       val queries = Tables.embeddings(spark, Sf)
         .filter(col("vec_id") % 50 === 0).select("vec_id", "embedding")
       // persisted quantizer + SQ8 model tables, persisted coded lists
-      val sv = operators.LayoutOps.servingOver(spark, Sf,
-        sources.LayoutStore.read(spark, table),
+      val sv = operators.LayoutOps.servingOver(spark, Sf, table,
         AnnOps.IvfCodec.Sq8.tupled(AnnOps.sq8ModelOf(
           operators.LayoutOps.table(spark, Sf, "sq8_model"))))
       val served = AnnOps.ivfPqSearchTables(spark, Sf, sv, queries,
@@ -323,8 +324,10 @@ class DedupAnnSpec extends GraftSpec {
   // assignment follows the existing quantizer and its codes equal
   // vector 0's, so a search FOR vector 0 must surface the clone at
   // sim == 1.0 — directly (Flat) or through the ADC shortlist and
-  // the exact re-rank (SQ8, PQ, residual PQ)
-  private def assertAppendSearchable(encodings: Seq[String]): Unit = {
+  // the exact re-rank (SQ8, PQ, residual PQ); and the whole corpus,
+  // encoded as a delta, must reproduce the session lists row for row
+  // (the list build and the delta encode are one body)
+  private def assertAppendSearchable(encodings: Seq[SessionIndex]): Unit = {
     val clone = Tables.embeddings(spark, Sf)
       .filter(col("vec_id") === 0)
       .select(lit(999999L).as("vec_id"), col("embedding"), col("label"))
@@ -332,8 +335,8 @@ class DedupAnnSpec extends GraftSpec {
       .select("vec_id", "embedding")
     for (encoding <- encodings) {
       val sv = AnnOps.sessionServing(spark, Sf, encoding)
-      val widened = sv.copy(lists =
-        sv.lists.unionByName(AnnOps.codedRowsFor(spark, sv, clone)))
+      val appended = sv.lists.unionByName(AnnOps.codedRowsFor(sv, clone))
+      val widened = sv.copy(listsOf = () => appended)
       // q IS corpus vector 0, so exclude its own row (harness semantics);
       // the clone is no corpus member: it re-ranks from its in-row floats
       val hits = AnnOps.ivfPqSearchTables(spark, Sf, widened, q,
@@ -344,15 +347,21 @@ class DedupAnnSpec extends GraftSpec {
       assert(top.getAs[Double]("sim") > 0.999999, s"$encoding: $top")
       // append, not rebuild: exactly one row wider than the base layout
       assert(widened.lists.count() == sv.lists.count() + 1, encoding)
+      def rowSet(df: DataFrame): Seq[String] =
+        df.select(sv.lists.columns.map(col).toSeq: _*).collect()
+          .map(_.toString).toSeq.sorted
+      val corpus = Tables.embeddings(spark, Sf).select("vec_id", "embedding")
+      assert(rowSet(AnnOps.codedRowsFor(sv, corpus)) == rowSet(sv.lists),
+        s"$encoding: the corpus encoded as a delta differs from the session lists")
     }
   }
 
   test("ivf append: new vectors are searchable without a rebuild") {
-    assertAppendSearchable(Seq("flat", "sq8"))
+    assertAppendSearchable(Seq(SessionIndex.Flat(), SessionIndex.Sq8))
   }
 
   test("ivfpq append: new vectors are searchable in the composed index without a rebuild") {
-    assertAppendSearchable(Seq("pq", "pq_res"))
+    assertAppendSearchable(Seq(SessionIndex.Pq, SessionIndex.PqRes()))
   }
 
   test("serving search: an external query id colliding with a corpus id drops nothing") {
@@ -369,7 +378,7 @@ class DedupAnnSpec extends GraftSpec {
     assert(top.getAs[Double]("sim") > 0.999999)
     // same contract over an IVF-Flat handle
     val fhits = AnnOps.ivfPqSearchTables(spark, Sf,
-      AnnOps.sessionServing(spark, Sf, "flat"), q, nprobe = 4).collect()
+      AnnOps.sessionServing(spark, Sf, SessionIndex.Flat()), q, nprobe = 4).collect()
     val ftop = fhits.minBy(_.getAs[Long]("rnk"))
     assert(ftop.getAs[Long]("c_id") == 3L, s"ivf-flat dropped it: ${fhits.toSeq}")
   }

@@ -3,6 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import graft.operators.AnnOps
+import graft.operators.AnnOps.SessionIndex
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType,
@@ -15,7 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType,
   */
 class IvfQueryFrameSpec extends GraftSpec {
 
-  private val Encodings = Seq("flat", "sq8", "pq", "pq_res")
+  private val Encodings = Seq(SessionIndex.Flat(), SessionIndex.Sq8,
+    SessionIndex.Pq, SessionIndex.PqRes())
 
   private val schema = StructType(Seq(StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)),
@@ -32,7 +34,7 @@ class IvfQueryFrameSpec extends GraftSpec {
   /** (q_id, c_id, sim bits, rnk), sorted: the search promises no row
     * order.
     */
-  private def hits(encoding: String, queries: DataFrame,
+  private def hits(encoding: SessionIndex, queries: DataFrame,
       candFilter: Column = lit(true)): Seq[(Long, Long, Long, Long)] =
     AnnOps.ivfPqSearchTables(spark, Sf, AnnOps.sessionServing(spark, Sf, encoding),
         queries, candFilter = candFilter).collect()

@@ -3,12 +3,16 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.operators.{AnnOps, LayoutOps}
+import graft.operators.AnnOps.SessionIndex
 import org.apache.spark.{DriverBroadcastBlocks, ListenerBusDrain}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
@@ -91,14 +95,38 @@ class IvfRequestJobsSpec extends GraftSpec with AdaptiveSparkPlanHelper {
   test("a second encode over the same PQ handle adds no broadcast block") {
     val vecs = Tables.embeddings(spark, Sf).filter(col("vec_id") % 10 === 7)
       .select("vec_id", "embedding")
-    for (encoding <- Seq("pq", "pq_res")) {
+    for (encoding <- Seq(SessionIndex.Pq, SessionIndex.PqRes())) {
       val sv = AnnOps.sessionServing(spark, Sf, encoding)
-      AnnOps.codedRowsFor(spark, sv, vecs)
+      AnnOps.codedRowsFor(sv, vecs)
       val before = DriverBroadcastBlocks(spark.sparkContext)
-      val coded = AnnOps.codedRowsFor(spark, sv, vecs)
+      val coded = AnnOps.codedRowsFor(sv, vecs)
       val added = DriverBroadcastBlocks(spark.sparkContext) -- before
       assert(added.isEmpty, s"$encoding: the second encode broadcast $added")
       assert(coded.count() > 0)
+    }
+  }
+
+  test("the encode of every codec runs without a shuffle, an aggregate or a sort-merge join") {
+    // IVFADC's code is a per-vector function (assign, then quantize the
+    // vector or its residual subspace by subspace), so the encode is a
+    // projection of the assigned rows; residual PQ keeps only its
+    // m-row centroid broadcast join. The batch is a local frame, as a
+    // delta arrives: the corpus table's own read spreads by vec_id.
+    val batch = Tables.embeddings(spark, Sf).filter(col("vec_id") % 10 === 7)
+      .select("vec_id", "embedding")
+    val vecs = spark.createDataFrame(
+      java.util.Arrays.asList(batch.collect(): _*), batch.schema)
+    for (index <- Seq(SessionIndex.Flat(), SessionIndex.Sq8, SessionIndex.Pq,
+        SessionIndex.PqRes())) {
+      val coded = AnnOps.codedRowsFor(AnnOps.sessionServing(spark, Sf, index), vecs)
+      assert(coded.collect().nonEmpty, index)
+      val plan = coded.queryExecution.executedPlan
+      val heavy = collectWithSubqueries(plan) {
+        case p: ShuffleExchangeExec => p
+        case p: HashAggregateExec => p
+        case p: SortMergeJoinExec => p
+      }
+      assert(heavy.isEmpty, s"$index: the encode plans ${heavy.map(_.nodeName)}:\n$plan")
     }
   }
 }
