@@ -1,13 +1,45 @@
 package graft
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Plan auditor: dumps formatted physical plans for every query and
   * checks the scale-critical properties (broadcast where expected, no
   * cartesian products except the intentional broadcast-NL ANN scans,
   * parquet column pruning). Run: sbt "runMain graft.ExplainAudit [sfDir]"
   */
-object ExplainAudit {
+object ExplainAudit extends AdaptiveSparkPlanHelper {
+  /** The findings on a plan's IVF search operators (None: the plan has
+    * none). The operator stands where the IVF plans had a broadcast
+    * probe join and chained TopKPerKey heaps, so it is checked for the
+    * same properties: the list side reads the probed lists as they are
+    * stored — a bucket-pruned layout scan or the session's in-memory
+    * lists — with no Exchange or BroadcastExchange below the operator
+    * (the query side rides in its driver broadcast), and its heaps are
+    * bounded by the k (and ADC shortlist r) the plan prints.
+    */
+  private def ivfSearchFindings(df: DataFrame, plan: String): Option[Seq[String]] = {
+    val ops = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: plans.IvfSearchExec => s
+    }
+    if (ops.isEmpty) None else Some(ops.flatMap { s =>
+      val exchanges = s.child.collect { case e: Exchange => e.nodeName }
+      val scans = s.child.collect {
+        case f: FileSourceScanExec => f.optionalBucketSet.isDefined
+        case _: InMemoryTableScanExec => true
+      }
+      val bounds = s"k=${s.k}" +: s.r.map(r => s"r=$r").toSeq
+      (if (exchanges.isEmpty) Nil
+       else Seq(s"IvfSearch's list side shuffles (${exchanges.mkString(", ")})")) ++
+      (if (scans.nonEmpty && scans.forall(identity)) Nil
+       else Seq("IvfSearch's list side is not a bucket-pruned or in-memory lists scan")) ++
+      bounds.filterNot(plan.contains).map(b => s"IvfSearch's heap bound $b not in the plan")
+    })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     // audit the bench-shape plans: extensions on, like GraftSession
@@ -126,13 +158,17 @@ object ExplainAudit {
       val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       println(s"\n===================== $name =====================")
       println(plan)
-      if (broadcastExpected(name) && !plan.contains("Broadcast")) {
+      // a plan running the IVF search is checked for the properties
+      // the Broadcast and TopKPerKey names stood for on its operator
+      val ivf = ivfSearchFindings(df, plan)
+      ivf.toSeq.flatten.foreach { f => println(s"!! AUDIT $name: $f"); bad += 1 }
+      if (broadcastExpected(name) && ivf.isEmpty && !plan.contains("Broadcast")) {
         println(s"!! AUDIT $name: expected a broadcast join"); bad += 1
       }
       if (plan.contains("CartesianProduct")) {
         println(s"!! AUDIT $name: cartesian product in plan"); bad += 1
       }
-      if (topkExpected(name) && !plan.contains("TopKPerKey")) {
+      if (topkExpected(name) && ivf.isEmpty && !plan.contains("TopKPerKey")) {
         println(s"!! AUDIT $name: expected the TopKPerKey operator"); bad += 1
       }
       // the decorrelated subquery shapes must stay semi/anti joins —

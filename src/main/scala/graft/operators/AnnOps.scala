@@ -1,14 +1,19 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.broadcast.Broadcast
 import graft.Tables
 import graft.functions.{IvfAssign, IvfModel, VectorFns}
-import graft.plans.TopK
+import graft.plans.{IvfProbe, IvfQueries, IvfSearch, TopK}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, IntegerType,
+  LongType, StructField, StructType}
 
 /** D9–D11: similarity search over the embeddings table.
   *
@@ -2338,7 +2343,7 @@ object AnnOps {
     * at slot k+1 of the dense dt array) summed in fixed s order (so
     * the double is bit-stable).
     */
-  private def adcCol(nSub: Int = PqS): Column =
+  private[graft] def adcCol(nSub: Int = PqS): Column =
     (0 until nSub).map(s =>
       element_at(col(s"dt$s"), (col(s"c$s") + 1).cast("int"))).reduce(_ + _)
 
@@ -2441,7 +2446,7 @@ object AnnOps {
   }
 
   /** Centroid `i` of `model`, float-quantized (cq). */
-  private def quantizedCentroid(model: IvfModel, i: Int): Array[Double] =
+  private[graft] def quantizedCentroid(model: IvfModel, i: Int): Array[Double] =
     model.flat.slice(i * model.dim, (i + 1) * model.dim)
       .map(x => math.floor(x * CentroidScale + 0.5) / CentroidScale)
 
@@ -2665,22 +2670,24 @@ object AnnOps {
     * streaming and corpus-split faces all run this body. The query
     * side is request-sized, so it is computed on the driver
     * ([[querySide]]: one collect of the query frame, then the same
-    * kernels the in-row expressions call) and enters the plan as one
-    * local frame of probe rows. The probe rows' cids form a literal IN
-    * filter, so a bucketed lists table scan prunes to the probed
-    * buckets (nprobe/m of the index files at any corpus size); then one
-    * broadcast probe×list join, scored in-row. Every codec's lists
-    * carry each member's re-rank floats (cv2, cn) and every probe row
-    * its query's (qv, qn), so the exact cosine `sim` is computed in the
-    * list-scan stage. Flat lists take the top-k by `sim` directly; SQ8
-    * and PQ lists take the top-`r` by ADC, then the top-k of those by
-    * `sim` — two chained bounded heaps on q_id that share one exchange,
-    * so a request shuffles once and reads nothing but its probed lists
-    * (no corpus scan, no session state). Plain PQ probe rows carry
-    * their query's distance tables, residual PQ probe rows the tables
-    * of their own residual. A query row with a null embedding gets no
-    * probes and no hits. `dir` names the handle's corpus; the search
-    * reads nothing under it.
+    * kernels the in-row expressions call) and rides into the plan as
+    * one broadcast. The probed cids form a literal IN filter, so a
+    * bucketed lists table scan prunes to the probed buckets (nprobe/m
+    * of the index files at any corpus size). One
+    * [[graft.plans.IvfSearch]] operator over that scan runs the
+    * request as ONE Spark job: each list-scan task scores its rows
+    * against the queries probing their list and keeps a bounded heap
+    * per query, and one shuffle inside the operator merges the heaps
+    * per q_id. Every codec's lists carry each member's re-rank floats
+    * (cv2, cn), so the exact cosine `sim` needs nothing but the list
+    * row. Flat lists take the top-k by `sim` directly; SQ8 and PQ lists
+    * take the top-`r` by ADC and then the top-k of those by `sim`,
+    * which is computed for the heap survivors only. Ties break by c_id.
+    * A request reads nothing but its probed lists (no corpus scan, no
+    * session state). Plain PQ queries carry their distance tables once,
+    * residual PQ probes the tables of their own residual. A query row
+    * with a null embedding gets no probes and no hits. `dir` names the
+    * handle's corpus; the search reads nothing under it.
     *
     * The output is (q_id, c_id, sim, rnk) in no particular row order:
     * a request's caller reads rows, not positions, and a global sort
@@ -2694,8 +2701,8 @@ object AnnOps {
     * with corpus vec_ids, and excluding on id equality would silently
     * drop a legitimate (possibly top-1) corpus neighbor.
     *
-    * `candFilter` is a predicate over the probe×list row, applied
-    * inside the join before any heap: list columns (c_label on the
+    * `candFilter` is a predicate over the list row and the query's
+    * fields, applied before any heap: list columns (c_label on the
     * labeled Flat lists) and the query frame's extra columns (q_label
     * on the corpus split) are in scope.
     */
@@ -2703,94 +2710,90 @@ object AnnOps {
       sv: IvfPqServing, queries: DataFrame, nprobe: Int = IvfPqNprobe,
       r: Int = IvfPqR, k: Int = 10, excludeSelf: Boolean = false,
       candFilter: Column = lit(true)): DataFrame = {
-    val qs = querySide(spark, sv, queries, nprobe)
-    val joinCond =
-      (if (excludeSelf) col("q_cid") === col("c_cid") && col("q_id") =!= col("c_id")
-       else col("q_cid") === col("c_cid")) && candFilter
-    val cand = sv.lists.filter(col("c_cid").isin(qs.probedCids: _*))
-      .join(broadcast(qs.probes), joinCond)
-      .withColumn("sim",
-        VectorFns.cosine(col("qv"), col("cv2"), col("qn"), col("cn")))
-    def topBy(df: DataFrame, closer: Column, n: Int): DataFrame =
-      TopK.perKey(df, Seq(col("q_id")), Seq(closer, col("c_id").asc), n)
-    // SQ8/PQ: the ADC shortlist of r per query, ordered by exact sim
-    def reranked(adc: Column, closer: Column): DataFrame =
-      topBy(topBy(cand.withColumn("adc", adc), closer, r)
-        .select("q_id", "c_id", "sim"), col("sim").desc, k)
-    val hits = sv.codec match {
-      case IvfCodec.Flat => topBy(cand, col("sim").desc, k)
+    val qs = querySide(sv, queries, nprobe)
+    val cond = (if (excludeSelf) col("q_id") =!= col("c_id") else lit(true)) && candFilter
+    val sim = VectorFns.cosine(col("qv"), col("cv2"), col("qn"), col("cn"))
+    // (score, ascending, shortlist depth): the ADC shortlist of r per
+    // query for SQ8 (higher is closer) and PQ (lower is closer)
+    val (score, asc, shortlist) = sv.codec match {
+      case IvfCodec.Flat => (sim, false, None)
       case IvfCodec.Sq8(mn, delta) =>
-        reranked(VectorFns.dot(col("qv"), sq8Dequant(col("codes"), mn, delta)),
-          col("adc").desc)
-      case pq: IvfCodec.Pq => reranked(adcCol(pq.nSub), col("adc").asc)
+        (VectorFns.dot(col("qv"), sq8Dequant(col("codes"), mn, delta)), false, Some(r))
+      case pq: IvfCodec.Pq => (adcCol(pq.nSub), true, Some(r))
     }
-    hits.select("q_id", "c_id", "sim", "rnk")
+    IvfSearch.over(sv.lists.filter(col("c_cid").isin(qs.probedCids: _*)),
+      qs.queries, qs.queryFields, qs.probeFields, cond, score, asc, sim, shortlist, k)
   }
 
-  /** A request's query side: `probes` holds one (q_cid, q_id, extra
-    * query columns…, qv, qn, codec payload…) row per probe and
-    * `probedCids` the distinct probed lists, ascending.
+  /** A request's query side: the broadcast payload of the search, the
+    * fields of its query rows (q_idx, q_id, extra query columns…, qv,
+    * qn, plain PQ's tables) and probe payload rows (residual PQ's
+    * tables), and the distinct probed lists, ascending.
     */
-  private final case class QuerySide(probes: DataFrame, probedCids: Seq[Long])
+  private final case class QuerySide(queries: IvfQueries,
+      queryFields: StructType, probeFields: StructType, probedCids: Seq[Long])
 
   /** The query side of one request, computed on the driver from ONE
-    * collect of the query frame (job-free for a local frame, and the
-    * same rows the broadcasts of a planned query side would ship). Each
-    * step calls the kernel its in-row expression calls, so every value
-    * is bit-identical to the in-plan path: qv is the embedding widened
-    * to double, qn = sqrt of the sequential dot(qv, qv), probes come
-    * from [[IvfAssign.topProbes]] against the handle's quantizer. Every
-    * probe row carries (qv, qn) for the in-row exact cosine; the codec
+    * collect of the query frame (job-free for a local frame). Each step
+    * calls the kernel its in-row expression calls, so every value is
+    * bit-identical to the in-plan path: qv is the embedding widened to
+    * double, qn = sqrt of the sequential dot(qv, qv), probes come from
+    * [[IvfAssign.topProbes]] against the handle's quantizer. The codec
     * payload adds nothing for Flat and SQ8 (SQ8's ADC reads qv), the
     * query's [[graft.functions.PqKernels.distTable]] tables for plain
-    * PQ and, for residual PQ, per probe row, the tables of v − cq(cid)
-    * with cq quantized as [[centroidsQ]] does. Rows with a null
-    * embedding are dropped.
+    * PQ (once per query) and, for residual PQ, per probe, the tables of
+    * v − cq(cid) with cq quantized as [[centroidsQ]] does. Rows with a
+    * null embedding are dropped.
     */
-  private def querySide(spark: SparkSession, sv: IvfPqServing,
-      queries: DataFrame, nprobe: Int): QuerySide = {
+  private def querySide(sv: IvfPqServing, queries: DataFrame,
+      nprobe: Int): QuerySide = {
     val extra = queries.schema.fields.toSeq
       .filterNot(f => f.name == "vec_id" || f.name == "embedding")
     val rows = queries.select(
       (Seq("vec_id", "embedding") ++ extra.map(_.name)).map(col): _*).collect()
     val model = sv.model.value
     val arr = ArrayType(DoubleType)
-    val (payloadFields, payloadOf): (Seq[StructField],
-        Array[Double] => Long => Seq[Any]) = sv.codec match {
-      case IvfCodec.Flat | IvfCodec.Sq8(_, _) => (Nil, _ => _ => Nil)
-      case pq: IvfCodec.Pq =>
-        def tables(x: Array[Double]): Seq[Any] = {
-          val xd = new GenericArrayData(x)
-          (0 until pq.nSub).map(s =>
-            graft.functions.PqKernels.distTable(xd, pq.bookModel, s).array.toSeq)
-        }
-        val fields = (0 until pq.nSub).map(s => StructField(s"dt$s", arr))
-        if (pq.residual) {
-          val row = model.cids.zipWithIndex.toMap
-          (fields, v => cid => {
-            val cq = quantizedCentroid(model, row(cid))
-            tables(Array.tabulate(v.length)(d => v(d) - cq(d)))
-          })
-        } else (fields, v => { val p = tables(v); _ => p })
+    val pq = sv.codec match { case p: IvfCodec.Pq => Some(p); case _ => None }
+    def tables(x: Array[Double]): Seq[Any] = pq.toSeq.flatMap { p =>
+      val xd = new GenericArrayData(x)
+      (0 until p.nSub).map(s => graft.functions.PqKernels.distTable(xd, p.bookModel, s))
     }
-    val probeRows = Seq.newBuilder[Row]
-    val cids = scala.collection.mutable.SortedSet.empty[Long]
-    rows.iterator.filterNot(_.isNullAt(1)).foreach { row =>
+    val dtFields = pq.toSeq.flatMap(p => (0 until p.nSub).map(s => StructField(s"dt$s", arr)))
+    val residual = pq.exists(_.residual)
+    val queryFields = StructType(Seq(StructField("q_idx", IntegerType, nullable = false),
+      StructField("q_id", queries.schema("vec_id").dataType)) ++ extra ++
+      Seq(StructField("qv", arr), StructField("qn", DoubleType)) ++
+      (if (residual) Nil else dtFields))
+    val probeFields = StructType(if (residual) dtFields else Nil)
+    val (toQuery, toProbe) =
+      (UnsafeProjection.create(queryFields), UnsafeProjection.create(probeFields))
+    val centroidRow = model.cids.zipWithIndex.toMap
+    val qRows = Array.newBuilder[InternalRow]
+    val groups = mutable.HashMap.empty[Any, Int]
+    val group = Array.newBuilder[Int]
+    val probes = mutable.SortedMap.empty[Long, mutable.ArrayBuffer[IvfProbe]]
+    rows.iterator.filterNot(_.isNullAt(1)).zipWithIndex.foreach { case (row, i) =>
       val v = row.getSeq[Number](1).map(x => if (x == null) 0.0 else x.doubleValue).toArray
       val vd = new GenericArrayData(v)
       val n = math.sqrt(graft.functions.VecKernels.dot(vd, vd))
-      val head = (row.get(0) +: (2 until row.length).map(row.get)) ++ Seq(v.toSeq, n)
-      val payload = payloadOf(v)
+      val fields = Seq[Any](i, convertToCatalyst(row.get(0))) ++
+        (2 until row.length).map(j => convertToCatalyst(row.get(j))) ++
+        Seq(vd, n) ++ (if (residual) Nil else tables(v))
+      qRows += toQuery(new GenericInternalRow(fields.toArray)).copy()
+      group += groups.getOrElseUpdate(row.get(0), groups.size)
       IvfAssign.topProbes(vd, n, model, nprobe).toLongArray().foreach { cid =>
-        cids += cid
-        probeRows += Row.fromSeq((cid +: head) ++ payload(cid))
+        val payload = if (!residual) null else {
+          val cq = quantizedCentroid(model, centroidRow(cid))
+          toProbe(new GenericInternalRow(
+            tables(Array.tabulate(v.length)(d => v(d) - cq(d))).toArray)).copy()
+        }
+        probes.getOrElseUpdate(cid, mutable.ArrayBuffer.empty) += IvfProbe(i, payload)
       }
     }
-    val fields = Seq(StructField("q_cid", LongType),
-      StructField("q_id", queries.schema("vec_id").dataType)) ++ extra ++
-      Seq(StructField("qv", arr), StructField("qn", DoubleType)) ++ payloadFields
-    QuerySide(spark.createDataFrame(java.util.Arrays.asList(probeRows.result(): _*),
-      StructType(fields)), cids.toSeq)
+    val packed = new java.util.HashMap[java.lang.Long, Array[IvfProbe]]()
+    probes.foreach { case (cid, ps) => packed.put(cid, ps.toArray) }
+    QuerySide(new IvfQueries(qRows.result(), group.result(), groups.size,
+      packed), queryFields, probeFields, probes.keys.toSeq)
   }
 
   /** THE IVF encode: a codec's list rows from Flat list rows (c_cid,
@@ -2899,7 +2902,7 @@ object AnnOps {
 
   /** Reconstruction column: deq_d = mn_d + (code_d + 0.5)·delta_d/256
     * (midpoint dequantization), built against the literal model. */
-  private def sq8Dequant(codes: Column, mn: Seq[Double],
+  private[graft] def sq8Dequant(codes: Column, mn: Seq[Double],
       delta: Seq[Double]): Column = {
     val mnL = array(mn.map(lit): _*)
     val dlL = array(delta.map(lit): _*)

@@ -269,9 +269,17 @@ object LayoutOps {
   }
 
   /** Ensure + read: the only way serving paths obtain a layout. */
-  def table(spark: SparkSession, dir: String, familyName: String): DataFrame = {
+  def table(spark: SparkSession, dir: String, familyName: String): DataFrame =
+    LayoutStore.read(spark, servableTable(spark, dir, familyName))
+
+  /** Ensure, then the family's table name: for a handle that reads the
+    * table through the catalog on every use, so a compaction (which
+    * re-registers the table over new files) or an append under it is
+    * served.
+    */
+  def servableTable(spark: SparkSession, dir: String, familyName: String): String = {
     ensure(spark, dir, familyName)
-    LayoutStore.read(spark, tableName(familyOf(familyName), dir))
+    tableName(familyOf(familyName), dir)
   }
 
   /** Cold-build cost ranking, a historical r15 measurement at sf0.1
@@ -414,11 +422,9 @@ object LayoutOps {
       () => LayoutStore.read(spark, listsTable), codec)
 
   /** [[servingOver]] a family's lists table, made servable first. */
-  private def familyServing(spark: SparkSession, dir: String,
-      familyName: String, codec: AnnOps.IvfCodec): AnnOps.IvfPqServing = {
-    ensure(spark, dir, familyName)
-    servingOver(spark, dir, tableName(familyOf(familyName), dir), codec)
-  }
+  private[graft] def familyServing(spark: SparkSession, dir: String,
+      familyName: String, codec: AnnOps.IvfCodec): AnnOps.IvfPqServing =
+    servingOver(spark, dir, servableTable(spark, dir, familyName), codec)
 
   /** The handle over a grown coded-lists table (plain or residual). */
   private[graft] def grownServing(spark: SparkSession, dir: String,
@@ -427,7 +433,7 @@ object LayoutOps {
       pqCodec(spark, dir, residual))
 
   /** The PQ codec from the persisted plain or residual codebooks. */
-  private def pqCodec(spark: SparkSession, dir: String,
+  private[graft] def pqCodec(spark: SparkSession, dir: String,
       residual: Boolean): AnnOps.IvfCodec =
     AnnOps.pqCodecOf(
       table(spark, dir, if (residual) "pq_book_res" else "pq_book"), residual)

@@ -15,12 +15,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, In
   * spark.sql("SELECT graft_simhash64(split(text, ' ')) FROM docs")
   * }}}
   *
-  * (TopK.perKey also self-registers via experimental strategies for
-  * ad-hoc sessions.)
+  * (TopK.perKey and IvfSearch.over also self-register their strategies
+  * via experimental strategies for ad-hoc sessions.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => TopKStrategy)
+    e.injectPlannerStrategy(_ => IvfSearchStrategy)
     e.injectOptimizerRule(_ => TopKRewriteRule)
     GraftExtensions.sqlFunctions.foreach(e.injectFunction)
   }

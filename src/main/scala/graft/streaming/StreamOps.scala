@@ -554,6 +554,13 @@ object StreamOps {
     * both faces. Arrivals sort by the batch timeline key inside each
     * micro-batch, so a run straddling a batch split replays exactly
     * (parity spec).
+    *
+    * Arrival-order contract: per user, every event of a later
+    * micro-batch follows every event of an earlier one on the timeline
+    * key. The ring is not re-sorted across batches, so a terminator
+    * that arrives a micro-batch before a B preceding it on the
+    * timeline is decided without that B (a file source that lists a
+    * multi-file append mid-commit can deliver events so).
     */
   def patternKleeneStream(events: Dataset[Ev],
       maxRun: Int = graft.operators.EventOps.KleeneMaxRun,
@@ -1103,20 +1110,24 @@ object StreamOps {
     * physical operator), so stream results are batch-identical by
     * construction (parity-tested). Per-batch cost is
     * |batch|·hops·beam·K sims — independent of corpus size, the
-    * graph family's serving contract; no rebuild, no corpus work.
+    * graph family's serving contract; no rebuild, no corpus work. The
+    * three tables are made servable once, at stream start, and each
+    * micro-batch reads them through the catalog (as the IVF handle
+    * reads its lists), so a compaction under the running stream is
+    * served instead of a superseded file listing.
     */
   def graphSearchStreamFromLayout(spark: org.apache.spark.sql.SparkSession,
       dir: String, queries: DataFrame, sink: (DataFrame, Long) => Unit,
       hops: Int = graft.operators.AnnOps.GraphHops,
       beam: Int = graft.operators.AnnOps.GraphBeam, k: Int = 10)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val adj = graft.operators.AnnOps.walkEdges(
-      graft.operators.LayoutOps.table(spark, dir, "graph_adj"),
-      graft.operators.LayoutOps.table(spark, dir, "graph_down"))
-    val anchors = graft.operators.LayoutOps.table(spark, dir, "graph_anchors")
+    val Seq(adj, down, anchors) = Seq("graph_adj", "graph_down", "graph_anchors")
+      .map(graft.operators.LayoutOps.servableTable(spark, dir, _))
+    def read(t: String) = graft.sources.LayoutStore.read(spark, t)
     queries.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(graft.operators.AnnOps.graphSearchOn(spark, dir, adj, anchors,
+        sink(graft.operators.AnnOps.graphSearchOn(spark, dir,
+          graft.operators.AnnOps.walkEdges(read(adj), read(down)), read(anchors),
           batch, hops, beam, k), batchId)
       }
       .start()

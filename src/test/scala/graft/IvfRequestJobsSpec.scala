@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import graft.operators.{AnnOps, LayoutOps}
 import graft.operators.AnnOps.SessionIndex
 import org.apache.spark.{DriverBroadcastBlocks, ListenerBusDrain}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -18,12 +18,13 @@ import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, 
 
 /** The per-request job budget of IVF serving: a request computes its
   * query side on the driver, runs no global sort and re-ranks from the
-  * probed lists' in-row floats, so the jobs it starts are the probed-list
-  * scan and its one shuffle, not fixed per-query machinery.
+  * probed lists' in-row floats inside one search operator, so it starts
+  * one job: the probed-list scan and the operator's one shuffle, not
+  * fixed per-query machinery.
   */
 class IvfRequestJobsSpec extends GraftSpec with AdaptiveSparkPlanHelper {
 
-  private val MaxJobs = 3
+  private val MaxJobs = 1
 
   /** Four corpus vectors under external ids, as a request's query frame. */
   private def fixtureQueries() = {
@@ -67,6 +68,35 @@ class IvfRequestJobsSpec extends GraftSpec with AdaptiveSparkPlanHelper {
       assert(out.length == 4 * 10, s"expected 10 hits per vector: ${out.length}")
       info(s"one request ran ${jobs.get} jobs")
       assert(jobs.get <= MaxJobs, s"one request ran ${jobs.get} jobs")
+    } finally LayoutOps.purgeAll(spark, Sf)
+  }
+
+  test("a 1-vector request over the persisted IVF-PQ layout runs no task for an unprobed bucket") {
+    try {
+      val sv = persistedHandle()
+      val query = fixtureQueries().limit(1)
+      AnnOps.ivfPqSearchTables(spark, Sf, sv, query).collect()
+      val df = AnnOps.ivfPqSearchTables(spark, Sf, sv, query)
+      val tasks = new AtomicInteger
+      val listener = new SparkListener {
+        override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
+      }
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val out = try {
+        val out = df.collect()
+        ListenerBusDrain(spark.sparkContext)
+        out
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(out.length == 10, s"expected 10 hits: ${out.length}")
+      val probed = collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.optionalBucketSet.map(_.cardinality())
+      }.flatten
+      assert(probed.size == 1, s"expected one bucket-pruned list scan: $probed")
+      // one reduce partition: the request holds one query
+      info(s"${tasks.get} tasks for ${probed.head} probed buckets")
+      assert(tasks.get <= probed.head + 1,
+        s"${tasks.get} tasks for ${probed.head} probed buckets and 1 reduce partition")
     } finally LayoutOps.purgeAll(spark, Sf)
   }
 

@@ -8,10 +8,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 /** A serving handle held across layout maintenance. Compaction
-  * re-registers a lists table over new files and an append adds files;
-  * a handle built before either — by a batch caller or at the start of
-  * a search stream — serves the table as it is now, row for row what a
-  * fresh handle serves.
+  * re-registers a lists or graph table over new files and an append
+  * adds files; a handle built before either — by a batch caller or at
+  * the start of a search stream — serves the table as it is now, row
+  * for row what a fresh handle serves.
   */
 class ServingHandleMaintSpec extends GraftSpec {
 
@@ -61,6 +61,30 @@ class ServingHandleMaintSpec extends GraftSpec {
         queries.filter(col("vec_id") >= 200).write.mode("append").parquet(d)
         q.processAllAvailable()
         assert(got.toSeq.sorted == served(LayoutOps.ivfPqServing(spark, Sf)))
+      } finally q.stop()
+    }
+  }
+
+  test("a running graph search stream serves across a compaction of graph_adj") {
+    withCleanLayouts {
+      def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+      val d = java.nio.file.Files.createTempDirectory("graph_stream_compact")
+        .toFile.getAbsolutePath
+      queries.filter(col("vec_id") < 200).write.mode("overwrite").parquet(d)
+      val got = ArrayBuffer.empty[String]
+      val q = StreamOps.graphSearchStreamFromLayout(spark, Sf,
+        spark.readStream.schema(queries.schema).parquet(d),
+        (res, _) => got.synchronized { got ++= rows(res) })
+      try {
+        q.processAllAvailable()
+        assert(LayoutOps.compactIfNeeded(spark, Sf, "graph_adj", maxFiles = 0))
+        queries.filter(col("vec_id") >= 200).write.mode("append").parquet(d)
+        q.processAllAvailable()
+        val fresh = AnnOps.graphSearchOn(spark, Sf,
+          AnnOps.walkEdges(LayoutOps.table(spark, Sf, "graph_adj"),
+            LayoutOps.table(spark, Sf, "graph_down")),
+          LayoutOps.table(spark, Sf, "graph_anchors"), queries)
+        assert(got.toSeq.sorted == rows(fresh).sorted)
       } finally q.stop()
     }
   }

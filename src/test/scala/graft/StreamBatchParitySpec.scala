@@ -357,7 +357,12 @@ class StreamBatchParitySpec extends GraftSpec {
     try {
       q.processAllAvailable()
       val afterEarly = spark.table("kleene_par").count()
-      all.filter(unix_millis(col("ts")) >= cutoff).write.mode("append").parquet(src)
+      // ONE file, so the split arrives as one micro-batch: the stream
+      // may list a multi-file append mid-commit and take the purchase
+      // a batch before the third click (cross-batch arrival order the
+      // operator does not restore)
+      all.filter(unix_millis(col("ts")) >= cutoff).coalesce(1)
+        .write.mode("append").parquet(src)
       q.processAllAvailable()
       val got = spark.table("kleene_par")
         .select("user_id", "id_0", "n_mid", "id_last", "span_ms")
